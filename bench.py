@@ -14,6 +14,8 @@ from sandbox load spikes, so this is deliberately spike-robust):
   when the passes disagree by more than 1.5x.
 Any operator cache the entry attached via `rm_release_cache` is released
 after each run so persisted frames don't accumulate across the session.
+The per-query sidecar (BENCH_QUERIES*.json) also records, per query, each
+memo kind's hit/miss/rebuild counts over its runs (session.memo_stats).
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from radmapper_spark.session import get_spark
+from radmapper_spark.session import get_spark, memo_stats
 
 WARMUP_QUERY = "pricing_summary"
 RUNS_PER_QUERY = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
@@ -45,7 +47,20 @@ def _stat_jiffies() -> tuple[int, int]:
         return 0, 1
 
 
-def _run_once(fn, spark, sf_dir) -> tuple[float, float]:
+def _memo_delta(before: dict, after: dict, into: dict) -> None:
+    """Add the memo hit/miss/rebuild counts between two memo_stats()
+    snapshots to ``into`` (kind -> counts), skipping untouched kinds."""
+    for kind, c in after.items():
+        b = before.get(kind, {})
+        d = {k: v - b.get(k, 0) for k, v in c.items()}
+        if any(d.values()):
+            acc = into.setdefault(kind, dict.fromkeys(d, 0))
+            for k, v in d.items():
+                acc[k] += v
+
+
+def _run_once(fn, spark, sf_dir, memo_counts=None) -> tuple[float, float]:
+    m0 = memo_stats()
     s0, t0j = _stat_jiffies()
     t0 = time.monotonic()
     df = fn(spark, sf_dir)
@@ -56,6 +71,8 @@ def _run_once(fn, spark, sf_dir) -> tuple[float, float]:
     if release is not None:
         release()
     steal_pct = 100.0 * (s1 - s0) / max(1, t1j - t0j)
+    if memo_counts is not None:
+        _memo_delta(m0, memo_stats(), memo_counts)
     return elapsed, steal_pct
 
 
@@ -85,13 +102,16 @@ def main() -> None:
         pass
 
     samples: dict[str, list[tuple[float, float]]] = {name: [] for name in qs}
+    # per query: memo kind -> hit/miss/rebuild counts over all its runs
+    memo_counts: dict[str, dict] = {name: {} for name in qs}
     failed: set[str] = set()
     for _ in range(max(1, RUNS_PER_QUERY)):
         for name, fn in qs.items():
             if name in failed:
                 continue
             try:
-                samples[name].append(_run_once(fn, spark, sf_dir))
+                samples[name].append(
+                    _run_once(fn, spark, sf_dir, memo_counts[name]))
             except Exception as exc:  # keep the bench line parseable on failures
                 print(f"bench error in {name}: {exc}", file=sys.stderr)
                 failed.add(name)
@@ -102,7 +122,7 @@ def main() -> None:
             # the passes disagree: at least one hit an external load
             # spike — take one more sample so best-of reflects the plan
             try:
-                runs.append(_run_once(fn, spark, sf_dir))
+                runs.append(_run_once(fn, spark, sf_dir, memo_counts[name]))
             except Exception as exc:
                 print(f"bench error in {name}: {exc}", file=sys.stderr)
 
@@ -133,8 +153,8 @@ def main() -> None:
     qfile = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          qname)
     with open(qfile, "w") as f:
-        json.dump({"sf": sf, "queries": timings, "steal_pct_min_run": steal},
-                  f, indent=1, sort_keys=True)
+        json.dump({"sf": sf, "queries": timings, "steal_pct_min_run": steal,
+                   "memo": memo_counts}, f, indent=1, sort_keys=True)
     slowest = dict(sorted(((n, v) for n, v in timings.items() if v >= 0),
                           key=lambda kv: -kv[1])[:10])
     print(
@@ -157,8 +177,8 @@ def main() -> None:
             }
         )
     )
-    # release the per-(session, sf_dir) derived-table caches so repeated
-    # in-process bench invocations don't accumulate persisted frames
+    # release the sf_dir memos so repeated in-process bench invocations
+    # don't accumulate persisted frames
     from radmapper_spark.entrypoints import release_edge_cache
 
     release_edge_cache()

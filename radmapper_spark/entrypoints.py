@@ -17,7 +17,7 @@ from . import headline
 from .lang.interp import Interp
 from .operators import (decontam, dedup, multimodal, similarity, temporal,
                         textstats, tokenizer, web)
-from .session import load_tables, session_key, sf_fingerprint
+from .session import load_tables, memo, release_memos
 from .streaming import windows as W
 
 DEC = "decimal(18,2)"
@@ -364,9 +364,8 @@ def dedup_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the J >= 0.5 pairs, so the output is bit-identical and the oracle
     below is unchanged.
 
-    The VERIFIED pair frame is session-cached (_PAIRS_CACHE, the
-    _SIGLSH_CACHE contract: persisted, fingerprint-revalidated,
-    released by release_edge_cache) because FIVE entries compose it —
+    The VERIFIED pair frame is persisted and memoized (kind "pairs")
+    because FIVE entries compose it —
     this one, dedup_groups, dedup_keep_best, dedup_rate_report,
     split_leakage_check (r14 verdict item #3: share the pair
     derivation across the composed stages instead of re-running the
@@ -378,10 +377,10 @@ def dedup_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=("source",), length_col="n_chars", length_window=40)
         pairs = dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.5,
                                           candidates=cand)
-        return {"pairs": pairs.select(
+        return pairs.select(
             "id_a", "id_b",
-            F.round(F.col("jaccard"), 6).alias("jaccard")).persist()}
-    return _cached_frames(_PAIRS_CACHE, spark, sf_dir, build)["pairs"]
+            F.round(F.col("jaccard"), 6).alias("jaccard")).persist()
+    return _frames("pairs", spark, sf_dir, build)
 
 
 def dedup_token_jaccard_sql() -> str:
@@ -457,21 +456,13 @@ def dedup_groups_sql() -> str:
     """
 
 
-# (session, sf_dir) -> persisted (id, minhash) signature frame at the
-# entry's fixed params (32 hashes, k=5 shingles, portable). Same
-# once-per-session pure-function-of-corpus contract as the sign-LSH and
-# simhash bases; the shingling pass is this operator's dominant cost.
-# Released by release_edge_cache.
-_MINHASH_CACHE: dict = {}
-
-
 def _minhash_base(spark: SparkSession, sf_dir: str):
-    return _cached_frames(
-        _MINHASH_CACHE, spark, sf_dir,
-        lambda t: {"base": dedup.minhash_base(
-            t["documents"], num_hashes=32, shingle_k=5,
-            hash_mode="portable").persist()},
-    )["base"]
+    """Persisted (id, minhash) signature frame at the entry's fixed
+    params (32 hashes, k=5 shingles, portable); the shingling pass is
+    this operator's dominant cost."""
+    return _frames("minhash", spark, sf_dir, lambda t: dedup.minhash_base(
+        t["documents"], num_hashes=32, shingle_k=5,
+        hash_mode="portable").persist())
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,20 +522,11 @@ def dedup_minhash_lsh_sql() -> str:
     """
 
 
-# (session, sf_dir) -> persisted (id, simhash) fingerprint frame at the
-# entry's fixed params (nbits=60, portable). Fingerprints over an
-# IMMUTABLE corpus are a pure function of (corpus, params) — the same
-# once-per-session contract as the embedding sign-LSH base. Released by
-# release_edge_cache.
-_SIMHASH_CACHE: dict = {}
-
-
 def _simhash_base(spark: SparkSession, sf_dir: str):
-    return _cached_frames(
-        _SIMHASH_CACHE, spark, sf_dir,
-        lambda t: {"base": dedup.simhash_base(
-            t["documents"], nbits=60, hash_mode="portable").persist()},
-    )["base"]
+    """Persisted (id, simhash) fingerprint frame at the entry's fixed
+    params (nbits=60, portable)."""
+    return _frames("simhash", spark, sf_dir, lambda t: dedup.simhash_base(
+        t["documents"], nbits=60, hash_mode="portable").persist())
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,22 +581,13 @@ def dedup_simhash_sql() -> str:
     """
 
 
-# (session, sf_dir) -> persisted sign_lsh_base frame for the embeddings
-# table at the entry's fixed params (b=192, r=8, sketch=512, seed=42).
-# Signatures over an IMMUTABLE corpus are a pure function of (corpus,
-# params) — extracting them once per session is the same contract as the
-# persisted sign-LSH index (and the _EDGE_CACHE precedent); repeated
-# invocations (each bench pass) skip the whole Arrow signature stage.
-# Released by release_edge_cache alongside the edge table.
-_SIGLSH_CACHE: dict = {}
-
-
 def _embedding_siglsh_base(spark: SparkSession, sf_dir: str):
-    return _cached_frames(
-        _SIGLSH_CACHE, spark, sf_dir,
-        lambda t: {"base": dedup.sign_lsh_base(
-            t["embeddings"], bands=192, planes_per_band=8).persist()},
-    )["base"]
+    """Persisted sign_lsh_base frame for the embeddings table at the
+    entry's fixed params (b=192, r=8, sketch=512, seed=42): repeated
+    invocations (each bench pass) skip the whole Arrow signature
+    stage."""
+    return _frames("siglsh", spark, sf_dir, lambda t: dedup.sign_lsh_base(
+        t["embeddings"], bands=192, planes_per_band=8).persist())
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,42 +624,58 @@ def dedup_embedding_cosine_sql() -> str:
 
 # ------------------------------------------- persisted-index probe entries
 
-import os as _os
 import tempfile as _tempfile
 
-# (session, sf_dir, kind) -> on-disk index path. The fixture tables are
-# IMMUTABLE, so the index build is paid once per session — exactly the
-# incremental-admission contract these entries exist to prove (signature
-# extraction happens once per corpus ever; every probe afterwards
-# constructs lazily and reads only the persisted index).
-_PROBE_INDEX_CACHE: dict = {}
-# stale/dead probe-index trees awaiting deletion: retired (not
-# rmtree'd in place) so live DataFrames that still lazily reference
-# them keep working; swept by purge_probe_indexes, with an
-# opportunistic oldest-first sweep past _RETIRED_CAP retirements so the
-# backlog stays bounded even in a session that never reaches purge
+# probe-index trees released by the memo (stale, another sf_dir's or a
+# dead session's) await deletion here: RETIRED, not rmtree'd in place,
+# because DataFrames returned by earlier calls still lazily reference
+# them (an immediate rmtree would turn their next action into
+# FileNotFoundException or, with ignoreMissingFiles, silent row loss).
+# Swept by purge_probe_indexes, and oldest-first past _RETIRED_CAP at
+# the next index build, so the backlog stays bounded in a session that
+# never purges.
 _RETIRED_INDEX_TREES: list = []
-_RETIRED_CAP = int(_os.environ.get("RM_RETIRED_CAP", "16"))
+_RETIRED_CAP = 16
 
 
-def purge_probe_indexes() -> int:
-    """Delete every memoized probe-index tmp tree. Registered atexit
-    (a fresh process starts with an empty cache, so nothing else would
-    ever remove the previous process's trees from /tmp) and invoked by
-    release_edge_cache so bench teardown leaves no disk residue."""
+def _retire_tree(path: str) -> None:
+    from .operators.index_meta import invalidate_index_meta
+
+    _RETIRED_INDEX_TREES.append(path)
+    invalidate_index_meta(path)  # keep the sidecar cache honest
+
+
+def _sweep_retired(keep: int) -> int:
+    """Delete retired trees, oldest first, until ``keep`` remain."""
     import shutil
 
     from .operators.index_meta import invalidate_index_meta
 
     n = 0
-    for path in [p for _fp, p in _PROBE_INDEX_CACHE.values()] \
-            + _RETIRED_INDEX_TREES:
+    while len(_RETIRED_INDEX_TREES) > keep:
+        path = _RETIRED_INDEX_TREES.pop(0)
         shutil.rmtree(path, ignore_errors=True)
-        invalidate_index_meta(path)  # keep the sidecar cache honest
+        invalidate_index_meta(path)
         n += 1
-    _PROBE_INDEX_CACHE.clear()
-    _RETIRED_INDEX_TREES.clear()
+        if keep:
+            # a DataFrame handed out >= _RETIRED_CAP rebuilds ago now
+            # fails at execution with a missing-file error — this
+            # warning is the diagnosis trail
+            import warnings
+            warnings.warn(
+                f"probe-index retirement backlog > {keep}: force-sweeping "
+                f"oldest retired tree {path}; any still-lazy DataFrame "
+                f"over it will fail with missing files", RuntimeWarning)
     return n
+
+
+def purge_probe_indexes() -> int:
+    """Delete every probe-index tmp tree, live and retired; returns the
+    number deleted. Registered atexit: a fresh process starts with an
+    empty memo, so nothing else would ever remove the previous
+    process's trees from /tmp."""
+    release_memos("index:")  # retires the live trees
+    return _sweep_retired(0)
 
 
 import atexit as _atexit
@@ -696,72 +685,26 @@ _atexit.register(purge_probe_indexes)
 
 def _probe_index_path(spark: SparkSession, sf_dir: str, kind: str,
                       build) -> str:
-    """Memoized on-disk artifact per (session, sf_dir, kind), fingerprint-
-    revalidated on EVERY hit like the other derived caches (r13 review:
-    this was the one cache still trusting 'fixtures are immutable' — a
-    rewritten sf_dir would have kept serving the artifact built from the
-    old corpus). A None fingerprint (blind witness) never matches, so a
-    fingerprinting failure rebuilds rather than risking staleness."""
-    import shutil
+    """On-disk artifact written by ``build(path)`` into a fresh tmp
+    tree, memoized per (session, sf_dir) under memo kind
+    ``index:<kind>``; a released tree is retired (see
+    _RETIRED_INDEX_TREES). A FAILED build must not leak its partial
+    tree (nothing would ever reclaim it): it is deleted and the error
+    re-raised."""
+    def make():
+        import shutil
 
-    key = (session_key(spark), sf_dir, kind)
-    fp_now = _sf_fingerprint(sf_dir)
-    hit = _PROBE_INDEX_CACHE.get(key)
-    if hit is not None:
-        fp_was, path = hit
-        if fp_was is not None and fp_now is not None and fp_was == fp_now:
-            return path
-        # stale (or unverifiable) artifact: RETIRE the tree instead of
-        # deleting it in place — DataFrames returned by earlier calls
-        # still lazily reference these files, and an immediate rmtree
-        # would turn their next action into FileNotFoundException (or,
-        # with ignoreMissingFiles, silent row loss). Retired trees are
-        # swept by purge_probe_indexes (bench teardown / atexit), the
-        # same fail-soft lifetime the persisted-frame caches give
-        # their consumers (r13 third review).
-        from .operators.index_meta import invalidate_index_meta
-        _RETIRED_INDEX_TREES.append(path)
-        invalidate_index_meta(path)
-        _PROBE_INDEX_CACHE.pop(key, None)
-    # retire DEAD sessions' index dirs too (same policy as every other
-    # session-lifetime cache here): unreachable once the session key
-    # can no longer match, reclaimed at the next purge
-    for k in [k for k in _PROBE_INDEX_CACHE if k[0] != key[0]]:
-        _RETIRED_INDEX_TREES.append(_PROBE_INDEX_CACHE.pop(k)[1])
-    # bound the retirement backlog (r13 advice: a session that never
-    # reaches purge accumulated stale trees without limit): past
-    # _RETIRED_CAP, opportunistically sweep the OLDEST retirees here —
-    # a DataFrame still referencing a tree that old (>= 8 rebuilds ago)
-    # has outlived every consumer pattern in the repo, and the trade is
-    # explicit: bounded disk beats a theoretical late reader. Trees a
-    # hard kill strands entirely live under the OS tmp dir (mkdtemp),
-    # so the platform's tmp reaper is the terminal backstop.
-    while len(_RETIRED_INDEX_TREES) > _RETIRED_CAP:
-        swept = _RETIRED_INDEX_TREES.pop(0)
-        # surface the force-sweep (r14 advice): a DataFrame handed out
-        # >= _RETIRED_CAP rebuilds ago now fails at execution with a
-        # missing-file error — this warning is the diagnosis trail, and
-        # RM_RETIRED_CAP raises the cap when a workload legitimately
-        # holds probe frames across many rebuilds
-        import warnings
-        warnings.warn(
-            f"probe-index retirement backlog > {_RETIRED_CAP} "
-            f"(RM_RETIRED_CAP to raise): force-sweeping oldest retired "
-            f"tree {swept}; any still-lazy DataFrame over it will fail "
-            f"with missing files", RuntimeWarning, stacklevel=2)
-        shutil.rmtree(swept, ignore_errors=True)
-    path = _tempfile.mkdtemp(prefix=f"rm_{kind}_idx_")
-    # stamp the fingerprint taken BEFORE the build (a rewrite racing the
-    # build leaves an older stamp -> next hit rebuilds); a FAILED build
-    # must not leak its partial tree outside the cache (nothing would
-    # ever reclaim it) — clean up and re-raise
-    try:
-        build(path)
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    _PROBE_INDEX_CACHE[key] = (fp_now, path)
-    return path
+        _sweep_retired(_RETIRED_CAP)
+        path = _tempfile.mkdtemp(prefix=f"rm_{kind}_idx_")
+        try:
+            build(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        return path
+
+    return memo("index:" + kind, spark, sf_dir, (), make,
+                release=_retire_tree)
 
 
 def neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1107,9 +1050,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     q = _query_vectors(t)
     k = 10
-    ivf = similarity.ivf_topk(t["embeddings"], q, k=k, ncentroids=8,
-                              nprobe=7, cache_key=sf_dir).select("qid", "cid")
-    exact = similarity.brute_force_topk(t["embeddings"], q, k=k)
+    emb = t["embeddings"]
+    cents = memo("codebook:ivf:embedding", spark, sf_dir, (8,),
+                 lambda: similarity.train_centroids(emb, ncentroids=8))
+    ivf = similarity.ivf_topk(emb, q, k=k, ncentroids=8, nprobe=7,
+                              cents=cents).select("qid", "cid")
+    exact = similarity.brute_force_topk(emb, q, k=k)
     hits = (exact.select("qid", "cid")
             .join(ivf.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
             .groupBy("qid")
@@ -2465,121 +2411,37 @@ def customer_deciles_sql() -> str:
     """
 
 
-# Per-(session, sf_dir) cache of the derived trade-edge table: the
-# orders⋈lineitem distinct is an artifact of an IMMUTABLE input table,
-# so re-deriving it on every invocation is pure waste — the same
-# contract as the IVF/PQ codebook cache (params in the key, explicit
-# release). ~30 MB persisted at sf0.1.
-_EDGE_CACHE: dict = {}
-
-# (session, sf_dir) -> persisted verified token-jaccard pair frame —
-# shared by the five entries that compose it (see dedup_token_jaccard).
-_PAIRS_CACHE: dict = {}
-
-
-# Staleness witness shared with the table memo (session.py): one stat
-# per file, mtime_ns so same-tick rewrites are distinguishable.
-_sf_fingerprint = sf_fingerprint
+def _frames(kind: str, spark: SparkSession, sf_dir: str, build):
+    """Memoized persisted frame (or dict of frames) derived from the
+    tables: ``build(tables)`` must return frames that are already
+    persisted (and, if it had internal persisted scaffolding, already
+    released — see _embedding_kmeans_asg); the memo unpersists them on
+    release. Operators also take the derived frame as an explicit
+    argument (``base=``/``deg=``/...), so production callers over
+    genuinely growing tables own invalidation outright and never touch
+    these fixture-shaped memos."""
+    return memo(kind, spark, sf_dir, (),
+                lambda: build(load_tables(spark, sf_dir)),
+                release=_unpersist)
 
 
-# staleness witnesses for _cached_frames entries, keyed
-# (id(cache), cache_key) — parallel to the caches so their value shape
-# stays uniformly dict[name, persisted DataFrame]
-_CACHE_FPRINTS: dict = {}
-
-
-def _cached_frames(cache: dict, spark: SparkSession, sf_dir: str,
-                   build) -> dict:
-    """Per-(session, sf_dir) evict-and-insert cache of persisted derived
-    frames. Every session-lifetime cache in this module stores the same
-    shape — dict[name, persisted DataFrame] — so eviction and
-    release_edge_cache stay uniform (no per-cache value-shape branches).
-    Entries from OTHER sessions/sf_dirs are unpersisted before
-    inserting: a stopped session's persisted frame is dead weight, so a
-    cache never holds more than the live (session, sf_dir) entry.
-    `build(tables) -> dict[name, DataFrame]` must return frames that are
-    already persisted (and, if the builder had internal persisted
-    scaffolding, already released — see _embedding_kmeans_asg).
-
-    STALENESS CONTRACT (r10 verdict item #5 — one written contract for
-    every signature/edge/assignment cache): a hit revalidates the
-    sf_dir parquet fingerprint recorded at build time (file stat only —
-    no jobs) and rebuilds when the data changed, so a cache can never
-    pin derived frames over externally rewritten inputs. This is
-    content-keyed rather than the graph memo's TTL because the caches
-    hold heavy persisted state (a TTL would silently re-pay the build
-    on a schedule while STILL serving stale frames inside the window;
-    the fingerprint rebuilds exactly when needed). Operators also take
-    the derived frame as an explicit argument (`base=`/`deg=`/...), so
-    production callers over genuinely growing tables own invalidation
-    outright and never touch these fixture-shaped caches."""
-    cache_key = (session_key(spark), sf_dir)
-    fkey = (id(cache), cache_key)
-    fp_now = _sf_fingerprint(sf_dir)
-    fp_rec = _CACHE_FPRINTS.get(fkey)
-    # a None witness on either side is a MISMATCH, not a match — when
-    # fingerprinting is blind the cache must fail to stale-serving's
-    # conservative side and rebuild (r12 review; same rule as
-    # load_tables' memo)
-    if cache_key in cache \
-            and (fp_rec is None or fp_now is None or fp_rec != fp_now):
-        for f in cache.pop(cache_key).values():
-            try:
-                f.unpersist()
-            except Exception:
-                pass
-    # No explicit invalidate_tables here: load_tables itself now
-    # revalidates its memo's fingerprint on every hit (session.py), so
-    # neither the stale-hit rebuild NOR a first-ever build (cache miss
-    # after an external rewrite — the r11-advice medium gap) can read
-    # through a pinned file listing and stamp a fresh fingerprint onto
-    # frames built from stale scans.
-    if cache_key not in cache:
-        for k in [k for k in cache if k != cache_key]:
-            _CACHE_FPRINTS.pop((id(cache), k), None)
-            for f in cache.pop(k).values():
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-        # stamp the fingerprint taken BEFORE the build (a rewrite racing
-        # the build leaves an older stamp -> next hit rebuilds)
-        _CACHE_FPRINTS[fkey] = fp_now
-        cache[cache_key] = build(load_tables(spark, sf_dir))
-    return cache[cache_key]
+def _unpersist(frames) -> None:
+    for f in (frames.values() if isinstance(frames, dict) else (frames,)):
+        f.unpersist()
 
 
 def release_edge_cache() -> int:
-    """Release every session-lifetime derived-frame cache (trade edges,
-    the embedding signature base, and the semantic-dedup assignments —
-    one knob for callers like bench.py that must leave no persisted
-    frames behind)."""
-    n = 0
-    for cache in (_EDGE_CACHE, _SIGLSH_CACHE, _SEMASG_CACHE,
-                  _SIMHASH_CACHE, _MINHASH_CACHE, _PAIRS_CACHE):
-        for e in cache.values():
-            for f in e.values():
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-            n += 1
-        cache.clear()
-        # drop the matching fingerprint stamps too: hits require cache
-        # membership so orphans are inert today, but they are a slow
-        # leak and a stale-hit hazard if a future refactor consults
-        # _CACHE_FPRINTS independently of the cache dict (r12 advice)
-        for fk in [fk for fk in _CACHE_FPRINTS if fk[0] == id(cache)]:
-            _CACHE_FPRINTS.pop(fk, None)
-    _BPE_CACHE.clear()  # tiny python lists — no frames, cleared for hygiene
-    _NB_PARAMS_CACHE.clear()  # five ints — same hygiene
-    n += purge_probe_indexes()
-    return n
+    """Release every memoized sf_dir-derived state (table plans,
+    persisted frames, fits, codebooks; probe-index trees are retired,
+    and purge_probe_indexes or exit deletes them) — one knob for
+    callers like bench.py that must leave no persisted frames behind.
+    Returns the number of entries released."""
+    return release_memos()
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str):
-    """Derived customer-supplier trade-edge table, cached per
-    (session, sf_dir) — shared by graph_pagerank and graph_communities."""
+    """Derived customer-supplier trade-edge table (~30 MB persisted at
+    sf0.1), memoized — shared by graph_pagerank and graph_communities."""
     def build(t):
         okeys = F.broadcast(t["orders"].select("o_orderkey", "o_custkey"))
         ipairs = (t["lineitem"].select("l_orderkey", "l_suppkey")
@@ -2611,7 +2473,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
             "nodes": deg.select(F.col("src").alias("node")),
         }
 
-    return _cached_frames(_EDGE_CACHE, spark, sf_dir, build)
+    return _frames("edges", spark, sf_dir, build)
 
 
 
@@ -2744,9 +2606,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     q = _query_vectors(t)
     k = 10
-    pq = similarity.pq_topk(t["embeddings"], q, k=k, m=16, ksub=16,
-                            rerank=24, cache_key=sf_dir).select("qid", "cid")
-    exact = similarity.brute_force_topk(t["embeddings"], q, k=k)
+    emb = t["embeddings"]
+    books = memo("codebook:pq:embedding", spark, sf_dir, (16, 16),
+                 lambda: similarity.train_pq_codebooks(emb, m=16, ksub=16))
+    pq = similarity.pq_topk(emb, q, k=k, m=16, ksub=16, rerank=24,
+                            books=books).select("qid", "cid")
+    exact = similarity.brute_force_topk(emb, q, k=k)
     hits = (exact.select("qid", "cid")
             .join(pq.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
             .groupBy("qid")
@@ -2777,9 +2642,17 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     q = _query_vectors(t)
     k = 10
-    opq = similarity.opq_topk(t["embeddings"], q, k=k, m=16, ksub=16,
-                              rerank=24, cache_key=sf_dir).select("qid", "cid")
-    exact = similarity.brute_force_topk(t["embeddings"], q, k=k)
+    emb = t["embeddings"]
+    rot = memo("codebook:opq_rotation:embedding", spark, sf_dir, (16,),
+               lambda: similarity.opq_rotation(emb, m=16))
+    # the rotated-space books are their own kind ("_rv" vec_col), so
+    # they never evict the plain-PQ books of ann_pq_topk
+    books = memo("codebook:pq:_rv", spark, sf_dir, (16, 16),
+                 lambda: similarity.train_pq_codebooks(
+                     similarity.opq_rotate(emb, rot), "_rv", m=16, ksub=16))
+    opq = similarity.opq_topk(emb, q, k=k, m=16, ksub=16, rerank=24,
+                              rotation=rot, books=books).select("qid", "cid")
+    exact = similarity.brute_force_topk(emb, q, k=k)
     hits = (exact.select("qid", "cid")
             .join(opq.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
             .groupBy("qid")
@@ -2825,22 +2698,12 @@ def embedding_quantize_sql() -> str:
 
 # ------------------------------------------------- embedding linalg
 
-# memoized PCA fit per (session, sf_dir, k): the fit is two bounded
-# collects (d² gram cells + d column sums) over an IMMUTABLE fixture —
-# the numpy tuple is kilobytes, so unlike the frame caches there is
-# nothing to unpersist, but the single-live-entry discipline matches.
-_PCA_FIT_CACHE: dict = {}
-
-
 def _pca_fit(spark: SparkSession, sf_dir: str, k: int):
+    """Memoized PCA fit: two bounded collects (d² gram cells + d column
+    sums); the numpy tuple is kilobytes, nothing to release."""
     from .operators import linalg
-    key = (session_key(spark), sf_dir, k)
-    if key not in _PCA_FIT_CACHE:
-        for other in [o for o in _PCA_FIT_CACHE if o != key]:
-            _PCA_FIT_CACHE.pop(other)
-        emb = load_tables(spark, sf_dir)["embeddings"]
-        _PCA_FIT_CACHE[key] = linalg.fit_pca(emb, k, "embedding")
-    return _PCA_FIT_CACHE[key]
+    return memo("pca_fit", spark, sf_dir, (k,), lambda: linalg.fit_pca(
+        load_tables(spark, sf_dir)["embeddings"], k, "embedding"))
 
 
 def _guarded_bigint(col, msg_col):
@@ -2959,25 +2822,17 @@ _PROBE_FEATS = ["f_len", "f_tok", "f_awl"]
 _PROBE_LAM = 1e-6
 
 
-_PROBE_FIT_CACHE: dict = {}
-
-
 def _probe_fit(spark: SparkSession, sf_dir: str):
-    """Memoized bounded probe fit (same first-construction-only
-    contract as _pca_fit / the codebook cache): the d²-row moment
-    collect and the driver ridge solve run once per (session, sf_dir)."""
+    """Memoized bounded probe fit: the d²-row moment collect and the
+    driver ridge solve run on the first construction only."""
     from .operators import linalg
-    key = (session_key(spark), sf_dir)
-    if key not in _PROBE_FIT_CACHE:
-        for other in [o for o in _PROBE_FIT_CACHE if o != key]:
-            _PROBE_FIT_CACHE.pop(other)
-        docs = load_tables(spark, sf_dir)["documents"]
-        feat = _probe_features(docs)
+
+    def fit():
+        feat = _probe_features(load_tables(spark, sf_dir)["documents"])
         rows = linalg.design_moments(feat, _PROBE_FEATS, "y").collect()
-        w, n, resid = linalg.solve_ridge(rows, len(_PROBE_FEATS),
-                                         _PROBE_LAM)
-        _PROBE_FIT_CACHE[key] = (w, n, resid)
-    return _PROBE_FIT_CACHE[key]
+        return linalg.solve_ridge(rows, len(_PROBE_FEATS), _PROBE_LAM)
+
+    return memo("probe_fit", spark, sf_dir, (), fit)
 
 
 def quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3481,30 +3336,15 @@ def dedup_keep_best_sql() -> str:
     """
 
 
-# (session, sf_dir) -> (sf fingerprint, collected NB consts dict). The
-# five ints are a pure function of the immutable corpus + the fixed
-# class predicates — memoized like the BPE merge table so only the
-# FIRST construction pays the consts job (the lazy-construction gate
-# asserts the second build is job-free). Values are tiny dicts (no
-# frames); staleness follows the _sf_fingerprint contract.
-_NB_PARAMS_CACHE: dict = {}
-
-
 def _nb_quality_params(spark: SparkSession, sf_dir: str, consts) -> dict:
-    """Memoized collect of the caller's consts frame (the five ints) —
-    the caller hands in the consts from the ONE nb_model construction
-    it already made, so the training plan is never built twice
-    (r12 second review)."""
+    """Memoized collect of the caller's consts frame (the five ints, a
+    pure function of the corpus + the fixed class predicates) — only
+    the FIRST construction pays the consts job. The caller hands in the
+    consts from the ONE nb_model construction it already made, so the
+    training plan is never built twice (r12 second review)."""
     from .operators import classifier
-    key = (session_key(spark), sf_dir)
-    fp = _sf_fingerprint(sf_dir)
-    hit = _NB_PARAMS_CACHE.get(key)
-    if hit is not None and fp is not None and hit[0] == fp:
-        return hit[1]
-    params = classifier.nb_model_params(consts)
-    _NB_PARAMS_CACHE.clear()  # one live entry, like the frame caches
-    _NB_PARAMS_CACHE[key] = (fp, params)
-    return params
+    return memo("nb_params", spark, sf_dir, (),
+                lambda: classifier.nb_model_params(consts))
 
 
 def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3577,35 +3417,12 @@ def decontam_embedding_sql() -> str:
 
 _BPE_MERGES, _BPE_TOPW = 16, 256
 
-# (session, sf_dir) -> (sf fingerprint, merges list). The trained merge
-# table is a pure function of the immutable corpus + params — memoized
-# like the IVF/PQ codebook fits so only the FIRST construction pays the
-# training job (the lazy-construction gate asserts the second build is
-# job-free). Values are tiny python lists (no persisted frames);
-# staleness follows the same _sf_fingerprint contract as
-# _cached_frames.
-_BPE_CACHE: dict = {}
-
-
 def _bpe_merges(spark: SparkSession, sf_dir: str):
-    key = (session_key(spark), sf_dir)
-    fp = _sf_fingerprint(sf_dir)
-    hit = _BPE_CACHE.get(key)
-    # a None fingerprint (blind witness) never matches — retrain rather
-    # than risk serving merges pinned over a rewritten corpus
-    if hit is not None and fp is not None and hit[0] == fp:
-        return hit[1]
-    # No explicit invalidate on the retrain paths (stale hit OR first
-    # build): load_tables self-validates its memo's fingerprint
-    # (session.py), so the retrain can never read a pinned stale file
-    # listing and stamp the fresh fingerprint onto merges trained from
-    # old data (r11 second review + r11-advice medium first-build gap).
-    merges = tokenizer.bpe_train(load_tables(spark, sf_dir)["documents"],
-                                 n_merges=_BPE_MERGES,
-                                 top_words=_BPE_TOPW)
-    _BPE_CACHE.clear()  # one live (session, sf_dir) entry, like the frame caches
-    _BPE_CACHE[key] = (fp, merges)
-    return merges
+    """Memoized trained merge table (a tiny python list): only the FIRST
+    construction pays the training job."""
+    return memo("bpe", spark, sf_dir, (), lambda: tokenizer.bpe_train(
+        load_tables(spark, sf_dir)["documents"],
+        n_merges=_BPE_MERGES, top_words=_BPE_TOPW))
 
 
 def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4751,15 +4568,9 @@ def embedding_kmeans_lloyd_sql() -> str:
     """
 
 
-# (session, sf_dir) -> persisted Lloyd assignment frame at the entry's
-# fixed params (_SEMKM_K/_SEMKM_ITERS). Assignments over an immutable
-# table are a pure function of (table, params) — cached once per session
-# like the trade edges and the sign-LSH signature base; released by
-# release_edge_cache.
-_SEMASG_CACHE: dict = {}
-
-
 def _embedding_kmeans_asg(spark: SparkSession, sf_dir: str):
+    """Persisted Lloyd assignment frame at the entry's fixed params
+    (_SEMKM_K/_SEMKM_ITERS), memoized like the trade edges."""
     def build(t):
         km = similarity.kmeans_lloyd(t["embeddings"],
                                      k=_SEMKM_K, iters=_SEMKM_ITERS)
@@ -4773,9 +4584,9 @@ def _embedding_kmeans_asg(spark: SparkSession, sf_dir: str):
             getattr(km, "rm_release_cache", lambda: None)()
         except Exception:
             pass
-        return {"asg": asg}
+        return asg
 
-    return _cached_frames(_SEMASG_CACHE, spark, sf_dir, build)["asg"]
+    return _frames("semasg", spark, sf_dir, build)
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -320,8 +320,8 @@ def pca_project(emb: DataFrame, k: int, vec_col: str = "embedding",
     """Project every embedding onto the top-k PCA components (optionally
     whitened: unit variance per component). Fit is one bounded
     distributed pass (fit_pca) — or pass a precomputed ``fit`` tuple
-    (callers over an immutable corpus memoize it, the codebook-cache
-    contract); the projection is a MAP-ONLY Arrow pass with the k×d
+    (callers over an immutable corpus memoize it, as the similarity
+    operators take fitted codebooks); the projection is a MAP-ONLY Arrow pass with the k×d
     basis and mean shipped by value — no join, no shuffle, the 100 TB
     shape. Output (id, proj array<double>); ``round_to`` rounds the
     coordinates for stable presentation."""

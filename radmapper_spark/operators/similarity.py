@@ -34,31 +34,6 @@ def _to_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-# Driver-side codebook cache. Training an IVF/PQ codebook costs a
-# corpus.count() + bounded sample collect + driver k-means (~2 s at sf0.1)
-# per call; the result is a tiny numpy array (<= ncentroids*dim float64),
-# so re-fitting it on every invocation over the same immutable table is
-# pure waste. Keyed by (caller cache_key, kind, training params) — the
-# caller's key should identify the corpus (e.g. its path); params in the
-# key mean a param change can never serve a stale codebook. Entries are
-# plain numpy arrays: no Spark resources held, release_codebooks() is the
-# explicit eviction handle.
-_CODEBOOK_CACHE: dict = {}
-
-
-def release_codebooks(cache_key=None) -> int:
-    """Evict cached codebooks; all of them when cache_key is None, else
-    just those trained under that key. Returns the eviction count."""
-    if cache_key is None:
-        n = len(_CODEBOOK_CACHE)
-        _CODEBOOK_CACHE.clear()
-        return n
-    drop = [k for k in _CODEBOOK_CACHE if k[0] == cache_key]
-    for k in drop:
-        del _CODEBOOK_CACHE[k]
-    return len(drop)
-
-
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      qid_col: str = "qid") -> DataFrame:
@@ -81,25 +56,17 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
 def train_centroids(corpus: DataFrame, vec_col: str = "embedding",
                     ncentroids: int = 16, iters: int = 5, seed: int = 42,
-                    max_sample: int = 4096, cache_key=None):
+                    max_sample: int = 4096):
     """Tiny k-means on a driver-side sample (the IVF codebook is small by
     construction; training data is a bounded sample, not the corpus).
 
     The sample is a genuine uniform row sample: fraction computed from the
     corpus count (with 20% overshoot, trimmed to max_sample) — a
     fraction=1.0 + limit() would just take the first partitions, biasing
-    the codebook toward whatever the file order correlates with.
-
-    cache_key (e.g. the corpus table path): when given, the trained
-    codebook is memoized in _CODEBOOK_CACHE so repeat invocations skip the
-    count + sample collect + fit. Only pass a key for an immutable corpus."""
+    the codebook toward whatever the file order correlates with. The fit
+    costs a count + bounded sample collect + driver k-means, so callers
+    over an immutable corpus fit once and pass ``cents=`` to ivf_topk."""
     import numpy as np
-    ck = None
-    if cache_key is not None:
-        ck = (cache_key, "ivf", vec_col, ncentroids, iters, seed, max_sample)
-        hit = _CODEBOOK_CACHE.get(ck)
-        if hit is not None:
-            return hit
     n = corpus.count()
     frac = min(1.0, (max_sample * 1.2) / max(n, 1))
     sample = np.array(
@@ -119,8 +86,6 @@ def train_centroids(corpus: DataFrame, vec_col: str = "embedding",
             pts = sample[assign == i]
             if len(pts):
                 cents[i] = pts.mean(axis=0)
-    if ck is not None:
-        _CODEBOOK_CACHE[ck] = cents
     return cents
 
 
@@ -158,11 +123,12 @@ def _nearest_centroid_udf(cents, n_take: int = 1):
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              vec_col: str = "embedding", id_col: str = "vec_id",
              qid_col: str = "qid", ncentroids: int = 16, nprobe: int = 4,
-             cache_key=None) -> DataFrame:
+             cents=None) -> DataFrame:
     """Approximate top-k: probe only the nprobe nearest centroid cells.
-    cache_key memoizes the codebook fit for an immutable corpus (see
-    train_centroids)."""
-    cents = train_centroids(corpus, vec_col, ncentroids, cache_key=cache_key)
+    ``cents`` is an already-fitted codebook (train_centroids); fitted
+    here when absent."""
+    if cents is None:
+        cents = train_centroids(corpus, vec_col, ncentroids)
     npart = corpus.sparkSession.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < npart:
         # spread the per-row assignment math; a small parquet file
@@ -217,22 +183,14 @@ def range_search(corpus: DataFrame, queries: DataFrame,
 
 def train_pq_codebooks(corpus: DataFrame, vec_col: str = "embedding",
                        m: int = 4, ksub: int = 16, iters: int = 5,
-                       seed: int = 42, max_sample: int = 4096,
-                       cache_key=None):
+                       seed: int = 42, max_sample: int = 4096):
     """Product-quantization codebooks: split the (L2-normalized) vector
     into m subvectors and k-means each subspace on a bounded uniform
     driver-side sample — same sampling discipline as train_centroids.
     Returns an (m, ksub, dim/m) float64 array. Requires dim % m == 0:
     a silent remainder would drop trailing dimensions from every ADC
-    score and degrade recall with no warning. cache_key memoizes the fit
-    for an immutable corpus (see train_centroids)."""
+    score and degrade recall with no warning."""
     import numpy as np
-    ck = None
-    if cache_key is not None:
-        ck = (cache_key, "pq", vec_col, m, ksub, iters, seed, max_sample)
-        hit = _CODEBOOK_CACHE.get(ck)
-        if hit is not None:
-            return hit
     n = corpus.count()
     frac = min(1.0, (max_sample * 1.2) / max(n, 1))
     sample = np.array(
@@ -261,10 +219,7 @@ def train_pq_codebooks(corpus: DataFrame, vec_col: str = "embedding",
                 if len(pts):
                     cents[i] = pts.mean(axis=0)
         books.append(cents)
-    out = np.stack(books)  # (m, ksub, dsub)
-    if ck is not None:
-        _CODEBOOK_CACHE[ck] = out
-    return out
+    return np.stack(books)  # (m, ksub, dsub)
 
 
 def _pq_encode_udf(books):
@@ -322,7 +277,7 @@ def _pq_lut_udf(books):
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
             vec_col: str = "embedding", id_col: str = "vec_id",
             qid_col: str = "qid", m: int = 4, ksub: int = 16,
-            rerank: int = 4, cache_key=None) -> DataFrame:
+            rerank: int = 4, books=None) -> DataFrame:
     """Approximate cosine top-k via product quantization + exact rerank.
 
     Scale shape: the corpus is encoded ONCE into m small codes (m bytes at
@@ -332,9 +287,11 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     the exact rerank touches just rerank*k candidates per query.
 
     approx_cos(q, c) = sum_j lut_q[j*ksub + code_c[j]] — the ADC estimate
-    of the cosine between the normalized vectors."""
-    books = train_pq_codebooks(corpus, vec_col, m=m, ksub=ksub,
-                               cache_key=cache_key)
+    of the cosine between the normalized vectors. ``books`` is an
+    already-fitted codebook (train_pq_codebooks); fitted here when
+    absent."""
+    if books is None:
+        books = train_pq_codebooks(corpus, vec_col, m=m, ksub=ksub)
     npart = corpus.sparkSession.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < npart:
         corpus = corpus.repartition(npart)
@@ -370,7 +327,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
 
 def opq_rotation(corpus: DataFrame, vec_col: str = "embedding",
-                 m: int = 4, cache_key=None):
+                 m: int = 4):
     """Parametric OPQ rotation (public recipe: Ge et al. 2013,
     "Optimized Product Quantization", the eigenvalue-allocation
     variant): eigendecompose the corpus's UNCENTERED second-moment
@@ -391,12 +348,6 @@ def opq_rotation(corpus: DataFrame, vec_col: str = "embedding",
 
     from .linalg import GRAM_SCALE, column_sums, gram_matrix
 
-    ck = None
-    if cache_key is not None:
-        ck = (cache_key, "opqR", vec_col, m)
-        hit = _CODEBOOK_CACHE.get(ck)
-        if hit is not None:
-            return hit
     s_rows = column_sums(corpus, vec_col).collect()
     if not s_rows:
         raise ValueError("opq_rotation: no non-null vectors")
@@ -431,43 +382,44 @@ def opq_rotation(corpus: DataFrame, vec_col: str = "embedding",
         load[j] += logs[idx]
     rows = [vecs[:, idx] for j in range(m) for idx in members[j]]
     R = np.stack(rows)  # d x d, orthonormal
-    out = (R, n)
-    if ck is not None:
-        _CODEBOOK_CACHE[ck] = out
-    return out
+    return R, n
+
+
+def opq_rotate(frame: DataFrame, rotation, vec_col: str = "embedding",
+               id_col: str = "vec_id") -> DataFrame:
+    """(id_col, _rv): ``frame``'s vectors rotated by an opq_rotation fit
+    (R, n) — a map-only Arrow pass."""
+    import numpy as np
+
+    from .linalg import pca_project
+
+    R, n = rotation
+    d = R.shape[0]
+    # unit scale, zero mean: pca_project degenerates to x -> R @ x
+    return pca_project(frame, d, vec_col=vec_col, id_col=id_col,
+                       out_col="_rv", fit=(R, np.ones(d), np.zeros(d), n))
 
 
 def opq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              vec_col: str = "embedding", id_col: str = "vec_id",
              qid_col: str = "qid", m: int = 4, ksub: int = 16,
-             rerank: int = 4, cache_key=None) -> DataFrame:
+             rerank: int = 4, rotation=None, books=None) -> DataFrame:
     """PQ top-k in the OPQ-rotated space: rotate corpus and queries with
     the shared orthonormal R (a MAP-ONLY Arrow pass each — cosine is
     rotation-invariant, so the exact rerank inside pq_topk stays exact),
     then run the standard PQ/ADC pipeline on the rotated vectors. Same
     output contract as pq_topk; recall is >= plain PQ's on correlated
     embeddings because the subspaces are decorrelated and
-    variance-balanced before quantization."""
-    import numpy as np
-
-    from .linalg import pca_project
-
-    R, _n = opq_rotation(corpus, vec_col, m=m, cache_key=cache_key)
-    d = R.shape[0]
-    rot_fit = (R, np.ones(d), np.zeros(d), _n)  # unit scale, zero mean:
-    #           pca_project degenerates to the pure rotation x -> R @ x
-    rc = pca_project(corpus, d, vec_col=vec_col, id_col=id_col,
-                     out_col="_rv", fit=rot_fit)
-    rq = pca_project(queries, d, vec_col=vec_col, id_col=qid_col,
-                     out_col="_rv", fit=rot_fit)
-    # cache_key passes through UNWRAPPED so release_codebooks(cache_key)
-    # evicts these codebooks too (it matches on key[0]); the rotated
-    # vec_col "_rv" inside train_pq_codebooks' key already separates
-    # OPQ codebooks from any plain-PQ fit under the same corpus key,
-    # and m is in the key, so different rotations cannot alias
+    variance-balanced before quantization. ``rotation`` (opq_rotation)
+    and ``books`` (train_pq_codebooks over the rotated corpus's "_rv")
+    are already-fitted; each is fitted here when absent."""
+    if rotation is None:
+        rotation = opq_rotation(corpus, vec_col, m=m)
+    rc = opq_rotate(corpus, rotation, vec_col, id_col)
+    rq = opq_rotate(queries, rotation, vec_col, qid_col)
     return pq_topk(rc, rq, k=k, vec_col="_rv", id_col=id_col,
                    qid_col=qid_col, m=m, ksub=ksub, rerank=rerank,
-                   cache_key=cache_key)
+                   books=books)
 
 
 # ----------------------------------------------------- persisted IVF index

@@ -69,29 +69,13 @@ TS_NANO_COLS = {
 }
 
 
-# (session_key(session), sf_dir) -> (sf_fingerprint, table-name ->
-# DataFrame). DataFrames are immutable logical plans, so handing every
-# caller the same dict is safe; what this saves is the 10 parquet footer
-# reads + schema resolutions a fresh load pays (~0.3 s per call —
-# measurable x90 queries x2 bench passes). No persisted data is held, so
-# there is nothing to release; stale sessions are evicted on the next
-# different-key call. The fingerprint recorded at memo-build time is
-# revalidated on EVERY hit (file stats only — no jobs), so no caller can
-# read through a pinned file listing after an external rewrite — in
-# particular a derived-frame cache's FIRST build (cache miss) no longer
-# needs its own invalidate call to avoid stamping a fresh fingerprint
-# onto frames built from stale scans (r11 advice, medium).
-_TABLE_CACHE: dict = {}
-
-
 def sf_fingerprint(sf_dir: str):
     """(name, mtime_ns, size) of every parquet file under sf_dir — the
-    staleness witness for the table memo above and the derived-frame
-    caches in entrypoints. mtime_ns (not seconds) so same-tick rewrites
-    are distinguishable (the persisted-index sidecar lesson,
-    index_meta.py). One os.stat per file: separate stat calls for mtime
-    and size could interleave with a rewrite and yield a chimeric
-    (old-mtime, new-size) witness (r11 advice)."""
+    staleness witness of every ``memo`` entry. mtime_ns (not seconds)
+    so same-tick rewrites are distinguishable (the persisted-index
+    sidecar lesson, index_meta.py). One os.stat per file: separate stat
+    calls for mtime and size could interleave with a rewrite and yield
+    a chimeric (old-mtime, new-size) witness (r11 advice)."""
     try:
         out = []
         for n in sorted(os.listdir(sf_dir)):
@@ -115,6 +99,71 @@ def session_key(spark: SparkSession) -> tuple:
     return (sc.applicationId, sc.startTime)
 
 
+# kind -> {(session_key, sf_dir, *params): (fingerprint, value, release)},
+# at most one entry per kind (see memo).
+_MEMO: dict = {}
+# kind -> [hits, misses, rebuilds]
+_MEMO_STATS: dict = {}
+# the table kind's store, read by perfbench's load_tables tracer
+_TABLE_CACHE = _MEMO.setdefault("tables", {})
+
+
+def memo(kind: str, spark: SparkSession, sf_dir: str, params: tuple,
+         build, release=None):
+    """The one memo for state derived from an sf_dir: table plans,
+    persisted derived frames, driver-side fits and codebooks, on-disk
+    index trees.
+
+    The key is (session_key, sf_dir, *params). The sf_dir fingerprint
+    is taken BEFORE ``build()`` runs (a rewrite racing the build leaves
+    an older stamp, so the next call rebuilds) and is checked on every
+    hit; a None fingerprint (blind witness) never matches, so it
+    rebuilds rather than risk serving stale state. Each kind holds ONE
+    live entry: a miss calls ``release(value)`` on the kind's previous
+    entry — a stale one, another sf_dir's or a dead session's — before
+    building. Kinds must therefore be chosen so that nothing one pass
+    reuses shares a kind with anything else it reuses."""
+    key = (session_key(spark), sf_dir) + tuple(params)
+    store = _MEMO.setdefault(kind, {})
+    stats = _MEMO_STATS.setdefault(kind, [0, 0, 0])
+    fp = sf_fingerprint(sf_dir)
+    hit = store.get(key)
+    if hit is not None and hit[0] is not None and hit[0] == fp:
+        stats[0] += 1
+        return hit[1]
+    stats[1 if hit is None else 2] += 1
+    _release_store(store)
+    value = build()
+    store[key] = (fp, value, release)
+    return value
+
+
+def _release_store(store: dict) -> int:
+    n = len(store)
+    for _fp, value, release in store.values():
+        if release is not None:
+            try:
+                release(value)
+            except Exception:
+                pass  # a dead session's frames cannot be unpersisted
+    store.clear()
+    return n
+
+
+def release_memos(prefix: str = "") -> int:
+    """Release every memo entry whose kind starts with ``prefix`` (all
+    of them by default); returns the number released."""
+    return sum(_release_store(store) for kind, store in _MEMO.items()
+               if kind.startswith(prefix))
+
+
+def memo_stats() -> dict:
+    """kind -> {"hits", "misses", "rebuilds"} counts since start-up
+    (a rebuild is a miss on a key whose entry went stale)."""
+    return {kind: dict(zip(("hits", "misses", "rebuilds"), v))
+            for kind, v in _MEMO_STATS.items()}
+
+
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
     """Load the driver-provided parquet tables as DataFrames.
 
@@ -122,25 +171,19 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
     pushdown + column pruning into the scan for free. The nano-timestamp
     rebuild is a cheap projection; pushdown on the rebuilt column becomes a
     filter on the underlying long, which still prunes row groups.
+
+    Memoized (kind "tables"): DataFrames are immutable logical plans, so
+    every caller can share them; what this saves is the 10 parquet footer
+    reads + schema resolutions a fresh load pays (~0.3 s per call).
     """
+    return dict(memo("tables", spark, sf_dir, (),
+                     lambda: _read_tables(spark, sf_dir),
+                     release=lambda _t: _refresh_tables(spark, sf_dir)))
+
+
+def _read_tables(spark: SparkSession, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
-    cache_key = (session_key(spark), sf_dir)
-    fp = sf_fingerprint(sf_dir)
-    hit = _TABLE_CACHE.get(cache_key)
-    if hit is not None:
-        # None (fingerprinting failed, e.g. listdir EACCES while the
-        # reads themselves would work) must compare UNEQUAL even to a
-        # None stamp: treating None == None as fresh would silently
-        # revert to never-validating exactly when the witness is blind
-        # (r12 review). The conservative direction is a spurious
-        # rebuild per call — plans only, no data re-read until action.
-        if hit[0] is not None and hit[0] == fp:
-            return dict(hit[1])
-        # External rewrite since the memo was built: the memoized
-        # DataFrames pin the old file listing and Spark's FileIndex
-        # caches the old split offsets — drop both before re-reading.
-        invalidate_tables(spark, sf_dir)
     # The driver may hand us a session built without our configs; this conf
     # is runtime-settable and required to read the TIMESTAMP(NANOS) parquet.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -162,25 +205,15 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
                 # LTZ is required by withWatermark and the datetime builtins.
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
         out[name] = df
-    for k in [k for k in _TABLE_CACHE if k[0] != cache_key[0]]:
-        del _TABLE_CACHE[k]  # dead sessions: plans only, no data held
-    # fp was computed BEFORE the reads: if a rewrite raced the load, the
-    # stamp is older than the data and the next call rebuilds — the
-    # conservative direction (never a fresh stamp over stale scans).
-    _TABLE_CACHE[cache_key] = (fp, out)
-    return dict(out)
+    return out
 
 
-def invalidate_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Drop the table memo for (session, sf_dir) AND Spark's own cached
-    file listings under the directory. A memoized DataFrame pins the
+def _refresh_tables(spark: SparkSession, sf_dir: str) -> None:
+    """Release of a table memo entry: drop Spark's own cached file
+    listings under the directory. A memoized DataFrame pins the
     FileStatus listing (file lengths, split offsets) captured at first
-    load, so after an external rewrite a re-executed plan can read the
-    new file with stale offsets (EOF / corrupt-footer failures) —
-    load_tables calls this itself whenever its memo's fingerprint goes
-    stale (r11 review finding #1 + the r11-advice first-build gap), so
-    every consumer inherits the staleness contract."""
-    _TABLE_CACHE.pop((session_key(spark), sf_dir), None)
+    load, so after an external rewrite a re-executed plan could read the
+    new file with stale offsets (EOF / corrupt-footer failures)."""
     for name in TABLES:
         try:
             spark.catalog.refreshByPath(f"{sf_dir}/{name}.parquet")

@@ -1,6 +1,6 @@
-"""Session-lifetime cache staleness: table memos, derived frames, BPE merges, probe indexes (session.py + entrypoints.py).
+"""Staleness of the sf_dir memo (session.memo): table plans, derived frames, fits, codebooks, probe indexes.
 
-Consolidated from the per-round test files (r14 governance pass) — test bodies unchanged."""
+Consolidated from the per-round test files (r14 governance pass)."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def test_table_cache_survives_session_restart():
 import os, sys
 sys.path.insert(0, %r)
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-from radmapper_spark.session import get_spark, load_tables, session_key, _TABLE_CACHE
+from radmapper_spark.session import get_spark, load_tables, session_key, _MEMO
 a = get_spark("restart-a")
 key_a = session_key(a)
 t = load_tables(a, %r)
@@ -47,7 +47,7 @@ t2 = load_tables(b, %r)
 # fresh plans: these frames must be bound to the LIVE session
 assert t2["region"].count() > 0
 assert t2["orders"].select("o_orderkey").limit(1).collect()
-assert all(k[0] == key_b for k in _TABLE_CACHE), "dead-session entries not evicted"
+assert all(k[0] == key_b for k in _MEMO["tables"]), "dead-session entries not evicted"
 b.stop()
 print("RESTART_OK")
 """
@@ -60,13 +60,14 @@ print("RESTART_OK")
 
 # ======================== from test_round11.py (r14 consolidation) ========
 def test_cached_frames_rebuild_on_input_change(spark, tmp_path):
-    """r10 verdict item #5: the derived-frame caches revalidate the
+    """r10 verdict item #5: the derived-frame memos revalidate the
     sf_dir parquet fingerprint on every hit — a rewritten input file
     (even same-size) triggers a rebuild instead of serving frames
     pinned over stale data."""
     import shutil
 
     from radmapper_spark import entrypoints as E
+    from radmapper_spark.session import memo_stats, release_memos
 
     sfd = tmp_path / "sf"
     shutil.copytree("/root/testdata/sf0.001", sfd)
@@ -79,10 +80,9 @@ def test_cached_frames_rebuild_on_input_change(spark, tmp_path):
         # hand every build the same object)
         return {"docs": tables["documents"].select("doc_id").persist()}
 
-    cache: dict = {}
-    a = E._cached_frames(cache, spark, str(sfd), build)["docs"]
+    a = E._frames("test_docs", spark, str(sfd), build)["docs"]
     n_before = a.count()
-    b = E._cached_frames(cache, spark, str(sfd), build)["docs"]
+    b = E._frames("test_docs", spark, str(sfd), build)["docs"]
     assert len(calls) == 1 and a is b  # hit: no rebuild, same frame
     # REAL rewrite — different content AND size (the r11 review case:
     # the rebuild must not read through the table memo's pinned file
@@ -92,12 +92,14 @@ def test_cached_frames_rebuild_on_input_change(spark, tmp_path):
     con.execute(f"CREATE TABLE t AS SELECT * FROM "
                 f"'{sfd}/documents.parquet' LIMIT 100")
     con.execute(f"COPY t TO '{sfd}/documents.parquet' (FORMAT PARQUET)")
-    c = E._cached_frames(cache, spark, str(sfd), build)["docs"]
+    rebuilds = memo_stats()["test_docs"]["rebuilds"]
+    c = E._frames("test_docs", spark, str(sfd), build)["docs"]
     assert len(calls) == 2 and c is not a  # fingerprint miss: rebuilt
+    assert memo_stats()["test_docs"]["rebuilds"] == rebuilds + 1
     assert not a.is_cached  # stale entry was unpersisted
     assert c.count() == 100 and n_before != 100  # fresh data, not memoized
-    # cleanup
-    cache.pop((E.session_key(spark), str(sfd)))["docs"].unpersist()
+    assert release_memos("test_docs") == 1  # cleanup
+    assert not c.is_cached
 
 
 # ======================== from test_round12.py (r14 consolidation) ========
@@ -135,6 +137,7 @@ def test_first_derived_build_after_rewrite_sees_fresh_data(spark, tmp_path):
     stale-hit invalidate runs). The build must see the rewritten data,
     and the fingerprint it stamps must validate as fresh afterwards."""
     from radmapper_spark import entrypoints as E
+    from radmapper_spark.session import release_memos
 
     sfd = tmp_path / "sf"
     shutil.copytree(SF_SMOKE_r12, sfd)
@@ -148,14 +151,13 @@ def test_first_derived_build_after_rewrite_sees_fresh_data(spark, tmp_path):
         calls.append(1)
         return {"docs": tables["documents"].select("doc_id").persist()}
 
-    cache: dict = {}
-    a = E._cached_frames(cache, spark, str(sfd), build)["docs"]
+    a = E._frames("test_docs", spark, str(sfd), build)["docs"]
     assert len(calls) == 1
     assert a.count() == 100 and n0 != 100  # built from FRESH scans
     # and the stamped fingerprint is genuinely fresh: a second call hits
-    b = E._cached_frames(cache, spark, str(sfd), build)["docs"]
+    b = E._frames("test_docs", spark, str(sfd), build)["docs"]
     assert len(calls) == 1 and b is a
-    cache.pop((E.session_key(spark), str(sfd)))["docs"].unpersist()
+    release_memos("test_docs")
 
 
 def test_bpe_merges_first_build_after_rewrite(spark, tmp_path):
@@ -174,7 +176,7 @@ def test_bpe_merges_first_build_after_rewrite(spark, tmp_path):
     expect = tokenizer.bpe_train(fresh, n_merges=E._BPE_MERGES,
                                  top_words=E._BPE_TOPW)
     assert merges == expect
-    E._BPE_CACHE.clear()
+    E.release_memos("bpe")
 
 
 def test_sf_fingerprint_single_stat_and_shape(tmp_path):
@@ -202,6 +204,44 @@ def test_sf_fingerprint_single_stat_and_shape(tmp_path):
     assert [t[0] for t in fp] == ["a.parquet", "b.parquet"]
     assert [t[2] for t in fp] == [1, 2]
     assert sf_fingerprint(str(d / "missing")) is None
+
+
+def _rewrite_embeddings(sfd):
+    """Rewrite embeddings.parquet in place with half of its rows."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t AS SELECT * FROM "
+                f"'{sfd}/embeddings.parquet' WHERE vec_id % 2 = 0")
+    con.execute(f"COPY t TO '{sfd}/embeddings.parquet' (FORMAT PARQUET)")
+    con.close()
+
+
+@pytest.mark.parametrize("name,kind", [
+    ("embedding_pca", "pca_fit"),
+    ("quality_probe", "probe_fit"),
+    ("embedding_probe", "index:signlsh"),
+    ("ann_ivf_topk", "codebook:ivf:embedding"),
+])
+def test_entry_memos_rebuild_after_rewrite(spark, tmp_path, name, kind):
+    """A mid-session rewrite of embeddings.parquet and documents.parquet
+    must rebuild every fit, codebook and index the entry memoized: the
+    entry stays equal to its DuckDB oracle over the NEW data, and the
+    entry's memo counts one rebuild (a fit keyed without the
+    fingerprint kept serving the old corpus's basis)."""
+    from radmapper_spark import entrypoints as E
+    from radmapper_spark.session import memo_stats
+    from tests.oracle import assert_matches_oracle
+
+    sfd = tmp_path / "sf"
+    shutil.copytree(SF_SMOKE_r12, sfd)
+    fn, sql = E.ENTRIES[name][0], E.ENTRIES[name][1]()
+    assert_matches_oracle(fn(spark, str(sfd)), sql, str(sfd))
+    _rewrite_embeddings(sfd)
+    _rewrite_documents(sfd, n_rows=200)
+    rebuilds = memo_stats()[kind]["rebuilds"]
+    assert_matches_oracle(fn(spark, str(sfd)), sql, str(sfd))
+    assert memo_stats()[kind]["rebuilds"] == rebuilds + 1
 
 
 # ======================== from test_round13.py (r14 consolidation) ========
@@ -232,6 +272,8 @@ def test_probe_index_cache_revalidates_fingerprint(spark, tmp_path):
     p3 = ep._probe_index_path(spark, d, "fprobe",
                               lambda p: builds.append(p))
     assert len(builds) == 2, "rewritten corpus must invalidate the memo"
+    from radmapper_spark.session import memo_stats
+    assert memo_stats()["index:fprobe"]["rebuilds"] >= 1
     assert p3 != p1
     # the stale tree is RETIRED, not deleted in place: DataFrames from
     # earlier calls still lazily reference it (r13 third review; the

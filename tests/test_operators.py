@@ -201,24 +201,32 @@ def test_pq_recall_and_code_shape(spark, tables):
 
 
 def test_codebook_cache_hit_and_release(spark, tables):
-    """With a cache_key, the second fit must be served from the cache
-    (identical object, no recount/sample/fit), and release_codebooks must
-    evict by key."""
+    """A codebook fitted through session.memo is served from the memo on
+    the second call (identical object, no recount/sample/fit), a param
+    change refits, the PQ books' kind is untouched by the IVF refit, and
+    a release forces a refit."""
+    from radmapper_spark.session import memo, release_memos
+    from tests.conftest import SF_SMOKE
     emb = tables["embeddings"]
-    similarity.release_codebooks()
-    a = similarity.train_centroids(emb, ncentroids=4, cache_key="t1")
-    b = similarity.train_centroids(emb, ncentroids=4, cache_key="t1")
-    assert a is b, "second call should be a cache hit"
-    c = similarity.train_centroids(emb, ncentroids=8, cache_key="t1")
-    assert c is not a, "different params must not share a cache slot"
-    p1 = similarity.train_pq_codebooks(emb, m=16, ksub=8, cache_key="t1")
-    p2 = similarity.train_pq_codebooks(emb, m=16, ksub=8, cache_key="t1")
-    assert p1 is p2
-    n = similarity.release_codebooks("t1")
-    assert n == 3
-    d = similarity.train_centroids(emb, ncentroids=4, cache_key="t1")
-    assert d is not a, "released key must retrain"
-    similarity.release_codebooks()
+
+    def ivf(n):
+        return memo("test_ivf", spark, SF_SMOKE, (n,),
+                    lambda: similarity.train_centroids(emb, ncentroids=n))
+
+    def pq():
+        return memo("test_pq", spark, SF_SMOKE, (16, 8),
+                    lambda: similarity.train_pq_codebooks(emb, m=16, ksub=8))
+
+    a, b = ivf(4), ivf(4)
+    assert a is b, "second call should be a memo hit"
+    p1 = pq()
+    c = ivf(8)
+    assert c is not a, "different params must not share a memo slot"
+    assert pq() is p1, "an IVF refit must not evict the PQ books"
+    assert release_memos("test_ivf") == 1
+    d = ivf(4)
+    assert d is not a, "a released codebook must be refitted"
+    release_memos("test_")
 
 
 def test_pq_rejects_indivisible_dim(spark, tables):

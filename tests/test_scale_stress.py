@@ -953,14 +953,14 @@ def test_opq_rotation_50k_vectors(spark):
     emb.count()
     try:
         t0 = time.monotonic()
-        R, cnt = similarity.opq_rotation(emb, m=16, cache_key="st50k")
+        R, cnt = similarity.opq_rotation(emb, m=16)
         fit_dt = time.monotonic() - t0
         assert cnt == n and R.shape == (d, d)
         assert np.abs(R @ R.T - np.eye(d)).max() < 1e-9
         q = emb.limit(3).select(F.col("vec_id").alias("qid"), "embedding")
         t0 = time.monotonic()
         out = similarity.opq_topk(emb, q, k=10, m=16, ksub=16, rerank=8,
-                                  cache_key="st50k")
+                                  rotation=(R, cnt))
         rows = out.collect()
         search_dt = time.monotonic() - t0
         print(f"  opq 50k: fit {fit_dt:.1f}s, search {search_dt:.1f}s")
@@ -968,7 +968,6 @@ def test_opq_rotation_50k_vectors(spark):
         assert fit_dt < 120 and search_dt < 180
     finally:
         emb.unpersist()
-        similarity.release_codebooks("st50k")
 
 
 def test_lm_score_500k_docs(spark, big_docs):

@@ -194,8 +194,8 @@ def test_training_shards_layout_and_roundtrip(spark):
         check_dtype=False)
     # on-disk layout: one parquet file per shard dir, physical
     # shard_pos order 0..k-1 inside each file
-    path = next(v for k, (_fp, v) in ep._PROBE_INDEX_CACHE.items()
-                if k[2] == "train_shards")
+    from radmapper_spark.session import _MEMO
+    path = next(v for _fp, v, _rel in _MEMO["index:train_shards"].values())
     shard_dirs = sorted(glob.glob(os.path.join(path, "shard=*")))
     assert len(shard_dirs) == p["shard"].nunique()
     for d in shard_dirs:

@@ -300,48 +300,52 @@ def test_opq_error_cases(spark):
 
 
 def test_opq_codebooks_evicted_by_release(spark):
-    """release_codebooks(cache_key) must evict the OPQ rotation AND the
-    rotated-space PQ codebooks fitted under that key (a nested tuple
-    key would silently dodge the key[0] match and leak)."""
+    """The OPQ entry memoizes its rotation AND its rotated-space PQ
+    codebooks, and a memo release evicts both; opq_topk handed the
+    fitted rotation and books returns what it returns fitting them
+    itself."""
     from pyspark.sql import functions as F
+    from radmapper_spark import entrypoints as E
     from radmapper_spark.operators import similarity
+    from radmapper_spark.session import _MEMO, release_memos
+    E.ann_opq_topk(spark, SF_SMOKE).collect()
+    kinds = ("codebook:opq_rotation:embedding", "codebook:pq:_rv")
+    assert all(_MEMO[k] for k in kinds)  # the rotation and the PQ books
+    assert release_memos("codebook:") >= 2
+    assert not any(_MEMO[k] for k in kinds)
     emb = _rand_emb(spark, n=120, d=8)
     q = emb.limit(2).select(F.col("vec_id").alias("qid"), "embedding")
-    similarity.opq_topk(emb, q, k=5, m=4, ksub=4, rerank=2,
-                        cache_key="evict-me").collect()
-    mine = [k for k in similarity._CODEBOOK_CACHE if k[0] == "evict-me"]
-    assert len(mine) >= 2  # the rotation and the PQ books
-    assert similarity.release_codebooks("evict-me") == len(mine)
-    assert not [k for k in similarity._CODEBOOK_CACHE
-                if k[0] == "evict-me"]
+    rot = similarity.opq_rotation(emb, m=4)
+    books = similarity.train_pq_codebooks(
+        similarity.opq_rotate(emb, rot), "_rv", m=4, ksub=4)
+    fitted = similarity.opq_topk(emb, q, k=5, m=4, ksub=4, rerank=2,
+                                 rotation=rot, books=books).collect()
+    inline = similarity.opq_topk(emb, q, k=5, m=4, ksub=4,
+                                 rerank=2).collect()
+    assert sorted(map(tuple, fitted)) == sorted(map(tuple, inline))
 
 
 # ======================== from test_round10.py (r14 consolidation) ========
 def test_opq_fit_never_evicts_plain_pq_books(spark):
-    """VERDICT r9 watch item: the OPQ entry's codebook-cache traffic
-    must not evict the plain-PQ books between bench passes. Structural
-    guarantee under test: _CODEBOOK_CACHE has NO implicit eviction —
-    only release_codebooks(cache_key) removes entries — and the OPQ
-    keys (rotated '_rv' vec_col + 'opq_rot' kind) can never collide
-    with plain-PQ keys under the same corpus key."""
-    import numpy as np
-    from radmapper_spark.operators import similarity
-    t = entrymod.load_tables(spark, SF_SMOKE)
-    q = (t["embeddings"].orderBy("vec_id").limit(3)
-         .select(F.col("vec_id").alias("qid"), "embedding"))
-    ck = "pq-evict-probe"
-    similarity.release_codebooks(ck)
-    similarity.pq_topk(t["embeddings"], q, k=5, m=16, ksub=16,
-                       rerank=8, cache_key=ck).collect()
-    pq_keys = {k for k in similarity._CODEBOOK_CACHE if k[0] == ck}
-    pq_books = {k: similarity._CODEBOOK_CACHE[k] for k in pq_keys}
-    assert pq_keys, "plain-PQ fit did not populate the cache"
-    similarity.opq_topk(t["embeddings"], q, k=5, m=16, ksub=16,
-                        rerank=8, cache_key=ck).collect()
-    after = set(similarity._CODEBOOK_CACHE)
-    assert pq_keys <= after, "OPQ fit evicted plain-PQ codebooks"
-    for k in pq_keys:  # same objects — not refit, not replaced
-        assert similarity._CODEBOOK_CACHE[k] is pq_books[k]
-    assert {k for k in after if k[0] == ck} - pq_keys, \
-        "OPQ fit cached nothing of its own"
-    similarity.release_codebooks(ck)
+    """VERDICT r9 watch item: the OPQ entry's codebook memo traffic must
+    not evict the plain-PQ books between bench passes. Structural
+    guarantee under test: each memo kind holds one entry, and the OPQ
+    rotation and its rotated-space ('_rv' vec_col) books are kinds of
+    their own, apart from the plain-PQ kind."""
+    from radmapper_spark import entrypoints as E
+    from radmapper_spark.session import _MEMO, memo_stats
+    E.ann_pq_topk(spark, SF_SMOKE).collect()
+    pq_books = dict(_MEMO["codebook:pq:embedding"])
+    assert pq_books, "plain-PQ fit did not populate the memo"
+    E.ann_opq_topk(spark, SF_SMOKE).collect()
+    after = _MEMO["codebook:pq:embedding"]
+    assert after.keys() == pq_books.keys(), \
+        "OPQ fit evicted plain-PQ codebooks"
+    for k in pq_books:  # same objects — not refit, not replaced
+        assert after[k][1] is pq_books[k][1]
+    assert _MEMO["codebook:pq:_rv"] \
+        and _MEMO["codebook:opq_rotation:embedding"], \
+        "OPQ fit memoized nothing of its own"
+    hits = memo_stats()["codebook:pq:embedding"]["hits"]
+    E.ann_pq_topk(spark, SF_SMOKE)
+    assert memo_stats()["codebook:pq:embedding"]["hits"] == hits + 1
