@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entrymod
+from radmapper_spark.entrypoints import ENTRIES
 from radmapper_spark.session import get_spark, memo_stats
 
 WARMUP_QUERY = "pricing_summary"
@@ -80,7 +80,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("radmapper-bench")
-    qs = entrymod.queries()
+    # the registry's written order, not queries(): the interleave order
+    # (and with it which query pays for shared derived frames) must not
+    # move when the correctness history changes
+    qs = {name: fn for name, (fn, _sql) in ENTRIES.items()}
 
     # Warm the JVM/codegen path once so per-query numbers measure the plan,
     # not first-touch classloading.
@@ -174,6 +177,8 @@ def main() -> None:
                 # per-query regressions under sandbox load spikes —
                 # the load average makes cross-round drift attributable
                 "load_avg_1m": round(os.getloadavg()[0], 2),
+                "cpus": spark.sparkContext.defaultParallelism,
+                "sf_dir": sf_dir,
             }
         )
     )

@@ -5378,18 +5378,10 @@ def stream_training_ingest_sql() -> str:
 
 
 # =============================================================== registry
+# name -> (entry fn, oracle SQL fn). The written order is the only order;
+# __spark_entry__.queries() sorts it least-recently-green for the driver.
 
 ENTRIES: dict = {
-    # =========== r8 window (the driver's correctness gate checks the
-    # FIRST 50 registered entries): per the r7 verdict, the 40 entries
-    # whose last hard driver row was r5 fill the window first — after
-    # r8, every one of the 95 registry entries has an external green row
-    # at most 2 rounds old (union of r7+r8). The remaining 10 slots go
-    # to the FIVE new entries (neardup_probe, embedding_probe,
-    # neardup_admit, semantic_dedup, substring_dup_spans) and five
-    # entries whose code changed this round (graph auto path selection,
-    # index metadata guards, the embedding-cosine signature cache).
-    # Positions 51+ are OUTSIDE the gate this round.
     "temporal_asof_join": (temporal_asof_join, temporal_asof_join_sql),
     "temporal_range_join": (temporal_range_join, temporal_range_join_sql),
     "text_vocabulary": (text_vocabulary, text_vocabulary_sql),
@@ -5436,22 +5428,17 @@ ENTRIES: dict = {
     "dedup_groups": (dedup_groups, dedup_groups_sql),
     "dedup_simhash": (dedup_simhash, dedup_simhash_sql),
     "ann_bruteforce_topk": (ann_bruteforce_topk, ann_bruteforce_topk_sql),
-    # NEW this round: persisted-index incremental-admission probes
+    # persisted-index incremental-admission probes
     "neardup_probe": (neardup_probe, neardup_probe_sql),
     "embedding_probe": (embedding_probe, embedding_probe_sql),
     "neardup_admit": (neardup_admit, neardup_admit_sql),
     "semantic_dedup": (semantic_dedup, semantic_dedup_sql),
     "substring_dup_spans": (substring_dup_spans, substring_dup_spans_sql),
-    # code touched this round — re-prove under the external gate
     "dedup_embedding_cosine": (dedup_embedding_cosine, dedup_embedding_cosine_sql),
     "dedup_minhash_lsh": (dedup_minhash_lsh, dedup_minhash_lsh_sql),
     "graph_pagerank": (graph_pagerank, graph_pagerank_sql),
     "graph_communities": (graph_communities, graph_communities_sql),
     "ann_ivf_topk": (ann_ivf_topk, ann_ivf_topk_sql),
-    # =========== below the window (position 51+): every entry here has
-    # a GREEN r7 driver row (CORRECTNESS_r07.json) and untouched code;
-    # full local oracle gating still covers all of them every run
-    # (tests/test_headline.py + the three-SF sweep).
     "pricing_summary": (lambda s, d: headline.pricing_summary(load_tables(s, d)),
                         headline.pricing_summary_sql),
     "cdc_merge": (cdc_merge, cdc_merge_sql),
@@ -5471,9 +5458,6 @@ ENTRIES: dict = {
     "dq_checks": (dq_checks, dq_checks_sql),
     "ann_pq_topk": (ann_pq_topk, ann_pq_topk_sql),
     "ann_opq_topk": (ann_opq_topk, ann_opq_topk_sql),
-    # registered OUTSIDE the full r9 window (position 51+): first
-    # external row lands in r10's rotation; until then the local
-    # three-SF sweep and oracle lint gate it every run
     "quality_probe": (quality_probe, quality_probe_sql),
     "embedding_quantize": (embedding_quantize, embedding_quantize_sql),
     "numeric_battery": (numeric_battery, numeric_battery_sql),
@@ -5515,9 +5499,6 @@ ENTRIES: dict = {
     # r9 lm.py module to its own oracle SQL — VERDICT r9 item #1)
     "lm_score": (lm_score, lm_score_sql),
     "lm_bucket": (lm_bucket, lm_bucket_sql),
-    # NEW r10, registered OUTSIDE the frozen window (position 51+,
-    # the quality_probe precedent): first external rows land in the
-    # r11 rotation; local three-SF oracle gating covers them every run
     "moore_lewis_select": (moore_lewis_select, moore_lewis_select_sql),
     "substring_removal_spans": (substring_removal_spans,
                                 substring_removal_spans_sql),
@@ -5530,7 +5511,7 @@ ENTRIES: dict = {
     # NEW r11: corpus-trained BPE — the oracle re-trains the merge
     # table in 16 chained SQL iterations AND re-applies it
     "bpe_token_count": (bpe_token_count, bpe_token_count_sql),
-    # NEW r11 (second batch, also in-window): the composed loops —
+    # NEW r11 (second batch): the composed loops —
     # phash pairs -> connected components, and exact-BPE-token chunking
     "image_dedup_groups": (image_dedup_groups, image_dedup_groups_sql),
     "bpe_chunks": (bpe_chunks, bpe_chunks_sql),
@@ -5550,7 +5531,7 @@ ENTRIES: dict = {
     # NEW r12: embedding-space decontamination — the semantic complement
     # of decontam_ngram (broadcast benchmark, exact cosine)
     "decontam_embedding": (decontam_embedding, decontam_embedding_sql),
-    # NEW r12 (second batch, also in-window): deterministic global
+    # NEW r12 (second batch): deterministic global
     # training shuffle + fixed-size sharding via distributed global_rank
     "corpus_shuffle": (corpus_shuffle, corpus_shuffle_sql),
     # NEW r12 (second batch): source-proportional interleaving — every
@@ -5629,310 +5610,3 @@ ENTRIES: dict = {
     "stream_crawl_to_shards": (stream_crawl_to_shards,
                                stream_crawl_to_shards_sql),
 }
-
-# =============================== window rotation (tested invariant, r13+;
-# =============================== self-deriving since r15)
-#
-# The driver's correctness gate checks the FIRST 50 registered entries.
-# With a 134+-entry registry, 50 external rows per round cannot cover
-# everything; _ROTATION_TIERS turns the staleness arithmetic into
-# POLICY (r12 verdict item #2), and since r15 the window itself is
-# DERIVED from the committed CORRECTNESS_r*.json history at import
-# time instead of hand-rotated each round (r14 verdict item #1): the
-# moment a round's driver results land, the registry prefix recomputes
-# to the NEXT round's most-urgent 50 and the invariant test
-# (tests/test_registry.py::test_rotation_window_invariant) is green at
-# the next checkout with no manual start-of-round step. The literal
-# _WINDOW_OVERRIDE below remains as a manual escape hatch only.
-#
-# Tiers (bound = max rounds between external driver rows):
-#   active (2): the default — entry or operator code changed within
-#       the last ~2 rounds, or composition entries on actively-edited
-#       modules (the whole dedup/classifier/sampling families stay
-#       active while r15 touches them).
-#   frozen (3): entry function + declared operator surfaces unchanged
-#       >= 3 rounds, sha256-pinned in tests/freeze_manifest.json
-#       (test_frozen_surfaces_unchanged), re-proven every round by the
-#       local three-SF DuckDB value-oracle sweep.
-#   sealed (5): the frozen contract PLUS >= 5 rounds unchanged (entry
-#       fn and surfaces last touched <= r10 as of r15). The per-round
-#       proof is the local sweep (for the headline SQL aggregates also
-#       their plan-lock tests); the external driver row becomes a
-#       5-round audit. Capacity: sum(1/bound) over the registry must
-#       stay <= 50 rows/round (asserted by the invariant test with
-#       headroom) or rotation debt grows without bound — the r14
-#       two-tier mix demanded 58 rows/round against 50 slots, which is
-#       WHY this third tier exists.
-_ROTATION_TIERS = {"active": 2, "frozen": 3, "sealed": 5}
-
-# sealed: entry fn + surfaces unchanged since <= r10 (verified by
-# per-function `git log -L` at r15; enforced forward by the manifest
-# pins), re-proven by the three-SF sweep every round.
-_SEALED_ENTRIES = frozenset({
-    # headline.py (r5) SQL aggregates
-    "region_nation_revenue", "top_revenue_orders",
-    "top_customer_per_nation", "pricing_summary", "large_orders",
-    "events_by_type",
-    # inline SQL-battery entries (entry fns r5; customer_deciles r9 on
-    # ranking:global_ntile, itself r9)
-    "window_battery", "events_pivot", "events_unpivot",
-    "events_json_extract", "sales_rollup", "brand_revenue",
-    "customers_without_orders", "urgent_and_low_customers",
-    "orders_above_customer_avg", "customer_deciles",
-    # textstats.py (r9)
-    "text_tfidf", "text_bm25", "text_inverted_index",
-    "text_bigram_pmi", "text_pii_scrub", "text_repetition",
-    "text_quality", "text_lang_id", "text_token_count",
-    "text_vocabulary", "text_fingerprint", "lang_id_eval",
-    # temporal.py (r6)
-    "temporal_rollup", "temporal_sessionize", "temporal_asof_join",
-    "temporal_range_join", "events_gapfill", "events_twap",
-    # behavior.py (r6)
-    "events_anomalies", "event_funnel", "event_markov", "user_cohorts",
-    # skew.py (r3)
-    "skew_salted_join", "skew_salted_agg",
-    # chunking.py (r6) + cdc.py (r6)
-    "doc_chunks", "doc_chunks_cdc", "seq_pack", "cdc_merge",
-    # profiling.py (r6) + quality.py (r6)
-    "stats_profile", "stats_histogram", "stats_outliers",
-    "source_mixture", "dq_checks",
-    # selection.py (r9)
-    "dsir_select",
-    # streaming/windows.py (r7) + streaming/joins.py (r5); entry fns r1-r5
-    "stream_tumbling", "stream_sliding", "stream_session",
-    "stream_running_totals", "stream_dedup", "stream_join",
-    # similarity.py (r9) + linalg.py (r10); entry fns r1-r9
-    "ann_bruteforce_topk", "ann_ivf_topk", "ann_pq_topk",
-    "ann_opq_topk", "ann_range_search", "semantic_dedup",
-    "embedding_kmeans", "embedding_kmeans_lloyd", "embedding_quantize",
-    "embedding_pca", "embedding_gram",
-    # graph.py (r11) + multimodal.py (r11) — sealed r16 (>= 5 rounds
-    # unchanged; r15 verdict item #4 headroom), pins carried over
-    "graph_pagerank", "graph_communities",
-    "multimodal_features", "image_phash_neardup", "image_dedup_groups",
-    "stream_media_dedup",
-})
-
-_FROZEN_ENTRIES = frozenset({
-    # language batteries: lang/ core frozen since r7 (columns.py's r14
-    # INT64 widening was a conscious re-pin — the 229-case reference
-    # golden corpus + differential fuzz + three-SF sweep re-prove these
-    # every round, but the recent edit keeps them out of the sealed
-    # tier)
-    "rm_datalog_join", "rm_datetime_ops", "rm_eav_wildcard",
-    "rm_express_map", "rm_express_reduce", "rm_nested_docs",
-    "rm_qvar_project", "rm_scalar_battery", "rm_table_paths",
-    "string_battery", "numeric_battery",
-    # sampling.py symbol pins (module edited r14, pinned symbols
-    # unchanged — manifest-verified)
-    "sample_per_group", "mixture_sample", "weighted_sample",
-    # dedup.py symbol pin (module actively edited; the pinned
-    # fuzzy_pairs_levenshtein is not)
-    "fuzzy_part_names",
-    # decontam.py (r12) / lm.py (r12) — seal candidates at r17
-    # (>= 5 rounds unchanged then)
-    "decontam_ngram", "blocklist_scrub", "decontam_embedding",
-    "lm_score", "lm_bucket", "moore_lewis_select",
-})
-assert not (_SEALED_ENTRIES & _FROZEN_ENTRIES)
-_PINNED_ENTRIES = _SEALED_ENTRIES | _FROZEN_ENTRIES
-
-
-def _entry_tier(name: str) -> str:
-    if name in _SEALED_ENTRIES:
-        return "sealed"
-    if name in _FROZEN_ENTRIES:
-        return "frozen"
-    return "active"
-
-# Pinned-tier SOURCE PINS (r13, extended to the sealed tier r15): the
-# freeze criterion — "the entry's operator code path is unchanged" —
-# enforced forward as a mechanical invariant instead of a per-round
-# git-archaeology claim. For every pinned (frozen or sealed) entry,
-# the ENTRY FUNCTION's source plus each declared surface below (a
-# module, or "module:symbol" for a single operator function inside an
-# actively-edited module) is sha256-pinned in
-# tests/freeze_manifest.json; test_frozen_surfaces_unchanged recomputes
-# the digests via inspect.getsource and fails if pinned code changed
-# while the entry stayed pinned. Editing a pinned path therefore
-# REQUIRES either re-activating the entry (remove from the tier set)
-# or consciously re-pinning (RM_REGEN_FREEZE=1) with the change in the
-# commit — silent drift is impossible. Helpers a pinned function calls
-# are NOT pinned; value-drift through helpers is what the per-round
-# three-SF oracle sweep catches (the pinned tiers' other leg).
-_LANG_SURFACES = ("radmapper_spark.lang.interp",
-                  "radmapper_spark.lang.parser",
-                  "radmapper_spark.lang.columns",
-                  "radmapper_spark.functions.builtins")
-_FROZEN_SURFACES: dict = {
-    **{e: _LANG_SURFACES for e in (
-        "rm_datalog_join", "rm_datetime_ops", "rm_eav_wildcard",
-        "rm_express_map", "rm_express_reduce", "rm_nested_docs",
-        "rm_qvar_project", "rm_scalar_battery", "rm_table_paths",
-        "string_battery", "numeric_battery")},
-    **{e: ("radmapper_spark.headline",) for e in (
-        "region_nation_revenue", "top_revenue_orders",
-        "top_customer_per_nation", "pricing_summary", "large_orders",
-        "events_by_type")},
-    # inline SQL-battery entries: the entry-function pin IS the surface
-    **{e: () for e in (
-        "window_battery", "events_pivot", "events_unpivot",
-        "events_json_extract", "sales_rollup", "brand_revenue",
-        "customers_without_orders", "urgent_and_low_customers",
-        "orders_above_customer_avg")},
-    "customer_deciles": ("radmapper_spark.operators.ranking:global_ntile",),
-    "sample_per_group": ("radmapper_spark.operators.sampling:cap_per_group",),
-    "stats_profile": ("radmapper_spark.operators.profiling:group_quantiles",),
-    "stats_histogram": ("radmapper_spark.operators.profiling:histogram",),
-    "stats_outliers": ("radmapper_spark.operators.profiling:iqr_outliers",),
-    "fuzzy_part_names": ("radmapper_spark.operators.dedup:fuzzy_pairs_levenshtein",),
-    "dq_checks": ("radmapper_spark.operators.quality",),
-    "events_gapfill": ("radmapper_spark.operators.temporal",),
-    "events_twap": (),  # inline — the entry-function pin IS the surface
-    "events_anomalies": ("radmapper_spark.operators.behavior:rolling_anomalies",),
-    "event_funnel": ("radmapper_spark.operators.behavior:funnel_stages",),
-    "event_markov": ("radmapper_spark.operators.behavior:event_transitions",),
-    "temporal_rollup": ("radmapper_spark.operators.temporal",),
-    "temporal_sessionize": ("radmapper_spark.operators.temporal",),
-    "temporal_asof_join": ("radmapper_spark.operators.temporal",),
-    "temporal_range_join": ("radmapper_spark.operators.temporal",),
-    "seq_pack": ("radmapper_spark.operators.chunking",),
-    "source_mixture": ("radmapper_spark.operators.profiling:source_mixture",),
-    "mixture_sample": ("radmapper_spark.operators.sampling:mixture_sample",),
-    "weighted_sample": ("radmapper_spark.operators.sampling:weighted_sample_per_group",),
-    **{e: ("radmapper_spark.operators.textstats",) for e in (
-        "text_tfidf", "text_bm25", "text_inverted_index",
-        "text_bigram_pmi", "text_pii_scrub", "text_repetition",
-        "lang_id_eval", "text_quality", "text_lang_id",
-        "text_token_count", "text_vocabulary", "text_fingerprint")},
-    "doc_chunks": ("radmapper_spark.operators.chunking",),
-    "doc_chunks_cdc": ("radmapper_spark.operators.chunking",
-                       "radmapper_spark.operators.cdc"),
-    "cdc_merge": ("radmapper_spark.operators.cdc",),
-    "dsir_select": ("radmapper_spark.operators.selection",),
-    "user_cohorts": ("radmapper_spark.operators.behavior:cohort_retention",),
-    "skew_salted_join": ("radmapper_spark.operators.skew:salted_join",),
-    "skew_salted_agg": ("radmapper_spark.operators.skew:salted_two_phase_agg",),
-    # streaming batch-shape entries (windows.py r7 / joins.py r5)
-    **{e: ("radmapper_spark.streaming.windows",) for e in (
-        "stream_tumbling", "stream_sliding", "stream_session",
-        "stream_running_totals", "stream_dedup")},
-    "stream_join": ("radmapper_spark.streaming.joins",),
-    # similarity/linalg tier (similarity.py r9, linalg.py r10)
-    **{e: ("radmapper_spark.operators.similarity",) for e in (
-        "ann_bruteforce_topk", "ann_ivf_topk", "ann_pq_topk",
-        "ann_opq_topk", "ann_range_search", "semantic_dedup",
-        "embedding_kmeans", "embedding_kmeans_lloyd",
-        "embedding_quantize")},
-    "embedding_pca": ("radmapper_spark.operators.linalg",),
-    "embedding_gram": ("radmapper_spark.operators.linalg",),
-    # graph.py (r11)
-    "graph_pagerank": ("radmapper_spark.operators.graph",),
-    "graph_communities": ("radmapper_spark.operators.graph",
-                          "radmapper_spark.operators.ranking:bounded_global_rank"),
-    # multimodal.py (r11)
-    **{e: ("radmapper_spark.operators.multimodal",) for e in (
-        "multimodal_features", "image_phash_neardup",
-        "image_dedup_groups", "stream_media_dedup")},
-    # decontam.py (r12) / lm.py (r12)
-    **{e: ("radmapper_spark.operators.decontam",) for e in (
-        "decontam_ngram", "blocklist_scrub", "decontam_embedding")},
-    **{e: ("radmapper_spark.operators.lm",) for e in (
-        "lm_score", "lm_bucket", "moore_lewis_select")},
-}
-
-_WINDOW_SIZE = 50
-# Manual escape hatch (r14 verdict: "the literal list as an override
-# only"): a non-empty list here REPLACES the derived window verbatim —
-# it must still satisfy every invariant in test_rotation_window_invariant.
-_WINDOW_OVERRIDE: list = []
-
-
-def _correctness_history(repo_root: str | None = None):
-    """(last_green, n_round) from the committed CORRECTNESS_r*.json:
-    last_green[entry] = newest round whose driver row is fully green
-    (rows+schema+hash, no err); n_round = max(round)+1, the round being
-    built. Derived from THIS file's location, not a hardcoded path, so
-    clones and worktrees read their own history (r13 lesson)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-    if repo_root is None:
-        repo_root = _os.path.dirname(_os.path.dirname(
-            _os.path.abspath(__file__)))
-    last: dict = {}
-    rounds = set()
-    for f in sorted(_glob.glob(_os.path.join(
-            repo_root, "CORRECTNESS_r*.json"))):
-        r = int(_re.search(r"r(\d+)", _os.path.basename(f)).group(1))
-        try:
-            qs = _json.load(open(f))
-        except Exception:  # a half-written driver file must not kill import
-            continue
-        # only a PARSED file advances the round counter (r15 review: a
-        # truncated CORRECTNESS_rN.json that bumped n_round without
-        # contributing its green rows inflated every entry's staleness
-        # by one round at once)
-        rounds.add(r)
-        qs = qs.get("queries", qs)
-        for k, v in qs.items():
-            if (isinstance(v, dict) and v.get("rows_match")
-                    and v.get("schema_match")
-                    and v.get("hash_match", True) and not v.get("err")):
-                last[k] = max(r, last.get(k, 0))
-    return last, (max(rounds) + 1 if rounds else 1)
-
-
-def derive_window(entries=None, size: int = _WINDOW_SIZE,
-                  repo_root: str | None = None) -> list:
-    """The 50-slot driver window as a deterministic function of the
-    CORRECTNESS history and the tier policy — EDF scheduling on
-    freshness debt. urgency(e) = (n_round - last_green(e)) - bound(e),
-    never-proven entries at +inf (they must land first rows the round
-    they appear). Sort by urgency desc; ties by (higher tier bound
-    first — pinned entries' only other proof is the local sweep, so
-    they take the external row AT the bound), then name for
-    determinism. If the breaching set exceeds the window it WARNS and
-    returns the most-urgent `size` (never raises — this runs at import
-    time; test_rotation_window_invariant is the loud enforcement
-    point)."""
-    if entries is None:
-        entries = list(ENTRIES)
-    last, n_round = _correctness_history(repo_root)
-
-    def bound(e):
-        return _ROTATION_TIERS[_entry_tier(e)]
-
-    def urgency(e):
-        if e not in last:
-            return float("inf")
-        return (n_round - last[e]) - bound(e)
-
-    order = sorted(entries, key=lambda e: (-urgency(e), -bound(e), e))
-    window = order[:size]
-    forced = [e for e in entries if urgency(e) > 0]
-    missed = [e for e in forced if e not in set(window)]
-    if missed:
-        # NEVER raise here — this runs at import time, and an
-        # over-capacity state (or a checkout with no CORRECTNESS
-        # history at all, where every entry is never-proven) must not
-        # brick `import radmapper_spark.entrypoints` for the whole
-        # library (r15 review). The invariant TEST is the loud
-        # enforcement point; the import just takes the most urgent
-        # `size` and warns.
-        import warnings
-        warnings.warn(
-            f"rotation capacity exceeded: {len(forced)} entries are "
-            f"past their tier bound but the window holds {size}; left "
-            f"out: {missed[:8]}{'...' if len(missed) > 8 else ''} — "
-            f"freeze/seal more long-unchanged entries",
-            RuntimeWarning, stacklevel=2)
-    return window
-
-
-_CURRENT_WINDOW = _WINDOW_OVERRIDE or derive_window()
-assert (len(_CURRENT_WINDOW) == _WINDOW_SIZE
-        and set(_CURRENT_WINDOW) <= set(ENTRIES))
-ENTRIES = {k: ENTRIES[k] for k in _CURRENT_WINDOW
-           + [k for k in ENTRIES if k not in set(_CURRENT_WINDOW)]}

@@ -35,8 +35,8 @@ def duck_normalize_text(expr: str = "text") -> str:
     """The ONE DuckDB twin of normalize_text (r14 advice: hand-copied
     normalization SQL in oracle bodies is a silent-fork risk — a future
     change to normalize_text would not propagate). New oracle SQL must
-    build on this; the pre-existing inlined copies in frozen/sealed
-    entrypoints oracle bodies are pinned unchanged and guarded by
+    build on this; the pre-existing inlined copies in entrypoints
+    oracle bodies are guarded by
     tests/test_stream_ingest.py::test_inlined_norm_sql_matches_helper,
     which fails if this helper and any inlined copy ever diverge."""
     return f"regexp_replace(trim(lower({expr})), '\\s+', ' ', 'g')"

@@ -15,11 +15,13 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from typing import Any, Optional
 
 from ..lang.values import JSeq, NOMATCH
 
 CATALOG_PATH = os.environ.get("RM_CATALOG_PATH", "/tmp/rm_catalog.json")
+_CATALOG_LOCK = threading.Lock()
 
 
 def rm_get(ip, target, opts=None):
@@ -123,11 +125,18 @@ def catalog_get(ident: list, props=None):
 
 
 def rm_put(ip, target, obj):
-    cat = _load_catalog()
+    """Store ``obj`` under ``target``. Puts are serialised by a module
+    lock, and each writes a temp file next to the catalog and renames it
+    over the catalog, so a concurrent reader always sees a whole file
+    and no put is lost (the HTTP server is threaded)."""
     key = f"{target[0]}={target[1]}" if len(target) > 1 else str(target[0])
-    cat[key] = obj
-    with open(CATALOG_PATH, "w") as f:
-        json.dump(cat, f)
+    with _CATALOG_LOCK:
+        cat = _load_catalog()
+        cat[key] = obj
+        tmp = f"{CATALOG_PATH}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(cat, f)
+        os.replace(tmp, CATALOG_PATH)
     return obj
 
 

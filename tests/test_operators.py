@@ -92,6 +92,52 @@ def test_embedding_cosine_lsh_recall(spark, tables):
     assert true <= lsh and lsh <= true, f"LSH/brute-force mismatch: {true ^ lsh}"
 
 
+def test_embedding_vector_broadcast_gated_by_size(spark, tmp_path):
+    """rm.dedup.vectorBroadcastMaxBytes on both sides of its threshold:
+    at the default the two vector attaches are broadcast, at "1" they
+    are not, and both return the same pairs. The vectors come from
+    parquet so the optimizer has real size stats, and the planner's own
+    broadcast threshold is off so only the gate can broadcast."""
+    from radmapper_spark.session import load_tables
+    load_tables(spark, "/root/testdata/sf0.001")["embeddings"] \
+        .write.parquet(str(tmp_path / "emb"))
+    emb = spark.read.parquet(str(tmp_path / "emb"))
+
+    def run():
+        out = dedup.embedding_cosine_pairs(emb, threshold=0.45)
+        rows = {(r.id_a, r.id_b, round(r.cosine, 9)) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        out.rm_release_cache()
+        return rows, plan.split("== Initial Plan ==")[0]
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        bc_rows, bc_plan = run()
+        spark.conf.set("rm.dedup.vectorBroadcastMaxBytes", "1")
+        try:
+            sh_rows, sh_plan = run()
+        finally:
+            spark.conf.unset("rm.dedup.vectorBroadcastMaxBytes")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert bc_plan.count("BroadcastHashJoin") == 2, bc_plan
+    assert "Broadcast" not in sh_plan, sh_plan
+    assert bc_rows, "no pairs above the threshold — test is vacuous"
+    assert sh_rows == bc_rows
+
+
+def test_verify_partitions_conf_or_default_parallelism(spark):
+    spark.conf.unset("rm.dedup.verifyPartitions")
+    assert dedup.verify_partitions(spark) == \
+        spark.sparkContext.defaultParallelism
+    spark.conf.set("rm.dedup.verifyPartitions", "3")
+    try:
+        assert dedup.verify_partitions(spark) == 3
+    finally:
+        spark.conf.unset("rm.dedup.verifyPartitions")
+
+
 def test_embedding_lsh_candidate_volume_subquadratic(spark):
     """Scale regression: at production params (r=16 planes/band, b=24,
     cos >= 0.9) the banded candidate join volume on a 10k-vector set must

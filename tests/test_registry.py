@@ -1,6 +1,7 @@
-"""Registry-wide invariants: entry determinism, plan-shape locks, window rotation, frozen-surface pins (entrypoints.py).
-
-Consolidated from the per-round test files (r14 governance pass) — test bodies unchanged."""
+"""Registry-wide invariants (entrypoints.ENTRIES and the driver contract
+in __spark_entry__.py): entry determinism, plan-shape locks, the
+least-recently-green order of queries(), and an import of the package
+that reads no correctness history."""
 
 from __future__ import annotations
 
@@ -94,129 +95,84 @@ def test_nb_entries_single_training_instantiation(spark, name):
     assert n == 3, f"{name}: {n} parquet relations (want 3):\n{plan[:3000]}"
 
 
-def test_rotation_window_invariant():
-    """The freshness-debt arithmetic as a TESTED invariant (r12 verdict
-    item #2), recomputed INDEPENDENTLY of entrypoints.derive_window from
-    the committed CORRECTNESS_r*.json history — since r15 the window is
-    derived at import time, so a failure here is a derivation bug or a
-    policy violation, never a start-of-round TODO. Definitions:
-    last_green(e) = newest round whose driver row for e is fully green
-    (rows+schema+hash, no err); N = that maximum + 1 (the round being
-    built); urgency(e) = (N - last_green(e)) - tier_bound(e), with
-    never-proven entries at +inf. Asserts:
+def test_queries_least_recently_green_order(tmp_path, monkeypatch):
+    """queries() is least-recently-green first: entries with no green
+    driver row, then ascending last green round, ties by name. A row is
+    green only when rows, schema and hash match with no error, and a
+    file that does not parse is skipped. With the committed history,
+    every entry 3 or more rounds past its last green row is inside the
+    driver's 50-entry window."""
+    names = sorted(entrymod.ENTRIES)
+    never, old_b, old_a, mid = names[7], names[3], names[5], names[1]
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "err": None}
+    history = {
+        1: {n: ok for n in names if n != never},
+        2: {n: ok for n in names if n not in (never, old_a, old_b)},
+        3: {**{n: ok for n in names if n not in (never, old_a, old_b,
+                                                   mid)},
+            never: {**ok, "hash_match": False},
+            old_a: {**ok, "err": "boom"},
+            mid: {**ok, "schema_match": False}},
+    }
+    for rnd, rows in history.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({"queries": rows}))
+    (tmp_path / "CORRECTNESS_r04.json").write_text('{"queries": {')
+    last = entrymod.last_green(str(tmp_path))
+    assert never not in last
+    assert (last[old_a], last[old_b], last[mid]) == (1, 1, 2)
+    real = entrymod.last_green
+    monkeypatch.setattr(entrymod, "last_green",
+                        lambda root=str(tmp_path): real(root))
+    order = list(entrymod.queries())
+    assert order[:4] == [never, old_b, old_a, mid]
+    assert order[4:] == [n for n in names
+                         if n not in (never, old_a, old_b, mid)]
+    monkeypatch.undo()
 
-    1. the declared window IS the registered prefix the driver checks;
-    2. never-proven entries are in the window (no latecomer debt);
-    3. no entry OUTSIDE the window is past its tier bound (a forgotten
-       slip fails here the round it would breach, not at judge time);
-    4. the window is a priority-order prefix: nothing outside is more
-       urgent than anything inside (ties may fall either side);
-    5. capacity: sum(1/bound) over the registry fits the 50-row/round
-       budget with headroom — the schedulability condition that keeps
-       checks 3/4 satisfiable forever (the r14 two-tier policy demanded
-       58 rows/round against 50 slots; the sealed tier exists to fix
-       exactly this).
-    """
-    import glob
-    import json
-    import os
-    import re
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rounds = [int(re.search(r"_r(\d+)\.json$", f).group(1)) for f in
+              os.listdir(repo) if re.fullmatch(r"CORRECTNESS_r\d+\.json", f)]
+    assert rounds, f"no CORRECTNESS_r*.json under {repo}"
+    n_round = max(rounds) + 1
+    last = entrymod.last_green()
+    due = {n for n in entrymod.ENTRIES
+           if n_round - last.get(n, 0) >= 3}
+    assert due <= set(list(entrymod.queries())[:50]), due
+
+
+def test_package_import_reads_no_history(tmp_path):
+    """The registry is data: a copy of the package with no correctness
+    history beside it imports without a warning from the package, and
+    its ENTRIES keep the written order of the registry here."""
+    import shutil
+    import subprocess
+    import sys
 
     import radmapper_spark.entrypoints as ep
 
-    # derive the repo root from THIS file: a hardcoded /root/repo
-    # validated a different checkout's history when the suite ran from
-    # a clone or worktree (r13 third review, confirmed empirically)
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    assert files, f"no CORRECTNESS_r*.json under {repo} — wrong checkout?"
-    last, rounds = {}, set()
-    for f in files:
-        r = int(re.search(r"r(\d+)", f).group(1))
-        try:  # mirror _correctness_history: a truncated driver file is
-            qs = json.load(open(f))   # skipped, never a raw traceback
-        except Exception:
-            continue
-        rounds.add(r)
-        qs = qs.get("queries", qs)
-        for k, v in qs.items():
-            if (isinstance(v, dict) and v.get("rows_match")
-                    and v.get("schema_match")
-                    and v.get("hash_match", True) and not v.get("err")):
-                last[k] = max(r, last.get(k, 0))
-    n_round = max(rounds) + 1
-    registry = list(ep.ENTRIES)
-    window = list(ep._CURRENT_WINDOW)
-
-    # 1. window == the registered prefix (what the driver gate checks)
-    assert window == registry[:len(window)], \
-        "declared window is not the registered prefix"
-    assert len(set(window)) == len(window) == 50
-
-    def bound(e):
-        return ep._ROTATION_TIERS[ep._entry_tier(e)]
-
-    def urgency(e):
-        if e not in last:
-            return float("inf")
-        return (n_round - last[e]) - bound(e)
-
-    inside = set(window)
-    # Since r15 the window derives from the history at import time
-    # (entrypoints.derive_window), so these checks hold at EVERY
-    # checkout including the moment a new CORRECTNESS_rN.json lands —
-    # a failure means the derivation or the tier policy broke, or a
-    # non-empty _WINDOW_OVERRIDE violates the policy it overrides.
-    todo = ("— derivation bug or policy violation (the window is "
-            "self-deriving since r15; check entrypoints.derive_window "
-            "/ _WINDOW_OVERRIDE)")
-    # 2. no latecomer debt
-    never = [e for e in registry if e not in last]
-    assert set(never) <= inside, (
-        f"never-proven entries outside the window (they must land "
-        f"first driver rows this round): {never} {todo}")
-    # 3. nothing outside may be past its bound
-    breaches = [(e, urgency(e)) for e in registry
-                if e not in inside and urgency(e) > 0]
-    assert not breaches, (
-        f"entries breach tier bounds outside the window: {breaches} "
-        f"{todo}")
-    # 4. priority-prefix: min(inside) >= max(outside)
-    min_in = min(urgency(e) for e in window)
-    max_out = max(urgency(e) for e in registry if e not in inside)
-    assert min_in >= max_out, (
-        f"window is not a priority prefix: an inside entry has urgency "
-        f"{min_in} < an outside entry's {max_out} — rotate the more "
-        f"urgent entry in {todo}")
-    # tier sanity: every pinned entry exists, tiers are disjoint,
-    # bounds are the policy
-    assert ep._SEALED_ENTRIES <= set(registry)
-    assert ep._FROZEN_ENTRIES <= set(registry)
-    assert not (ep._SEALED_ENTRIES & ep._FROZEN_ENTRIES)
-    assert ep._ROTATION_TIERS == {"active": 2, "frozen": 3, "sealed": 5}
-    # 5. schedulability: steady-state demand fits the window with
-    # headroom for a few never-proven newcomers per round
-    demand = sum(1.0 / bound(e) for e in registry)
-    assert demand <= len(window) - 2, (
-        f"rotation over-subscribed: steady-state demand {demand:.1f} "
-        f"rows/round vs {len(window)} slots — seal/freeze more "
-        f"long-unchanged entries before adding new ones")
-    # 5b. GROWTH PROJECTION (r15 verdict item #4): each round adds
-    # 2-5 active entries (+1.0-2.5 rows/round of steady-state demand),
-    # so assert NEXT round's worst-case demand also fits — the breach
-    # is caught a round early, while there is still time to seal
-    # another long-unchanged module instead of scrambling at capacity
-    assert demand + 2.5 <= len(window) - 2, (
-        f"rotation capacity projected to breach NEXT round: demand "
-        f"{demand:.1f} + 2.5 (worst-case new entries) > "
-        f"{len(window) - 2} — seal the oldest-unchanged modules now "
-        f"(candidates: any module >= 5 rounds untouched; see "
-        f"_SEALED_ENTRIES criteria)")
-    # the declared window must BE what derive_window computes (guards
-    # against a drifting override left behind after an emergency; the
-    # sort key ends on the entry name, so input order is irrelevant)
-    if not ep._WINDOW_OVERRIDE:
-        assert window == ep.derive_window(repo_root=repo)
+    shutil.copytree(os.path.join(repo, "radmapper_spark"),
+                    tmp_path / "radmapper_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = (
+        "import json, warnings\n"
+        "with warnings.catch_warnings(record=True) as ws:\n"
+        "    warnings.simplefilter('always')\n"
+        "    import radmapper_spark.entrypoints as ep\n"
+        "print(json.dumps({'file': ep.__file__, 'entries': list(ep.ENTRIES),"
+        " 'warnings': [[w.filename, str(w.message)] for w in ws]}))\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run([sys.executable, "-c", code], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["file"].startswith(str(tmp_path)), out["file"]
+    own = [w for w in out["warnings"] if w[0].startswith(str(tmp_path))]
+    assert not own, own
+    assert out["entries"] == list(ep.ENTRIES)
 
 
 @pytest.mark.parametrize("name", ["token_budget_select",
@@ -235,71 +191,3 @@ def test_r13_ordering_entries_windows_are_partitioned(spark, name):
     assert all("_rm_pid" in ln for ln in win_lines), win_lines
     assert "rangepartitioning" in plan, f"{name}: no range exchange"
     _release(df)
-
-
-def _freeze_digests():
-    """Recompute the frozen-tier source digests: for every frozen
-    entry, the entrypoints entry function + each declared surface
-    (module or module:symbol)."""
-    import hashlib
-    import importlib
-    import inspect
-
-    import radmapper_spark.entrypoints as ep
-
-    def digest(src: str) -> str:
-        return hashlib.sha256(src.encode()).hexdigest()[:16]
-
-    out = {}
-    for entry in sorted(ep._PINNED_ENTRIES):
-        surfaces = {"entry": digest(inspect.getsource(
-            ep.ENTRIES[entry][0])),
-            # the DuckDB twin is part of the frozen contract too — a
-            # drifting oracle would silently move the goalposts
-            "oracle": digest(inspect.getsource(ep.ENTRIES[entry][1]))}
-        for spec in ep._FROZEN_SURFACES[entry]:
-            if ":" in spec:
-                mod, sym = spec.split(":")
-                obj = getattr(importlib.import_module(mod), sym)
-            else:
-                obj = importlib.import_module(spec)
-            surfaces[spec] = digest(inspect.getsource(obj))
-        out[entry] = surfaces
-    return out
-
-
-def test_frozen_surfaces_unchanged():
-    """THE freeze criterion as a forward invariant: a frozen entry's
-    pinned operator source must match tests/freeze_manifest.json.
-    Editing pinned code while the entry stays frozen fails here —
-    either re-activate the entry (remove from _FROZEN_ENTRIES) or
-    consciously re-pin with RM_REGEN_FREEZE=1 in the same commit.
-    Also asserts every frozen entry HAS a surface declaration (a new
-    freeze without pins fails loudly)."""
-    import json
-    import os
-
-    import radmapper_spark.entrypoints as ep
-
-    path = os.path.join(os.path.dirname(__file__),
-                        "freeze_manifest.json")
-    # the declaration check must run BEFORE the digest pass: a new
-    # freeze without pins would otherwise die as a bare KeyError
-    # inside _freeze_digests instead of this message (r13 second
-    # review)
-    assert set(ep._FROZEN_SURFACES) == set(ep._PINNED_ENTRIES), \
-        "every pinned (frozen or sealed) entry needs a " \
-        "_FROZEN_SURFACES declaration"
-    got = _freeze_digests()
-    if os.environ.get("RM_REGEN_FREEZE") == "1":
-        with open(path, "w") as f:
-            json.dump(got, f, indent=1, sort_keys=True)
-    want = json.load(open(path))
-    drifted = {e: {k: (want.get(e, {}).get(k), v)
-                   for k, v in s.items()
-                   if want.get(e, {}).get(k) != v}
-               for e, s in got.items()
-               if s != want.get(e)}
-    assert not drifted, (
-        f"frozen entries' pinned source changed without re-activation "
-        f"or re-pin: {drifted}")

@@ -126,3 +126,44 @@ def test_qforms_translation_rejects_garbage():
     with pytest.raises(ValueError):
         S.qforms_to_rm("[[?only-one]]")
     assert S.qforms_to_rm("[[?e :a/b \"x's\"]]") == "query{[?e :a/b 'x\\'s']}"
+
+
+def test_concurrent_graph_puts_and_gets(srv):
+    """Two writer threads and one reader on the threaded server: every
+    put succeeds, every get parses the catalog, and no key is lost."""
+    import threading
+
+    n_puts, errors = 60, []
+
+    def writer(w):
+        for i in range(n_puts):
+            try:
+                _post(srv + "/api/graph-put", {
+                    "put-ident-type": "schema/name",
+                    "put-ident-val": f"urn:w{w}:{i}",
+                    "put-obj": {"schema/name": f"urn:w{w}:{i}", "i": i}})
+            except Exception as exc:
+                errors.append(("put", repr(exc)))
+
+    def reader(stop):
+        while not stop.is_set():
+            try:
+                _get(srv + "/api/graph-get?ident-type=schema/name"
+                     "&ident-val=urn:w0:0&request-objs=i")
+            except Exception as exc:
+                errors.append(("get", repr(exc)))
+
+    stop = threading.Event()
+    writers = [threading.Thread(target=writer, args=(w,)) for w in (0, 1)]
+    rd = threading.Thread(target=reader, args=(stop,))
+    rd.start()
+    for t in writers:
+        t.start()
+    for t in writers:
+        t.join()
+    stop.set()
+    rd.join()
+    assert not errors, errors[:5]
+    with open(readers.CATALOG_PATH) as f:
+        cat = json.load(f)
+    assert len(cat) == 2 * n_puts

@@ -197,13 +197,12 @@ def test_stream_ingest_cross_batch_dedup(spark, tmp_path):
 
 
 def test_inlined_norm_sql_matches_helper():
-    """Drift guard for the frozen/sealed oracle bodies that inline the
+    """Drift guard for the oracle bodies that inline the
     text-normalization SQL: every inlined copy in entrypoints.py must
-    equal dedup.duck_normalize_text('text') VERBATIM. The pinned
-    bodies cannot be rewritten to call the helper without re-opening
-    their freeze, so this test is the propagation mechanism the r14
-    advice asked for — change normalize_text/duck_normalize_text and
-    every stale copy fails here by name."""
+    equal dedup.duck_normalize_text('text') VERBATIM. Those bodies keep
+    their inlined copies, so this test is the propagation mechanism the
+    r14 advice asked for — change normalize_text/duck_normalize_text
+    and every stale copy fails here by name."""
     import inspect
     import re
 
