@@ -601,13 +601,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     join volume is ~b*n^2/256 — still far below the r=4 shape that
     trended near-quadratic at 100 TB."""
     t = load_tables(spark, sf_dir)
-    # distinct_stage="early" (r10): the Arrow verify ships two full
-    # vectors per candidate row, so the narrow (id,id) distinct ahead
-    # of the vector join halves the operator's dominant (and most
-    # load-sensitive) slice — see embedding_cosine_pairs' docstring.
     pairs = dedup.embedding_cosine_pairs(
         t["embeddings"], threshold=0.45, bands=192, planes_per_band=8,
-        distinct_stage="early",
         base=_embedding_siglsh_base(spark, sf_dir))
     return _carry_release(pairs, pairs.select(
         "id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine")))
@@ -976,10 +971,11 @@ def embedding_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_embedding_vs_index): vectors with vec_id % 5 == 0 probe an
     index built (once, memoized) over the other ~4/5. b=256/r=8 gives
     per-pair miss probability ~8e-4 at the 0.42 threshold, and recall is
-    empirically 100% at all three fixture SFs (tests/test_round8.py
-    sweep), so the exact-cosine output equals the oracle's all-cross-
-    pairs join — the driver hash-checks true cosines while the Spark
-    side never goes all-pairs and never re-reads the corpus."""
+    empirically 100% at all three fixture SFs (RM_SF_SWEEP=1
+    tests/test_sf_sweep.py), so the exact-cosine output equals the
+    oracle's all-cross-pairs join — the driver hash-checks true cosines
+    while the Spark side never goes all-pairs and never re-reads the
+    corpus."""
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     path = _probe_index_path(

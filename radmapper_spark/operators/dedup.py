@@ -937,21 +937,98 @@ def sign_lsh_base(emb: DataFrame, vec_col: str = "embedding",
         sketch_planes=sketch_planes, seed=seed)
 
 
-def verify_partitions(spark) -> int:
-    """Explicit partition count for the Arrow pair-verify stages
-    (embedding_cosine_pairs, semantic_dedup_pairs): AQE's size-based
-    coalescing prices the verify INPUT by its narrow bytes (id pairs /
-    a vector table of a few MB) and packs it into 1-2 partitions, but
-    the per-pair einsum work that fuses on top is proportional to the
-    CANDIDATE volume, not the input bytes — measured at sf1 the
-    20M+-pair verifies ran on ~2 of 32 cores. ``rm.dedup.
-    verifyPartitions`` overrides (a cluster deployment sizes it to its
-    width); 0/unset = the session's default parallelism."""
-    try:
-        p = int(spark.conf.get("rm.dedup.verifyPartitions", "0"))
-    except Exception:
-        p = 0
-    return p if p > 0 else spark.sparkContext.defaultParallelism
+def _sketch_screen(wd_a, wd_b, threshold: float, sketch_planes: int):
+    """Popcount prefilter on two packed sign sketches (bigint-word array
+    columns): True where the estimated sign agreement clears
+    p_t - 4.5 sigma, p_t the agreement a pair at exactly `threshold`
+    cosine has in expectation. At threshold 0.45 with 512 planes this
+    kills ~99.5% of random candidates while a true pair's miss
+    probability stays ~3e-6. The word count is static, so the popcount
+    sum is UNROLLED into flat bit_count terms — whole-stage-codegen-able,
+    unlike an aggregate() lambda."""
+    import math
+
+    p_t = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
+    margin = 4.5 * math.sqrt(p_t * (1.0 - p_t) / sketch_planes)
+    disagree = sum(
+        (F.bit_count(F.element_at(wd_a, w + 1)
+                     .bitwiseXOR(F.element_at(wd_b, w + 1)))
+         for w in range(sketch_planes // 64)),
+        F.lit(0))
+    est_p = (F.lit(sketch_planes) - disagree) / F.lit(float(sketch_planes))
+    return est_p >= F.lit(p_t - margin)
+
+
+def cosine_verify(pairs: DataFrame, va: str, vb: str,
+                  threshold: float) -> DataFrame:
+    """Exact-cosine verify of candidate pairs: the ONE pair-cosine kernel
+    of the embedding near-dup family (embedding_cosine_pairs,
+    neardup_embedding_vs_index, similarity.semantic_dedup_pairs).
+
+    `pairs` carries two array<float|double> vector columns `va` and `vb`;
+    every other column is a key passed through with its input type.
+    Returns the keys plus an UNROUNDED `cosine` double for each pair whose
+    cosine is >= `threshold` (the filter runs on the unrounded value, as
+    in the oracles; callers round for output). A pair with a NULL vector
+    or two vectors of different lengths is dropped — operators that must
+    reject such input do so upstream (sign_lsh_base raises on it).
+
+    One mapInArrow kernel: a list column is ONE flat values buffer plus
+    offsets, so each (m, dim) matrix is a single vectorized gather (the
+    pandas form np.stack'ed a per-cell object array row by row, ~µs/row,
+    the dominant slice at sf1's 20M+ candidates). Vectors cross Arrow in
+    their storage type and widen to double inside the kernel: float ->
+    double is exact, so the einsum sees the same doubles a JVM-side cast
+    would produce at half the boundary bytes. The closure captures only
+    strings and a float, so it ships by value to executors that cannot
+    import this module."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    keys = [c for c in pairs.columns if c not in (va, vb)]
+    schema = StructType(
+        [StructField(k, pairs.schema[k].dataType) for k in keys]
+        + [StructField("cosine", DoubleType())])
+    thr = float(threshold)
+
+    def _kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        def _flat(col, null_len):
+            offs = col.offsets.to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            vals = np.asarray(col.values.to_numpy(zero_copy_only=False),
+                              dtype=np.float64)
+            lens = np.diff(offs)
+            if col.null_count:
+                lens = np.where(col.is_null().to_numpy(zero_copy_only=False),
+                                null_len, lens)
+            return offs[:-1], vals, lens
+
+        for rb in batches:
+            cols = dict(zip(rb.schema.names, rb.columns))
+            # NULL sentinels -1 vs -2 never match, so a NULL vector fails
+            # the same length check as a dim mismatch
+            oa, fa, la = _flat(cols[va], -1)
+            ob, fb, lb = _flat(cols[vb], -2)
+            valid = la == lb
+            # a batch mixes dims only via dirty input; one gather per dim
+            for dim in np.unique(la[valid]):
+                rows = np.flatnonzero(valid & (la == dim))
+                span = np.arange(int(dim))
+                a = fa[oa[rows][:, None] + span]
+                b = fb[ob[rows][:, None] + span]
+                cosv = np.einsum("ij,ij->i", a, b) / (
+                    np.sqrt(np.einsum("ij,ij->i", a, a))
+                    * np.sqrt(np.einsum("ij,ij->i", b, b)))
+                keep = cosv >= thr
+                take = pa.array(rows[keep])
+                yield pa.RecordBatch.from_arrays(
+                    [cols[k].take(take) for k in keys]
+                    + [pa.array(cosv[keep], type=pa.float64())],
+                    names=keys + ["cosine"])
+
+    return pairs.mapInArrow(_kernel, schema)
 
 
 def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
@@ -959,8 +1036,6 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
                            bands: int = 64, planes_per_band: int = 8,
                            sketch_planes: int = 512,
                            seed: int = 42,
-                           verify_mode: str = "arrow",
-                           distinct_stage: str = "early",
                            base: DataFrame = None) -> DataFrame:
     """Near-duplicate pairs by embedding cosine via BANDED sign-LSH
     (OR-construction over AND-bands, like the minhash path) plus a packed
@@ -970,10 +1045,7 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
     `sketch_planes`-bit sign sketch packed into bigint words — the angle
     estimate is popcount(XOR), a pure JVM bit_count over 8 longs, so the
     hot-bucket quadratic cost of a low threshold hits a cheap popcount,
-    never a full-dimension dot product. Only pairs whose estimated
-    agreement clears (p_t - 4.5 sigma) reach the vector re-join; at
-    threshold 0.45 with 512 planes that kills ~99.5% of random candidates
-    while keeping per-true-pair miss probability ~3e-6.
+    never a full-dimension dot product (_sketch_screen).
 
     Parameter guidance: for production near-dup thresholds (cos >= 0.9,
     p ~ 0.86) use r=16, b=24: fine buckets (random pairs collide at
@@ -991,35 +1063,14 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
 
     Plan: one projection computes band sigs and sketch words per row ->
     explode to (id, band, sig) -> self equi-join on (band, sig) ->
-    popcount prefilter INLINE on the raw join output -> re-join vectors ->
-    exact cosine filter -> distinct id pairs.
-
-    `distinct_stage` places the pair dedup (a pair colliding in k bands
-    appears k times):
-
-    - "early" (the right call whenever verify_mode="arrow", and always
-      when the vector table is too large to broadcast): distinct BEFORE
-      the vector join. The narrow (id,id) distinct shuffle cuts the
-      verify input by the band-duplication factor — and the Arrow
-      verify is priced per ROW-BYTE, not per row: every candidate ships
-      two full vectors through Arrow (~1 KB/row at dim 64; ~500 MB for
-      the 494k raw candidates at sf0.1), so halving the rows halves the
-      single most load-sensitive slice of the whole operator (re-
-      measured r10: early beats late 1.5s vs 2.2s steady-state at
-      sf0.1, and degrades far less under co-tenant CPU load).
-    - "late": verify WITH duplicates, distinct only the survivors
-      (true pairs x band-dup — tiny). Wins only when the verify is
-      JVM-side (verify_mode="catalyst") AND the vector join is a
-      map-side broadcast: then duplicate rows really do cost only
-      interpreted-expression time and the early distinct's full
-      candidate shuffle (measured 1.3s vs 2.6s whole-entry, r6 — the
-      measurement that made this the default before the Arrow-traffic
-      re-measurement above) is pure overhead.
+    popcount prefilter INLINE on the raw join output -> distinct id pairs
+    (a pair colliding in k bands appears k times) -> re-join vectors ->
+    exact cosine filter (cosine_verify). The distinct runs BEFORE the
+    vector join because the verify is priced per row-byte: every
+    candidate ships two full vectors through Arrow, so the narrow (id, id)
+    distinct cuts the operator's dominant slice by the band-duplication
+    factor.
     """
-    import math
-
-    nwords = sketch_planes // 64
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     # `base`: callers that hold the (persisted) sign_lsh_base frame for
     # an IMMUTABLE corpus pass it in so repeated invocations skip the
     # Arrow signature pass entirely — signatures are a pure function of
@@ -1044,160 +1095,48 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
     # is ONE shuffle partition of the banded frame — bounded by AQE's
     # target partition size at scale, so this stays safe at 100 TB.
     l, r = banded.alias("l"), banded.alias("r").hint("shuffle_hash")
-    # popcount prefilter: agreement fraction vs p_t - 4.5 sigma. The word
-    # count is static, so the popcount sum is UNROLLED into flat bit_count
-    # terms — whole-stage-codegen-able, unlike an aggregate() lambda
-    p_t = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    margin = 4.5 * math.sqrt(p_t * (1.0 - p_t) / sketch_planes)
-    disagree = sum(
-        (F.bit_count(F.element_at(F.col("l.wd"), w + 1)
-                     .bitwiseXOR(F.element_at(F.col("r.wd"), w + 1)))
-         for w in range(nwords)),
-        F.lit(0))
-    est_p = (F.lit(sketch_planes) - disagree) / F.lit(float(sketch_planes))
+    # explicit REPARTITION_BY_NUM after the distinct (r18): AQE's
+    # size-based coalescing sees only the narrow (id, id) bytes of the
+    # candidate set and packs them into 1-2 partitions — and the
+    # downstream vector joins + Arrow einsum verify FUSE onto those
+    # partitions, starving the operator's dominant stage (measured at
+    # sf1: the 20.6M-candidate verify ran on ~2 of 32 cores). AQE never
+    # coalesces a user-numbered repartition, so the shuffle (16 B/row —
+    # the vectors attach after) restores full-width parallelism for the
+    # verify at any scale.
     screened = (
         l.join(r, (F.col("l.band") == F.col("r.band"))
                & (F.col("l.sig") == F.col("r.sig"))
                & (F.col("l.id") < F.col("r.id")))
-        .filter(est_p >= F.lit(p_t - margin))
+        .filter(_sketch_screen(F.col("l.wd"), F.col("r.wd"), threshold,
+                               sketch_planes))
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .distinct()
+        .repartition(emb.sparkSession.sparkContext.defaultParallelism)
     )
-    if distinct_stage == "early":
-        # explicit REPARTITION_BY_NUM after the distinct (r18): AQE's
-        # size-based coalescing sees only the narrow (id, id) bytes of
-        # the candidate set and packs them into 1-2 partitions — and the
-        # downstream vector joins + Arrow einsum verify FUSE onto those
-        # partitions, starving the operator's dominant stage (measured
-        # at sf1: the 20.6M-candidate verify ran on ~2 of 32 cores).
-        # AQE never coalesces a user-numbered repartition, so the shuffle
-        # (16 B/row — the vectors attach after) restores full-width
-        # parallelism for the verify at any scale.
-        screened = screened.distinct().repartition(
-            verify_partitions(emb.sparkSession))
-    elif distinct_stage != "late":
-        raise ValueError(f"unknown distinct_stage {distinct_stage!r} "
-                         f"(early|late)")
-    # exact-cosine verify via zip_with+aggregate lambdas. NOTE (measured,
-    # round 6): unrolling the dot into dim flat element_at terms is 2x
-    # SLOWER here — the ~130-node-per-row expression tree blows past the
-    # codegen thresholds and evaluates interpreted anyway, with a much
-    # bigger tree; the higher-order-function form wins.
-    # exact-cosine verify over the (typically ~100x-overscreened)
-    # candidate set. Arrow-batched numpy is the default: the aggregate()
-    # HOF dot does NOT whole-stage-codegen (lambda evaluation is
-    # interpreted), and at 206k surviving candidates the interpreted dot
-    # was the single biggest slice of the entry (~1.9 s of 4.3 s at
-    # sf0.1); the einsum batch kernel does the same double math in
-    # C order (measured value-identical at 6-decimal rounding across all
-    # three fixture SFs). This entry is one of the documented Arrow
-    # kernels in the plan-discipline allowlist. verify_mode="catalyst"
-    # keeps the pure-JVM HOF path (NOTE, measured round 6: unrolling the
-    # dot into dim flat element_at terms is 2x SLOWER than the HOF —
-    # the ~130-node tree blows past codegen thresholds and evaluates
-    # interpreted anyway).
-    if verify_mode == "arrow":
-        thr = float(threshold)
+    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
+    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    # size-gate the vector attach (r18, same recipe as the index
+    # probe's rm.index.probeBroadcastMaxBytes): left to the planner,
+    # a vector table just over autoBroadcastJoinThreshold turns the
+    # SECOND attach into a sort-merge join that shuffles pairs WITH
+    # v_a already attached (~1 KB/row — measured 20 GB at sf1's
+    # 20.6M candidates) by id_b. Broadcasting both (tiny) vector
+    # sides keeps the pair stream in place; a vector table over the
+    # cap falls back to the planner's choice instead of OOMing.
+    try:
+        bc_max = int(emb.sparkSession.conf.get(
+            "rm.dedup.vectorBroadcastMaxBytes", str(256 << 20)))
+    except Exception:
+        bc_max = 256 << 20
+    from .plan_stats import est_plan_bytes
 
-        # r18 (guide §4.2): two boundary costs halved/removed at once.
-        # (a) vectors cross Arrow in their STORAGE type (float32) and
-        # widen IN the kernel — float->double is exact, so the einsum
-        # runs on the identical doubles the old ship-as-double form
-        # carried while the boundary moves half the bytes (~1 KB/row at
-        # dim 128; ~21 GB for the 20.6M sf1 candidates). (b) mapInArrow
-        # instead of mapInPandas: a list<float> column is ONE flat
-        # values buffer + offsets, so the (n, dim) matrix is a single
-        # reshape — the pandas form materialized a per-cell object
-        # array and np.stack'ed it row by row (~µs/row, THE dominant
-        # slice at sf1's 20M+ candidates).
-        def _verify(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            def _mat(col):
-                offs = col.offsets.to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                lens = np.diff(offs)
-                if col.null_count or (len(lens) and
-                                      lens.min() != lens.max()):
-                    raise ValueError(
-                        "embedding_cosine_pairs: NULL or ragged vector "
-                        "batch in the Arrow verify")
-                n, dim = len(lens), (int(lens[0]) if len(lens) else 0)
-                vals = np.asarray(
-                    col.values.to_numpy(zero_copy_only=False),
-                    dtype=np.float64)
-                return vals[offs[0]:offs[0] + n * dim].reshape(n, dim)
-
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                ix = {nm: i for i, nm in enumerate(rb.schema.names)}
-                a = _mat(rb.column(ix["v_a"]))
-                b = _mat(rb.column(ix["v_b"]))
-                dots = np.einsum("ij,ij->i", a, b)
-                cosv = dots / (np.sqrt(np.einsum("ij,ij->i", a, a))
-                               * np.sqrt(np.einsum("ij,ij->i", b, b)))
-                keep = pa.array(cosv >= thr)
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(ix["id_a"]).filter(keep),
-                     rb.column(ix["id_b"]).filter(keep),
-                     pa.array(cosv[cosv >= thr], type=pa.float64())],
-                    names=["id_a", "id_b", "cosine"])
-
-        va_raw = emb.select(F.col(id_col).alias("id_a"),
-                            F.col(vec_col).alias("v_a"))
-        vb_raw = emb.select(F.col(id_col).alias("id_b"),
-                            F.col(vec_col).alias("v_b"))
-        # size-gate the vector attach (r18, same recipe as the index
-        # probe's rm.index.probeBroadcastMaxBytes): left to the planner,
-        # a vector table just over autoBroadcastJoinThreshold turns the
-        # SECOND attach into a sort-merge join that shuffles pairs WITH
-        # v_a already attached (~1 KB/row — measured 20 GB at sf1's
-        # 20.6M candidates) by id_b. Broadcasting both (tiny) vector
-        # sides keeps the pair stream in place; a vector table over the
-        # cap falls back to the planner's choice instead of OOMing.
-        try:
-            bc_max = int(emb.sparkSession.conf.get(
-                "rm.dedup.vectorBroadcastMaxBytes", str(256 << 20)))
-        except Exception:
-            bc_max = 256 << 20
-        from .plan_stats import est_plan_bytes
-
-        est = est_plan_bytes(va_raw)
-        if est is not None and est <= bc_max:
-            va_raw, vb_raw = F.broadcast(va_raw), F.broadcast(vb_raw)
-        paired_raw = (screened.join(va_raw, on="id_a")
-                      .join(vb_raw, on="id_b")
-                      .select("id_a", "id_b", "v_a", "v_b"))
-        out = paired_raw.mapInArrow(
-            _verify, schema="id_a long, id_b long, cosine double")
-    elif verify_mode == "catalyst":
-        v = emb.select(F.col(id_col).alias("id"), vec.alias("v"))
-        va = v.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-        vb = v.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-        paired = screened.join(va, on="id_a").join(vb, on="id_b")
-
-        def _sqnorm(c):
-            return F.aggregate(F.transform(c, lambda x: x * x),
-                               F.lit(0.0), lambda acc, x: acc + x)
-
-        dot = F.aggregate(F.zip_with(F.col("v_a"), F.col("v_b"),
-                                     lambda a, c: a * c),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        cos = dot / (F.sqrt(_sqnorm(F.col("v_a")))
-                     * F.sqrt(_sqnorm(F.col("v_b"))))
-        out = (paired.withColumn("cosine", cos)
-               .filter(F.col("cosine") >= threshold)
-               .select("id_a", "id_b", "cosine"))
-    else:
-        raise ValueError(f"unknown verify_mode {verify_mode!r} "
-                         f"(arrow|catalyst)")
-    if distinct_stage == "late":
-        # duplicates of a pair carry bit-identical cosine (same kernel on
-        # the same doubles), so min() is a pure dedup; the shuffle sees
-        # only survivors (true pairs x band-dup factor — tiny)
-        out = (out.groupBy("id_a", "id_b")
-               .agg(F.min("cosine").alias("cosine")))
+    est = est_plan_bytes(va)
+    if est is not None and est <= bc_max:
+        va, vb = F.broadcast(va), F.broadcast(vb)
+    out = cosine_verify(screened.join(va, on="id_a").join(vb, on="id_b")
+                        .select("id_a", "id_b", "v_a", "v_b"),
+                        "v_a", "v_b", threshold)
     out.rm_release_cache = base.unpersist if owns_base else (lambda: None)
     return out
 
@@ -1408,19 +1347,26 @@ def build_signlsh_index(emb: DataFrame, path: str,
     """
     from .index_meta import write_index_meta
 
+    params = {"bands": bands, "planes_per_band": planes_per_band,
+              "sketch_planes": sketch_planes, "seed": seed}
+    _write_signlsh(emb, path, vec_col, id_col, params, "overwrite")
+    write_index_meta(emb.sparkSession, path, "signlsh", params)
+
+
+def _write_signlsh(emb: DataFrame, path: str, vec_col: str, id_col: str,
+                   params: dict, mode: str) -> None:
+    """Write `emb`'s rows into the ``bands``/``vectors`` tables of the
+    sign-LSH index at `path` with Spark write mode `mode` ("overwrite" to
+    build, "append" to admit)."""
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = sign_lsh_base(emb, vec_col, id_col, bands, planes_per_band,
-                         sketch_planes, seed).persist()
+    base = sign_lsh_base(emb, vec_col, id_col, **params).persist()
     (base.select("id", F.posexplode("bb").alias("band", "sig"))
      .select("band", "sig", "id")
-     .write.mode("overwrite").parquet(f"{path}/bands"))
+     .write.mode(mode).parquet(f"{path}/bands"))
     (base.select("id", "wd")
      .join(emb.select(F.col(id_col).alias("id"), vec.alias("v")), "id")
-     .write.mode("overwrite").parquet(f"{path}/vectors"))
+     .write.mode(mode).parquet(f"{path}/vectors"))
     base.unpersist()
-    write_index_meta(emb.sparkSession, path, "signlsh",
-                     {"bands": bands, "planes_per_band": planes_per_band,
-                      "sketch_planes": sketch_planes, "seed": seed})
 
 
 def append_to_signlsh_index(new_emb: DataFrame, path: str,
@@ -1436,20 +1382,11 @@ def append_to_signlsh_index(new_emb: DataFrame, path: str,
     sidecar (wrong-family appends would poison the index — raises)."""
     from .index_meta import check_index_meta
 
-    check_index_meta(new_emb.sparkSession, path, "signlsh",
-                     {"bands": bands, "planes_per_band": planes_per_band,
-                      "sketch_planes": sketch_planes, "seed": seed},
+    params = {"bands": bands, "planes_per_band": planes_per_band,
+              "sketch_planes": sketch_planes, "seed": seed}
+    check_index_meta(new_emb.sparkSession, path, "signlsh", params,
                      "append_to_signlsh_index")
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = sign_lsh_base(new_emb, vec_col, id_col, bands, planes_per_band,
-                         sketch_planes, seed).persist()
-    (base.select("id", F.posexplode("bb").alias("band", "sig"))
-     .select("band", "sig", "id")
-     .write.mode("append").parquet(f"{path}/bands"))
-    (base.select("id", "wd")
-     .join(new_emb.select(F.col(id_col).alias("id"), vec.alias("v")), "id")
-     .write.mode("append").parquet(f"{path}/vectors"))
-    base.unpersist()
+    _write_signlsh(new_emb, path, vec_col, id_col, params, "append")
 
 
 def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
@@ -1462,15 +1399,15 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     """Probe a persisted sign-LSH index with a batch of NEW vectors:
     (new_id, index_id, cosine) for every new vector whose cosine against
     an indexed one clears `threshold`. Cosines are exactly the values
-    embedding_cosine_pairs computes (same einsum kernel on the same
-    doubles).
+    embedding_cosine_pairs computes (the same cosine_verify kernel on the
+    same doubles).
 
     Plan: probe signatures+sketch in one Arrow pass over the BATCH only
     -> equi-join the persisted bands table on (band, sig) -> dedupe
     (new_id, index_id) -> join the index vectors table (brings the
     corpus-side sketch words AND vector; the corpus table itself is
-    never read) -> inline popcount prefilter -> exact einsum verify on
-    survivors. Same 4.5-sigma margin as the batch operator.
+    never read) -> inline popcount prefilter (_sketch_screen) -> exact
+    cosine verify on survivors (cosine_verify).
 
     Raises IndexParamMismatch when (bands, planes_per_band,
     sketch_planes, seed) disagree with the index's ``_meta`` sidecar.
@@ -1480,8 +1417,6 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     ``rm.index.probeBroadcastMaxBytes`` (default 256 MiB) — a huge
     probe batch falls back to a shuffled join instead of OOMing.
     """
-    import math
-
     from .index_meta import check_index_meta
 
     spark = new_emb.sparkSession
@@ -1489,7 +1424,6 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
                      {"bands": bands, "planes_per_band": planes_per_band,
                       "sketch_planes": sketch_planes, "seed": seed},
                      "neardup_embedding_vs_index")
-    nwords = sketch_planes // 64
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     probe_base = sign_lsh_base(new_emb, vec_col, id_col, bands,
                                planes_per_band, sketch_planes,
@@ -1542,41 +1476,12 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     #        below and rm_probe_broadcast must never drift apart
     p_in = (F.broadcast(probe_side) if use_bc
             else probe_side.hint("shuffle_hash"))
-    paired = cand.join(idx_vec, "index_id").join(p_in, "new_id")
-    p_t = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    margin = 4.5 * math.sqrt(p_t * (1.0 - p_t) / sketch_planes)
-    disagree = sum(
-        (F.bit_count(F.element_at(F.col("wd_n"), w + 1)
-                     .bitwiseXOR(F.element_at(F.col("wd_i"), w + 1)))
-         for w in range(nwords)),
-        F.lit(0))
-    est_p = (F.lit(sketch_planes) - disagree) / F.lit(float(sketch_planes))
-    screened = paired.filter(est_p >= F.lit(p_t - margin))
-    thr = float(threshold)
-
-    def _verify(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.stack(pdf["v_a"].to_numpy())
-            b = np.stack(pdf["v_b"].to_numpy())
-            dots = np.einsum("ij,ij->i", a, b)
-            cosv = dots / (np.sqrt(np.einsum("ij,ij->i", a, a))
-                           * np.sqrt(np.einsum("ij,ij->i", b, b)))
-            keep = cosv >= thr
-            yield pdf.loc[keep, ["new_id", "index_id"]].assign(
-                cosine=cosv[keep])
-
-    # id columns keep their INPUT types (the probe's id column and the
-    # index's persisted id column respectively) — hardcoding bigint
-    # broke / silently coerced string-keyed tables
-    pre = screened.select("new_id", "index_id", "v_a", "v_b")
-    dt = dict(pre.dtypes)
-    out = pre.mapInPandas(
-        _verify, schema=f"new_id {dt['new_id']}, "
-                        f"index_id {dt['index_id']}, cosine double")
+    out = cosine_verify(
+        cand.join(idx_vec, "index_id").join(p_in, "new_id")
+        .filter(_sketch_screen(F.col("wd_n"), F.col("wd_i"), threshold,
+                               sketch_planes))
+        .select("new_id", "index_id", "v_a", "v_b"),
+        "v_a", "v_b", threshold)
     out.rm_release_cache = probe_base.unpersist
     # chosen physical path, exposed for tests / operators (same pattern
     # as graph results' rm_broadcast_path)

@@ -640,7 +640,6 @@ def semantic_dedup_pairs(emb: DataFrame, k: int = 8, iters: int = 2,
                          threshold: float = 0.4,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",
-                         verify_mode: str = "arrow",
                          asg: DataFrame = None) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -656,24 +655,24 @@ def semantic_dedup_pairs(emb: DataFrame, k: int = 8, iters: int = 2,
     bit-identical in any engine: unlike LSH-banded dedup there is no
     recall parameter; within-cluster recall is exhaustive (cross-cluster
     near-dups are the documented SemDeDup trade-off, bounded by cluster
-    granularity). Returns (cluster, id_a, id_b, cosine), id_a < id_b.
+    granularity). Returns (cluster, id_a, id_b, cosine), id_a < id_b,
+    cosine rounded to 6 decimals.
 
     The downstream prune rule (keep the smallest id per pair — or chain
     dedup_groups for transitive pruning) is the caller's policy;
     emitting pairs keeps this composable with the rest of the dedup
     stack.
 
-    verify_mode="arrow" (default) runs the pair cosine as an
-    Arrow-batched einsum kernel — the aggregate() HOF dot is interpreted
-    per element and dominated the entry (~250k pairs x dim x 3 lambdas
-    at sf0.1, measured >2 s of 4.3 s); the einsum does the same double
-    math vectorized, value-identical at the 6-decimal rounding (swept
-    at all three fixture SFs). "catalyst" keeps the pure-JVM HOF path.
+    The pair cosine is the shared Arrow einsum kernel
+    (dedup.cosine_verify); a pair with a NULL or dimension-mismatched
+    embedding is dropped.
 
     `asg`: callers over an IMMUTABLE table may pass a (persisted)
     kmeans_lloyd assignment frame so repeated invocations skip the
     Lloyd iterations — caller-owned, not released here (same contract
     as embedding_cosine_pairs' `base`)."""
+    from .dedup import cosine_verify
+
     owns_asg = asg is None
     if owns_asg:
         asg = kmeans_lloyd(emb, k=k, iters=iters, vec_col=vec_col,
@@ -681,111 +680,23 @@ def semantic_dedup_pairs(emb: DataFrame, k: int = 8, iters: int = 2,
     rel = getattr(asg, "rm_release_cache", lambda: None) if owns_asg \
         else (lambda: None)
     sid = asg.select(F.col(id_col).alias("_sid"), "cluster")
-    # ship vectors in their STORAGE type (float32 for the fixtures) and
-    # widen inside the Arrow kernel — float->double is exact, so the
-    # einsum sees the identical doubles while the per-pair Arrow traffic
-    # (two full vectors per candidate row, THE dominant byte stream of
-    # this operator) halves; the catalyst branch casts JVM-side below
-    # because its float arithmetic would otherwise run at float32 (r18)
     v = emb.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("_v"))
     # explicit REPARTITION_BY_NUM of the (tiny) per-vector side (r18):
     # whichever side of the cluster self-join streams, its partition
     # count is this frame's — and AQE coalesces the few-MB frame to 1-2
     # partitions, starving the fused n^2/k-pair einsum verify above the
-    # join (dedup.verify_partitions docstring; measured at sf1 the 27M-
-    # pair verify ran on ~2 of 32 cores)
-    from .dedup import verify_partitions
+    # join (measured at sf1 the 27M-pair verify ran on ~2 of 32 cores)
     side = sid.join(v, "_sid").repartition(
-        verify_partitions(emb.sparkSession))
+        emb.sparkSession.sparkContext.defaultParallelism)
     a = side.select(F.col("cluster"), F.col("_sid").alias("id_a"),
                     F.col("_v").alias("_va"))
     b = side.select(F.col("cluster"), F.col("_sid").alias("id_b"),
                     F.col("_v").alias("_vb"))
     paired = a.join(b, ["cluster"]).filter(F.col("id_a") < F.col("id_b"))
-    thr = float(threshold)
-    if verify_mode == "arrow":
-        # r18 (guide §4.2): mapInArrow over the list<float> columns —
-        # the (m, dim) matrices come from ONE vectorized gather over the
-        # flat Arrow values buffer instead of np.stack over a per-cell
-        # object array (~µs/row — the dominant slice at sf1's 27M
-        # within-cluster pairs); float->double widening happens in the
-        # kernel on the batch, bit-identical to the old JVM-side cast.
-        def _verify(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            def _flat(col):
-                offs = col.offsets.to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                vals = np.asarray(
-                    col.values.to_numpy(zero_copy_only=False),
-                    dtype=np.float64)
-                lens = np.diff(offs)
-                return offs[:-1], vals, lens
-
-            for rb in batches:
-                n = rb.num_rows
-                if not n:
-                    continue
-                ix = {nm: i for i, nm in enumerate(rb.schema.names)}
-                ca, cb = rb.column(ix["_va"]), rb.column(ix["_vb"])
-                oa, fa, la = _flat(ca)
-                ob, fb, lb = _flat(cb)
-                # NULL or length-mismatched embedding pairs yield a NULL
-                # cosine on the catalyst path (zip_with pads with NULL,
-                # the aggregate sum propagates it) and are dropped by
-                # the threshold filter; mirror that (null sentinels -1
-                # vs -2 can never match)
-                if ca.null_count:
-                    la = np.where(
-                        ca.is_null().to_numpy(zero_copy_only=False),
-                        -1, la)
-                if cb.null_count:
-                    lb = np.where(
-                        cb.is_null().to_numpy(zero_copy_only=False),
-                        -2, lb)
-                valid = la == lb
-                if not valid.any():
-                    continue
-                # batches can mix dims only via dirty input; one
-                # vectorized gather per distinct dim
-                for dim in np.unique(la[valid]):
-                    m = valid & (la == dim)
-                    span = np.arange(int(dim))
-                    va = fa[oa[m][:, None] + span]
-                    vb = fb[ob[m][:, None] + span]
-                    dots = np.einsum("ij,ij->i", va, vb)
-                    cosv = dots / (np.sqrt(np.einsum("ij,ij->i", va, va))
-                                   * np.sqrt(np.einsum("ij,ij->i",
-                                                       vb, vb)))
-                    keep = cosv >= thr  # filter on the UN-rounded value,
-                    #                     exactly like the HOF path + oracle
-                    full = np.zeros(n, dtype=bool)
-                    full[np.flatnonzero(m)[keep]] = True
-                    fm = pa.array(full)
-                    yield pa.RecordBatch.from_arrays(
-                        [rb.column(ix["cluster"]).filter(fm),
-                         rb.column(ix["id_a"]).filter(fm),
-                         rb.column(ix["id_b"]).filter(fm),
-                         pa.array(np.round(cosv[keep], 6),
-                                  type=pa.float64())],
-                        names=["cluster", "id_a", "id_b", "cosine"])
-
-        dt = dict(paired.dtypes)
-        pairs = paired.select("cluster", "id_a", "id_b", "_va", "_vb") \
-            .mapInArrow(_verify,
-                        schema=f"cluster {dt['cluster']}, "
-                               f"id_a {dt['id_a']}, "
-                               f"id_b {dt['id_b']}, cosine double")
-    elif verify_mode == "catalyst":
-        da, db = _to_double(F.col("_va")), _to_double(F.col("_vb"))
-        cos = _dot(da, db) / (_norm(da) * _norm(db))
-        pairs = (paired.withColumn("cosine", cos)
-                 .filter(F.col("cosine") >= threshold)
-                 .select("cluster", "id_a", "id_b",
-                         F.round(F.col("cosine"), 6).alias("cosine")))
-    else:
-        raise ValueError(f"unknown verify_mode {verify_mode!r} "
-                         f"(arrow|catalyst)")
+    pairs = cosine_verify(
+        paired.select("cluster", "id_a", "id_b", "_va", "_vb"),
+        "_va", "_vb", threshold)
+    pairs = pairs.select("cluster", "id_a", "id_b",
+                         F.round(F.col("cosine"), 6).alias("cosine"))
     pairs.rm_release_cache = rel
     return pairs

@@ -127,15 +127,41 @@ def test_embedding_vector_broadcast_gated_by_size(spark, tmp_path):
     assert sh_rows == bc_rows
 
 
-def test_verify_partitions_conf_or_default_parallelism(spark):
-    spark.conf.unset("rm.dedup.verifyPartitions")
-    assert dedup.verify_partitions(spark) == \
-        spark.sparkContext.defaultParallelism
-    spark.conf.set("rm.dedup.verifyPartitions", "3")
-    try:
-        assert dedup.verify_partitions(spark) == 3
-    finally:
-        spark.conf.unset("rm.dedup.verifyPartitions")
+def test_embedding_near_dup_dirty_vectors_drop_or_raise(spark, tmp_path):
+    """A NULL and a wrong-dimension vector through each operator that
+    ends in the shared pair-cosine kernel: semantic_dedup_pairs drops
+    them, while embedding_cosine_pairs and neardup_embedding_vs_index
+    raise because sign_lsh_base rejects the ragged batch before the
+    kernel's drop rule could silently lose rows. One input partition, so
+    sign_lsh_base's round-robin spread leaves every dirty row in a batch
+    with other rows."""
+    import random
+    rng = random.Random(11)
+    clean = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(32)]
+    schema = "vec_id long, embedding array<double>"
+    dirty = spark.createDataFrame(
+        clean + [(100, None), (101, [1.0, 2.0])], schema).coalesce(1)
+
+    asg = dirty.selectExpr("vec_id", "CAST(0 AS BIGINT) AS cluster")
+    sem = similarity.semantic_dedup_pairs(dirty, threshold=0.0, asg=asg)
+    ids = {i for r in sem.collect() for i in (r.id_a, r.id_b)}
+    assert ids and not ids & {100, 101}
+
+    with pytest.raises(Exception, match="sig_sketch"):
+        out = dedup.embedding_cosine_pairs(dirty, threshold=0.0)
+        try:
+            out.collect()
+        finally:
+            out.rm_release_cache()
+
+    path = str(tmp_path / "idx")
+    dedup.build_signlsh_index(spark.createDataFrame(clean, schema), path)
+    with pytest.raises(Exception, match="sig_sketch"):
+        out = dedup.neardup_embedding_vs_index(dirty, path, threshold=0.0)
+        try:
+            out.collect()
+        finally:
+            out.rm_release_cache()
 
 
 def test_embedding_lsh_candidate_volume_subquadratic(spark):

@@ -17,12 +17,15 @@ SF = "/root/testdata/sf0.001"
 # vectorized kernel doing dense math Catalyst can't express efficiently
 # (documented in their operator docstrings)
 ARROW_ALLOWED = {
-    "dedup_embedding_cosine",  # sign-LSH signature matmul
+    "dedup_embedding_cosine",  # sign-LSH signature matmul + the shared
+                               # pair-cosine kernel (dedup.cosine_verify)
     "ann_ivf_topk",            # IVF cell-assignment matmul
     "ann_pq_topk",             # PQ encode + ADC lookup-table matmuls
     "multimodal_features",     # binary decode boundary (mapInPandas)
-    "embedding_probe",         # sign-LSH signature matmul + einsum verify
-    "semantic_dedup",          # within-cluster einsum cosine verify
+    "embedding_probe",         # sign-LSH signature matmul + the shared
+                               # pair-cosine kernel (dedup.cosine_verify)
+    "semantic_dedup",          # within-cluster pairs through the shared
+                               # pair-cosine kernel (dedup.cosine_verify)
     "embedding_gram",          # per-batch d×d partial-gram reduction
     "embedding_pca",           # projection matmul + projected-gram partials
     "ann_opq_topk",            # rotation matmul + PQ encode/ADC kernels

@@ -146,12 +146,11 @@ def test_semantic_dedup_within_cluster_only(spark):
     assert {(r.id_a, r.id_b) for r in rows} == want
 
 
-def test_semantic_dedup_dirty_embeddings_modes_agree(spark):
-    """NULL or wrong-dimension embeddings must be DROPPED identically by
-    both verify modes: catalyst yields a NULL cosine (zip_with pads,
-    aggregate propagates) that the threshold filter removes; the arrow
-    kernel must not crash on the ragged batch (np.stack) and must drop
-    the same pairs."""
+def test_semantic_dedup_dirty_embeddings_dropped(spark):
+    """NULL or wrong-dimension embeddings must be DROPPED by the shared
+    pair-cosine kernel: it must not crash on the ragged batch, and the
+    pairs it keeps must equal a numpy brute force over the clean rows."""
+    import numpy as np
     from radmapper_spark.operators import similarity
     clean = _tiny_emb(spark)
     dirty = clean.unionByName(spark.createDataFrame(
@@ -160,18 +159,24 @@ def test_semantic_dedup_dirty_embeddings_modes_agree(spark):
     # hand-built single-cluster assignment so the dirty ids are
     # guaranteed to reach the pair-verify kernel (the thing under test)
     asg = dirty.selectExpr("vec_id", "CAST(0 AS BIGINT) AS cluster")
-
-    def run(mode):
-        df = similarity.semantic_dedup_pairs(dirty, threshold=0.0,
-                                             asg=asg, verify_mode=mode)
-        out = {(r.id_a, r.id_b, round(r.cosine, 6)) for r in df.collect()}
-        df.rm_release_cache()
-        return out
-
-    arrow, catalyst = run("arrow"), run("catalyst")
-    assert arrow == catalyst and arrow, "dirty-input mode divergence"
+    df = similarity.semantic_dedup_pairs(dirty, threshold=0.0, asg=asg)
+    got = {(r.id_a, r.id_b): r.cosine for r in df.collect()}
+    df.rm_release_cache()
+    vecs = {r.vec_id: np.array(r.embedding, dtype=float)
+            for r in clean.collect()}
+    want = {}
+    ids = sorted(vecs)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            va, vb = vecs[a], vecs[b]
+            c = float(va @ vb / (np.sqrt(va @ va) * np.sqrt(vb @ vb)))
+            if c >= 0.0:
+                want[(a, b)] = c
+    assert want, "vacuous"
+    assert set(got) == set(want)
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in want)
     bad = {100, 101}
-    assert not any(a in bad or b in bad for a, b, _ in arrow)
+    assert not any(a in bad or b in bad for a, b in got)
 
 
 def test_semantic_dedup_builtin(spark, tables):
