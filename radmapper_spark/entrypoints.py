@@ -478,10 +478,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b", F.round(F.col("est_jaccard"), 6).alias("est_jaccard")))
 
 
-def dedup_minhash_lsh_sql() -> str:
-    """Exact DuckDB twin of the portable-mode minhash entry: 32 affine
-    hashes over 28-bit md5-prefix shingle hashes, 8 bands x 4 rows via
-    polynomial combine, estimated Jaccard >= 0.5."""
+def _duck_minhash_sql(ids: str, cand: str, sig_join: str) -> str:
+    """The ONE DuckDB twin of the portable-mode minhash pipeline: 32
+    affine hashes over 28-bit md5-prefix shingle hashes, 8 bands x 4
+    rows via polynomial combine, estimated Jaccard >= 0.5. ``cand``
+    selects the candidate pairs (``ids``) from the ``banded`` CTE;
+    ``sig_join`` joins them to both sides' signatures."""
     from .functions import portable_hash as PH
 
     nh, bands, rpb, k = 32, 8, 4, 5
@@ -513,13 +515,21 @@ def dedup_minhash_lsh_sql() -> str:
     sig AS (SELECT doc_id, {mins} FROM base),
     banded AS ({banded}),
     cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id)
-    SELECT id_a, id_b, round(({matches}) / 32.0, 6) AS est_jaccard
-    FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b
+        {cand})
+    SELECT {ids}, round(({matches}) / 32.0, 6) AS est_jaccard
+    FROM cand {sig_join}
     WHERE ({matches}) / 32.0 >= 0.5
     """
+
+
+def dedup_minhash_lsh_sql() -> str:
+    """Exact DuckDB twin of the portable-mode minhash entry."""
+    return _duck_minhash_sql(
+        "id_a, id_b",
+        """SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id""",
+        "JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b")
 
 
 def _simhash_base(spark: SparkSession, sf_dir: str):
@@ -633,24 +643,14 @@ _RETIRED_INDEX_TREES: list = []
 _RETIRED_CAP = 16
 
 
-def _retire_tree(path: str) -> None:
-    from .operators.index_meta import invalidate_index_meta
-
-    _RETIRED_INDEX_TREES.append(path)
-    invalidate_index_meta(path)  # keep the sidecar cache honest
-
-
 def _sweep_retired(keep: int) -> int:
     """Delete retired trees, oldest first, until ``keep`` remain."""
     import shutil
-
-    from .operators.index_meta import invalidate_index_meta
 
     n = 0
     while len(_RETIRED_INDEX_TREES) > keep:
         path = _RETIRED_INDEX_TREES.pop(0)
         shutil.rmtree(path, ignore_errors=True)
-        invalidate_index_meta(path)
         n += 1
         if keep:
             # a DataFrame handed out >= _RETIRED_CAP rebuilds ago now
@@ -699,7 +699,7 @@ def _probe_index_path(spark: SparkSession, sf_dir: str, kind: str,
         return path
 
     return memo("index:" + kind, spark, sf_dir, (), make,
-                release=_retire_tree)
+                release=_RETIRED_INDEX_TREES.append)
 
 
 def neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,50 +725,18 @@ def neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def neardup_probe_sql() -> str:
-    """DuckDB twin of the portable-mode minhash PROBE: identical
-    signature pipeline to dedup_minhash_lsh_sql, with the banded join
-    taking the batch (doc_id%7=0) on one side and the indexed corpus
-    (doc_id%7<>0) on the other."""
-    from .functions import portable_hash as PH
-
-    nh, bands, rpb, k = 32, 8, 4, 5
-    coeffs = PH.affine_coeffs(nh)
-    mins = ",\n        ".join(
-        f"list_min(list_transform(hs, h -> {PH.duck_affine('h', a, b)})) AS m{i}"
-        for i, (a, b) in enumerate(coeffs))
-    banded = "\n        UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"{PH.duck_poly([f'm{b * rpb + r}' for r in range(rpb)])} AS bhash FROM sig"
-        for b in range(bands))
-    matches = " + ".join(
-        f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(nh))
-    return f"""
-    WITH w AS (
-        SELECT doc_id,
-               string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ') AS words
-        FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> ''),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(words) >= {k}
-            THEN list_transform(range(1, len(words) - {k} + 2),
-                                i -> array_to_string(words[i:i+{k - 1}], ' '))
-            ELSE [array_to_string(words, ' ')] END AS shingles
-        FROM w),
-    base AS (
-        SELECT doc_id, list_transform(shingles, s -> {PH.duck_ph28('s')}) AS hs
-        FROM sh),
-    sig AS (SELECT doc_id, {mins} FROM base),
-    banded AS ({banded}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS index_id
+    """DuckDB twin of the portable-mode minhash PROBE: the signature
+    pipeline of dedup_minhash_lsh_sql, with the banded join taking the
+    batch (doc_id%7=0) on one side and the indexed corpus (doc_id%7<>0)
+    on the other."""
+    return _duck_minhash_sql(
+        "new_id, index_id",
+        """SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS index_id
         FROM banded a JOIN banded b
           ON a.band = b.band AND a.bhash = b.bhash
-         AND a.doc_id % 7 = 0 AND b.doc_id % 7 <> 0)
-    SELECT new_id, index_id, round(({matches}) / 32.0, 6) AS est_jaccard
-    FROM cand JOIN sig sa ON sa.doc_id = new_id
-              JOIN sig sb ON sb.doc_id = index_id
-    WHERE ({matches}) / 32.0 >= 0.5
-    """
+         AND a.doc_id % 7 = 0 AND b.doc_id % 7 <> 0""",
+        """JOIN sig sa ON sa.doc_id = new_id
+              JOIN sig sb ON sb.doc_id = index_id""")
 
 
 def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

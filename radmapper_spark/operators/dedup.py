@@ -7,6 +7,11 @@ All operators are pure DataFrame plans:
   candidate join is an equi-join on (band_id, band_hash) — only documents
   sharing a band bucket ever meet, so the shuffle is O(docs x bands), not
   O(docs^2).
+- minhash_bands: the one (band, bhash, id, minhash) band-row builder.
+  The batch self-join, the persisted index (build, append, probe) and
+  the stream (streaming/neardup.py) all feed it minhash_base
+  signatures, so every minhash path drops blank docs, and all of them
+  verify with one estimate (_est_jaccard).
 - simhash_dedup: 64-bit simhash via token-hash bit voting; near-dups share
   the simhash prefix buckets.
 - ngram_jaccard_pairs: exact n-gram Jaccard on candidate pairs (verification
@@ -278,6 +283,45 @@ def minhash_base(docs: DataFrame, text_col: str = "text",
         num_hashes=num_hashes, shingle_k=shingle_k, hash_mode=hash_mode)
 
 
+def minhash_bands(sigs: DataFrame, num_hashes: int = 32, bands: int = 8,
+                  hash_mode: str = "xxhash64") -> DataFrame:
+    """(band, bhash, id, minhash), one row per signature per band: the
+    ONE band-row builder of the minhash family (batch self-join, index
+    build and append, index probe, stream). ``sigs`` is a minhash_base
+    frame (id, minhash), so blank docs never reach a bucket. Band b
+    hashes signature positions [b*r, (b+1)*r), r = num_hashes // bands,
+    with xxhash64 or (hash_mode "portable") the polynomial combine
+    DuckDB reproduces. The persisted index rows have exactly this
+    shape. Stateless Catalyst only, so it runs on a stream too."""
+    from ..functions import portable_hash as PH
+
+    rows_per_band = num_hashes // bands
+
+    def band_hash(b):
+        vals = [F.col("minhash")[b * rows_per_band + r]
+                for r in range(rows_per_band)]
+        if hash_mode == "portable":
+            return PH.poly_col(vals)
+        return F.xxhash64(*vals)
+
+    return sigs.select(
+        "id", "minhash",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), band_hash(b).alias("bhash"))
+            for b in range(bands)])).alias("bb"),
+    ).select(F.col("bb.band").alias("band"),
+             F.col("bb.bhash").alias("bhash"), "id", "minhash")
+
+
+def _est_jaccard(mh_a: str, mh_b: str, num_hashes: int):
+    """Estimated Jaccard of two minhash signature columns: the fraction
+    of positions that match."""
+    return F.aggregate(
+        F.zip_with(F.col(mh_a), F.col(mh_b),
+                   lambda a, b: (a == b).cast("int")),
+        F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
+
+
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       num_hashes: int = 32, bands: int = 8, shingle_k: int = 5,
                       jaccard_threshold: float = 0.5,
@@ -295,9 +339,6 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     md5/affine/polynomial construction DuckDB reproduces bit-for-bit
     (see functions.portable_hash) — plan shape is IDENTICAL; only the
     leaf hash expressions change."""
-    from ..functions import portable_hash as PH
-
-    rows_per_band = num_hashes // bands
     # persist the (small: id + num_hashes longs per doc) signature frame so
     # the self-join's two sides don't recompute the shingling; callers
     # over an IMMUTABLE corpus pass a persisted `base` instead and the
@@ -310,21 +351,8 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     sigs = (minhash_base(docs, text_col, id_col, num_hashes, shingle_k,
                          hash_mode=hash_mode).persist()
             if owns_base else base)
-
-    def band_hash(b):
-        vals = [F.col("minhash")[b * rows_per_band + r]
-                for r in range(rows_per_band)]
-        if hash_mode == "portable":
-            return PH.poly_col(vals)
-        return F.xxhash64(*vals)
-
-    banded = sigs.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), band_hash(b).alias("bhash"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bhash")
+    banded = minhash_bands(sigs, num_hashes, bands, hash_mode) \
+        .select("id", "band", "bhash")
     left = banded.alias("l")
     # SHUFFLE_HASH: same rationale as the embedding band join below —
     # (band, bhash) buckets are near-uniform, SMJ's sorts buy nothing
@@ -341,12 +369,9 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     sa = sigs.select(F.col("id").alias("id_a"), F.col("minhash").alias("mh_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("minhash").alias("mh_b"))
     cand = cand.join(sa, on="id_a").join(sb, on="id_b")
-    est = F.aggregate(
-        F.zip_with(F.col("mh_a"), F.col("mh_b"), lambda a, b: (a == b).cast("int")),
-        F.lit(0), lambda acc, x: acc + x,
-    ) / F.lit(num_hashes)
     out = (
-        cand.withColumn("est_jaccard", est)
+        cand.withColumn("est_jaccard",
+                        _est_jaccard("mh_a", "mh_b", num_hashes))
         .filter(F.col("est_jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -1200,40 +1225,13 @@ def build_minhash_index(docs: DataFrame, path: str,
     """
     from .index_meta import write_index_meta
 
-    banded = _banded_index_rows(docs, text_col, id_col, num_hashes,
-                                bands, shingle_k, hash_mode)
-    banded.write.mode("overwrite").partitionBy("band").parquet(path)
+    sigs = minhash_base(docs, text_col, id_col, num_hashes, shingle_k,
+                        hash_mode=hash_mode)
+    minhash_bands(sigs, num_hashes, bands, hash_mode) \
+        .write.mode("overwrite").partitionBy("band").parquet(path)
     write_index_meta(docs.sparkSession, path, "minhash",
                      {"num_hashes": num_hashes, "bands": bands,
                       "shingle_k": shingle_k, "hash_mode": hash_mode})
-
-
-def _banded_index_rows(docs: DataFrame, text_col: str, id_col: str,
-                       num_hashes: int, bands: int, shingle_k: int,
-                       hash_mode: str) -> DataFrame:
-    """(band, bhash, id, minhash) — the persisted index row shape,
-    shared by build_minhash_index and append_to_minhash_index."""
-    from ..functions import portable_hash as PH
-
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signature(drop_blank_docs(docs, text_col), text_col,
-                             num_hashes, shingle_k, hash_mode=hash_mode) \
-        .select(F.col(id_col).alias("id"), "minhash")
-
-    def band_hash(b):
-        vals = [F.col("minhash")[b * rows_per_band + r]
-                for r in range(rows_per_band)]
-        if hash_mode == "portable":
-            return PH.poly_col(vals)
-        return F.xxhash64(*vals)
-
-    return sigs.select(
-        "id", "minhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), band_hash(b).alias("bhash"))
-            for b in range(bands)])).alias("bb"),
-    ).select(F.col("bb.band").alias("band"),
-             F.col("bb.bhash").alias("bhash"), "id", "minhash")
 
 
 def append_to_minhash_index(new_docs: DataFrame, path: str,
@@ -1257,9 +1255,10 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
                      {"num_hashes": num_hashes, "bands": bands,
                       "shingle_k": shingle_k, "hash_mode": hash_mode},
                      "append_to_minhash_index")
-    banded = _banded_index_rows(new_docs, text_col, id_col, num_hashes,
-                                bands, shingle_k, hash_mode)
-    banded.write.mode("append").partitionBy("band").parquet(path)
+    sigs = minhash_base(new_docs, text_col, id_col, num_hashes, shingle_k,
+                        hash_mode=hash_mode)
+    minhash_bands(sigs, num_hashes, bands, hash_mode) \
+        .write.mode("append").partitionBy("band").parquet(path)
 
 
 def neardup_vs_index(new_docs: DataFrame, path: str,
@@ -1278,7 +1277,6 @@ def neardup_vs_index(new_docs: DataFrame, path: str,
     Raises IndexParamMismatch when (num_hashes, bands, shingle_k,
     hash_mode) disagree with the index's persisted ``_meta`` sidecar.
     """
-    from ..functions import portable_hash as PH
     from .index_meta import check_index_meta
 
     spark = new_docs.sparkSession
@@ -1286,36 +1284,18 @@ def neardup_vs_index(new_docs: DataFrame, path: str,
                      {"num_hashes": num_hashes, "bands": bands,
                       "shingle_k": shingle_k, "hash_mode": hash_mode},
                      "neardup_vs_index")
-    rows_per_band = num_hashes // bands
     idx = spark.read.parquet(path)
-    sigs = minhash_signature(drop_blank_docs(new_docs, text_col), text_col,
-                             num_hashes, shingle_k, hash_mode=hash_mode) \
-        .select(F.col(id_col).alias("new_id"),
-                F.col("minhash").alias("mh_new"))
-
-    def band_hash(b):
-        vals = [F.col("mh_new")[b * rows_per_band + r]
-                for r in range(rows_per_band)]
-        if hash_mode == "portable":
-            return PH.poly_col(vals)
-        return F.xxhash64(*vals)
-
-    probes = sigs.select(
-        "new_id", "mh_new",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), band_hash(b).alias("bhash"))
-            for b in range(bands)])).alias("bb"),
-    ).select("new_id", "mh_new", F.col("bb.band").alias("band"),
-             F.col("bb.bhash").alias("bhash"))
+    sigs = minhash_base(new_docs, text_col, id_col, num_hashes, shingle_k,
+                        hash_mode=hash_mode)
+    probes = minhash_bands(sigs, num_hashes, bands, hash_mode).select(
+        F.col("id").alias("new_id"), F.col("minhash").alias("mh_new"),
+        "band", "bhash")
     cand = (probes.join(idx, on=["band", "bhash"])
             .select("new_id", F.col("id").alias("index_id"),
                     "mh_new", "minhash")
             .dropDuplicates(["new_id", "index_id"]))
-    est = F.aggregate(
-        F.zip_with(F.col("mh_new"), F.col("minhash"),
-                   lambda a, b: (a == b).cast("int")),
-        F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
-    return (cand.withColumn("est_jaccard", est)
+    return (cand.withColumn("est_jaccard",
+                            _est_jaccard("mh_new", "minhash", num_hashes))
             .filter(F.col("est_jaccard") >= jaccard_threshold)
             .select("new_id", "index_id", "est_jaccard"))
 

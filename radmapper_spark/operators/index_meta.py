@@ -10,19 +10,9 @@ writes a one-row ``_meta`` text dataset of its parameters next to the
 data, and every probe asserts its own parameters against it — a
 mismatch RAISES instead of returning garbage.
 
-The sidecar is written/read through Spark itself (``createDataFrame``
-.. ``write.text`` / ``read.text``), so it works on any Hadoop-visible
-filesystem, not just the local disk. Reads are memoized per path and
-VALIDATED against a metadata-only fingerprint of the sidecar directory
-(mtime + each child file's name/length/mtime — cheap namenode calls,
-no job): an index rebuilt or compacted by ANOTHER process rewrites the
-sidecar with fresh UUID part-file names, so a long-lived session's
-next probe re-reads the new parameters instead of validating against a
-stale cached dict — without the fingerprint check, the mismatch guard
-itself would pass on cached-but-wrong metadata, returning exactly the
-wrong-family garbage the sidecar exists to prevent; with mtime ALONE,
-two rewrites within one coarse-granularity tick would still sneak by.
-A deleted index evicts its cache entry on the next read.
+The sidecar is written through Spark itself (``createDataFrame`` ..
+``write.text``) and read back through the Hadoop FS API, so it works on
+any Hadoop-visible filesystem, not just the local disk.
 """
 
 from __future__ import annotations
@@ -36,53 +26,6 @@ class IndexParamMismatch(ValueError):
     not run."""
 
 
-# path -> (sidecar fingerprint | None, parsed meta dict). Entries are
-# trusted only while the sidecar's current fingerprint matches.
-_META_CACHE: dict = {}
-
-
-# sentinel: the stat call itself failed (transient filesystem error) —
-# distinct from "the path does not exist", which is None. A failed stat
-# must NOT disable the mismatch guard: the cached meta (or a re-read)
-# still applies.
-_STAT_ERROR = object()
-
-
-def _meta_fingerprint(spark, key: str):
-    """Identity fingerprint of the ``_meta`` sidecar directory via the
-    Hadoop FS API (metadata-only, no Spark job): the directory mtime
-    PLUS every child file's (name, length, mtime). Directory mtime
-    alone is not enough on filesystems with coarse mtime granularity —
-    two rewrites inside one tick would be indistinguishable and a stale
-    cached meta would pass validation (the r9 advisory finding). The
-    child names close that hole structurally: Spark names part files
-    with a fresh per-write UUID, so any rewrite changes the fingerprint
-    regardless of timestamp resolution. Returns None when the path
-    provably does not exist; _STAT_ERROR when the filesystem call
-    itself failed (the sidecar may well exist)."""
-    try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(key)
-        fs = p.getFileSystem(conf)
-        if not fs.exists(p):
-            return None
-        top = fs.getFileStatus(p)
-        children = tuple(sorted(
-            (str(st.getPath().getName()), int(st.getLen()),
-             int(st.getModificationTime()))
-            for st in fs.listStatus(p)))
-        return (int(top.getModificationTime()), children)
-    except Exception:
-        return _STAT_ERROR
-
-
-def invalidate_index_meta(path: str) -> None:
-    """Drop any cached sidecar for ``path`` (call after deleting or
-    rebuilding an index outside write_index_meta)."""
-    _META_CACHE.pop(f"{path}/_meta", None)
-
-
 def write_index_meta(spark, path: str, kind: str, params: dict) -> None:
     """Persist ``{kind, **params}`` as ``<path>/_meta`` (one text row)."""
     meta = {"kind": kind, **params}
@@ -90,49 +33,35 @@ def write_index_meta(spark, path: str, kind: str, params: dict) -> None:
     (spark.createDataFrame([(json.dumps(meta, sort_keys=True),)],
                            "meta string")
      .coalesce(1).write.mode("overwrite").text(key))
-    _META_CACHE[key] = (_meta_fingerprint(spark, key), meta)
 
 
 def read_index_meta(spark, path: str):
-    """The persisted meta dict, or None for a pre-metadata index."""
-    key = f"{path}/_meta"
-    fp = _meta_fingerprint(spark, key)
-    if key in _META_CACHE:
-        cached_fp, cached = _META_CACHE[key]
-        if fp is not None and fp is not _STAT_ERROR \
-                and fp == cached_fp:
-            return cached
-        if fp is _STAT_ERROR:
-            # transient stat failure: the sidecar's state is UNKNOWN, so
-            # keep enforcing the last-known meta rather than silently
-            # dropping the mismatch guard (the guard regressing to
-            # "pass vacuously" on a namenode hiccup is exactly the
-            # wrong-family-garbage failure the sidecar exists to stop)
-            return cached
-        # sidecar rewritten by another process (fingerprint moved) or
-        # deleted (None): drop the stale entry and re-resolve below
-        _META_CACHE.pop(key, None)
-    if fp is None:
-        # no sidecar: an index built before metadata existed, or a
-        # deleted index. Tolerated (the docstring contract still
-        # applies); mismatch checks below only fire on a present sidecar.
+    """The persisted meta dict, or None for an index without a sidecar
+    (built before metadata existed, or deleted). Read straight from the
+    part file through the Hadoop FS API on every call: no Spark job and
+    no cache, so a sidecar another process rewrote is seen at once. Any
+    other filesystem error propagates, and so does a sidecar that does
+    not parse (or is empty): corruption must never pass the guard."""
+    jvm = spark._jvm
+    meta_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
+    fs = meta_dir.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(meta_dir):
         return None
-    try:
-        rows = spark.read.text(key).collect()
-    except Exception as exc:
-        # only a provably-absent path downgrades to "no sidecar"; any
-        # other read failure propagates (fail loudly, never skip the
-        # guard on a transient error)
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "does not exist" in msg:
-            return None
-        raise
-    # a sidecar that EXISTS but does not parse is corruption, not
-    # legacy — fail loudly rather than skipping the guard
-    meta = json.loads(rows[0]["value"]) if rows else None
-    if meta is not None and fp is not _STAT_ERROR:
-        _META_CACHE[key] = (fp, meta)
-    return meta
+    # the part files, in name order; like spark.read.text, skip the
+    # _SUCCESS marker and hidden (.crc) files
+    parts = sorted((st.getPath().getName(), st.getPath())
+                   for st in fs.listStatus(meta_dir))
+    text = ""
+    for name, part in parts:
+        if name.startswith(("_", ".")):
+            continue
+        stream = fs.open(part)
+        try:
+            text += bytes(jvm.org.apache.hadoop.io.IOUtils
+                          .readFullyToByteArray(stream)).decode("utf-8")
+        finally:
+            stream.close()
+    return json.loads(text.splitlines()[0] if text else "")
 
 
 def check_index_meta(spark, path: str, kind: str, params: dict,

@@ -72,10 +72,10 @@ TS_NANO_COLS = {
 def sf_fingerprint(sf_dir: str):
     """(name, mtime_ns, size) of every parquet file under sf_dir — the
     staleness witness of every ``memo`` entry. mtime_ns (not seconds)
-    so same-tick rewrites are distinguishable (the persisted-index
-    sidecar lesson, index_meta.py). One os.stat per file: separate stat
-    calls for mtime and size could interleave with a rewrite and yield
-    a chimeric (old-mtime, new-size) witness (r11 advice)."""
+    so same-tick rewrites are distinguishable. One os.stat per file:
+    separate stat calls for mtime and size could interleave with a
+    rewrite and yield a chimeric (old-mtime, new-size) witness (r11
+    advice)."""
     try:
         out = []
         for n in sorted(os.listdir(sf_dir)):

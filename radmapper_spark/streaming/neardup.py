@@ -6,8 +6,10 @@ document is matched against previously-seen documents, without re-running
 a batch LSH job over the whole corpus. This operator is the streaming
 form of minhash-LSH dedup:
 
-  doc stream -> minhash signatures (stateless Catalyst, same expressions
-  as the batch operator) -> explode to (band, band-hash) buckets ->
+  doc stream -> (band, bhash, id, minhash) rows from the batch
+  operator's own builders (dedup.minhash_base, which drops NULL and
+  whitespace-only docs, then the shared band-row builder
+  dedup.minhash_bands; stateless Catalyst only) ->
   applyInPandasWithState keyed by bucket: per-bucket state is a BOUNDED
   ring of the `max_bucket` most recent (id, signature) members; each new
   arrival is compared against them (estimated Jaccard = matching minhash
@@ -31,39 +33,6 @@ micro-batches than their originals (state must carry across batches).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def banded_minhash(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", num_hashes: int = 32,
-                   bands: int = 8, shingle_k: int = 5,
-                   hash_mode: str = "xxhash64") -> DataFrame:
-    """(id, minhash, band, bhash) — one row per doc per band. Stateless
-    Catalyst expressions only, so the SAME plan runs on a stream and on a
-    batch table (signatures via dedup.minhash_signature)."""
-    from ..functions import portable_hash as PH
-    from ..operators.dedup import minhash_signature
-
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signature(docs, text_col, num_hashes, shingle_k,
-                             hash_mode=hash_mode).select(
-        F.col(id_col).alias("id"), "minhash")
-
-    def band_hash(b):
-        vals = [F.col("minhash")[b * rows_per_band + r]
-                for r in range(rows_per_band)]
-        if hash_mode == "portable":
-            return PH.poly_col(vals)
-        return F.xxhash64(*vals)
-
-    return sigs.select(
-        "id", "minhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), band_hash(b).alias("bhash"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("id", "minhash", F.col("bb.band").alias("band"),
-             F.col("bb.bhash").alias("bhash"))
 
 
 def neardup_stream(docs_stream: DataFrame, text_col: str = "text",
@@ -81,8 +50,11 @@ def neardup_stream(docs_stream: DataFrame, text_col: str = "text",
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    banded = banded_minhash(docs_stream, text_col, id_col, num_hashes,
-                            bands, shingle_k, hash_mode)
+    from ..operators.dedup import minhash_bands, minhash_base
+
+    sigs = minhash_base(docs_stream, text_col, id_col, num_hashes,
+                        shingle_k, hash_mode=hash_mode)
+    banded = minhash_bands(sigs, num_hashes, bands, hash_mode)
 
     nh, thr, cap, tmo = num_hashes, jaccard_threshold, max_bucket, idle_timeout_ms
 

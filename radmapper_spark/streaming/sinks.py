@@ -59,11 +59,36 @@ def start_cdc_apply(changes: DataFrame, base_path: str, out_path: str,
         # parquet has no atomic swap; a table format would MERGE instead)
         merged.write.mode("overwrite").parquet(out_path)
 
-    return (changes.writeStream
-            .foreachBatch(apply_batch)
+    return _start_batches(changes, apply_batch, checkpoint)
+
+
+def _start_batches(stream: DataFrame, fn, checkpoint: str):
+    """Drain ``stream`` through ``fn(batch_df, batch_id)`` with the
+    availableNow trigger against ``checkpoint``."""
+    return (stream.writeStream
+            .foreachBatch(fn)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())
+
+
+def _release(df: DataFrame) -> None:
+    """Call the ``rm_release_cache`` an operator attached to ``df``."""
+    rel = getattr(df, "rm_release_cache", None)
+    if rel is not None:
+        rel()
+
+
+def _probe_loop(stream: DataFrame, out_path: str, checkpoint: str, probe):
+    """The probe sink of both index kinds: per micro-batch, append
+    ``probe(batch_df)``'s hits to out_path, then release the probe's
+    cache."""
+    def probe_batch(batch_df, batch_id):
+        hits = probe(batch_df)
+        hits.write.mode("append").parquet(out_path)
+        _release(hits)
+
+    return _start_batches(stream, probe_batch, checkpoint)
 
 
 def start_neardup_probe(docs_stream: DataFrame, index_path: str,
@@ -87,18 +112,12 @@ def start_neardup_probe(docs_stream: DataFrame, index_path: str,
     whatever cadence the corpus grows."""
     from ..operators.dedup import neardup_vs_index
 
-    def probe_batch(batch_df, batch_id):
-        hits = neardup_vs_index(
-            batch_df, index_path, text_col=text_col, id_col=id_col,
+    return _probe_loop(
+        docs_stream, out_path, checkpoint,
+        lambda b: neardup_vs_index(
+            b, index_path, text_col=text_col, id_col=id_col,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold, hash_mode=hash_mode)
-        hits.write.mode("append").parquet(out_path)
-
-    return (docs_stream.writeStream
-            .foreachBatch(probe_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+            jaccard_threshold=jaccard_threshold, hash_mode=hash_mode))
 
 
 # Driver union-find bound for the per-micro-batch intra pair graph —
@@ -212,6 +231,31 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
     return audit_extra, rej_df
 
 
+def _admission_loop(stream: DataFrame, out_path: str, checkpoint: str,
+                    id_col: str, probe, intra_pairs, append, est_col: str):
+    """The admission loop of both index kinds: per micro-batch, probe
+    the index (``probe``), resolve the batch's own near-dup pairs
+    (``intra_pairs``, estimate column ``est_col``) transitively via
+    _resolve_admission, append the audit trail to out_path, admit the
+    survivors (``append``), then release every cache the operators
+    attached."""
+    def admit_batch(batch_df, batch_id):
+        batch_df = batch_df.persist()
+        hits = probe(batch_df).persist()
+        intra = intra_pairs(batch_df)
+        audit_extra, rejected = _resolve_admission(
+            batch_df, id_col, hits, intra, est_col)
+        hits.unionByName(audit_extra).write.mode("append").parquet(out_path)
+        append(batch_df.join(
+            rejected, batch_df[id_col] == F.col("rid"), "left_anti"))
+        _release(intra)
+        _release(hits)
+        hits.unpersist()
+        batch_df.unpersist()
+
+    return _start_batches(stream, admit_batch, checkpoint)
+
+
 def start_neardup_admission(docs_stream: DataFrame, index_path: str,
                             out_path: str, checkpoint: str,
                             text_col: str = "text", id_col: str = "doc_id",
@@ -250,36 +294,18 @@ def start_neardup_admission(docs_stream: DataFrame, index_path: str,
     from ..operators.dedup import (append_to_minhash_index,
                                    minhash_lsh_pairs, neardup_vs_index)
 
-    def admit_batch(batch_df, batch_id):
-        batch_df = batch_df.persist()
-        hits = neardup_vs_index(
-            batch_df, index_path, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-            hash_mode=hash_mode).persist()
-        intra = minhash_lsh_pairs(
-            batch_df, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold, hash_mode=hash_mode)
-        audit_extra, rejected = _resolve_admission(
-            batch_df, id_col, hits, intra, "est_jaccard")
-        hits.unionByName(audit_extra).write.mode("append").parquet(out_path)
-        survivors = batch_df.join(
-            rejected, batch_df[id_col] == F.col("rid"), "left_anti")
-        append_to_minhash_index(
-            survivors, index_path, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            hash_mode=hash_mode)
-        rel = getattr(intra, "rm_release_cache", None)
-        rel and rel()
-        hits.unpersist()
-        batch_df.unpersist()
-
-    return (docs_stream.writeStream
-            .foreachBatch(admit_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    params = dict(text_col=text_col, id_col=id_col,
+                  num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
+                  hash_mode=hash_mode)
+    return _admission_loop(
+        docs_stream, out_path, checkpoint, id_col,
+        lambda b: neardup_vs_index(b, index_path,
+                                   jaccard_threshold=jaccard_threshold,
+                                   **params),
+        lambda b: minhash_lsh_pairs(b, jaccard_threshold=jaccard_threshold,
+                                    **params),
+        lambda b: append_to_minhash_index(b, index_path, **params),
+        "est_jaccard")
 
 
 def start_embedding_probe(vec_stream: DataFrame, index_path: str,
@@ -298,22 +324,13 @@ def start_embedding_probe(vec_stream: DataFrame, index_path: str,
     replay contract as the minhash probe."""
     from ..operators.dedup import neardup_embedding_vs_index
 
-    def probe_batch(batch_df, batch_id):
-        hits = neardup_embedding_vs_index(
-            batch_df, index_path, vec_col=vec_col, id_col=id_col,
+    return _probe_loop(
+        vec_stream, out_path, checkpoint,
+        lambda b: neardup_embedding_vs_index(
+            b, index_path, vec_col=vec_col, id_col=id_col,
             threshold=threshold, bands=bands,
             planes_per_band=planes_per_band,
-            sketch_planes=sketch_planes, seed=seed)
-        hits.write.mode("append").parquet(out_path)
-        rel = getattr(hits, "rm_release_cache", None)
-        if rel is not None:
-            rel()
-
-    return (vec_stream.writeStream
-            .foreachBatch(probe_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+            sketch_planes=sketch_planes, seed=seed))
 
 
 def start_embedding_admission(vec_stream: DataFrame, index_path: str,
@@ -340,36 +357,13 @@ def start_embedding_admission(vec_stream: DataFrame, index_path: str,
                                    embedding_cosine_pairs,
                                    neardup_embedding_vs_index)
 
-    def admit_batch(batch_df, batch_id):
-        batch_df = batch_df.persist()
-        hits = neardup_embedding_vs_index(
-            batch_df, index_path, vec_col=vec_col, id_col=id_col,
-            threshold=threshold, bands=bands,
-            planes_per_band=planes_per_band,
-            sketch_planes=sketch_planes, seed=seed)
-        hits = hits.persist()
-        intra = embedding_cosine_pairs(
-            batch_df, vec_col=vec_col, id_col=id_col,
-            threshold=threshold, bands=bands,
-            planes_per_band=planes_per_band,
-            sketch_planes=sketch_planes, seed=seed)
-        audit_extra, rejected = _resolve_admission(
-            batch_df, id_col, hits, intra, "cosine")
-        hits.unionByName(audit_extra).write.mode("append").parquet(out_path)
-        survivors = batch_df.join(
-            rejected, batch_df[id_col] == F.col("rid"), "left_anti")
-        append_to_signlsh_index(
-            survivors, index_path, vec_col=vec_col, id_col=id_col,
-            bands=bands, planes_per_band=planes_per_band,
-            sketch_planes=sketch_planes, seed=seed)
-        for df in (intra, hits):
-            rel = getattr(df, "rm_release_cache", None)
-            rel and rel()
-        hits.unpersist()
-        batch_df.unpersist()
-
-    return (vec_stream.writeStream
-            .foreachBatch(admit_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    params = dict(vec_col=vec_col, id_col=id_col, bands=bands,
+                  planes_per_band=planes_per_band,
+                  sketch_planes=sketch_planes, seed=seed)
+    return _admission_loop(
+        vec_stream, out_path, checkpoint, id_col,
+        lambda b: neardup_embedding_vs_index(b, index_path,
+                                             threshold=threshold, **params),
+        lambda b: embedding_cosine_pairs(b, threshold=threshold, **params),
+        lambda b: append_to_signlsh_index(b, index_path, **params),
+        "cosine")

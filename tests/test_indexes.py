@@ -494,43 +494,66 @@ def test_compact_corrupt_sidecar_missing_kind_raises(spark, tmp_path):
         dedup.compact_minhash_index(spark, path)
 
 
-def test_index_meta_stat_error_keeps_guard(spark, tmp_path, monkeypatch):
-    """A transient filesystem stat failure must NOT disable the
-    mismatch guard: the cached meta stays enforced, and with a cold
-    cache the sidecar is still read (stat-error != absent)."""
+def test_index_meta_stat_error_keeps_guard(spark, tmp_path):
+    """A failing filesystem read must NOT disable the mismatch guard:
+    check_index_meta raises instead of passing as if no sidecar were
+    there (a failed read is not an absent sidecar). So does a sidecar
+    that does not parse."""
+    import types
+    from py4j.protocol import Py4JJavaError
     from radmapper_spark.operators import index_meta as im
     p = str(tmp_path / "idx")
     im.write_index_meta(spark, p, "test_kind", {"bands": 8})
+    # a session whose every Hadoop FS call fails (an outage): the local
+    # filesystem's implementation class cannot be loaded
+    conf = spark._jvm.org.apache.hadoop.conf.Configuration(
+        spark._jsc.hadoopConfiguration())
+    conf.set("fs.file.impl", "no.such.FileSystem")
+    conf.set("fs.file.impl.disable.cache", "true")
+    failing = types.SimpleNamespace(
+        _jvm=spark._jvm,
+        _jsc=types.SimpleNamespace(hadoopConfiguration=lambda: conf))
+    for bands in (8, 9):
+        with pytest.raises(Py4JJavaError):
+            im.check_index_meta(failing, p, "test_kind", {"bands": bands},
+                                "probe")
     assert im.read_index_meta(spark, p)["bands"] == 8
-    monkeypatch.setattr(im, "_meta_fingerprint",
-                        lambda s, k: im._STAT_ERROR)
-    meta = im.read_index_meta(spark, p)  # warm cache: last-known meta
-    assert meta is not None and meta["bands"] == 8
-    with pytest.raises(im.IndexParamMismatch, match="bands"):
-        im.check_index_meta(spark, p, "test_kind", {"bands": 9}, "probe")
-    im._META_CACHE.clear()  # cold cache: falls through to the read
-    meta = im.read_index_meta(spark, p)
-    assert meta is not None and meta["bands"] == 8
+    d = os.path.join(p, "_meta")
+    for f in os.listdir(d):
+        if "part-" in f:  # the part file and its checksum
+            os.remove(os.path.join(d, f))
+    with open(os.path.join(d, "part-00000-external.txt"), "w") as fh:
+        fh.write("not json\n")
+    with pytest.raises(ValueError):
+        im.check_index_meta(spark, p, "test_kind", {"bands": 8}, "probe")
 
 
-# ======================== from test_round10.py (r14 consolidation) ========
-def test_sidecar_fingerprint_differs_across_rewrites(spark, tmp_path):
-    """The cache-validity fingerprint must change on EVERY rewrite even
-    when the directory mtime does not move (coarse-granularity
-    filesystems — the r9 advisory finding). The structural guarantee:
-    Spark part-file names carry a fresh per-write UUID, and the
-    fingerprint includes child names, so equal mtimes cannot alias two
-    sidecar generations."""
+def test_index_meta_read_sees_rewrite_without_a_job(spark, tmp_path):
+    """The sidecar is read straight from its part file: after another
+    process rewrites it, the next read returns the new parameters and
+    runs no Spark job."""
     from radmapper_spark.operators import index_meta as im
     p = str(tmp_path / "idx")
     im.write_index_meta(spark, p, "k", {"bands": 8})
-    fp1 = im._meta_fingerprint(spark, f"{p}/_meta")
+    assert im.read_index_meta(spark, p)["bands"] == 8
+    _rewrite_sidecar(p, {"kind": "k", "bands": 16})
+    sc = spark.sparkContext
+    sc.setJobGroup("g_meta", "g_meta")
+    try:
+        meta = im.read_index_meta(spark, p)
+    finally:
+        sc.setJobGroup(None, None)
+    assert meta == {"kind": "k", "bands": 16}
+    assert len(sc.statusTracker().getJobIdsForGroup("g_meta")) == 0, (
+        "reading the sidecar ran a Spark job")
+
+
+# ======================== from test_round10.py (r14 consolidation) ========
+def test_sidecar_rewrite_visible_to_next_read(spark, tmp_path):
+    """Rewriting the sidecar through write_index_meta is seen by the
+    next read."""
+    from radmapper_spark.operators import index_meta as im
+    p = str(tmp_path / "idx")
+    im.write_index_meta(spark, p, "k", {"bands": 8})
     im.write_index_meta(spark, p, "k", {"bands": 16})
-    fp2 = im._meta_fingerprint(spark, f"{p}/_meta")
-    names1 = {n for n, _l, _m in fp1[1]}
-    names2 = {n for n, _l, _m in fp2[1]}
-    # even if mtimes collided, the part-file name sets differ
-    assert names1 != names2
-    assert fp1 != fp2
-    # and the cache actually re-reads: external rewrite visible
     assert im.read_index_meta(spark, p)["bands"] == 16

@@ -62,6 +62,24 @@ def test_neardup_ignores_blank_docs(docs_with_blanks, pairs_fn):
     assert got == {(1, 5)}
 
 
+def test_stream_neardup_ignores_blank_docs(spark, docs_with_blanks,
+                                           tmp_path):
+    """The stream's pair set must equal its batch oracle's on blank docs
+    too: NULL, '' and whitespace-only docs never reach a bucket."""
+    from radmapper_spark.streaming.neardup import neardup_stream
+    src = str(tmp_path / "blank_in")
+    docs_with_blanks.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(docs_with_blanks.schema).parquet(src)
+    q = (neardup_stream(stream, jaccard_threshold=0.5)
+         .writeStream.format("memory").queryName("rm_stream_blank")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = {(r["id_a"], r["id_b"]) for r in
+           spark.sql("SELECT DISTINCT id_a, id_b FROM rm_stream_blank")
+           .collect()}
+    assert got == {(1, 5)}
+
+
 def test_exact_dedup_groups_blanks_separately(docs_with_blanks):
     """Exact dedup keeps NULL its own group and groups ''/'   ' by their
     common normal form — deterministic, documented behavior."""

@@ -211,7 +211,8 @@ EAGER_ALLOWED = {
     # persisted-index probes re-open the on-disk index each call (that IS
     # the incremental contract — the index outlives any one batch): the
     # 1-2 jobs are directory-listing/footer reads of the index layout,
-    # bounded by the band-partition count, never a data scan
+    # bounded by the band-partition count, never a data scan (reading
+    # the _meta sidecar is a plain file read, not a job)
     "neardup_probe",
     "embedding_probe",
     "neardup_admit",

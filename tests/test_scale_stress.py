@@ -558,7 +558,7 @@ def test_rate_source_neardup_admission_soak(spark):
     count (never the document count), and the emitted pair set equal to
     the batch operator over the processed prefix."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.streaming.neardup import banded_minhash, neardup_stream
+    from radmapper_spark.streaming.neardup import neardup_stream
 
     groups = 400
 
@@ -590,8 +590,8 @@ def test_rate_source_neardup_admission_soak(spark):
     k = int(sum(p.get("numInputRows", 0) for p in prog))
     assert k > 1000
     docs = docize(spark.range(k).select(F.col("id").alias("value")))
-    n_buckets = banded_minhash(docs).select("band", "bhash") \
-        .distinct().count()
+    n_buckets = dedup.minhash_bands(dedup.minhash_base(docs)) \
+        .select("band", "bhash").distinct().count()
     state_rows = [op["numRowsTotal"] for p in prog
                   for op in p.get("stateOperators", [])]
     assert state_rows and max(state_rows) <= n_buckets, \
