@@ -1,17 +1,25 @@
 """Datalog `query{}` over in-memory Python data (driver side).
 
-The reference loads data into Datahike and runs `d/q`
-(reference: query.cljc:270-298 db-for!, builtin.cljc:1737-1838). Here the
-same semantics are a triple shred + conjunctive pattern matching with
-unification. The Spark twin (operators/query_spark.py) runs the identical
-pattern plan as DataFrame equi-joins; this module is authoritative for
-semantics at document scale.
+The reference loads data into Datahike and runs `d/q` through its
+EAVT/AVET indexes (reference: query.cljc:270-298 db-for!,
+builtin.cljc:1737-1838). Here `LocalDB.add_data` shreds documents into
+(Eid, attr, value) triples grouped by attribute. Each triple pattern then
+probes a hash index on its bound entity, else on its bound value (a
+literal, a param or an earlier qvar), else scans all of its attribute (an
+attribute qvar scans every triple), and `_unify` checks each candidate.
+Index keys and `_eq` share `_key`, so a probe never drops a match, and
+index lists keep triple order, so binding sets come out in full-scan
+order. An (attribute, position) index is built on its first probe: a
+query touches few, and building all of them in `add_data` cost more than
+probing saved. `add_data` drops them; a reused `$db(...)` keeps them.
+The Spark twin (operators/query_spark.py) runs the same patterns as
+DataFrame equi-joins; this module is authoritative for semantics.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Optional
 
 from ..lang import ast as A
 from ..lang.values import JSeq, NOMATCH, is_nomatch, jflatten
@@ -30,6 +38,8 @@ class LocalDB:
     next_eid: int = 1
     schema: dict = field(default_factory=dict)
     by_attr: dict = field(default_factory=dict)
+    # (attr, 0 = entity | 2 = value) -> {_key: [triple]}, built by probe()
+    index: dict = field(default_factory=dict, repr=False, compare=False)
 
     @classmethod
     def from_data(cls, data) -> "LocalDB":
@@ -43,8 +53,18 @@ class LocalDB:
             if isinstance(item, dict):
                 self._shred(item)
         self.by_attr = {}
+        self.index = {}
         for t in self.triples:
             self.by_attr.setdefault(t[1], []).append(t)
+
+    def probe(self, attr: str, pos: int, key) -> list:
+        """Triples of `attr` whose entity (pos 0) or value (pos 2) keys to `key`."""
+        idx = self.index.get((attr, pos))
+        if idx is None:
+            idx = self.index[(attr, pos)] = {}
+            for t in self.by_attr.get(attr, ()):
+                idx.setdefault(_key(t[pos]), []).append(t)
+        return idx.get(key, [])
 
     def _shred(self, obj: dict) -> Eid:
         eid = Eid(self.next_eid)
@@ -122,13 +142,37 @@ def learn_schema(data) -> dict:
     return out
 
 
-def _attr_name(lit: str) -> str:
-    return lit[1:] if lit.startswith(":") else lit
+_FREE = object()  # _bound: an unbound qvar or `?_`, which matches any value
+NEVER = object()  # a term that matches no value: a $var that is no query param
+
+
+def _bound(term, b: dict, subs):
+    """The value a pattern term is fixed to before matching: a literal, a
+    query param or a qvar bound in `b`; else _FREE or NEVER."""
+    if isinstance(term, A.QVar):
+        return b.get(term.name[1:], _FREE)
+    if isinstance(term, A.Lit):
+        return term.value
+    if isinstance(term, A.Var) and term.name in subs:
+        return subs[term.name]
+    return NEVER
+
+
+def attr_of(term, subs):
+    """The attribute a term names, for both executors: a literal or query
+    param gives its name (leading ':' dropped), a qvar None (any attribute),
+    anything else (such as a closure $var) NEVER, which names none."""
+    want = _bound(term, {}, subs)
+    if want is _FREE:
+        return None
+    if want is NEVER:
+        return NEVER
+    name = str(want)
+    return name[1:] if name.startswith(":") else name
 
 
 def _resolve_dbs(ip, q, args, env) -> dict:
     """Map db-var name (or None) -> LocalDB for this invocation."""
-    from .spark_bridge import SparkDB, maybe_spark_db
     db_vars = []
     for p in q.patterns:
         if isinstance(p, A.TriplePattern) and p.db is not None and p.db not in db_vars:
@@ -222,10 +266,9 @@ def run_query(ip, q, args: list, env):
     (list of dicts keyed by qvar name without '?')."""
     import dataclasses
 
-    from ..lang import ast as _A
     from .query_spark import run_query_spark
     from .spark_bridge import SparkDB
-    if any(isinstance(p, _A.RuleCall) for p in q.patterns):
+    if any(isinstance(p, A.RuleCall) for p in q.patterns):
         q = dataclasses.replace(
             q, patterns=expand_rule_calls(q.patterns, q.env, env))
     dbs = _resolve_dbs(ip, q, args, env)
@@ -245,20 +288,25 @@ def run_query(ip, q, args: list, env):
         e_t, a_t, v_t = pat.e, pat.a, pat.v
         if isinstance(e_t, A.QVar):
             entity_vars.add(e_t.name[1:])
-        cand = _candidates(db, a_t, subs)
+        attr = attr_of(a_t, subs)
+        scan = db.triples if attr is None else db.by_attr.get(attr, [])
         new_bsets = []
         for b in bsets:
+            cand = scan
+            if attr is not None:  # probe on the bound entity, else value
+                for pos, term in ((0, e_t), (2, v_t)):
+                    k = _key(_bound(term, b, subs))
+                    if k is not None:
+                        cand = db.probe(attr, pos, k)
+                        break
             for (te, ta, tv) in cand:
                 b2 = _unify(b, e_t, te, subs)
-                if b2 is None:
-                    continue
-                b2 = _unify(b2, a_t, ta, subs, attr_pos=True)
-                if b2 is None:
-                    continue
-                b2 = _unify(b2, v_t, tv, subs)
-                if b2 is None:
-                    continue
-                new_bsets.append(b2)
+                if b2 is not None and attr is None:
+                    b2 = _unify(b2, a_t, ta, subs)
+                if b2 is not None:
+                    b2 = _unify(b2, v_t, tv, subs)
+                if b2 is not None:
+                    new_bsets.append(b2)
         bsets = new_bsets
         if not bsets:
             break
@@ -294,45 +342,29 @@ def _hkey(v):
     return v
 
 
-def _candidates(db: LocalDB, a_t, subs):
-    if isinstance(a_t, A.Lit):
-        return db.by_attr.get(_attr_name(a_t.value), [])
-    if isinstance(a_t, A.Var) and a_t.name in subs:
-        return db.by_attr.get(_attr_name(str(subs[a_t.name])), [])
-    return db.triples
-
-
-def _unify(b: Optional[dict], term, val, subs, attr_pos=False):
-    if b is None:
-        return None
-    if isinstance(term, A.QVar):
+def _unify(b: dict, term, val, subs) -> Optional[dict]:
+    """`b` extended so that `term` matches `val`, or None."""
+    want = _bound(term, b, subs)
+    if want is _FREE:
         name = term.name[1:]
-        if name == "_":
-            return b
-        if name in b:
-            return b if _eq(b[name], val) else None
-        b2 = dict(b)
-        b2[name] = val
-        return b2
-    if isinstance(term, A.Lit):
-        want = _attr_name(term.value) if (attr_pos and isinstance(term.value, str)) else term.value
-        return b if _eq(want, val) else None
-    if isinstance(term, A.Var):
-        if term.name in subs:
-            want = subs[term.name]
-            if attr_pos and isinstance(want, str):
-                want = _attr_name(want)
-            return b if _eq(want, val) else None
-        return None
-    return None
+        return b if name == "_" else {**b, name: val}
+    return b if want is not NEVER and _eq(want, val) else None
+
+
+def _key(v):
+    """Index key of a value, and what `_eq` compares: a number as float
+    (1 == 1.0, and an Eid is a number), a bool apart from numbers, a string
+    as itself; None for any other value, which is never probed."""
+    if isinstance(v, bool):
+        return (v,)
+    if isinstance(v, (int, float)):
+        return float(v)
+    return v if isinstance(v, str) else None
 
 
 def _eq(a, b) -> bool:
-    if isinstance(a, bool) != isinstance(b, bool):
-        return False
-    if isinstance(a, (int, float)) and isinstance(b, (int, float)):
-        return float(a) == float(b)
-    return a == b
+    ka, kb = _key(a), _key(b)
+    return ka == kb and (ka is not None or a == b)
 
 
 def _pred_ok(ip, pred: A.PredPattern, b: dict, subs, env) -> bool:

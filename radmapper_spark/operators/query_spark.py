@@ -25,23 +25,17 @@ then connected patterns (shared vars) before disconnected ones
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lang import ast as A
+from .query_local import NEVER, attr_of
 from .spark_bridge import SparkBindingSets, SparkDB
 
 
 def _is_flat(df: DataFrame) -> bool:
     return all(t[1][:6] not in ("struct", "array<") and not t[1].startswith("array")
                for t in df.dtypes)
-
-
-def _attr_name(lit) -> str:
-    s = str(lit)
-    return s[1:] if s.startswith(":") else s
 
 
 def run_query_spark(ip, q, dbs: dict, env) -> SparkBindingSets:
@@ -111,19 +105,13 @@ def run_query_spark(ip, q, dbs: dict, env) -> SparkBindingSets:
 def _entity_frame(ip, db: SparkDB, pats: list, subs) -> tuple[DataFrame, set, int]:
     """Build the frame for one entity variable: columns named by qvars."""
     df = db.df
+    if any(attr_of(p.a, subs) is NEVER for p in pats):
+        return df.limit(0).select(), set(), 0  # names no attribute: no match
     if _is_flat(df):
         return _entity_frame_direct(df, pats, subs)
     from .eav import shred_to_eav
     eav = shred_to_eav(df)
     return _entity_frame_eav(eav, pats, subs)
-
-
-def _resolve_attr(pat: A.TriplePattern, subs):
-    if isinstance(pat.a, A.Lit):
-        return _attr_name(pat.a.value)
-    if isinstance(pat.a, A.Var) and pat.a.name in subs:
-        return _attr_name(subs[pat.a.name])
-    return None  # wildcard
 
 
 def _resolve_val(pat: A.TriplePattern, subs):
@@ -142,7 +130,7 @@ def _entity_frame_direct(df: DataFrame, pats: list, subs) -> tuple[DataFrame, se
     nfilters = 0
     alias_attr: dict[str, str] = {}  # qvar name -> first bound column
     for pat in pats:
-        attr = _resolve_attr(pat, subs)
+        attr = attr_of(pat.a, subs)
         if attr is None:
             # attribute wildcard over flat table -> EAV melt of needed cols
             from .eav import melt_flat
@@ -204,7 +192,7 @@ def _entity_frame_eav(eav: DataFrame, pats: list, subs) -> tuple[DataFrame, set,
     eq_pairs: list[tuple[str, str]] = []
     for i, pat in enumerate(pats):
         f = eav
-        attr = _resolve_attr(pat, subs)
+        attr = attr_of(pat.a, subs)
         if attr is not None:
             f = f.filter(F.col("attr") == F.lit(attr))
             nfilters += 1

@@ -16,6 +16,21 @@ def test_two_table_join_counts(spark, tables):
     assert bsets.df.count() == tables["orders"].select("o_custkey").distinct().count()
 
 
+def test_closure_attribute_var_matches_nothing(spark):
+    """An attribute $var that is no query param (here a closure binding)
+    names no attribute in either executor, on flat and nested data."""
+    import json
+    docs = [{"name": "Bob", "age": 30}, {"name": "Alice", "age": 25}]
+    src = "( $a := 'name'; query{[?e $a ?v]}($d) )"
+    flat = spark.createDataFrame([(d["name"], d["age"]) for d in docs], ["name", "age"])
+    nested = spark.read.json(spark.sparkContext.parallelize(
+        [json.dumps({**d, "kid": {"x": 1}}) for d in docs]))
+    ip = Interp(spark)
+    assert ip.run_raw(src, bindings={"$d": docs}) == []
+    for df in (flat, nested):
+        assert ip.run_raw(src, bindings={"$d": df}).df.collect() == []
+
+
 def test_literal_filter_pushdown(spark, tables):
     ip = Interp(spark)
     bsets = ip.run_raw(
