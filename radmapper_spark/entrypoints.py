@@ -2405,8 +2405,10 @@ def release_edge_cache() -> int:
 
 def _trade_edges(spark: SparkSession, sf_dir: str):
     """Derived customer-supplier trade-edge table (~30 MB persisted at
-    sf0.1), memoized — shared by graph_pagerank and graph_communities."""
-    def build(t):
+    sf0.1), memoized with its iteration-join path (graph.broadcast_path)
+    as (frames, broadcast) — shared by graph_pagerank and graph_communities."""
+    def build():
+        t = load_tables(spark, sf_dir)
         okeys = F.broadcast(t["orders"].select("o_orderkey", "o_custkey"))
         ipairs = (t["lineitem"].select("l_orderkey", "l_suppkey")
                   .join(okeys, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -2431,15 +2433,13 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
         # deg instead of node_set's union+distinct exchange over 2x the
         # edges (one fewer persist fill per cache build).
         deg = _graph.out_degrees(e).persist()
-        return {
-            "edges": e,
-            "deg": deg,
-            "nodes": deg.select(F.col("src").alias("node")),
-        }
+        nodes = deg.select(F.col("src").alias("node"))
+        # the node count fills the persisted deg the loop reads anyway
+        return ({"edges": e, "deg": deg, "nodes": nodes},
+                _graph.broadcast_path(nodes))
 
-    return _frames("edges", spark, sf_dir, build)
-
-
+    return memo("edges", spark, sf_dir, (), build,
+                release=lambda v: _unpersist(v[0]))
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2450,9 +2450,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — float PageRank could never hash-match across engines.
     Output: top 20 nodes by rank."""
     from .operators import graph
-    g = _trade_edges(spark, sf_dir)
+    g, bc = _trade_edges(spark, sf_dir)
     pr = graph.pagerank(g["edges"], iters=3, deg=g["deg"],
-                        nodes=g["nodes"])
+                        nodes=g["nodes"], broadcast_ranks=bc)
     return _carry_release(
         pr, pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(20))
 
@@ -4698,8 +4698,9 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     summarized as the top 30 communities by size (>= 2 members)."""
     from .operators import graph
     from .operators.ranking import bounded_global_rank
-    g = _trade_edges(spark, sf_dir)
-    lp = graph.label_propagation(g["edges"], iters=2, nodes=g["nodes"])
+    g, bc = _trade_edges(spark, sf_dir)
+    lp = graph.label_propagation(g["edges"], iters=2, nodes=g["nodes"],
+                                 broadcast_labels=bc)
     sizes = (lp.groupBy("label")
              .agg(F.count(F.lit(1)).alias("n_members"))
              .filter(F.col("n_members") >= 2))

@@ -30,6 +30,8 @@ import os as _os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .plan_stats import broadcast_gate, est_plan_bytes
+
 # -------------------------------------------------------------- exact
 
 def normalize_text(col):
@@ -1094,7 +1096,9 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
     vector join because the verify is priced per row-byte: every
     candidate ships two full vectors through Arrow, so the narrow (id, id)
     distinct cuts the operator's dominant slice by the band-duplication
-    factor.
+    factor. Both vector attaches are broadcast only while the vector
+    table's plan estimate is known and under ``rm.broadcastMaxBytes``
+    (plan_stats.broadcast_gate); the choice is ``result.rm_broadcast_path``.
     """
     # `base`: callers that hold the (persisted) sign_lsh_base frame for
     # an IMMUTABLE corpus pass it in so repeated invocations skip the
@@ -1141,28 +1145,23 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
     )
     va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
     vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    # size-gate the vector attach (r18, same recipe as the index
-    # probe's rm.index.probeBroadcastMaxBytes): left to the planner,
-    # a vector table just over autoBroadcastJoinThreshold turns the
-    # SECOND attach into a sort-merge join that shuffles pairs WITH
-    # v_a already attached (~1 KB/row — measured 20 GB at sf1's
-    # 20.6M candidates) by id_b. Broadcasting both (tiny) vector
-    # sides keeps the pair stream in place; a vector table over the
-    # cap falls back to the planner's choice instead of OOMing.
-    try:
-        bc_max = int(emb.sparkSession.conf.get(
-            "rm.dedup.vectorBroadcastMaxBytes", str(256 << 20)))
-    except Exception:
-        bc_max = 256 << 20
-    from .plan_stats import est_plan_bytes
-
-    est = est_plan_bytes(va)
-    if est is not None and est <= bc_max:
+    # size-gate the vector attach (r18, plan_stats.broadcast_gate):
+    # left to the planner, a vector table just over
+    # autoBroadcastJoinThreshold turns the SECOND attach into a
+    # sort-merge join that shuffles pairs WITH v_a already attached
+    # (~1 KB/row — measured 20 GB at sf1's 20.6M candidates) by id_b.
+    # Broadcasting both (tiny) vector sides keeps the pair stream in
+    # place; a vector table over the cap, or of unknown size, is left
+    # to the planner's choice instead of OOMing.
+    use_bc = broadcast_gate(emb.sparkSession, est_plan_bytes(va),
+                            if_unknown=False)
+    if use_bc:
         va, vb = F.broadcast(va), F.broadcast(vb)
     out = cosine_verify(screened.join(va, on="id_a").join(vb, on="id_b")
                         .select("id_a", "id_b", "v_a", "v_b"),
                         "v_a", "v_b", threshold)
     out.rm_release_cache = base.unpersist if owns_base else (lambda: None)
+    out.rm_broadcast_path = use_bc
     return out
 
 
@@ -1393,9 +1392,10 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     sketch_planes, seed) disagree with the index's ``_meta`` sidecar.
     Id columns keep their input types (any equality-joinable type
     works); the probe side is broadcast into the verify join only while
-    its plan-estimated size stays under
-    ``rm.index.probeBroadcastMaxBytes`` (default 256 MiB) — a huge
-    probe batch falls back to a shuffled join instead of OOMing.
+    its plan-estimated size stays under ``rm.broadcastMaxBytes``
+    (default 256 MiB; plan_stats.broadcast_gate) — a huge probe batch
+    falls back to a shuffled join instead of OOMing. The chosen path is
+    exposed as ``result.rm_broadcast_path``.
     """
     from .index_meta import check_index_meta
 
@@ -1426,34 +1426,21 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     # broadcast the probe batch only while the optimizer's size estimate
     # says it fits; an unboundedly large batch (the operator is exposed
     # to arbitrary tables via $probeEmbeddingIndex) falls back to a
-    # shuffled hash join instead of OOMing the broadcast
-    from .plan_stats import est_plan_bytes
-
-    try:
-        bc_max = int(spark.conf.get("rm.index.probeBroadcastMaxBytes",
-                                    str(256 << 20)))
-    except Exception:
-        bc_max = 256 << 20  # unparseable conf: keep the default, don't
-        #                     kill an admission loop mid-batch
+    # shuffled hash join instead of OOMing the broadcast.
     # Size a SINGLE relation, not probe_side: probe_side is an inner
     # join, and Catalyst's size-only estimate for a join is the PRODUCT
-    # of the child sizes — comparing that against bc_max inverts the
+    # of the child sizes — comparing that against the cap inverts the
     # gate (mid-size batches overflow the product and lose the
-    # broadcast; astronomically large products wrap into the no-stats
-    # sentinel and keep it). new_emb's (id, vector) projection carries
-    # the dominant width of the probe batch (the vector; the wd sketch
+    # broadcast). new_emb's (id, vector) projection carries the
+    # dominant width of the probe batch (the vector; the wd sketch
     # words the join adds are a few dozen bytes/row next to it), so its
-    # estimate is the honest per-batch size.
+    # estimate is the honest per-batch size. An UNKNOWN size (local,
+    # RDD-backed and streaming micro-batch frames carry no stats) keeps
+    # the broadcast: probe batches are small by contract, and the gate
+    # exists for the pathological huge batch, which only arises from
+    # stats-bearing scans.
     est = est_plan_bytes(new_emb.select(F.col(id_col), vec.alias("v_a")))
-    # estimates at/above Long.MaxValue are Catalyst's NO-STATS sentinel
-    # (local/RDD-backed/streaming micro-batch frames), not a real size —
-    # treat as unknown and keep the broadcast (probe batches are small
-    # by contract; the gate exists for the pathological huge-batch case,
-    # which only arises from stats-bearing scans). Same rule as
-    # graph._resolve_broadcast.
-    unknown = est is None or est >= (1 << 62)
-    use_bc = unknown or est <= bc_max  # single decision: the join path
-    #        below and rm_probe_broadcast must never drift apart
+    use_bc = broadcast_gate(spark, est, if_unknown=True)
     p_in = (F.broadcast(probe_side) if use_bc
             else probe_side.hint("shuffle_hash"))
     out = cosine_verify(
@@ -1463,9 +1450,7 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
         .select("new_id", "index_id", "v_a", "v_b"),
         "v_a", "v_b", threshold)
     out.rm_release_cache = probe_base.unpersist
-    # chosen physical path, exposed for tests / operators (same pattern
-    # as graph results' rm_broadcast_path)
-    out.rm_probe_broadcast = bool(use_bc)
+    out.rm_broadcast_path = use_bc
     return out
 
 

@@ -19,142 +19,43 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .plan_stats import broadcast_gate
+
 SCALE = 10 ** 12
 
 # Auto path selection: the per-iteration rank/label table is broadcast
-# while the NODE COUNT times a fixed per-row width stays under
-# rm.graph.broadcastMaxBytes; above it the loop keeps the table
-# partitioned so the iteration join shuffles instead of shipping an
-# executor-crushing broadcast. Both paths are bit-identical (integer
-# arithmetic; proven by the scale-stress equivalence tests), so the
-# choice is purely physical.
-BROADCAST_MAX_BYTES_CONF = "rm.graph.broadcastMaxBytes"
-BROADCAST_MAX_BYTES_DEFAULT = 256 << 20
-# conservative bytes per broadcast (node, rank/label) row. The JVM-side
+# while the NODE COUNT times a fixed per-row width passes
+# plan_stats.broadcast_gate (rm.broadcastMaxBytes); above it the loop
+# keeps the table partitioned so the iteration join shuffles instead of
+# shipping an executor-crushing broadcast. Both paths are bit-identical
+# (integer arithmetic; proven by the scale-stress equivalence tests), so
+# the choice is purely physical. Catalyst sizeInBytes is deliberately
+# NOT the input: size-only stats don't model the distinct/aggregate
+# reduction, so a node set distilled from a large edge table inherits
+# roughly the edge-scan size and the gate would never broadcast on
+# exactly the |nodes| << |edges| graphs broadcast is for. The count is
+# one aggregate per call; callers over an immutable graph decide once
+# and pass the decision in (the registry's trade graph does, inside its
+# fingerprint-checked memo build, where the count fills the persisted
+# degree table the loop reads anyway).
+# Conservative bytes per broadcast (node, rank/label) row. The JVM-side
 # footprint of a broadcast hash relation entry for a string-keyed row is
 # NOT the UTF-8 payload: a ~20-char java.lang.String is ~80 bytes
 # (object header + char data in UTF-16 + the backing array header), and
 # the map entry adds a boxed value + entry object + table slot — ~160
-# bytes all-in. Undercounting here admits broadcasts the
-# rm.graph.broadcastMaxBytes cap exists to prevent (the 256 MiB default
-# now gates at ~1.7M string-keyed nodes, not ~4M).
+# bytes all-in. Undercounting here admits broadcasts the cap exists to
+# prevent (the 256 MiB default gates at ~1.7M string-keyed nodes).
 BROADCAST_ROW_BYTES = 160
 
 
-# (session_key, analyzed-plan semanticHash) -> (monotonic stamp, node
-# count). Second-level memo behind the per-object rm_node_count:
-# callers that build a FRESH DataFrame over the same logical node table
-# each construction (so the object attr can't stick) still skip the
-# count job — semantically equal plans hash equal. TTL-bounded: a
-# semantically-equal plan over EXTERNALLY GROWING data (a catalog table
-# being appended to) would otherwise pin a stale count forever and the
-# auto path could broadcast a table that outgrew the cap, so entries
-# expire after _NODE_COUNT_TTL_S and the next resolve re-counts.
-# Bounded FIFO (counts are ints; the bound is hygiene, not memory).
-_NODE_COUNT_CACHE: dict = {}
-_NODE_COUNT_CACHE_MAX = 64
-_NODE_COUNT_TTL_S = 300.0
-
-
-def _resolve_broadcast(flag, nodes: DataFrame) -> bool:
-    """flag=None -> decide from a NODE-COUNT heuristic (count *
-    BROADCAST_ROW_BYTES vs rm.graph.broadcastMaxBytes); an explicit
-    True/False wins. The count comes from CBO rowCount when the plan
-    carries one (no job), else from counting the node table — which for
-    the internally-derived (persisted) node set just fills a cache the
-    iteration loop needs anyway, and for a caller-passed table costs
-    one aggregate pass, noise next to an iters-pass edge loop. Catalyst
-    sizeInBytes is deliberately NOT used: size-only stats don't model
-    the distinct/aggregate reduction, so a node set distilled from a
-    large edge table inherits roughly the edge-scan size and the auto
-    path would never broadcast on exactly the |nodes| << |edges| graphs
-    broadcast is for. Unknown count falls back to broadcast (node
-    tables are node-sized — tiny next to edges in every graph this
-    engine targets)."""
+def broadcast_path(nodes: DataFrame, flag=None) -> bool:
+    """The iteration join's path: an explicit True/False wins; None
+    counts ``nodes`` and gates count x BROADCAST_ROW_BYTES."""
     if flag is not None:
         return bool(flag)
-    try:
-        mx = int(nodes.sparkSession.conf.get(
-            BROADCAST_MAX_BYTES_CONF, str(BROADCAST_MAX_BYTES_DEFAULT)))
-    except Exception:
-        mx = BROADCAST_MAX_BYTES_DEFAULT
-    # memoized on the frame object: callers over an immutable graph pass
-    # the same (persisted) node table to every invocation, so the count
-    # job runs once per node set, not once per construction (the same
-    # first-construction-only contract as the IVF codebook fits). The
-    # attr carries the SAME (stamp, count) shape as _NODE_COUNT_CACHE
-    # and honors the same TTL — otherwise a caller reusing one
-    # DataFrame object over externally growing data would pin a stale
-    # count forever, the exact staleness the TTL exists to bound.
-    import time
-    n = None
-    attr = getattr(nodes, "rm_node_count", None)
-    if attr is not None:
-        if not isinstance(attr, tuple):
-            # caller-set plain int: stamp it ONCE, at first sight, by
-            # rewriting the attr — a per-call fresh stamp would reset
-            # the TTL clock on every resolve and the count would never
-            # expire for exactly the legacy int-attr callers the
-            # fallback exists for (r10 advice)
-            attr = (time.monotonic(), attr)
-            try:
-                nodes.rm_node_count = attr
-            except Exception:
-                pass
-        stamp, cnt = attr
-        if time.monotonic() - stamp < _NODE_COUNT_TTL_S:
-            n = cnt
-    if n is None:
-        try:  # CBO-computed row count, when ANALYZE/stats ran (job-free)
-            rc = (nodes._jdf.queryExecution().optimizedPlan()
-                  .stats().rowCount())
-            if rc.isDefined():
-                n = int(str(rc.get()))
-        except Exception:
-            n = None
-        # second-level memo keyed by (session, plan semanticHash):
-        # repeated constructions over EQUIVALENT node tables (fresh
-        # DataFrame objects, same logical plan) skip the count job —
-        # construction stays job-free after the first auto-path resolve
-        # (r9 advisory finding: the object-attr memo alone only helps
-        # callers that reuse the same DataFrame object)
-        ck = None
-        stamp = time.monotonic()
-        if n is None:
-            try:
-                from ..session import session_key
-                ck = (session_key(nodes.sparkSession),
-                      int(nodes._jdf.queryExecution().analyzed()
-                          .semanticHash()))
-                hitv = _NODE_COUNT_CACHE.get(ck)
-                if hitv is not None \
-                        and time.monotonic() - hitv[0] < _NODE_COUNT_TTL_S:
-                    # carry the ORIGINAL stamp: re-stamping a cache hit
-                    # would roll the TTL forward forever
-                    stamp, n = hitv
-            except Exception:
-                ck = None
-        if n is None:
-            try:
-                n = nodes.count()
-            except Exception:
-                return True
-            stamp = time.monotonic()
-            if ck is not None:
-                # pop with a default: concurrent constructions at
-                # capacity may race to evict the same oldest key
-                while len(_NODE_COUNT_CACHE) >= _NODE_COUNT_CACHE_MAX:
-                    try:
-                        _NODE_COUNT_CACHE.pop(
-                            next(iter(_NODE_COUNT_CACHE)), None)
-                    except (StopIteration, RuntimeError):
-                        break
-                _NODE_COUNT_CACHE[ck] = (stamp, n)
-        try:
-            nodes.rm_node_count = (stamp, n)
-        except Exception:
-            pass
-    return n * BROADCAST_ROW_BYTES <= mx
+    return broadcast_gate(nodes.sparkSession,
+                          nodes.count() * BROADCAST_ROW_BYTES,
+                          if_unknown=True)
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -175,6 +76,34 @@ def node_set(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
+def _loop_inputs(edges: DataFrame, nodes, flag):
+    """(e, nodes, broadcast, cached) for an iteration loop: the (src,
+    dst) edge table and the node set, the broadcast decision
+    (broadcast_path) and the frames persisted here. A caller-passed node
+    set is caller-owned: not re-persisted, not released here."""
+    e = edges.select("src", "dst")
+    cached = []
+    # skip the re-persist when the caller already caches the edge table
+    # (the registry's shared _trade_edges does): a second materialized
+    # copy of the same 1.17M rows buys nothing and costs a full pass +
+    # executor memory per invocation
+    if not edges.is_cached:
+        e = e.persist()
+        cached.append(e)
+    if nodes is None:
+        nodes = node_set(e).persist()
+        cached.append(nodes)
+    return e, nodes, broadcast_path(nodes, flag), cached
+
+
+def _releaser(frames: list):
+    """rm_release_cache for a loop result: unpersist what it persisted."""
+    def release():
+        for f in frames:
+            f.unpersist()
+    return release
+
+
 def pagerank(edges: DataFrame, iters: int = 3,
              damping_pct: int = 85,
              broadcast_ranks=None,
@@ -191,9 +120,9 @@ def pagerank(edges: DataFrame, iters: int = 3,
     Right for |nodes| << |edges| (the common web/trade-graph shape).
     False keeps ranks partitioned (pre-partition edges and ranks on src
     so the iteration join is co-located). The default None AUTO-selects
-    from the optimizer's node-table size estimate vs
-    rm.graph.broadcastMaxBytes (_resolve_broadcast); the chosen path is
-    exposed as ``result.rm_broadcast_path``."""
+    from the node count (broadcast_path: count x BROADCAST_ROW_BYTES vs
+    rm.broadcastMaxBytes — one count job over the node set per call);
+    the chosen path is exposed as ``result.rm_broadcast_path``."""
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in (1, 99)")
     if iters < 0:
@@ -206,7 +135,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
         nodes0 = nodes if nodes is not None else node_set(edges)
         out = nodes0.select("node", F.lit(SCALE).cast("long").alias("rank"))
         out.rm_release_cache = lambda: None
-        out.rm_broadcast_path = _resolve_broadcast(broadcast_ranks, nodes0)
+        out.rm_broadcast_path = broadcast_path(nodes0, broadcast_ranks)
         return out
     # LAZY persists break the O(iters^2) lineage blowup: without them,
     # iteration i's plan re-executes every earlier iteration AND the
@@ -215,28 +144,16 @@ def pagerank(edges: DataFrame, iters: int = 3,
     # triggered here (construction stays job-free); each cache fills on
     # the first action that uses it. rm_release_cache on the result
     # unpersists everything.
-    # skip the re-persist when the caller already caches the edge table
-    # (the registry's shared _trade_edges does): a second materialized
-    # copy of the same 1.17M rows buys nothing and costs a full pass +
-    # executor memory per invocation
-    e = edges.select("src", "dst")
-    cached = []
-    if not edges.is_cached:
-        e = e.persist()
-        cached.append(e)
-    # deg/nodes are pure functions of the edge table; callers over an
-    # IMMUTABLE edge set (the registry's cached trade graph) persist
-    # them once (out_degrees/node_set) and pass them in — re-deriving
-    # two full edge-table aggregates per invocation is pure waste, the
-    # same argument as the caller-owned edge cache above. Caller-passed
-    # frames are caller-owned: not re-persisted, not released here.
+    e, nodes, broadcast_ranks, cached = _loop_inputs(edges, nodes,
+                                                     broadcast_ranks)
+    # deg, like nodes, is a pure function of the edge table; callers
+    # over an IMMUTABLE edge set (the registry's cached trade graph)
+    # persist it once (out_degrees) and pass it in — re-deriving a full
+    # edge-table aggregate per invocation is pure waste. A passed deg is
+    # caller-owned: not re-persisted, not released here.
     if deg is None:
         deg = out_degrees(e).persist()
         cached.append(deg)
-    if nodes is None:
-        nodes = node_set(e).persist()
-        cached.append(nodes)
-    broadcast_ranks = _resolve_broadcast(broadcast_ranks, nodes)
     base = ((100 - damping_pct) * SCALE) // 100
     # Iteration state is rd = (src, rank div out-degree) — the ONLY thing
     # the edge pass needs — not the rank table itself. rank_next is an
@@ -274,12 +191,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
                      (F.lit(base)
                       + F.expr(f"({damping_pct} * coalesce(_s, 0)) "
                                f"div 100")).cast("long").alias("rank")))
-
-    def _release(frames=tuple(cached)):
-        for f in frames:
-            f.unpersist()
-
-    ranks.rm_release_cache = _release
+    ranks.rm_release_cache = _releaser(cached)
     ranks.rm_broadcast_path = broadcast_ranks
     return ranks
 
@@ -299,21 +211,15 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     map-only edge pass, a (dst, label) count aggregate with map-side
     partials, and a min-struct argmax — the label table is node-sized
     (broadcast_labels contract; False pre-partitions instead when the
-    node set itself is huge; the default None auto-selects exactly like
-    pagerank, exposed as ``result.rm_broadcast_path``). Lazy persists
+    node set itself is huge; the default None auto-selects from the node
+    count exactly like pagerank, exposed as ``result.rm_broadcast_path``).
+    Lazy persists
     bound the lineage. Returns (node, label).
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    e = edges.select("src", "dst")
-    cached = []
-    if not edges.is_cached:
-        e = e.persist()
-        cached.append(e)
-    if nodes is None:  # caller-owned when passed (see pagerank)
-        nodes = node_set(e).persist()
-        cached.append(nodes)
-    broadcast_labels = _resolve_broadcast(broadcast_labels, nodes)
+    e, nodes, broadcast_labels, cached = _loop_inputs(edges, nodes,
+                                                      broadcast_labels)
     labels = nodes.select("node", F.col("node").alias("label"))
     for i in range(iters):
         lab = labels.select(F.col("node").alias("src"), "label")
@@ -343,10 +249,6 @@ def label_propagation(edges: DataFrame, iters: int = 2,
             labels = labels.persist()
             cached.append(labels)
 
-    def _release(frames=tuple(cached)):
-        for f in frames:
-            f.unpersist()
-
-    labels.rm_release_cache = _release
+    labels.rm_release_cache = _releaser(cached)
     labels.rm_broadcast_path = broadcast_labels
     return labels

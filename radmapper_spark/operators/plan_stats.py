@@ -1,4 +1,4 @@
-"""Catalyst plan-statistics helpers.
+"""Catalyst plan statistics and the engine's one broadcast gate.
 
 ``est_plan_bytes`` surfaces the optimizer's own sizeInBytes estimate for
 a DataFrame WITHOUT running a job — the right input for "should this
@@ -13,12 +13,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+BROADCAST_MAX_BYTES_CONF = "rm.broadcastMaxBytes"
+_DEFAULT_CAP = 256 << 20
+
 
 def est_plan_bytes(df: DataFrame):
-    """Optimizer-estimated size of ``df`` in bytes, or None when the
-    estimate is unavailable (e.g. local relations with no stats)."""
+    """Optimizer-estimated size of ``df`` in bytes, or None when unknown:
+    no plan stats, or Catalyst's no-stats sentinel (>= 2^62; local,
+    RDD-backed and streaming micro-batch frames carry it)."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
     except Exception:
         return None
+    return est if est < 1 << 62 else None
+
+
+def broadcast_gate(spark, est_bytes, if_unknown: bool) -> bool:
+    """Broadcast a join side of ``est_bytes`` iff it is at most
+    ``rm.broadcastMaxBytes`` (256 MiB; an unparseable value means the
+    default); an unknown size (None) returns ``if_unknown``."""
+    if est_bytes is None:
+        return bool(if_unknown)
+    try:
+        cap = int(spark.conf.get(BROADCAST_MAX_BYTES_CONF, str(_DEFAULT_CAP)))
+    except Exception:
+        cap = _DEFAULT_CAP
+    return est_bytes <= cap

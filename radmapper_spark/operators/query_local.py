@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from ..lang import ast as A
+from ..lang.interp import _hashable
 from ..lang.values import JSeq, NOMATCH, is_nomatch, jflatten
 
 
@@ -335,11 +336,10 @@ def run_query(ip, q, args: list, env):
 
 
 def _hkey(v):
-    if isinstance(v, list):
-        return tuple(_hkey(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _hkey(x)) for k, x in v.items()))
-    return v
+    """Result dedup key, equal exactly when `_eq` is: `_key` for a scalar
+    (1 meets 1.0, not true), else the value (`_eq` compares it by ==)."""
+    k = _key(v)
+    return (0, k) if k is not None else (1, _hashable(v))
 
 
 def _unify(b: dict, term, val, subs) -> Optional[dict]:

@@ -222,13 +222,16 @@ def _rewrite_embeddings(sfd):
     ("quality_probe", "probe_fit"),
     ("embedding_probe", "index:signlsh"),
     ("ann_ivf_topk", "codebook:ivf:embedding"),
+    ("graph_pagerank", "edges"),
 ])
 def test_entry_memos_rebuild_after_rewrite(spark, tmp_path, name, kind):
     """A mid-session rewrite of embeddings.parquet and documents.parquet
     must rebuild every fit, codebook and index the entry memoized: the
     entry stays equal to its DuckDB oracle over the NEW data, and the
     entry's memo counts one rebuild (a fit keyed without the
-    fingerprint kept serving the old corpus's basis)."""
+    fingerprint kept serving the old corpus's basis). The trade graph's
+    ``edges`` memo also holds its node count (the broadcast decision),
+    so the count is retaken with the frames, never kept apart."""
     from radmapper_spark import entrypoints as E
     from radmapper_spark.session import memo_stats
     from tests.oracle import assert_matches_oracle

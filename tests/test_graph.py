@@ -85,7 +85,7 @@ def test_graph_auto_selects_broadcast_path(spark):
 
 
 def test_graph_auto_selects_partitioned_above_threshold(spark, tmp_path):
-    """Above rm.graph.broadcastMaxBytes the default path must go
+    """Above rm.broadcastMaxBytes the default path must go
     co-partitioned — and stay bit-identical to the broadcast path.
     Edges come from parquet so the optimizer has REAL size stats (local
     relations carry the no-stats sentinel, which auto-resolves to
@@ -95,7 +95,7 @@ def test_graph_auto_selects_partitioned_above_threshold(spark, tmp_path):
     e = spark.read.parquet(str(tmp_path / "edges"))
     base = {(r.node, r.rank) for r in graph.pagerank(
         e, iters=2, broadcast_ranks=True).collect()}
-    spark.conf.set("rm.graph.broadcastMaxBytes", "1")
+    spark.conf.set("rm.broadcastMaxBytes", "1")
     try:
         pr = graph.pagerank(e, iters=2)
         assert pr.rm_broadcast_path is False
@@ -105,7 +105,7 @@ def test_graph_auto_selects_partitioned_above_threshold(spark, tmp_path):
         assert lp.rm_broadcast_path is False
         lp.rm_release_cache()
     finally:
-        spark.conf.unset("rm.graph.broadcastMaxBytes")
+        spark.conf.unset("rm.broadcastMaxBytes")
 
 
 # ======================== from test_round9.py (r14 consolidation) ========
@@ -145,56 +145,10 @@ def test_graph_auto_broadcasts_small_nodes_on_large_edge_scan(spark, tmp_path):
     # a size-propagating gate would have gone partitioned
     from radmapper_spark.operators.plan_stats import est_plan_bytes
     assert est_plan_bytes(e) > 16384
-    spark.conf.set("rm.graph.broadcastMaxBytes", "16384")
+    spark.conf.set("rm.broadcastMaxBytes", "16384")
     try:
         pr = graph.pagerank(e, iters=1)
         assert pr.rm_broadcast_path is True
         pr.rm_release_cache()
     finally:
-        spark.conf.unset("rm.graph.broadcastMaxBytes")
-
-
-# ======================== from test_round10.py (r14 consolidation) ========
-def test_graph_broadcast_count_memoized_across_fresh_frames(spark):
-    """_resolve_broadcast must not pay a count job on REPEATED
-    constructions over semantically-equal (but fresh) node frames —
-    the semanticHash memo keeps construction job-free after the first
-    auto-path resolve."""
-    from radmapper_spark.operators import graph
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def fresh_nodes():
-        return spark.range(500).select(
-            F.col("id").cast("string").alias("node"))
-
-    graph._NODE_COUNT_CACHE.clear()
-    assert graph._resolve_broadcast(None, fresh_nodes()) is True  # pays
-    sc.setJobGroup("g_memo", "g_memo")
-    try:
-        assert graph._resolve_broadcast(None, fresh_nodes()) is True
-    finally:
-        sc.setJobGroup(None, None)
-    assert len(tracker.getJobIdsForGroup("g_memo")) == 0, (
-        "second construction over an equivalent node table ran a job")
-
-
-# ======================== from test_round11.py (r14 consolidation) ========
-def test_plain_int_node_count_attr_expires(spark, monkeypatch):
-    """r10 advice: a caller-set plain-int rm_node_count must be stamped
-    ONCE (TTL clock starts at first observation), not re-stamped per
-    call — else it never expires for legacy int-attr callers."""
-    nodes = spark.range(3).select(F.col("id").alias("node"))
-    nodes.rm_node_count = 3  # legacy caller-set plain int
-    assert graph._resolve_broadcast(None, nodes) is True
-    stamped = nodes.rm_node_count
-    assert isinstance(stamped, tuple) and stamped[1] == 3
-    # second resolve must NOT refresh the stamp
-    graph._resolve_broadcast(None, nodes)
-    assert nodes.rm_node_count[0] == stamped[0]
-    # age the stamp past the TTL: the resolve re-counts and re-stamps
-    nodes.rm_node_count = (stamped[0] - graph._NODE_COUNT_TTL_S - 1, 3)
-    graph._NODE_COUNT_CACHE.clear()
-    assert graph._resolve_broadcast(None, nodes) is True
-    assert nodes.rm_node_count[0] > stamped[0] - 1  # fresh stamp after recount
-    assert nodes.rm_node_count[1] == 3
+        spark.conf.unset("rm.broadcastMaxBytes")

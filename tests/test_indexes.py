@@ -161,7 +161,7 @@ def test_embedding_probe_string_ids(spark, tmp_path):
 
 
 def test_embedding_probe_broadcast_gated_by_size(spark, tmp_path):
-    """With rm.index.probeBroadcastMaxBytes=1 the probe side must NOT be
+    """With rm.broadcastMaxBytes=1 the probe side must NOT be
     broadcast (fall back to a shuffled join) — and results must be
     identical to the broadcast path. The probe comes from parquet so
     the optimizer has REAL size stats: stats-less frames (local
@@ -183,11 +183,11 @@ def test_embedding_probe_broadcast_gated_by_size(spark, tmp_path):
         return rows, plan
 
     bc_rows, bc_plan = run()
-    spark.conf.set("rm.index.probeBroadcastMaxBytes", "1")
+    spark.conf.set("rm.broadcastMaxBytes", "1")
     try:
         sh_rows, sh_plan = run()
     finally:
-        spark.conf.unset("rm.index.probeBroadcastMaxBytes")
+        spark.conf.unset("rm.broadcastMaxBytes")
     assert sh_rows == bc_rows
     # self-probe of the index always hits (cos=1.0), so the plan really ran
     assert bc_rows, "probe found no pairs — test is vacuous"
@@ -299,14 +299,14 @@ def test_embedding_probe_stats_less_batch_keeps_broadcast(spark, tmp_path):
     """Stats-less probe frames (local relations, foreachBatch micro-
     batches) carry Catalyst's no-stats sentinel (~Long.MaxValue) — the
     size gate must treat that as UNKNOWN and keep the broadcast, even
-    under a tiny rm.index.probeBroadcastMaxBytes (regression guard: a
+    under a tiny rm.broadcastMaxBytes (regression guard: a
     first cut read the sentinel as 'too big' and silently shuffled
     every in-memory probe batch)."""
     from radmapper_spark.operators import dedup
     emb = _tiny_emb(spark)  # local relation: no real stats
     path = str(tmp_path / "slsent")
     dedup.build_signlsh_index(emb, path, bands=16, planes_per_band=4)
-    spark.conf.set("rm.index.probeBroadcastMaxBytes", "1")
+    spark.conf.set("rm.broadcastMaxBytes", "1")
     try:
         out = dedup.neardup_embedding_vs_index(
             emb, path, bands=16, planes_per_band=4, threshold=0.9)
@@ -314,7 +314,7 @@ def test_embedding_probe_stats_less_batch_keeps_broadcast(spark, tmp_path):
         n = out.count()
         out.rm_release_cache()
     finally:
-        spark.conf.unset("rm.index.probeBroadcastMaxBytes")
+        spark.conf.unset("rm.broadcastMaxBytes")
     assert "BroadcastHashJoin" in plan, \
         "no-stats probe side must still broadcast"
     assert n > 0
@@ -402,7 +402,7 @@ def test_probe_broadcast_gate_sizes_single_side(spark, tmp_path):
     dedup.build_signlsh_index(emb, path, bands=16, planes_per_band=4)
     out = dedup.neardup_embedding_vs_index(
         emb, path, bands=16, planes_per_band=4, threshold=0.9)
-    assert out.rm_probe_broadcast is True
+    assert out.rm_broadcast_path is True
     assert out.count() >= 600  # self-probe: every vector hits itself
     out.rm_release_cache()
 

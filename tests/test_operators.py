@@ -93,7 +93,7 @@ def test_embedding_cosine_lsh_recall(spark, tables):
 
 
 def test_embedding_vector_broadcast_gated_by_size(spark, tmp_path):
-    """rm.dedup.vectorBroadcastMaxBytes on both sides of its threshold:
+    """rm.broadcastMaxBytes on both sides of its threshold:
     at the default the two vector attaches are broadcast, at "1" they
     are not, and both return the same pairs. The vectors come from
     parquet so the optimizer has real size stats, and the planner's own
@@ -114,17 +114,49 @@ def test_embedding_vector_broadcast_gated_by_size(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         bc_rows, bc_plan = run()
-        spark.conf.set("rm.dedup.vectorBroadcastMaxBytes", "1")
+        spark.conf.set("rm.broadcastMaxBytes", "1")
         try:
             sh_rows, sh_plan = run()
         finally:
-            spark.conf.unset("rm.dedup.vectorBroadcastMaxBytes")
+            spark.conf.unset("rm.broadcastMaxBytes")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert bc_plan.count("BroadcastHashJoin") == 2, bc_plan
     assert "Broadcast" not in sh_plan, sh_plan
     assert bc_rows, "no pairs above the threshold — test is vacuous"
     assert sh_rows == bc_rows
+
+
+def test_embedding_vector_unknown_size_not_broadcast(spark):
+    """The unknown side of the vector gate: a frame with no size stats
+    (createDataFrame's plan carries Catalyst's no-stats sentinel) is
+    left to the planner, not gate-broadcast, at the default cap. The
+    index probe keeps its broadcast in the same case
+    (test_indexes.py::test_embedding_probe_stats_less_batch_keeps_broadcast);
+    the streaming embedding admission calls both operators on such
+    micro-batches. The planner's own broadcast threshold is off so only
+    the gate could broadcast."""
+    import random
+
+    from radmapper_spark.operators.plan_stats import est_plan_bytes
+    rng = random.Random(5)
+    base = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(20)]
+    rows = [(i, [x + rng.uniform(-0.05, 0.05) for x in base[i % 20]])
+            for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assert est_plan_bytes(emb) is None, "fixture carries real stats"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = dedup.embedding_cosine_pairs(emb, threshold=0.9)
+        pairs = {(r.id_a, r.id_b) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        out.rm_release_cache()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert out.rm_broadcast_path is False
+    assert "Broadcast" not in plan.split("== Initial Plan ==")[0], plan
+    assert {(i, i + 20) for i in range(20)} <= pairs
 
 
 def test_embedding_near_dup_dirty_vectors_drop_or_raise(spark, tmp_path):

@@ -302,3 +302,24 @@ def test_band_self_joins_are_shuffled_hash(spark):
         plan = _plan(df)
         assert "ShuffledHashJoin" in plan, f"{name}: band join not SHJ"
         _release(df)
+
+
+def test_engine_conf_keys_are_the_known_set():
+    """Every engine conf key (a string literal ``rm.<name>`` anywhere in
+    the package) is one of the two the engine documents: the one
+    broadcast cap (plan_stats.broadcast_gate) and the streaming intra-
+    batch pair cap. A new knob must be added here on purpose."""
+    import ast
+    import pathlib
+    import re
+
+    import radmapper_spark
+
+    key = re.compile(r"rm\.[A-Za-z_][\w.]*")
+    found = set()
+    for path in pathlib.Path(radmapper_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and key.fullmatch(node.value)):
+                found.add(node.value)
+    assert found == {"rm.broadcastMaxBytes", "rm.stream.intraPairsMax"}
