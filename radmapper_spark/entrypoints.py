@@ -591,31 +591,16 @@ def dedup_simhash_sql() -> str:
     """
 
 
-def _embedding_siglsh_base(spark: SparkSession, sf_dir: str):
-    """Persisted sign_lsh_base frame for the embeddings table at the
-    entry's fixed params (b=192, r=8, sketch=512, seed=42): repeated
-    invocations (each bench pass) skip the whole Arrow signature
-    stage."""
-    return _frames("siglsh", spark, sf_dir, lambda t: dedup.sign_lsh_base(
-        t["embeddings"], bands=192, planes_per_band=8).persist())
-
-
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded sign-LSH candidates verified with exact cosine; threshold
-    chosen so the deterministic test embeddings actually exercise it
-    (max true cosine ~0.51 at sf0.01), and band/plane params chosen so LSH
-    recall on those pairs is 100% AT ALL THREE FIXTURE SFs — making the
-    entry oracle-exact (b=64 missed 10/144 near-threshold pairs at
-    sf0.1; b=192 finds all of them, verified at sf0.001/0.01/0.1).
-    r=8 planes/band: random-pair band collision 2^-8, so the candidate
-    join volume is ~b*n^2/256 — still far below the r=4 shape that
-    trended near-quadratic at 100 TB."""
+    """Exact embedding near-dup pairs (dedup.embedding_cosine_pairs, the
+    blocked-GEMM cosine_join self-join), so the entry is oracle-exact
+    with no recall parameter. The threshold is chosen so the
+    deterministic test embeddings exercise it (max true cosine ~0.51 at
+    sf0.01); the closest pair sits ~1e-4 from it at the fixture SFs."""
     t = load_tables(spark, sf_dir)
-    pairs = dedup.embedding_cosine_pairs(
-        t["embeddings"], threshold=0.45, bands=192, planes_per_band=8,
-        base=_embedding_siglsh_base(spark, sf_dir))
-    return _carry_release(pairs, pairs.select(
-        "id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine")))
+    pairs = dedup.embedding_cosine_pairs(t["embeddings"], threshold=0.45)
+    return pairs.select(
+        "id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine"))
 
 
 def dedup_embedding_cosine_sql() -> str:
@@ -996,6 +981,22 @@ def ann_bruteforce_topk_sql() -> str:
     """
 
 
+def _recall_gated(emb: DataFrame, q: DataFrame, approx: DataFrame,
+                  k: int) -> DataFrame:
+    """The exact top-k rows (brute_force_topk) of each query whose
+    approximate (qid, cid) result `approx` reaches recall >= 0.85
+    against them: the oracle computes the exact top-k for ALL queries,
+    so the hashes match iff every query clears the bar."""
+    exact = similarity.brute_force_topk(emb, q, k=k)
+    hits = (exact.select("qid", "cid")
+            .join(approx.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
+            .groupBy("qid")
+            .agg((F.sum("hit") / F.count(F.lit(1))).alias("recall")))
+    good = hits.filter(F.col("recall") >= 0.85).select("qid")
+    return exact.join(F.broadcast(good), "qid") \
+        .select("qid", "cid", "cosine", "rank")
+
+
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k, oracle-gated on recall: the entry emits the EXACT top-k
     rows for each query whose IVF result achieves recall >= 0.85 against
@@ -1019,30 +1020,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  lambda: similarity.train_centroids(emb, ncentroids=8))
     ivf = similarity.ivf_topk(emb, q, k=k, ncentroids=8, nprobe=7,
                               cents=cents).select("qid", "cid")
-    exact = similarity.brute_force_topk(emb, q, k=k)
-    hits = (exact.select("qid", "cid")
-            .join(ivf.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
-            .groupBy("qid")
-            .agg((F.sum("hit") / F.count(F.lit(1))).alias("recall")))
-    good = hits.filter(F.col("recall") >= 0.85).select("qid")
-    return exact.join(F.broadcast(good), "qid") \
-        .select("qid", "cid", "cosine", "rank")
+    return _recall_gated(emb, q, ivf, k)
 
 
 def ann_ivf_topk_sql() -> str:
-    return """
-    WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-               FROM embeddings ORDER BY vec_id LIMIT 5),
-         scored AS (
-            SELECT q.qid, e.vec_id AS cid,
-                   round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS cosine
-            FROM embeddings e CROSS JOIN q),
-         ranked AS (
-            SELECT qid, cid, cosine,
-                   row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, cid) AS rank
-            FROM scored)
-    SELECT qid, cid, cosine, rank FROM ranked WHERE rank <= 10
-    """
+    return ann_bruteforce_topk_sql()
 
 
 # =============================================================== text
@@ -2218,8 +2200,8 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine range search (radius query): all corpus vectors with
     cosine >= 0.25 of each of the 5 query vectors — the fixed-threshold
     sibling of top-k (retrieval dedup, near-neighbor expansion). Same
-    broadcast-queries plan as brute force, but no window: candidates are
-    filtered row-local, so the plan is shuffle-free.
+    cosine_join product as brute force, but no window: the kernel
+    filters on the threshold itself.
 
     Threshold 0.25 is fixture-calibrated: it yields 6-51 neighbors per
     query at every SF (0.4 returned 0 rows — a vacuous 0=0 hash match),
@@ -2575,18 +2557,11 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  lambda: similarity.train_pq_codebooks(emb, m=16, ksub=16))
     pq = similarity.pq_topk(emb, q, k=k, m=16, ksub=16, rerank=24,
                             books=books).select("qid", "cid")
-    exact = similarity.brute_force_topk(emb, q, k=k)
-    hits = (exact.select("qid", "cid")
-            .join(pq.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
-            .groupBy("qid")
-            .agg((F.sum("hit") / F.count(F.lit(1))).alias("recall")))
-    good = hits.filter(F.col("recall") >= 0.85).select("qid")
-    return exact.join(F.broadcast(good), "qid") \
-        .select("qid", "cid", "cosine", "rank")
+    return _recall_gated(emb, q, pq, k)
 
 
 def ann_pq_topk_sql() -> str:
-    return ann_ivf_topk_sql()
+    return ann_bruteforce_topk_sql()
 
 
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2616,18 +2591,11 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                      similarity.opq_rotate(emb, rot), "_rv", m=16, ksub=16))
     opq = similarity.opq_topk(emb, q, k=k, m=16, ksub=16, rerank=24,
                               rotation=rot, books=books).select("qid", "cid")
-    exact = similarity.brute_force_topk(emb, q, k=k)
-    hits = (exact.select("qid", "cid")
-            .join(opq.withColumn("hit", F.lit(1)), ["qid", "cid"], "left")
-            .groupBy("qid")
-            .agg((F.sum("hit") / F.count(F.lit(1))).alias("recall")))
-    good = hits.filter(F.col("recall") >= 0.85).select("qid")
-    return exact.join(F.broadcast(good), "qid") \
-        .select("qid", "cid", "cosine", "rank")
+    return _recall_gated(emb, q, opq, k)
 
 
 def ann_opq_topk_sql() -> str:
-    return ann_ivf_topk_sql()
+    return ann_bruteforce_topk_sql()
 
 
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3354,8 +3322,9 @@ def decontam_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 0.42 — the embedding-space complement of decontam_ngram
     (paraphrased benchmark leakage shares no 8-gram but still lands
     next to the benchmark in embedding space). The benchmark slice is
-    bounded by construction and BROADCASTS; pairs are threshold-filtered
-    before the per-row aggregate, so only matches reach the exchange."""
+    bounded by construction and sits on the right of one exact
+    cosine_join, which filters on the threshold before the per-row
+    aggregate, so only matches reach the exchange."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     return decontam.embedding_decontam(
         emb.filter(~F.expr(_EDC_BENCH)), emb.filter(F.expr(_EDC_BENCH)),

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import cosine_join
+
 
 def _words(text_col):
     return F.filter(F.split(F.lower(text_col), r"[^a-z0-9]+"),
@@ -112,32 +114,17 @@ def embedding_decontam(corpus: DataFrame, benchmark: DataFrame,
     the raw-value threshold, the dedup_embedding_cosine contract) and
     n_hits the number of benchmark rows over the threshold.
 
-    Scale shape: the benchmark set is bounded (a few thousand eval
-    rows) so it BROADCASTS; the corpus side is ONE scan — the pair
-    stream is filtered at the threshold BEFORE the per-doc aggregate,
-    so only actual matches reach the (tiny) id-keyed exchange. The
-    corpus is never shuffled at pair grain. Exact cosine, no LSH: at
-    |benchmark| << |corpus| the candidate-generation machinery would
-    cost more than the broadcast product it prunes."""
-    from .similarity import _dot, _norm, _to_double
-
-    # norms hoisted into the frames (the ivf_topk scoring contract,
-    # similarity.py): the pair stream evaluates ONE dot per
-    # (corpus, benchmark) pair, not a dot plus two fresh norm folds —
-    # same IEEE doubles, |corpus| + |benchmark| norm folds instead of
-    # 2 x |corpus| x |benchmark| (r12 review)
-    c = corpus.select(F.col(id_col),
-                      _to_double(F.col(vec_col)).alias("_cv")) \
-        .withColumn("_cn", _norm(F.col("_cv")))
-    b = benchmark.select(_to_double(F.col(vec_col)).alias("_bv")) \
-        .withColumn("_bn", _norm(F.col("_bv")))
-    cos = _dot(F.col("_cv"), F.col("_bv")) \
-        / (F.col("_cn") * F.col("_bn"))
-    return (c.crossJoin(F.broadcast(b))
-            .select(F.col(id_col), cos.alias("_cos"))
-            .filter(F.col("_cos") >= float(threshold))
-            .groupBy(id_col)
-            .agg(F.max(F.round(F.col("_cos"), 6)).alias("max_cosine"),
+    Scale shape: one exact cosine_join of the corpus (left) against the
+    bounded benchmark set (right, a few thousand eval rows). The
+    kernel applies the threshold to the raw cosine, so only actual
+    matches reach the (tiny) id-keyed aggregate; the corpus is never
+    shuffled at pair grain. Exact cosine, no LSH: at |benchmark| <<
+    |corpus| the candidate-generation machinery would cost more than
+    the blocked product it prunes."""
+    pairs = cosine_join(corpus.select(id_col, vec_col),
+                        benchmark.select(id_col, vec_col), threshold)
+    return (pairs.groupBy(F.col("id_a").alias(id_col))
+            .agg(F.max(F.round(F.col("cosine"), 6)).alias("max_cosine"),
                  F.count(F.lit(1)).alias("n_hits")))
 
 

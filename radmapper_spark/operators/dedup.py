@@ -16,11 +16,14 @@ All operators are pure DataFrame plans:
   the simhash prefix buckets.
 - ngram_jaccard_pairs: exact n-gram Jaccard on candidate pairs (verification
   stage after LSH).
-- embedding_cosine_pairs: near-dup by embedding cosine over LSH-ish
-  coarse buckets (random hyperplane signs).
+- embedding_cosine_pairs: near-dup by exact embedding cosine, the
+  cosine_join self-join. The embedding family has two Arrow kernels, one
+  per shape: cosine_join for dense products (blocked GEMM) and
+  cosine_verify for given candidate pairs. Sign-LSH (sign_lsh_base)
+  remains only behind the persisted embedding index.
 
-Everything stays JVM-side (built-in functions only — no Python UDFs in the
-hot path): xxhash64, transform, aggregate, explode.
+The text operators stay JVM-side (built-in functions only — no Python
+UDFs in the hot path): xxhash64, transform, aggregate, explode.
 """
 
 from __future__ import annotations
@@ -273,8 +276,8 @@ def minhash_base(docs: DataFrame, text_col: str = "text",
                  hash_mode: str = "xxhash64") -> DataFrame:
     """(id, minhash) signature frame consumed by minhash_lsh_pairs —
     split out so callers over an immutable corpus can persist it once
-    per session (the sign_lsh_base / simhash_base contract: signatures
-    are a pure function of (corpus, params), and the shingling pass is
+    per session (the simhash_base contract: signatures are a pure
+    function of (corpus, params), and the shingling pass is
     the operator's dominant cost — measured 4.8 s to materialize vs
     0.24 s cached at sf0.1). NOT persisted here; callers decide."""
     return _stamp_base_params(
@@ -344,7 +347,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     # persist the (small: id + num_hashes longs per doc) signature frame so
     # the self-join's two sides don't recompute the shingling; callers
     # over an IMMUTABLE corpus pass a persisted `base` instead and the
-    # shingling is paid once per corpus ever (the sign_lsh_base contract)
+    # shingling is paid once per corpus ever
     owns_base = base is None
     if not owns_base:
         _check_base_params(base, "minhash_lsh_pairs",
@@ -356,8 +359,9 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     banded = minhash_bands(sigs, num_hashes, bands, hash_mode) \
         .select("id", "band", "bhash")
     left = banded.alias("l")
-    # SHUFFLE_HASH: same rationale as the embedding band join below —
-    # (band, bhash) buckets are near-uniform, SMJ's sorts buy nothing
+    # SHUFFLE_HASH: (band, bhash) buckets are near-uniform, so SMJ's two
+    # sorts buy nothing (measured 2.5x slower on a sign-LSH band
+    # self-join of the same shape at sf0.1)
     right = banded.alias("r").hint("shuffle_hash")
     # dedupe CANDIDATE ID PAIRS first (narrow rows through the shuffle),
     # then join the (persisted, small) signatures back for verification
@@ -474,9 +478,9 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     (pigeonhole), so a per-band equi-join finds every true pair — no
     unbounded collect_list, no all-pairs scan.
 
-    Plan (r10, mirrors the embedding-cosine band join): the band explode
-    CARRIES the 8-byte fingerprint, so the exact bit_count(xor) verify
-    runs INLINE on the raw band-join output — no candidate distinct
+    Plan (r10): the band explode CARRIES the 8-byte fingerprint, so
+    the exact bit_count(xor) verify runs INLINE on the raw band-join
+    output — no candidate distinct
     shuffle and no verify re-joins (measured at sf0.1: 277k raw
     candidates of which only 5k are band-duplicates, so the old
     distinct shuffled 272k narrow rows to save ~5k inline popcounts —
@@ -487,7 +491,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 
     ``base``: callers holding the persisted (id, simhash) frame for an
     IMMUTABLE corpus pass it in so repeated invocations skip the
-    fingerprint pass (same contract as embedding_cosine_pairs' `base`:
+    fingerprint pass (same contract as minhash_lsh_pairs' `base`:
     fingerprints are a pure function of (corpus, params)). The caller
     owns its cache; the result's rm_release_cache is then a no-op.
     """
@@ -529,8 +533,8 @@ def hamming_band_pairs(base: DataFrame, hash_col: str = "simhash",
             for b in range(bands)])).alias("bb"),
     ).select("id", "_h",
              F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval"))
-    # SHUFFLE_HASH: near-uniform (band, bval) buckets — see the embedding
-    # band join for the measured SMJ-sort argument
+    # SHUFFLE_HASH: near-uniform (band, bval) buckets — see
+    # minhash_lsh_pairs for the measured SMJ-sort argument
     a, b = bandvals.alias("a"), bandvals.alias("b").hint("shuffle_hash")
     return (
         a.join(b, on=[F.col("a.band") == F.col("b.band"),
@@ -551,7 +555,7 @@ def simhash_base(docs: DataFrame, text_col: str = "text",
                  hash_mode: str = "xxhash64") -> DataFrame:
     """(id, simhash) fingerprint frame consumed by simhash_pairs — split
     out so callers over an immutable corpus can persist it once per
-    session (the embedding sign_lsh_base contract). NOT persisted here;
+    session (the minhash_base contract). NOT persisted here;
     callers decide caching."""
     return _stamp_base_params(
         simhash(drop_blank_docs(docs, text_col), text_col, id_col,
@@ -896,9 +900,9 @@ def sign_lsh_base(emb: DataFrame, vec_col: str = "embedding",
     """(id, bb, wd) frame: per-row banded sign-LSH signatures `bb`
     (`bands` ints of `planes_per_band` hyperplane sign bits each) plus a
     `sketch_planes`-bit packed sign sketch `wd` (bigint words), computed in
-    ONE Arrow-batched pass over the vectors. Shared by
-    embedding_cosine_pairs and the candidate-volume instrumentation in
-    tests; NOT persisted — callers decide caching."""
+    ONE Arrow-batched pass over the vectors. Shared by the persisted
+    sign-LSH index (build, append, probe) and the candidate-volume
+    instrumentation in tests; NOT persisted — callers decide caching."""
     from pyspark.sql.functions import pandas_udf
 
     nplanes = bands * planes_per_band
@@ -954,14 +958,11 @@ def sign_lsh_base(emb: DataFrame, vec_col: str = "embedding",
     if emb.rdd.getNumPartitions() < min(par, 16):
         emb = emb.repartition(min(par, 16))
 
-    return _stamp_base_params(
-        emb.select(F.col(id_col).alias("id"),
-                   sig_udf(F.col(vec_col)).alias("sg"))
-        .select("id",
-                F.slice("sg", 1, bands).alias("bb"),
-                F.slice("sg", bands + 1, nwords).alias("wd")),
-        bands=bands, planes_per_band=planes_per_band,
-        sketch_planes=sketch_planes, seed=seed)
+    return (emb.select(F.col(id_col).alias("id"),
+                       sig_udf(F.col(vec_col)).alias("sg"))
+            .select("id",
+                    F.slice("sg", 1, bands).alias("bb"),
+                    F.slice("sg", bands + 1, nwords).alias("wd")))
 
 
 def _sketch_screen(wd_a, wd_b, threshold: float, sketch_planes: int):
@@ -987,18 +988,22 @@ def _sketch_screen(wd_a, wd_b, threshold: float, sketch_planes: int):
 
 
 def cosine_verify(pairs: DataFrame, va: str, vb: str,
-                  threshold: float) -> DataFrame:
-    """Exact-cosine verify of candidate pairs: the ONE pair-cosine kernel
-    of the embedding near-dup family (embedding_cosine_pairs,
-    neardup_embedding_vs_index, similarity.semantic_dedup_pairs).
+                  threshold: float = None) -> DataFrame:
+    """Exact cosine of GIVEN candidate pairs: the embedding family's
+    kernel for that shape (neardup_embedding_vs_index,
+    similarity.semantic_dedup_pairs, and the ivf_topk, pq_topk and
+    search_ivf_index rescoring). Dense all-pairs products go through
+    its twin, cosine_join.
 
     `pairs` carries two array<float|double> vector columns `va` and `vb`;
     every other column is a key passed through with its input type.
     Returns the keys plus an UNROUNDED `cosine` double for each pair whose
-    cosine is >= `threshold` (the filter runs on the unrounded value, as
-    in the oracles; callers round for output). A pair with a NULL vector
+    cosine is >= `threshold`, or for every pair when it is None (the
+    filter runs on the unrounded value, as in the oracles; callers round
+    for output). A pair with a NULL vector
     or two vectors of different lengths is dropped — operators that must
-    reject such input do so upstream (sign_lsh_base raises on it).
+    reject such input do so upstream (sign_lsh_base raises on it, and
+    so does cosine_join).
 
     One mapInArrow kernel: a list column is ONE flat values buffer plus
     offsets, so each (m, dim) matrix is a single vectorized gather (the
@@ -1015,7 +1020,7 @@ def cosine_verify(pairs: DataFrame, va: str, vb: str,
     schema = StructType(
         [StructField(k, pairs.schema[k].dataType) for k in keys]
         + [StructField("cosine", DoubleType())])
-    thr = float(threshold)
+    thr = None if threshold is None else float(threshold)
 
     def _kernel(batches):
         import numpy as np
@@ -1048,7 +1053,8 @@ def cosine_verify(pairs: DataFrame, va: str, vb: str,
                 cosv = np.einsum("ij,ij->i", a, b) / (
                     np.sqrt(np.einsum("ij,ij->i", a, a))
                     * np.sqrt(np.einsum("ij,ij->i", b, b)))
-                keep = cosv >= thr
+                keep = (np.ones(len(cosv), dtype=bool) if thr is None
+                        else cosv >= thr)
                 take = pa.array(rows[keep])
                 yield pa.RecordBatch.from_arrays(
                     [cols[k].take(take) for k in keys]
@@ -1058,110 +1064,131 @@ def cosine_verify(pairs: DataFrame, va: str, vb: str,
     return pairs.mapInArrow(_kernel, schema)
 
 
+# rows per side of one GEMM tile in cosine_join: no score matrix passes
+# _TILE x _TILE doubles (32 MiB)
+_TILE = 2048
+
+
+def cosine_join(left: DataFrame, right: DataFrame = None,
+                threshold: float = None) -> DataFrame:
+    """Exact cosine over every (left, right) row pair: the ONE
+    dense-product kernel of the embedding family (embedding_cosine_pairs,
+    similarity.brute_force_topk / range_search,
+    decontam.embedding_decontam). Given candidate pairs go through its
+    twin, cosine_verify.
+
+    `left` and `right` are (id, vector) frames: the first column is the
+    id (any type, passed through), the second an array<float|double>
+    vector. Returns (id_a, id_b, cosine), id_a from `left` and id_b from
+    `right`, with the UNROUNDED cosine; with a `threshold`, only pairs at
+    or above it (the filter runs on the unrounded value, as in the
+    oracles; callers round for output). `right` is the small side (the
+    queries, the benchmark set): its blocks are broadcast. `right=None`
+    is the self-join of `left`: each unordered pair once, as
+    id_a < id_b, no self pair.
+
+    Plan: each side is cut into B = defaultParallelism hash blocks of
+    its (id, vector) rows, one collect_list row per block; block pairs
+    are joined (i <= j for the self-join) and spread round-robin over B
+    tasks. One mapInArrow pass per block pair normalises both blocks in
+    float64, takes the GEMM in tiles of at most _TILE x _TILE scores
+    and emits the survivors. Construction runs no job. A task holds its
+    two blocks whole, so its working set grows as n / B.
+
+    A NULL vector, or vectors of different lengths, raise (inside the
+    task) instead of being dropped: there is no cosine for them, and a
+    silent drop would lose pairs. The closure captures only plain
+    values, so it ships by value to executors that cannot import this
+    module."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    self_join = right is None
+    right = left if self_join else right
+    nblk = left.sparkSession.sparkContext.defaultParallelism
+
+    def blocks(side, tag):
+        i, v = side.columns[:2]
+        return (side.select(
+            F.pmod(F.xxhash64(i), F.lit(nblk)).alias("b" + tag),
+            F.struct(F.col(i).alias("i"), F.col(v).alias("v")).alias("r"))
+            .groupBy("b" + tag).agg(F.collect_list("r").alias("r" + tag)))
+
+    a, b = blocks(left, "a"), blocks(right, "b")
+    pairs = a.join(b, F.col("ba") <= F.col("bb")) if self_join \
+        else a.crossJoin(F.broadcast(b))
+    # B tasks, not one per block pair: each Arrow task pays a fixed
+    # ~0.1 s of Python worker cost. The number is explicit because AQE
+    # would coalesce the few block rows into one task and serialise
+    # every GEMM.
+    pairs = pairs.repartition(nblk)
+    schema = StructType([
+        StructField("id_a", left.schema[0].dataType),
+        StructField("id_b", right.schema[0].dataType),
+        StructField("cosine", DoubleType())])
+    thr, tile = None if threshold is None else float(threshold), _TILE
+
+    def _kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def unit(rows):
+            ids, vec = rows.flatten()
+            # a NULL vector's length is NaN, so it fails this check too
+            lens = vec.value_lengths().to_numpy(zero_copy_only=False)
+            if (lens != lens[0]).any():
+                raise ValueError("cosine_join: NULL or ragged vectors, "
+                                 f"lengths {sorted(set(lens.tolist()))}")
+            m = np.asarray(vec.flatten().to_numpy(zero_copy_only=False),
+                           dtype=np.float64).reshape(len(vec), int(lens[0]))
+            return ids, m / np.linalg.norm(m, axis=1, keepdims=True)
+
+        for rb in batches:
+            cols = dict(zip(rb.schema.names, rb.columns))
+            for r in range(rb.num_rows):
+                ia, ma = unit(cols["ra"][r].values)
+                diag = self_join and \
+                    cols["ba"][r].as_py() == cols["bb"][r].as_py()
+                ib, mb = (ia, ma) if diag else unit(cols["rb"][r].values)
+                if ma.shape[1] != mb.shape[1]:
+                    raise ValueError("cosine_join: ragged vectors, lengths "
+                                     f"{ma.shape[1]} and {mb.shape[1]}")
+                for i0 in range(0, len(ma), tile):
+                    for j0 in range(i0 if diag else 0, len(mb), tile):
+                        s = ma[i0:i0 + tile] @ mb[j0:j0 + tile].T
+                        keep = (np.ones(s.shape, dtype=bool) if thr is None
+                                else s >= thr)
+                        if diag and i0 == j0:
+                            keep = np.triu(keep, 1)
+                        ri, cj = np.nonzero(keep)
+                        xa = ia.take(pa.array(ri + i0))
+                        xb = ib.take(pa.array(cj + j0))
+                        out = [xa, xb, pa.array(s[ri, cj], type=pa.float64())]
+                        if self_join:
+                            swap = pc.greater(xa, xb)
+                            out[:2] = pc.if_else(swap, xb, xa), \
+                                pc.if_else(swap, xa, xb)
+                        batch = pa.RecordBatch.from_arrays(
+                            out, names=["id_a", "id_b", "cosine"])
+                        # a repeated id meets itself in its own block
+                        yield batch.filter(pc.not_equal(*out[:2])) \
+                            if self_join else batch
+
+    return pairs.mapInArrow(_kernel, schema)
+
+
 def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
-                           id_col: str = "vec_id", threshold: float = 0.45,
-                           bands: int = 64, planes_per_band: int = 8,
-                           sketch_planes: int = 512,
-                           seed: int = 42,
-                           base: DataFrame = None) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine via BANDED sign-LSH
-    (OR-construction over AND-bands, like the minhash path) plus a packed
-    sign-SKETCH prefilter: each band is `planes_per_band` random-hyperplane
-    sign bits; two vectors are candidates if ANY band matches. Before the
-    (expensive) exact-cosine verify, candidates are screened with a
-    `sketch_planes`-bit sign sketch packed into bigint words — the angle
-    estimate is popcount(XOR), a pure JVM bit_count over 8 longs, so the
-    hot-bucket quadratic cost of a low threshold hits a cheap popcount,
-    never a full-dimension dot product (_sketch_screen).
-
-    Parameter guidance: for production near-dup thresholds (cos >= 0.9,
-    p ~ 0.86) use r=16, b=24: fine buckets (random pairs collide at
-    ~0.5^16 per band => candidate volume ~ b*n^2/65536, a narrow bucketed
-    equi-join) with ~99% recall. The r=8/b=64 defaults serve moderate
-    thresholds (the sf fixtures' cos~0.45-0.51 regime) at a random-pair
-    band collision of 2^-8 — candidate join volume ~ b*n^2/512, 8x below
-    the old r=4/b=32 shape. Low thresholds inherently need small r /
-    large b — which is why the sketch prefilter carries the verify, not
-    the vectors.
-
-    Signatures + sketch are ONE Arrow-batched pass over the vectors
-    (sign_lsh_base; persisted: id + bands + 8 longs per row), fully
-    deterministic under `seed`.
-
-    Plan: one projection computes band sigs and sketch words per row ->
-    explode to (id, band, sig) -> self equi-join on (band, sig) ->
-    popcount prefilter INLINE on the raw join output -> distinct id pairs
-    (a pair colliding in k bands appears k times) -> re-join vectors ->
-    exact cosine filter (cosine_verify). The distinct runs BEFORE the
-    vector join because the verify is priced per row-byte: every
-    candidate ships two full vectors through Arrow, so the narrow (id, id)
-    distinct cuts the operator's dominant slice by the band-duplication
-    factor. Both vector attaches are broadcast only while the vector
-    table's plan estimate is known and under ``rm.broadcastMaxBytes``
-    (plan_stats.broadcast_gate); the choice is ``result.rm_broadcast_path``.
-    """
-    # `base`: callers that hold the (persisted) sign_lsh_base frame for
-    # an IMMUTABLE corpus pass it in so repeated invocations skip the
-    # Arrow signature pass entirely — signatures are a pure function of
-    # (corpus, params), i.e. extracted once per corpus ever, the same
-    # contract as the persisted index. The caller owns its cache; the
-    # result's rm_release_cache is then a no-op.
-    owns_base = base is None
-    if owns_base:
-        base = sign_lsh_base(emb, vec_col, id_col, bands, planes_per_band,
-                             sketch_planes, seed).persist()
-    else:
-        _check_base_params(base, "embedding_cosine_pairs",
-                           bands=bands, planes_per_band=planes_per_band,
-                           sketch_planes=sketch_planes, seed=seed)
-    # the banded frame CARRIES the sketch words (8 longs — cheap next to a
-    # re-join), so the popcount prefilter runs INLINE on the raw join
-    # output and the expensive distinct only sees survivors
-    banded = base.select("id", "wd", F.posexplode("bb").alias("band", "sig"))
-    # SHUFFLE_HASH: the band self-join's equi-keys (band, sig) are
-    # near-uniform 8-bit buckets, so sort-merge buys nothing and its two
-    # sorts dominate (measured 2.5x slower at sf0.1). The hash build side
-    # is ONE shuffle partition of the banded frame — bounded by AQE's
-    # target partition size at scale, so this stays safe at 100 TB.
-    l, r = banded.alias("l"), banded.alias("r").hint("shuffle_hash")
-    # explicit REPARTITION_BY_NUM after the distinct (r18): AQE's
-    # size-based coalescing sees only the narrow (id, id) bytes of the
-    # candidate set and packs them into 1-2 partitions — and the
-    # downstream vector joins + Arrow einsum verify FUSE onto those
-    # partitions, starving the operator's dominant stage (measured at
-    # sf1: the 20.6M-candidate verify ran on ~2 of 32 cores). AQE never
-    # coalesces a user-numbered repartition, so the shuffle (16 B/row —
-    # the vectors attach after) restores full-width parallelism for the
-    # verify at any scale.
-    screened = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.sig") == F.col("r.sig"))
-               & (F.col("l.id") < F.col("r.id")))
-        .filter(_sketch_screen(F.col("l.wd"), F.col("r.wd"), threshold,
-                               sketch_planes))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-        .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    # size-gate the vector attach (r18, plan_stats.broadcast_gate):
-    # left to the planner, a vector table just over
-    # autoBroadcastJoinThreshold turns the SECOND attach into a
-    # sort-merge join that shuffles pairs WITH v_a already attached
-    # (~1 KB/row — measured 20 GB at sf1's 20.6M candidates) by id_b.
-    # Broadcasting both (tiny) vector sides keeps the pair stream in
-    # place; a vector table over the cap, or of unknown size, is left
-    # to the planner's choice instead of OOMing.
-    use_bc = broadcast_gate(emb.sparkSession, est_plan_bytes(va),
-                            if_unknown=False)
-    if use_bc:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    out = cosine_verify(screened.join(va, on="id_a").join(vb, on="id_b")
-                        .select("id_a", "id_b", "v_a", "v_b"),
-                        "v_a", "v_b", threshold)
-    out.rm_release_cache = base.unpersist if owns_base else (lambda: None)
-    out.rm_broadcast_path = use_bc
+                           id_col: str = "vec_id",
+                           threshold: float = 0.45) -> DataFrame:
+    """Near-duplicate pairs by exact embedding cosine: (id_a, id_b,
+    cosine) for every pair with id_a < id_b whose UNROUNDED cosine is
+    >= `threshold` — the cosine_join self-join of the (id, vector)
+    rows, with no candidate stage and no recall parameter. A NULL or
+    ragged vector raises. The result carries a no-op
+    ``rm_release_cache`` (nothing is persisted), so callers release it
+    like the other pair operators."""
+    out = cosine_join(emb.select(id_col, vec_col), threshold=threshold)
+    out.rm_release_cache = lambda: None
     return out
 
 
@@ -1377,9 +1404,8 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
                                seed: int = 42) -> DataFrame:
     """Probe a persisted sign-LSH index with a batch of NEW vectors:
     (new_id, index_id, cosine) for every new vector whose cosine against
-    an indexed one clears `threshold`. Cosines are exactly the values
-    embedding_cosine_pairs computes (the same cosine_verify kernel on the
-    same doubles).
+    an indexed one clears `threshold`. Cosines come from cosine_verify
+    (float64 dot over the norm product).
 
     Plan: probe signatures+sketch in one Arrow pass over the BATCH only
     -> equi-join the persisted bands table on (band, sig) -> dedupe

@@ -122,7 +122,9 @@ def pagerank(edges: DataFrame, iters: int = 3,
     so the iteration join is co-located). The default None AUTO-selects
     from the node count (broadcast_path: count x BROADCAST_ROW_BYTES vs
     rm.broadcastMaxBytes — one count job over the node set per call);
-    the chosen path is exposed as ``result.rm_broadcast_path``."""
+    the chosen path is exposed as ``result.rm_broadcast_path``. With
+    iters=0 no join runs, so nothing is decided: the flag is reported
+    as given (None included) and construction runs no job."""
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in (1, 99)")
     if iters < 0:
@@ -135,7 +137,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
         nodes0 = nodes if nodes is not None else node_set(edges)
         out = nodes0.select("node", F.lit(SCALE).cast("long").alias("rank"))
         out.rm_release_cache = lambda: None
-        out.rm_broadcast_path = broadcast_path(nodes0, broadcast_ranks)
+        out.rm_broadcast_path = broadcast_ranks
         return out
     # LAZY persists break the O(iters^2) lineage blowup: without them,
     # iteration i's plan re-executes every earlier iteration AND the

@@ -217,11 +217,11 @@ def llm_match(src, tar, opts=None):
         if isinstance(obj, dict):
             for k, v in obj.items():
                 p = f"{prefix}.{k}" if prefix else str(k)
-                out[_norm(k)] = p
+                out[_canon(k)] = p
                 out.update(names(v, p))
         return out
 
-    def _norm(s: str) -> str:
+    def _canon(s: str) -> str:
         return re.sub(r"[^a-z0-9]", "", str(s).lower())
 
     src_names = names(src)

@@ -1,17 +1,18 @@
 """Similarity search over an embedding column (array<float>).
 
-- brute_force_topk: exact cosine top-k. The query vector set is small ->
-  broadcast it; the corpus scan is embarrassingly parallel; per-partition
-  top-k via window rank after a repartition on query id (at 1000 executors
-  the dominant cost is the corpus scan, which prunes to the two needed
-  columns).
+- brute_force_topk: exact cosine top-k — the corpus x queries product
+  (dedup.cosine_join, the small query set on the right) ranked per query
+  by a window.
 - ivf_topk: IVF-style scale path — k-means-ish coarse centroids (sampled
   driver-side once), corpus assigned to nearest centroid (narrow), queries
   probe `nprobe` nearest centroids; the candidate join is an equi-join on
   centroid id, cutting the scanned corpus by ~ncentroids/nprobe.
 
-Dot products are Catalyst expressions (zip_with + aggregate): JVM-side,
-whole-stage-codegen'd, no Python in the row loop.
+Every exact cosine here comes from one of the two Arrow kernels in
+dedup, one per shape: cosine_join for a dense product (brute_force_topk,
+range_search) and cosine_verify for given candidate pairs (the IVF, PQ
+and persisted-IVF rescoring, semantic_dedup_pairs). Both normalise in
+float64; the rank and the output round the cosine to 6 places.
 """
 
 from __future__ import annotations
@@ -19,19 +20,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
+from .dedup import cosine_join, cosine_verify
 
 
 def _to_double(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(qid, cid, cosine, rank): the k best rows per qid of a (qid, cid,
+    cosine) frame, by the cosine rounded to 6 places (descending), ties
+    to the smaller cid."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
+    return (pairs.select("qid", "cid", F.round("cosine", 6).alias("cosine"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "cid", "cosine", "rank"))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -39,19 +43,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      qid_col: str = "qid") -> DataFrame:
     """Exact cosine top-k of corpus rows per query row.
 
-    queries: DataFrame[qid, embedding]. Broadcast the queries; rank with a
-    window partitioned by qid."""
-    c = corpus.select(F.col(id_col).alias("cid"), _to_double(F.col(vec_col)).alias("cv"))
-    q = queries.select(F.col(qid_col).alias("qid"), _to_double(F.col(vec_col)).alias("qv"))
-    cos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * _norm(F.col("qv")))
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "qid", "cid", F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
-    )
+    queries: DataFrame[qid, embedding]. Every (corpus, query) cosine
+    comes from cosine_join with the queries on the right; a window
+    partitioned by qid ranks them."""
+    pairs = cosine_join(corpus.select(id_col, vec_col),
+                        queries.select(qid_col, vec_col))
+    return _top_k(pairs.select(F.col("id_b").alias("qid"),
+                               F.col("id_a").alias("cid"), "cosine"), k)
 
 
 def train_centroids(corpus: DataFrame, vec_col: str = "embedding",
@@ -137,23 +135,12 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     assign1 = _nearest_centroid_udf(cents, 1)
     assignp = _nearest_centroid_udf(cents, nprobe)
     c = corpus.select(F.col(id_col).alias("cid"), _to_double(F.col(vec_col)).alias("cv"))
-    c = c.withColumn("cnrm", _norm(F.col("cv")))
     c = c.withColumn("cell", assign1(F.col("cv"))[0])
     q = queries.select(F.col(qid_col).alias("qid"), _to_double(F.col(vec_col)).alias("qv"))
-    q = q.withColumn("qnrm", _norm(F.col("qv")))
-    q = q.withColumn("cells", assignp(F.col("qv")))
-    q = q.select("qid", "qv", "qnrm", F.explode(F.col("cells")).alias("cell"))
-    # norms hoisted into the frames: the scoring join evaluates ONE dot per
-    # (query, candidate), not a dot plus two fresh norm folds
-    cos = _dot(F.col("cv"), F.col("qv")) / (F.col("cnrm") * F.col("qnrm"))
-    scored = c.join(F.broadcast(q), on="cell").select(
-        "qid", "cid", F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
-    )
+    q = q.select("qid", "qv", F.explode(assignp(F.col("qv"))).alias("cell"))
+    return _top_k(cosine_verify(
+        c.join(F.broadcast(q), on="cell").select("qid", "cid", "cv", "qv"),
+        "cv", "qv"), k)
 
 
 def range_search(corpus: DataFrame, queries: DataFrame,
@@ -161,22 +148,16 @@ def range_search(corpus: DataFrame, queries: DataFrame,
                  id_col: str = "vec_id", qid_col: str = "qid") -> DataFrame:
     """Cosine range search: every corpus row within the given cosine
     radius of each query (self-matches excluded). Unlike top-k there is
-    no window/rank — the threshold filter is row-local, so the plan is a
-    broadcast nested-loop over the (small) query set with NO shuffle at
-    all: the shape a fixed-radius retrieval scan wants at 100 TB.
-    Candidate pruning for huge query sets belongs in ivf_topk-style
-    cell routing; this is the exact baseline."""
-    c = corpus.select(F.col(id_col).alias("cid"),
-                      _to_double(F.col(vec_col)).alias("cv"))
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       _to_double(F.col(vec_col)).alias("qv"))
-    cos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * _norm(F.col("qv")))
-    return (c.crossJoin(F.broadcast(q))
-            .filter(F.col("cid") != F.col("qid"))
-            .withColumn("_cos", cos)
-            .filter(F.col("_cos") >= threshold)  # threshold on the RAW
-            # value (rounding after filtering, like the oracle)
-            .select("qid", "cid", F.round(F.col("_cos"), 6).alias("cosine")))
+    no window/rank: cosine_join (queries on the right) applies the
+    threshold to the RAW cosine inside its kernel, and the output
+    rounds after filtering, like the oracle. Candidate pruning for huge
+    query sets belongs in ivf_topk-style cell routing; this is the
+    exact baseline."""
+    pairs = cosine_join(corpus.select(id_col, vec_col),
+                        queries.select(qid_col, vec_col), threshold)
+    return (pairs.filter(F.col("id_a") != F.col("id_b"))
+            .select(F.col("id_b").alias("qid"), F.col("id_a").alias("cid"),
+                    F.round("cosine", 6).alias("cosine")))
 
 
 # ---------------------------------------------------------------- PQ
@@ -315,15 +296,9 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
             .filter(F.col("arank") <= rerank * k)
             .select("qid", "cid"))
     # exact rerank of the small candidate set
-    c2 = c.withColumn("cnrm", _norm(F.col("cv")))
-    q2 = q.withColumn("qnrm", _norm(F.col("qv")))
-    cos = _dot(F.col("cv"), F.col("qv")) / (F.col("cnrm") * F.col("qnrm"))
-    rescored = (cand.join(c2, "cid").join(F.broadcast(q2), "qid")
-                .select("qid", "cid", F.round(cos, 6).alias("cosine")))
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "cid", "cosine", "rank"))
+    return _top_k(cosine_verify(
+        cand.join(c, "cid").join(F.broadcast(q), "qid")
+        .select("qid", "cid", "cv", "qv"), "cv", "qv"), k)
 
 
 def opq_rotation(corpus: DataFrame, vec_col: str = "embedding",
@@ -467,19 +442,13 @@ def search_ivf_index(spark, path: str, queries: DataFrame, k: int = 10,
     assignp = _nearest_centroid_udf(cents, nprobe)
     q = queries.select(F.col(qid_col).alias("qid"),
                        _to_double(F.col(vec_col)).alias("qv"))
-    q = q.withColumn("qnrm", _norm(F.col("qv")))
-    q = q.select("qid", "qv", "qnrm",
-                 F.explode(assignp(F.col("qv"))).alias("cell"))
+    q = q.select("qid", "qv", F.explode(assignp(F.col("qv"))).alias("cell"))
     probed = {r["cell"] for r in q.select("cell").distinct().collect()}
     cells = (spark.read.parquet(f"{path}/cells")
              .filter(F.col("cell").isin(*probed)))
-    cos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qnrm"))
-    scored = cells.join(F.broadcast(q), on="cell").select(
-        "qid", "cid", F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "cid", "cosine", "rank"))
+    return _top_k(cosine_verify(
+        cells.join(F.broadcast(q), on="cell").select("qid", "cid", "cv", "qv"),
+        "cv", "qv"), k)
 
 
 # ------------------------------------------------------------ quantization
@@ -670,9 +639,7 @@ def semantic_dedup_pairs(emb: DataFrame, k: int = 8, iters: int = 2,
     `asg`: callers over an IMMUTABLE table may pass a (persisted)
     kmeans_lloyd assignment frame so repeated invocations skip the
     Lloyd iterations — caller-owned, not released here (same contract
-    as embedding_cosine_pairs' `base`)."""
-    from .dedup import cosine_verify
-
+    as minhash_lsh_pairs' `base`)."""
     owns_asg = asg is None
     if owns_asg:
         asg = kmeans_lloyd(emb, k=k, iters=iters, vec_col=vec_col,

@@ -348,7 +348,8 @@ def start_embedding_admission(vec_stream: DataFrame, index_path: str,
     commits), then ADMIT the surviving vectors (append_to_signlsh_index)
     so future batches see them. Intra-batch duplicates resolve
     TRANSITIVELY per cluster via _resolve_admission over the batch
-    operator embedding_cosine_pairs — clean clusters admit their
+    operator embedding_cosine_pairs (exact cosine, no LSH: the sign-LSH
+    params apply to the index only) — clean clusters admit their
     smallest id; clusters chaining to indexed content are rejected
     wholesale. Same restart caveat as the minhash loop: replays append
     duplicate index AND audit rows (probe answers unaffected; compact /
@@ -364,6 +365,6 @@ def start_embedding_admission(vec_stream: DataFrame, index_path: str,
         vec_stream, out_path, checkpoint, id_col,
         lambda b: neardup_embedding_vs_index(b, index_path,
                                              threshold=threshold, **params),
-        lambda b: embedding_cosine_pairs(b, threshold=threshold, **params),
+        lambda b: embedding_cosine_pairs(b, vec_col, id_col, threshold),
         lambda b: append_to_signlsh_index(b, index_path, **params),
         "cosine")

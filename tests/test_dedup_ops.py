@@ -196,16 +196,6 @@ def test_simhash_base_param_mismatch_raises(spark):
         dedup.simhash_pairs(docs, hash_mode="xxhash64", base=base)
 
 
-def test_sign_lsh_base_param_mismatch_raises(spark):
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5, -0.25]) for i in range(4)],
-        "vec_id long, embedding array<float>")
-    base = dedup.sign_lsh_base(emb, bands=32, planes_per_band=8)
-    with pytest.raises(ValueError, match="bands"):
-        dedup.embedding_cosine_pairs(emb, bands=64, planes_per_band=8,
-                                     base=base)
-
-
 def test_apply_removal_spans_semantics(spark):
     """Cuts remove exactly [cut_start, cut_end) from the NORMALIZED
     text; docs without ranges pass through normalized-intact."""

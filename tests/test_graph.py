@@ -73,6 +73,25 @@ def test_pagerank_iters_zero_returns_initial_ranks(spark):
     assert all(r.rank == graph.SCALE for r in rows)
 
 
+def test_pagerank_iters_zero_builds_without_jobs(spark):
+    """iters=0 runs no join, so construction decides no broadcast path:
+    no node count, no Spark job, and the flag is reported as given."""
+    from radmapper_spark.operators import graph
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)],
+                              "src long, dst long")
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank_iters0", "pagerank_iters0")
+    try:
+        pr = graph.pagerank(e, iters=0)
+        pr_bc = graph.pagerank(e, iters=0, broadcast_ranks=True)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("pagerank_iters0") == []
+    assert pr.rm_broadcast_path is None
+    assert pr_bc.rm_broadcast_path is True
+    assert pr.count() == 4
+
+
 def test_graph_auto_selects_broadcast_path(spark):
     from radmapper_spark.operators import graph
     e = _toy_edges(spark)

@@ -68,12 +68,13 @@ def test_ngram_jaccard_self_pair_is_one(spark, tables):
 
 
 def test_embedding_cosine_lsh_recall(spark, tables):
-    """Banded sign-LSH must recover every true pair >= threshold that a
-    brute-force scan finds (100% recall on the deterministic fixture)."""
+    """embedding_cosine_pairs (the exact cosine_join self-join, no LSH
+    stage) returns exactly the pairs >= threshold that an in-test
+    Catalyst brute-force scan finds on the deterministic fixture."""
     emb = tables["embeddings"]
     lsh = {(r["id_a"], r["id_b"])
            for r in dedup.embedding_cosine_pairs(
-               emb, threshold=0.45, bands=64, planes_per_band=8).collect()}
+               emb, threshold=0.45).collect()}
     v = emb.select(F.col("vec_id").alias("id"),
                    F.transform("embedding", lambda x: x.cast("double")).alias("v"))
     a, b = v.alias("a"), v.alias("b")
@@ -89,84 +90,128 @@ def test_embedding_cosine_lsh_recall(spark, tables):
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .collect()}
     assert true, "fixture should exercise the threshold"
-    assert true <= lsh and lsh <= true, f"LSH/brute-force mismatch: {true ^ lsh}"
+    assert lsh == true, f"kernel/brute-force mismatch: {true ^ lsh}"
 
 
-def test_embedding_vector_broadcast_gated_by_size(spark, tmp_path):
-    """rm.broadcastMaxBytes on both sides of its threshold:
-    at the default the two vector attaches are broadcast, at "1" they
-    are not, and both return the same pairs. The vectors come from
-    parquet so the optimizer has real size stats, and the planner's own
-    broadcast threshold is off so only the gate can broadcast."""
-    from radmapper_spark.session import load_tables
-    load_tables(spark, "/root/testdata/sf0.001")["embeddings"] \
-        .write.parquet(str(tmp_path / "emb"))
-    emb = spark.read.parquet(str(tmp_path / "emb"))
-
-    def run():
-        out = dedup.embedding_cosine_pairs(emb, threshold=0.45)
-        rows = {(r.id_a, r.id_b, round(r.cosine, 9)) for r in out.collect()}
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        out.rm_release_cache()
-        return rows, plan.split("== Initial Plan ==")[0]
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bc_rows, bc_plan = run()
-        spark.conf.set("rm.broadcastMaxBytes", "1")
-        try:
-            sh_rows, sh_plan = run()
-        finally:
-            spark.conf.unset("rm.broadcastMaxBytes")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert bc_plan.count("BroadcastHashJoin") == 2, bc_plan
-    assert "Broadcast" not in sh_plan, sh_plan
-    assert bc_rows, "no pairs above the threshold — test is vacuous"
-    assert sh_rows == bc_rows
+def _np_pairs(ids_a, va, ids_b, vb, threshold, self_join):
+    """Reference for cosine_join: float64 dot over the norm product of
+    every pair, as {(id_a, id_b): cosine}."""
+    import numpy as np
+    out = {}
+    for i, x in zip(ids_a, va):
+        for j, y in zip(ids_b, vb):
+            if self_join and not i < j:
+                continue
+            c = float(np.dot(x, y) / (np.linalg.norm(x) * np.linalg.norm(y)))
+            if threshold is None or c >= threshold:
+                out[(i, j)] = c
+    return out
 
 
-def test_embedding_vector_unknown_size_not_broadcast(spark):
-    """The unknown side of the vector gate: a frame with no size stats
-    (createDataFrame's plan carries Catalyst's no-stats sentinel) is
-    left to the planner, not gate-broadcast, at the default cap. The
-    index probe keeps its broadcast in the same case
-    (test_indexes.py::test_embedding_probe_stats_less_batch_keeps_broadcast);
-    the streaming embedding admission calls both operators on such
-    micro-batches. The planner's own broadcast threshold is off so only
-    the gate could broadcast."""
-    import random
+def _join_rows(out):
+    rows = [(r.id_a, r.id_b, r.cosine) for r in out.collect()]
+    got = {(a, b): c for a, b, c in rows}
+    assert len(got) == len(rows), "duplicate pairs"
+    return got
 
-    from radmapper_spark.operators.plan_stats import est_plan_bytes
-    rng = random.Random(5)
-    base = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(20)]
-    rows = [(i, [x + rng.uniform(-0.05, 0.05) for x in base[i % 20]])
-            for i in range(40)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert est_plan_bytes(emb) is None, "fixture carries real stats"
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = dedup.embedding_cosine_pairs(emb, threshold=0.9)
-        pairs = {(r.id_a, r.id_b) for r in out.collect()}
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        out.rm_release_cache()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert out.rm_broadcast_path is False
-    assert "Broadcast" not in plan.split("== Initial Plan ==")[0], plan
-    assert {(i, i + 20) for i in range(20)} <= pairs
+
+def _assert_same(got, want):
+    assert got.keys() == want.keys(), set(got) ^ set(want)
+    assert all(abs(got[p] - want[p]) < 1e-12 for p in want)
+
+
+@pytest.mark.parametrize("extra", [-1, 0, 1, 37])
+def test_cosine_join_matches_numpy(spark, extra):
+    """dedup.cosine_join against a numpy brute force on seeded vectors,
+    with the row count below, at and above the block count: the
+    self-join gives each pair once as id_a < id_b with no self pair,
+    the two-sided join every (left, right) pair, and a threshold None
+    every pair."""
+    import numpy as np
+    nblk = spark.sparkContext.defaultParallelism
+    n = max(nblk + extra, 1)
+    rng = np.random.default_rng(n)
+    v = rng.normal(size=(n, 12))
+    w = rng.normal(size=(n // 2 + 3, 12))
+    ids, qids = [int(i) * 7 + 3 for i in range(n)], list(range(len(w)))
+    left = spark.createDataFrame(
+        [(i, x.tolist()) for i, x in zip(ids, v)], "id long, v array<double>")
+    right = spark.createDataFrame(
+        [(i, x.tolist()) for i, x in zip(qids, w)],
+        "qid long, v array<double>")
+
+    got = _join_rows(dedup.cosine_join(left, threshold=0.1))
+    assert all(a < b for a, b in got)
+    _assert_same(got, _np_pairs(ids, v, ids, v, 0.1, True))
+    _assert_same(_join_rows(dedup.cosine_join(left)),
+                 _np_pairs(ids, v, ids, v, None, True))
+    _assert_same(_join_rows(dedup.cosine_join(left, right, -0.2)),
+                 _np_pairs(ids, v, qids, w, -0.2, False))
+    _assert_same(_join_rows(dedup.cosine_join(left, right)),
+                 _np_pairs(ids, v, qids, w, None, False))
+    assert dedup.cosine_join(left, right.limit(0)).count() == 0
+
+
+def test_cosine_join_keeps_pair_at_threshold(spark):
+    """A cosine exactly at the threshold is kept: (1, 0) vs (3, 4) is
+    3/5 in float64 on both sides of the comparison."""
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [3.0, 4.0]),
+                                (3, [0.0, 1.0])],
+                               "id long, v array<float>")
+    assert {(r.id_a, r.id_b): r.cosine
+            for r in dedup.cosine_join(df, threshold=0.6).collect()} \
+        == {(1, 2): 0.6, (2, 3): 0.8}
+    q = spark.createDataFrame([(9, [1.0, 0.0])], "qid long, v array<float>")
+    assert sorted((r.id_a, r.id_b, r.cosine)
+                  for r in dedup.cosine_join(df, q, 0.6).collect()) \
+        == [(1, 9, 1.0), (2, 9, 0.6)]
+
+
+def test_cosine_join_rows_equal_with_and_without_stats(spark, tables,
+                                                       tmp_path):
+    """The same rows read from parquet (real plan stats) and built with
+    createDataFrame (no stats), and spread over different partition
+    counts, give the same pairs: the block a row lands in depends on
+    its id only."""
+    emb = tables["embeddings"].select("vec_id", "embedding")
+    emb.write.parquet(str(tmp_path / "emb"))
+    from_parquet = spark.read.parquet(str(tmp_path / "emb"))
+    local = spark.createDataFrame(
+        [tuple(r) for r in emb.collect()],
+        "vec_id long, embedding array<float>").repartition(7)
+    rows = [{(r.id_a, r.id_b, round(r.cosine, 9))
+             for r in dedup.cosine_join(f, threshold=0.45).collect()}
+            for f in (from_parquet, local)]
+    assert rows[0], "no pairs above the threshold — test is vacuous"
+    assert rows[0] == rows[1]
+
+
+@pytest.mark.parametrize("bad", [None, [1.0, 2.0]])
+def test_cosine_join_rejects_null_or_ragged_vector(spark, bad):
+    """A NULL or wrong-length vector raises, in a self-join and in a
+    two-sided join, whichever block it lands in; so does a right side
+    whose vectors are all of another length than the left's."""
+    good = [(i, [float(i), 1.0, -0.5]) for i in range(6)]
+    df = spark.createDataFrame(good + [(99, bad)], "id long, v array<double>")
+    with pytest.raises(Exception, match="cosine_join: NULL or ragged"):
+        dedup.cosine_join(df, threshold=0.0).collect()
+    q = spark.createDataFrame([(0, [1.0, 1.0, 1.0])],
+                              "qid long, v array<double>")
+    with pytest.raises(Exception, match="cosine_join: NULL or ragged"):
+        dedup.cosine_join(df, q).collect()
+    q2 = spark.createDataFrame([(0, [1.0, 1.0])], "qid long, v array<double>")
+    with pytest.raises(Exception, match="cosine_join: ragged"):
+        dedup.cosine_join(df.limit(6), q2).collect()
 
 
 def test_embedding_near_dup_dirty_vectors_drop_or_raise(spark, tmp_path):
     """A NULL and a wrong-dimension vector through each operator that
     ends in the shared pair-cosine kernel: semantic_dedup_pairs drops
-    them, while embedding_cosine_pairs and neardup_embedding_vs_index
-    raise because sign_lsh_base rejects the ragged batch before the
-    kernel's drop rule could silently lose rows. One input partition, so
-    sign_lsh_base's round-robin spread leaves every dirty row in a batch
-    with other rows."""
+    them, while embedding_cosine_pairs (cosine_join) and
+    neardup_embedding_vs_index (sign_lsh_base) reject the dirty rows
+    before a drop rule could silently lose pairs. One input partition,
+    so sign_lsh_base's round-robin spread leaves every dirty row in a
+    batch with other rows."""
     import random
     rng = random.Random(11)
     clean = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(32)]
@@ -179,7 +224,7 @@ def test_embedding_near_dup_dirty_vectors_drop_or_raise(spark, tmp_path):
     ids = {i for r in sem.collect() for i in (r.id_a, r.id_b)}
     assert ids and not ids & {100, 101}
 
-    with pytest.raises(Exception, match="sig_sketch"):
+    with pytest.raises(Exception, match="cosine_join"):
         out = dedup.embedding_cosine_pairs(dirty, threshold=0.0)
         try:
             out.collect()
@@ -201,7 +246,8 @@ def test_embedding_lsh_candidate_volume_subquadratic(spark):
     cos >= 0.9) the banded candidate join volume on a 10k-vector set must
     stay a tiny fraction of all-pairs — the property that makes the
     operator a narrow bucketed equi-join at 100 TB instead of a quadratic
-    shuffle — while still recovering the planted near-dup pairs."""
+    shuffle. The batch operator embedding_cosine_pairs (exact, no LSH)
+    must recover the planted near-dup pairs."""
     import numpy as np
     n, dim, nplanted = 10_000, 32, 250
     rng = np.random.default_rng(7)
@@ -224,8 +270,7 @@ def test_embedding_lsh_candidate_volume_subquadratic(spark):
     assert volume < 0.002 * all_pairs, \
         f"candidate join volume {volume} is not sub-quadratic vs {all_pairs}"
 
-    pairs = dedup.embedding_cosine_pairs(
-        emb, threshold=0.9, bands=24, planes_per_band=16)
+    pairs = dedup.embedding_cosine_pairs(emb, threshold=0.9)
     found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     pairs.rm_release_cache()
     truth = {(i, i + nplanted) for i in range(nplanted)

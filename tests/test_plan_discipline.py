@@ -17,8 +17,11 @@ SF = "/root/testdata/sf0.001"
 # vectorized kernel doing dense math Catalyst can't express efficiently
 # (documented in their operator docstrings)
 ARROW_ALLOWED = {
-    "dedup_embedding_cosine",  # sign-LSH signature matmul + the shared
-                               # pair-cosine kernel (dedup.cosine_verify)
+    "dedup_embedding_cosine",  # blocked-GEMM self-join
+                               # (dedup.cosine_join)
+    "ann_bruteforce_topk",     # blocked-GEMM product (dedup.cosine_join)
+    "ann_range_search",        # blocked-GEMM product (dedup.cosine_join)
+    "decontam_embedding",      # blocked-GEMM product (dedup.cosine_join)
     "ann_ivf_topk",            # IVF cell-assignment matmul
     "ann_pq_topk",             # PQ encode + ADC lookup-table matmuls
     "multimodal_features",     # binary decode boundary (mapInPandas)
@@ -290,14 +293,15 @@ def test_round6b_plan_shapes(spark):
 
 
 def test_band_self_joins_are_shuffled_hash(spark):
-    """The LSH band self-joins (minhash / simhash / embedding sign-LSH)
-    must plan as ShuffledHashJoin, not SortMergeJoin: the (band, sig)
-    buckets are near-uniform so SMJ's two sorts buy nothing (measured
-    2.5x the candidate stage on the embedding join at sf0.1)."""
+    """The LSH band self-joins (minhash / simhash) must plan as
+    ShuffledHashJoin, not SortMergeJoin: the (band, sig) buckets are
+    near-uniform so SMJ's two sorts buy nothing (measured 2.5x the
+    candidate stage on a sign-LSH band join of the same shape at
+    sf0.1). The embedding near-dup entry has no band join: it is the
+    exact cosine_join."""
     from radmapper_spark.session import load_tables
     qs = entrymod.queries()
-    for name in ("dedup_minhash_lsh", "dedup_simhash",
-                 "dedup_embedding_cosine"):
+    for name in ("dedup_minhash_lsh", "dedup_simhash"):
         df = qs[name](spark, SF)
         plan = _plan(df)
         assert "ShuffledHashJoin" in plan, f"{name}: band join not SHJ"

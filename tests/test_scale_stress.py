@@ -799,7 +799,7 @@ def test_embedding_admission_20_batch_fold_differential(
         hrows = hits.collect()
         rel = getattr(hits, "rm_release_cache", None)
         rel and rel()
-        intra = dedup.embedding_cosine_pairs(bdf, threshold=thr, **kw)
+        intra = dedup.embedding_cosine_pairs(bdf, threshold=thr)
         irows = intra.collect()
         rel = getattr(intra, "rm_release_cache", None)
         rel and rel()
