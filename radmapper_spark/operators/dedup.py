@@ -765,17 +765,24 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
                 parent[x], x = r, parent[x]
             return r
 
-        for row in e.collect():
-            ra, rb = find(row["u"]), find(row["v"])
+        t = e.toArrow()
+        for u, v in zip(t.column("u").to_pylist(), t.column("v").to_pylist()):
+            ra, rb = find(u), find(v)
             if ra != rb:
                 if ra < rb:
                     ra, rb = rb, ra
                 parent[ra] = rb  # attach larger root under smaller
-        spark = edges.sparkSession
-        labeled = spark.createDataFrame(
-            [(int(x), int(find(x))) for x in parent] +
-            [(int(r), int(r)) for r in set(map(find, parent))],
-            f"{node_col} bigint, component bigint").dropDuplicates([node_col])
+        # every key of parent is attached under a root and no root is a
+        # key, so the two lists are disjoint: one row per node. Built as
+        # Arrow, the frame is a LocalTableScan (a list-built frame would
+        # scan a PythonRDD, starting a Python worker on every action)
+        import pyarrow as pa
+        ids = list(parent) + sorted(set(map(find, parent)))
+        labeled = edges.sparkSession.createDataFrame(
+            pa.table({node_col: pa.array(ids, pa.int64()),
+                      "component": pa.array([find(x) for x in ids],
+                                            pa.int64())}),
+            f"{node_col} bigint, component bigint")
     else:
         def _is_star_forest(df) -> bool:
             # fixpoint test: no root (v) is also a child (u) — directly the

@@ -1,4 +1,5 @@
-"""Iterative graph algorithms as fixed-iteration DataFrame loops.
+"""Iterative graph algorithms: fixed-iteration PageRank and label
+propagation, each with three execution paths chosen by ONE gate.
 
 PageRank here runs in SCALED-INTEGER arithmetic (ranks are BIGINTs scaled
 by 1e12; contributions use integer division): every operation is exact
@@ -7,37 +8,56 @@ AND reproducible by any other engine — the property float PageRank can
 never have (double summation is partition-order dependent). The rounding
 the integer division introduces is the same rounding a fixed-point HW
 implementation makes; for ranking purposes it is far below rank gaps.
+Label propagation is made deterministic the same way (min-label
+tie-break), so all three paths return the same rows.
 
-Scale shape per iteration: one shuffle join of edges⋈ranks on src (at
-100 TB, pre-partition both on src so the join is co-located), one
-groupBy(dst) with map-side partial sums. Fixed iterations -> lineage is
-bounded; for many iterations checkpoint every ~5 to cut the plan.
+Paths (``result.rm_graph_path``), all under plan_stats.broadcast_gate
+(rm.broadcastMaxBytes):
+
+- "driver": when the whole graph fits the gate (``driver_bytes``), the
+  edge table is collected once as Arrow (a bounded collect) into
+  int-coded numpy arrays (``LocalGraph``) and the fixed iterations run
+  on the driver; the (node, value) result is one Arrow-built frame (a
+  LocalTableScan). No per-iteration job, exchange or persist.
+- "broadcast": the per-iteration (node, value) table is broadcast into
+  a map-only edge pass — for |nodes| << |edges| graphs too big to
+  collect.
+- "partitioned": ranks/labels stay partitioned and each iteration join
+  shuffles — for node sets too big to broadcast.
+
+Spark-loop scale shape per iteration: one join of edges⋈ranks on src,
+one groupBy(dst) with map-side partial sums. Fixed iterations -> lineage
+is bounded; for many iterations checkpoint every ~5 to cut the plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import NamedTuple
 
-from .plan_stats import broadcast_gate
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .plan_stats import broadcast_cap, broadcast_gate
 
 SCALE = 10 ** 12
+_INT64_MAX = 2 ** 63 - 1
 
-# Auto path selection: the per-iteration rank/label table is broadcast
-# while the NODE COUNT times a fixed per-row width passes
-# plan_stats.broadcast_gate (rm.broadcastMaxBytes); above it the loop
-# keeps the table partitioned so the iteration join shuffles instead of
-# shipping an executor-crushing broadcast. Both paths are bit-identical
-# (integer arithmetic; proven by the scale-stress equivalence tests), so
-# the choice is purely physical. Catalyst sizeInBytes is deliberately
-# NOT the input: size-only stats don't model the distinct/aggregate
-# reduction, so a node set distilled from a large edge table inherits
-# roughly the edge-scan size and the gate would never broadcast on
-# exactly the |nodes| << |edges| graphs broadcast is for. The count is
-# one aggregate per call; callers over an immutable graph decide once
-# and pass the decision in (the registry's trade graph does, inside its
-# fingerprint-checked memo build, where the count fills the persisted
-# degree table the loop reads anyway).
+# Spark-loop path selection: the per-iteration rank/label table is
+# broadcast while the NODE COUNT times a fixed per-row width passes the
+# gate; above it the loop keeps the table partitioned so the iteration
+# join shuffles instead of shipping an executor-crushing broadcast. Both
+# Spark loops are bit-identical (integer arithmetic; proven by the
+# scale-stress equivalence tests), so the choice is purely physical.
+# Catalyst sizeInBytes is deliberately NOT the input: size-only stats
+# don't model the distinct/aggregate reduction, so a node set distilled
+# from a large edge table inherits roughly the edge-scan size and the
+# gate would never broadcast on exactly the |nodes| << |edges| graphs
+# broadcast is for. The count is one aggregate per call; callers over
+# an immutable graph decide once and pass the decision in (the
+# registry's trade graph does, inside its fingerprint-checked memo
+# build).
 # Conservative bytes per broadcast (node, rank/label) row. The JVM-side
 # footprint of a broadcast hash relation entry for a string-keyed row is
 # NOT the UTF-8 payload: a ~20-char java.lang.String is ~80 bytes
@@ -46,16 +66,177 @@ SCALE = 10 ** 12
 # bytes all-in. Undercounting here admits broadcasts the cap exists to
 # prevent (the 256 MiB default gates at ~1.7M string-keyed nodes).
 BROADCAST_ROW_BYTES = 160
+# Driver-path bytes per EDGE, on top of BROADCAST_ROW_BYTES per node
+# (driver_bytes). Measured over a 1M-edge / 100k-node graph of 8-char
+# string ids (tracemalloc for numpy, the Arrow pool's high-water mark):
+# the bounded collect peaks at ~89 B/edge (the Arrow table and its
+# src+dst concatenation, 48; index_in codes widened to the two int64
+# code arrays, 41), and the LocalGraph then holds 16 B/edge. Label
+# propagation's iteration peaks ~101 B/edge above that (int64 pair
+# keys, np.unique's sort copy, counts, the (dst, label) split), PageRank
+# ~38. The JVM buffers the collected Arrow batches too (24 B/edge
+# payload). Worst case ~141 B/edge, rounded up: the 256 MiB default
+# admits ~1.7M edges, the trade graph at sf0.1 (~1M edges) included.
+DRIVER_EDGE_BYTES = 160
+_DRIVER_TYPES = (T.StringType, T.LongType, T.IntegerType, T.ShortType,
+                 T.ByteType)
+
+
+def driver_bytes(n_nodes: int, n_edges: int) -> int:
+    """The driver path's gate estimate for a graph of this size."""
+    return n_nodes * BROADCAST_ROW_BYTES + n_edges * DRIVER_EDGE_BYTES
 
 
 def broadcast_path(nodes: DataFrame, flag=None) -> bool:
-    """The iteration join's path: an explicit True/False wins; None
-    counts ``nodes`` and gates count x BROADCAST_ROW_BYTES."""
+    """The Spark loop's iteration-join path: an explicit True/False
+    wins; None counts ``nodes`` and gates count x BROADCAST_ROW_BYTES."""
     if flag is not None:
         return bool(flag)
     return broadcast_gate(nodes.sparkSession,
                           nodes.count() * BROADCAST_ROW_BYTES,
                           if_unknown=True)
+
+
+class LocalGraph(NamedTuple):
+    """A directed edge list held on the driver, int-coded: node i is
+    ``ids[i]``, and ``ids`` is in the Spark sort order of the node
+    column (byte order for strings), so comparing codes is comparing
+    node ids. ``src``/``dst`` are int64 codes, -1 for a NULL endpoint."""
+    spark: SparkSession
+    node_type: T.DataType
+    ids: object         # pyarrow.Array of the distinct non-NULL ids
+    src: np.ndarray
+    dst: np.ndarray
+    has_null: bool      # some endpoint is NULL: a NULL node exists
+
+
+def local_graph(edges: DataFrame):
+    """Collect ``edges`` (src, dst) as a LocalGraph when the whole graph
+    passes the gate (driver_bytes vs rm.broadcastMaxBytes), else None.
+    One Spark job: the collect is capped at the edge count the gate
+    could admit, so an oversized graph is never pulled whole. None too
+    when src/dst differ in type or are not string/integral."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    e = edges.select("src", "dst")
+    ts = {type(f.dataType) for f in e.schema.fields}
+    if len(ts) != 1 or not issubclass(ts.pop(), _DRIVER_TYPES):
+        return None
+    spark = edges.sparkSession
+    max_edges = broadcast_cap(spark) // DRIVER_EDGE_BYTES
+    t = e.limit(max_edges + 1).toArrow()
+    if t.num_rows > max_edges:
+        return None
+    both = pa.concat_arrays([t.column("src").combine_chunks(),
+                             t.column("dst").combine_chunks()])
+    ids = pc.unique(both.drop_null())
+    ids = ids.take(pc.sort_indices(ids))
+    if not broadcast_gate(spark, driver_bytes(len(ids), t.num_rows),
+                          if_unknown=False):
+        return None
+    codes = pc.index_in(both, value_set=ids).fill_null(-1)
+    codes = codes.to_numpy(zero_copy_only=False).astype(np.int64)
+    m = t.num_rows
+    return LocalGraph(spark, e.schema.fields[0].dataType, ids, codes[:m],
+                      codes[m:], both.null_count > 0)
+
+
+def _local_frame(g: LocalGraph, name: str, col, dtype, null_value):
+    """The (node, <name>) result as an Arrow-built frame (LocalTableScan):
+    one row per node, plus the NULL node's row when there is one."""
+    import pyarrow as pa
+
+    node, val = g.ids, col
+    if g.has_null:
+        node = pa.concat_arrays([node, pa.nulls(1, node.type)])
+        val = pa.concat_arrays([val, pa.array([null_value], val.type)])
+    schema = T.StructType([T.StructField("node", g.node_type),
+                           T.StructField(name, dtype)])
+    return g.spark.createDataFrame(pa.table([node, val], ["node", name]),
+                                   schema)
+
+
+def _segments(keys: np.ndarray) -> np.ndarray:
+    """Start offsets of the runs of equal values in sorted ``keys``."""
+    return np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]]) \
+        if len(keys) else np.zeros(0, np.int64)
+
+
+def _pagerank_local(g: LocalGraph, iters: int, damping_pct: int):
+    """The Spark loop's integer PageRank over a LocalGraph. Every sum is
+    an int64 reduceat (exact); a contribution sum whose damped product
+    overflows BIGINT raises, as Spark's ANSI arithmetic does."""
+    import pyarrow as pa
+
+    n = len(g.ids)
+    out = g.src >= 0           # a NULL dst still counts in the out-degree
+    deg = np.bincount(g.src[out], minlength=n)  # unweighted: int64 counts
+    live = out & (g.dst >= 0)  # a NULL endpoint never joins
+    order = np.argsort(g.dst[live], kind="stable")
+    src, dst = g.src[live][order], g.dst[live][order]
+    heads = _segments(dst)
+    base = ((100 - damping_pct) * SCALE) // 100
+    has = deg > 0
+    rc = np.zeros(n, np.int64)
+    rc[has] = SCALE // deg[has]
+    for i in range(iters):
+        s = np.zeros(n, np.int64)
+        if len(heads):
+            s[dst[heads]] = np.add.reduceat(rc[src], heads)
+        if s.max(initial=0) > _INT64_MAX // damping_pct:
+            raise OverflowError("pagerank: damped contribution sum "
+                                "overflows BIGINT")
+        if i < iters - 1:
+            rc[has] = (base + (damping_pct * s[has]) // 100) // deg[has]
+    rank = base + (damping_pct * s) // 100 if iters else \
+        np.full(n, SCALE, np.int64)
+    return _local_frame(g, "rank", pa.array(rank, pa.int64()), T.LongType(),
+                        base if iters else SCALE)
+
+
+def _label_propagation_local(g: LocalGraph, iters: int):
+    """The Spark loop's label propagation over a LocalGraph: per
+    iteration, count (dst, src label) votes, keep per dst the highest
+    count and, among those, the smallest label code (= smallest id)."""
+    n = len(g.ids)
+    live = (g.src >= 0) & (g.dst >= 0)
+    src, dst = g.src[live], g.dst[live]
+    label = np.arange(n, dtype=np.int64)
+    for _ in range(iters):
+        keys, cnt = np.unique(dst * n + label[src], return_counts=True)
+        node, lab = keys // n, keys % n     # sorted by (node, label)
+        heads = _segments(node)
+        top = np.repeat(np.maximum.reduceat(cnt, heads),
+                        np.diff(np.r_[heads, len(keys)])) \
+            if len(heads) else cnt
+        win = cnt == top
+        node, lab = node[win], lab[win]
+        first = _segments(node)             # smallest winning label
+        label = label.copy()
+        label[node[first]] = lab[first]
+    return _local_frame(g, "label", g.ids.take(label), g.node_type, None)
+
+
+def _driver_graph(edges, flag, *frames):
+    """The LocalGraph the driver path runs on, or None for a Spark loop:
+    a LocalGraph is used as given; a DataFrame is collected
+    (local_graph) only when the caller left the path to auto-select
+    (flag None) and passed no precomputed frames."""
+    if isinstance(edges, LocalGraph):
+        if flag is not None:
+            raise ValueError("a LocalGraph always runs the driver path")
+        return edges
+    if flag is None and all(f is None for f in frames):
+        return local_graph(edges)
+    return None
+
+
+def _tag(df: DataFrame, path: str, release=lambda: None) -> DataFrame:
+    df.rm_graph_path = path
+    df.rm_broadcast_path = path != "partitioned"
+    df.rm_release_cache = release
+    return df
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -104,7 +285,7 @@ def _releaser(frames: list):
     return release
 
 
-def pagerank(edges: DataFrame, iters: int = 3,
+def pagerank(edges, iters: int = 3,
              damping_pct: int = 85,
              broadcast_ranks=None,
              deg: DataFrame = None, nodes: DataFrame = None) -> DataFrame:
@@ -114,22 +295,30 @@ def pagerank(edges: DataFrame, iters: int = 3,
     classic r = (1-d) + d * sum(r_in/deg_out) formulation, nodes with
     edges only).
 
-    broadcast_ranks=True broadcasts the (node, rank) and degree tables
-    into the per-iteration edge join — each iteration is then a MAP-ONLY
-    pass over the edges plus one small aggregate, no edge shuffle.
-    Right for |nodes| << |edges| (the common web/trade-graph shape).
-    False keeps ranks partitioned (pre-partition edges and ranks on src
-    so the iteration join is co-located). The default None AUTO-selects
-    from the node count (broadcast_path: count x BROADCAST_ROW_BYTES vs
-    rm.broadcastMaxBytes — one count job over the node set per call);
-    the chosen path is exposed as ``result.rm_broadcast_path``. With
-    iters=0 no join runs, so nothing is decided: the flag is reported
-    as given (None included) and construction runs no job."""
+    Three paths, one gate (the module docstring), exposed as
+    ``result.rm_graph_path``:
+    - "driver": ``edges`` is a LocalGraph, or broadcast_ranks is None,
+      no deg/nodes frames are passed and local_graph admits the graph
+      (one bounded Arrow collect at construction); the iterations run
+      in numpy with the same integer semantics;
+    - broadcast_ranks=True ("broadcast") broadcasts the (node, rank)
+      and degree tables into the per-iteration edge join — each
+      iteration is then a MAP-ONLY pass over the edges plus one small
+      aggregate, no edge shuffle. Right for |nodes| << |edges|;
+    - broadcast_ranks=False ("partitioned") keeps ranks partitioned
+      (pre-partition edges and ranks on src so the join is co-located).
+    None falls back from the driver to broadcast_path (count x
+    BROADCAST_ROW_BYTES vs rm.broadcastMaxBytes — one count job over
+    the node set). ``result.rm_broadcast_path`` is False only on the
+    partitioned path. With iters=0 over a DataFrame no join runs, so
+    nothing is decided: rm_graph_path is None, rm_broadcast_path
+    reports the flag as given (None included) and construction runs no
+    job."""
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in (1, 99)")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    if iters == 0:
+    if iters == 0 and not isinstance(edges, LocalGraph):
         # iters=0 means "no propagation": the initial uniform rank of 1.0
         # per node, exactly what the unfused loop returned. Reachable from
         # the user-facing $pageRank builtin with arbitrary iters, so this
@@ -137,8 +326,12 @@ def pagerank(edges: DataFrame, iters: int = 3,
         nodes0 = nodes if nodes is not None else node_set(edges)
         out = nodes0.select("node", F.lit(SCALE).cast("long").alias("rank"))
         out.rm_release_cache = lambda: None
+        out.rm_graph_path = None
         out.rm_broadcast_path = broadcast_ranks
         return out
+    local = _driver_graph(edges, broadcast_ranks, deg, nodes)
+    if local is not None:
+        return _tag(_pagerank_local(local, iters, damping_pct), "driver")
     # LAZY persists break the O(iters^2) lineage blowup: without them,
     # iteration i's plan re-executes every earlier iteration AND the
     # caller's (possibly expensive) edge derivation once per reference —
@@ -193,12 +386,11 @@ def pagerank(edges: DataFrame, iters: int = 3,
                      (F.lit(base)
                       + F.expr(f"({damping_pct} * coalesce(_s, 0)) "
                                f"div 100")).cast("long").alias("rank")))
-    ranks.rm_release_cache = _releaser(cached)
-    ranks.rm_broadcast_path = broadcast_ranks
-    return ranks
+    return _tag(ranks, "broadcast" if broadcast_ranks else "partitioned",
+                _releaser(cached))
 
 
-def label_propagation(edges: DataFrame, iters: int = 2,
+def label_propagation(edges, iters: int = 2,
                       broadcast_labels=None,
                       nodes: DataFrame = None) -> DataFrame:
     """Synchronous label propagation for community detection, made
@@ -209,17 +401,22 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     iterations, engine-exact — the same reproducibility contract as the
     scaled-integer PageRank above.
 
-    Per iteration: one broadcast of the (node, label) table into a
-    map-only edge pass, a (dst, label) count aggregate with map-side
-    partials, and a min-struct argmax — the label table is node-sized
-    (broadcast_labels contract; False pre-partitions instead when the
-    node set itself is huge; the default None auto-selects from the node
-    count exactly like pagerank, exposed as ``result.rm_broadcast_path``).
-    Lazy persists
-    bound the lineage. Returns (node, label).
+    The same three paths under the same gate as pagerank, exposed as
+    ``result.rm_graph_path``: "driver" (a LocalGraph, or the auto
+    default when local_graph admits the graph: numpy votes over int
+    codes, whose order is the node order, so the min-label tie-break is
+    an int compare), or a Spark loop picked by broadcast_labels. Per
+    Spark iteration: one broadcast ("broadcast") or shuffled
+    ("partitioned") join of the (node, label) table into the edge pass,
+    a (dst, label) count aggregate with map-side partials, and a
+    min-struct argmax. Lazy persists bound the lineage. Returns
+    (node, label).
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
+    local = _driver_graph(edges, broadcast_labels, nodes)
+    if local is not None:
+        return _tag(_label_propagation_local(local, iters), "driver")
     e, nodes, broadcast_labels, cached = _loop_inputs(edges, nodes,
                                                       broadcast_labels)
     labels = nodes.select("node", F.col("node").alias("label"))
@@ -251,6 +448,5 @@ def label_propagation(edges: DataFrame, iters: int = 2,
             labels = labels.persist()
             cached.append(labels)
 
-    labels.rm_release_cache = _releaser(cached)
-    labels.rm_broadcast_path = broadcast_labels
-    return labels
+    return _tag(labels, "broadcast" if broadcast_labels else "partitioned",
+                _releaser(cached))

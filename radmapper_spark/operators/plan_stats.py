@@ -29,14 +29,18 @@ def est_plan_bytes(df: DataFrame):
     return est if est < 1 << 62 else None
 
 
+def broadcast_cap(spark) -> int:
+    """``rm.broadcastMaxBytes`` in bytes (256 MiB; an unparseable value
+    means the default)."""
+    try:
+        return int(spark.conf.get(BROADCAST_MAX_BYTES_CONF, str(_DEFAULT_CAP)))
+    except Exception:
+        return _DEFAULT_CAP
+
+
 def broadcast_gate(spark, est_bytes, if_unknown: bool) -> bool:
     """Broadcast a join side of ``est_bytes`` iff it is at most
-    ``rm.broadcastMaxBytes`` (256 MiB; an unparseable value means the
-    default); an unknown size (None) returns ``if_unknown``."""
+    ``broadcast_cap``; an unknown size (None) returns ``if_unknown``."""
     if est_bytes is None:
         return bool(if_unknown)
-    try:
-        cap = int(spark.conf.get(BROADCAST_MAX_BYTES_CONF, str(_DEFAULT_CAP)))
-    except Exception:
-        cap = _DEFAULT_CAP
-    return est_bytes <= cap
+    return est_bytes <= broadcast_cap(spark)

@@ -38,6 +38,18 @@ TABLES = (
 )
 
 
+# Entries of Spark's generated-class cache (spark.sql.codegen.cache.
+# maxEntries, a static conf; Spark's default is 100). Counted with an
+# unbounded cache at 4 cores: the 10 entries of perfbench's
+# entries_small compile 172 distinct classes over a cold and a warm
+# pass at sf0.01 (later rounds over fresh table copies compile none),
+# and one pass over the 138 entries of test_headline at sf0.001 in the
+# same session takes the count to 2,487. At 100 the LRU evicts part of
+# either working set, so every pass recompiles it (Janino, driver CPU
+# per class); this size holds the larger one with headroom.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def get_spark(app_name: str = "radmapper-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus), 8)))
@@ -56,6 +68,8 @@ def get_spark(app_name: str = "radmapper-spark") -> SparkSession:
         # reader rejects; read as epoch-nanos longs and rebuild timestamps
         # in load_tables (truncation to micros matches DuckDB's view).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 

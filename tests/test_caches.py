@@ -294,3 +294,28 @@ def test_probe_index_cache_revalidates_fingerprint(spark, tmp_path):
     # purge reclaims both the live and the retired trees
     ep.purge_probe_indexes()
     assert not os.path.exists(p1) and not os.path.exists(p3)
+
+
+def test_codegen_cache_holds_the_warm_working_set(spark):
+    """graph_communities, materialize_training_shards and decontam_ngram
+    together generate more classes than Spark's default codegen cache
+    holds (100), so under it a repeat run recompiles its evicted
+    classes. The session's cache (session.CODEGEN_CACHE_ENTRIES) holds
+    them: a second run compiles none."""
+    from radmapper_spark import entrypoints as E
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in ("graph_communities", "materialize_training_shards",
+                     "decontam_ngram"):
+            df = E.ENTRIES[name][0](spark, SF_SMOKE)
+            df.collect()
+            release = getattr(df, "rm_release_cache", None)
+            if release is not None:
+                release()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles()
+    assert compiles() == 0

@@ -171,3 +171,151 @@ def test_graph_auto_broadcasts_small_nodes_on_large_edge_scan(spark, tmp_path):
         pr.rm_release_cache()
     finally:
         spark.conf.unset("rm.broadcastMaxBytes")
+
+
+# ============ driver path vs both Spark loops (one gate, three paths) ====
+# string ids whose byte order differs from their numeric order (c10 <
+# c9), a repeated edge (q -> a, which wins a its label by count), nodes
+# with no in-edges (p, q) and label-count ties (x hears c9 and c10 once
+# each; m hears a and b once each)
+_STR_EDGES = [("c9", "x"), ("c10", "x"), ("a", "m"), ("b", "m"),
+              ("b", "a"), ("m", "b"), ("x", "c9"), ("p", "c10"),
+              ("q", "a"), ("q", "a"), ("c10", "c9"), ("x", "a")]
+_LONG_EDGES = [(2 ** 62, -5), (-5, 2 ** 62), (7, -5), (7, 2 ** 40),
+               (2 ** 40, 7), (2 ** 40, 7), (-(2 ** 50), 7), (9, 7),
+               (9, 2 ** 62)]
+
+
+def _rows(df):
+    out = sorted((tuple(r) for r in df.collect()), key=repr)
+    df.rm_release_cache()
+    return out
+
+
+def _three_paths(op, edges, iters):
+    """(driver rows, broadcast-loop rows, partitioned-loop rows)."""
+    flag = ("broadcast_ranks" if op is graph.pagerank
+            else "broadcast_labels")
+    auto = op(edges, iters=iters)
+    assert auto.rm_graph_path == "driver"
+    bc = op(edges, iters=iters, **{flag: True})
+    part = op(edges, iters=iters, **{flag: False})
+    assert (bc.rm_graph_path, part.rm_graph_path) == ("broadcast",
+                                                     "partitioned")
+    return _rows(auto), _rows(bc), _rows(part)
+
+
+@pytest.mark.parametrize("ddl,edges", [
+    ("src string, dst string", _STR_EDGES),
+    ("src long, dst long", _LONG_EDGES),
+], ids=["string", "long"])
+def test_driver_path_equals_spark_loops(spark, ddl, edges):
+    """The numpy kernels apply the Spark loops' integer semantics:
+    equal rows for pagerank (iters 1-3) and label propagation (iters
+    1-2) on all three paths."""
+    e = spark.createDataFrame(edges, ddl)
+    for iters in (1, 2, 3):
+        d, b, p = _three_paths(graph.pagerank, e, iters)
+        assert d == b == p, f"pagerank iters={iters}"
+    for iters in (1, 2):
+        d, b, p = _three_paths(graph.label_propagation, e, iters)
+        assert d == b == p, f"label_propagation iters={iters}"
+
+
+def test_driver_label_ties_break_on_byte_order(spark):
+    """Ties go to the SMALLEST id in the node column's Spark order: for
+    strings that is byte order, so x adopts c10 over c9."""
+    e = spark.createDataFrame(_STR_EDGES, "src string, dst string")
+    lp = graph.label_propagation(e, iters=1)
+    assert lp.rm_graph_path == "driver"
+    got = dict(_rows(lp))
+    assert got["x"] == "c10" and got["m"] == "a"
+    assert got["a"] == "q"  # the repeated edge counts twice
+    assert got["p"] == "p"  # no in-edges: keeps its own label
+
+
+def test_driver_path_null_endpoint(spark):
+    """A NULL endpoint: every path gives the same rows (the NULL node
+    keeps its base rank / NULL label and never passes a vote on)."""
+    e = spark.createDataFrame(_STR_EDGES + [("a", None), (None, "b")],
+                              "src string, dst string")
+    for op, iters in ((graph.pagerank, 2), (graph.label_propagation, 2)):
+        d, b, p = _three_paths(op, e, iters)
+        assert d == b == p
+        assert any(r[0] is None for r in d)
+
+
+def test_driver_pagerank_sums_exact_above_2_53(spark):
+    """30,001 sources of out-degree 3 feed one hub: its contribution sum
+    (30001 x (10^12 div 3) ~ 1e16, odd) is past 2^53, where a float64
+    sum loses the low bits (pairwise or sequential). The driver path
+    must equal the Spark loop."""
+    e = (spark.range(30001)
+         .select(F.col("id").alias("src"),
+                 F.explode(F.array(*(F.lit(-k).cast("long")
+                                     for k in (1, 2, 3)))).alias("dst")))
+    auto = graph.pagerank(e, iters=1)
+    assert auto.rm_graph_path == "driver"
+    d = dict(_rows(auto))
+    b = dict(_rows(graph.pagerank(e, iters=1, broadcast_ranks=True)))
+    assert d[-1] > 85 * 2 ** 53 // 100 and d == b
+
+
+def test_driver_gate_sides(spark):
+    """The driver estimate (graph.driver_bytes) passes at exactly
+    rm.broadcastMaxBytes; one byte below it, auto picks a Spark loop
+    (here the broadcast one: the node table alone still fits), with the
+    same rows."""
+    e = spark.createDataFrame(_STR_EDGES, "src string, dst string")
+    n_nodes = len({x for ed in _STR_EDGES for x in ed})
+    est = graph.driver_bytes(n_nodes, len(_STR_EDGES))
+    base = _rows(graph.pagerank(e, iters=2, broadcast_ranks=False))
+    try:
+        for cap, path in ((est, "driver"), (est - 1, "broadcast"),
+                          (n_nodes * graph.BROADCAST_ROW_BYTES, "broadcast")):
+            spark.conf.set("rm.broadcastMaxBytes", str(cap))
+            for op in (graph.pagerank, graph.label_propagation):
+                out = op(e, iters=2)
+                assert out.rm_graph_path == path, (cap, op.__name__)
+                assert out.rm_broadcast_path is True
+                rows = _rows(out)
+                if op is graph.pagerank:
+                    assert rows == base
+    finally:
+        spark.conf.unset("rm.broadcastMaxBytes")
+
+
+def test_local_graph_rejects_flags_and_codes_in_spark_order(spark):
+    e = spark.createDataFrame(_STR_EDGES, "src string, dst string")
+    g = graph.local_graph(e)
+    assert g.ids.to_pylist() == sorted(g.ids.to_pylist(),
+                                       key=lambda s: s.encode())
+    assert g.ids.to_pylist().index("c10") < g.ids.to_pylist().index("c9")
+    with pytest.raises(ValueError, match="LocalGraph"):
+        graph.pagerank(g, iters=1, broadcast_ranks=True)
+    assert graph.pagerank(g, iters=1).rm_graph_path == "driver"
+
+
+def test_trade_graph_repeat_build_runs_no_job(spark):
+    """The trade graph's memo holds a LocalGraph at the fixture SFs, so
+    a repeat build of either graph entry runs no Spark job and persists
+    no frame."""
+    from radmapper_spark import entrypoints as E
+    from radmapper_spark.session import memo_stats
+
+    sc = spark.sparkContext
+    E.graph_pagerank(spark, SF_SMOKE)  # the memo build
+    g, bc = E._trade_edges(spark, SF_SMOKE)
+    assert isinstance(g["edges"], graph.LocalGraph) and bc is None
+    hits = memo_stats()["edges"]["hits"]
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("graph_repeat", "graph_repeat")
+    try:
+        dfs = [E.graph_pagerank(spark, SF_SMOKE),
+               E.graph_communities(spark, SF_SMOKE)]
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("graph_repeat") == []
+    assert memo_stats()["edges"]["hits"] == hits + 2
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    assert all(len(df.collect()) > 0 for df in dfs)

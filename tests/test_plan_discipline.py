@@ -62,6 +62,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _python_rdd_scans(df) -> list:
+    """Leaves of ``df``'s plan that scan an RDD built by a Python
+    worker (a list-built createDataFrame: each action re-runs the
+    worker). A localCheckpoint also prints as ``Scan ExistingRDD``, but
+    its RDD is the JVM's own, so the lineage is what tells them apart."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).simpleString(1) for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "LogicalRDD"
+            and "PythonRDD" in leaves.apply(i).rdd().toDebugString()]
+
+
 def _release(df):
     rel = getattr(df, "rm_release_cache", None)
     if rel is not None:
@@ -70,7 +81,9 @@ def _release(df):
 
 def test_no_python_eval_outside_allowlist(spark):
     """Every entry's physical plan is pure JVM except the documented
-    Arrow kernels (NOTHING uses row-at-a-time BatchEvalPython), AND
+    Arrow kernels (NOTHING uses row-at-a-time BatchEvalPython), no
+    entry scans a Python-built RDD (local frames come from Arrow, a
+    LocalTableScan; _python_rdd_scans), AND
     constructing an entry's DataFrame runs no Spark jobs beyond the
     load_tables schema reads on a REPEAT build (eager scalar collects
     hide extra scans the optimizer can't reuse; codebook fits are
@@ -103,6 +116,7 @@ def test_no_python_eval_outside_allowlist(spark):
     baseline = jobs_during("lazy_baseline",
                            lambda: entrymod.load_tables(spark, SF))
     offenders, missing_arrow, eager, oversized = [], [], [], []
+    rdd_scans = []
     for name, fn in entrymod.queries().items():
         # warm-up build doubles as the plan audit (codebook fits and
         # memoized collects land here, outside the measured build)
@@ -121,6 +135,9 @@ def test_no_python_eval_outside_allowlist(spark):
         max_line = max(len(ln) for ln in plan.splitlines())
         if max_line > 25_000 or len(plan) > 200_000:
             oversized.append((name, len(plan), max_line))
+        scans = _python_rdd_scans(df) if "ExistingRDD" in plan else []
+        if scans:
+            rdd_scans.append((name, scans))
         _release(df)
         has_py = [w for w in PY_NODES if w in plan]
         if "BatchEvalPython" in has_py:
@@ -139,6 +156,7 @@ def test_no_python_eval_outside_allowlist(spark):
         if n > baseline:
             eager.append((name, n - baseline))
     assert not offenders, f"python leaked into plans: {offenders}"
+    assert not rdd_scans, f"entries scan a Python-built RDD: {rdd_scans}"
     # the allowlist must stay honest too: if an entry went pure-JVM,
     # remove it from ARROW_ALLOWED rather than carrying a stale exception
     assert not missing_arrow, f"ARROW_ALLOWED is stale: {missing_arrow}"
