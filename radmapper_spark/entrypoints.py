@@ -1460,7 +1460,7 @@ def image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs, id_col="doc_id").select(
             F.col("doc_id").alias("media_id"), "component")
     # connected_components consumes the pairs EAGERLY at construction
-    # (localCheckpoint + count on its first lines), so the persisted
+    # (localCheckpoint + the gate's bounded collect), so the persisted
     # phash base is dead by now — release it here instead of forwarding
     # a handle the caller has to know about (r11 second review)
     pairs.rm_release_cache()

@@ -711,131 +711,15 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
     return out
 
 
-# -------------------------------------------------------------- components
-
-def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
-                         nodes: DataFrame | None = None, node_col: str = "node",
-                         max_iter: int = 25,
-                         local_threshold: int = 2_000_000) -> DataFrame:
-    """(node, component) labeling: component = MIN node id in the component.
-
-    The grouping step that turns near-dup PAIRS into dedup GROUPS. Above
-    `local_threshold` edges it runs the alternating large-star / small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): converges in O(log^2 n) rounds regardless of
-    component diameter — a plain min-label propagation needs diameter
-    rounds, which a 100M-doc boilerplate chain can make arbitrarily deep.
-
-    Every round is two (groupBy-min + equi-join) passes — the per-node state
-    is ONE bigint (its minimum neighbor), never a collect_list, so a hub
-    node with 10M near-dups costs the same as a pair. Lineage is truncated
-    per round with localCheckpoint (an iterative DataFrame loop otherwise
-    compounds the plan until planning dominates); convergence is the direct
-    star-forest test (no root appears as a child), so no confirm round.
-
-    At or below `local_threshold` edges a driver union-find fast path runs
-    instead — the same size-gated strategy switch as a broadcast join; the
-    collect is bounded by the gate.
-
-    Returns one row per node appearing in `edges` (plus every node of
-    `nodes`, if given — isolated nodes label themselves).
-    """
-    e = (edges.select(F.col(src).cast("bigint").alias("u"),
-                      F.col(dst).cast("bigint").alias("v"))
-         .filter(F.col("u") != F.col("v")))
-    # canonical orientation (max, min): the small-star input shape
-    e = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")) \
-         .distinct().localCheckpoint(eager=True)
-
-    n_edges = e.count()
-    if n_edges <= local_threshold:
-        # SIZE-GATED fast path (same idea as Spark's broadcast threshold):
-        # a <=2M-edge graph is <=~32 MB — union-find on the driver beats
-        # ~5 distributed rounds x ~6 stages of scheduling + codegen. The
-        # collect is bounded by the gate; past it, the distributed loop
-        # below is the path. (LSH-gated near-dup graphs usually land here
-        # even at huge corpus sizes: edges ~ dups, not docs^2.)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        t = e.toArrow()
-        for u, v in zip(t.column("u").to_pylist(), t.column("v").to_pylist()):
-            ra, rb = find(u), find(v)
-            if ra != rb:
-                if ra < rb:
-                    ra, rb = rb, ra
-                parent[ra] = rb  # attach larger root under smaller
-        # every key of parent is attached under a root and no root is a
-        # key, so the two lists are disjoint: one row per node. Built as
-        # Arrow, the frame is a LocalTableScan (a list-built frame would
-        # scan a PythonRDD, starting a Python worker on every action)
-        import pyarrow as pa
-        ids = list(parent) + sorted(set(map(find, parent)))
-        labeled = edges.sparkSession.createDataFrame(
-            pa.table({node_col: pa.array(ids, pa.int64()),
-                      "component": pa.array([find(x) for x in ids],
-                                            pa.int64())}),
-            f"{node_col} bigint, component bigint")
-    else:
-        def _is_star_forest(df) -> bool:
-            # fixpoint test: no root (v) is also a child (u) — directly the
-            # semantic goal, no confirm round needed
-            return (df.select("v").join(df.select(F.col("u").alias("v")),
-                                        "v", "leftsemi").isEmpty())
-
-        for _ in range(max_iter):
-            # LARGE-STAR: over the symmetric neighborhood, attach every
-            # strictly-larger neighbor v of u to m = min(N(u) + {u})
-            sym = e.unionByName(e.select(F.col("v").alias("u"),
-                                         F.col("u").alias("v")))
-            mins = (sym.groupBy("u").agg(F.min("v").alias("mv"))
-                    .select("u", F.least("u", "mv").alias("m")))
-            e = (sym.join(mins, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v"))
-                 .distinct())
-            # SMALL-STAR: edges oriented (u > v); attach u and all its
-            # smaller neighbors to m = min(N(u)); nothing for v == m
-            mins = e.groupBy("u").agg(F.min("v").alias("m"))
-            e = (e.join(mins, "u")
-                 .filter(F.col("v") != F.col("m"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .unionByName(mins.select("u", F.col("m").alias("v")))
-                 .select(F.greatest("u", "v").alias("u"),
-                         F.least("u", "v").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-            if _is_star_forest(e):
-                break
-        # fixpoint edges are stars (node -> root): label both endpoints
-        labeled = (e.select(F.col("u").alias(node_col),
-                            F.col("v").alias("component"))
-                   .unionByName(e.select(F.col("v").alias(node_col),
-                                         F.col("v").alias("component")))
-                   .groupBy(node_col).agg(F.min("component").alias("component")))
-    if nodes is not None:
-        allnodes = nodes.select(F.col(node_col).cast("bigint").alias(node_col)).distinct()
-        labeled = (allnodes.join(labeled, on=node_col, how="left")
-                   .select(node_col,
-                           F.coalesce("component", F.col(node_col)).alias("component")))
-    return labeled
-
-
 def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Near-dup GROUP labeling for every document: connected components over
-    a near-dup pair frame (minhash/simhash/jaccard/cosine output), keeping
-    the lowest doc id as the group representative."""
+    """Near-dup GROUP labeling for every document: graph.connected_components
+    (one gate) over a near-dup pair frame (minhash/simhash/jaccard/cosine
+    output), keeping the lowest doc id as the group representative; the
+    pairs are consumed eagerly at construction (checkpoint + gate)."""
+    from .graph import connected_components
+
     comp = connected_components(
-        pairs, src="id_a", dst="id_b",
-        nodes=docs.select(F.col(id_col).alias("node")), node_col="node")
+        pairs, nodes=docs.select(F.col(id_col).alias("node")))
     return comp.select(F.col("node").alias(id_col), "component")
 
 

@@ -1,5 +1,6 @@
-"""Iterative graph algorithms: fixed-iteration PageRank and label
-propagation, each with three execution paths chosen by ONE gate.
+"""Fixed-shape graph algorithms: fixed-iteration PageRank, label
+propagation and connected components, each with its paths chosen by ONE
+gate.
 
 PageRank here runs in SCALED-INTEGER arithmetic (ranks are BIGINTs scaled
 by 1e12; contributions use integer division): every operation is exact
@@ -9,21 +10,24 @@ never have (double summation is partition-order dependent). The rounding
 the integer division introduces is the same rounding a fixed-point HW
 implementation makes; for ranking purposes it is far below rank gaps.
 Label propagation is made deterministic the same way (min-label
-tie-break), so all three paths return the same rows.
+tie-break), and a component is labeled by its minimum id, so every path
+returns the same rows.
 
 Paths (``result.rm_graph_path``), all under plan_stats.broadcast_gate
 (rm.broadcastMaxBytes):
 
 - "driver": when the whole graph fits the gate (``driver_bytes``), the
   edge table is collected once as Arrow (a bounded collect) into
-  int-coded numpy arrays (``LocalGraph``) and the fixed iterations run
-  on the driver; the (node, value) result is one Arrow-built frame (a
-  LocalTableScan). No per-iteration job, exchange or persist.
-- "broadcast": the per-iteration (node, value) table is broadcast into
-  a map-only edge pass — for |nodes| << |edges| graphs too big to
-  collect.
-- "partitioned": ranks/labels stay partitioned and each iteration join
-  shuffles — for node sets too big to broadcast.
+  int-coded numpy arrays (``LocalGraph``) and the algorithm runs on the
+  driver (numpy iterations, or a union-find for components); the
+  (node, value) result is one Arrow-built frame (a LocalTableScan). No
+  per-iteration job, exchange or persist.
+- "broadcast" (PageRank, label propagation): the per-iteration
+  (node, value) table is broadcast into a map-only edge pass — for
+  |nodes| << |edges| graphs too big to collect.
+- "partitioned": the per-node state stays partitioned and each
+  iteration join shuffles — for node sets too big to broadcast; for
+  components, the large-star/small-star loop.
 
 Spark-loop scale shape per iteration: one join of edges⋈ranks on src,
 one groupBy(dst) with map-side partial sums. Fixed iterations -> lineage
@@ -74,7 +78,8 @@ BROADCAST_ROW_BYTES = 160
 # code arrays, 41), and the LocalGraph then holds 16 B/edge. Label
 # propagation's iteration peaks ~101 B/edge above that (int64 pair
 # keys, np.unique's sort copy, counts, the (dst, label) split), PageRank
-# ~38. The JVM buffers the collected Arrow batches too (24 B/edge
+# ~38, the components union-find ~84 (tracemalloc: the two Python int
+# lists of the codes; its parent list is per node). The JVM buffers the collected Arrow batches too (24 B/edge
 # payload). Worst case ~141 B/edge, rounded up: the 256 MiB default
 # admits ~1.7M edges, the trade graph at sf0.1 (~1M edges) included.
 DRIVER_EDGE_BYTES = 160
@@ -216,6 +221,30 @@ def _label_propagation_local(g: LocalGraph, iters: int):
         label = label.copy()
         label[node[first]] = lab[first]
     return _local_frame(g, "label", g.ids.take(label), g.node_type, None)
+
+
+def _components_local(g: LocalGraph):
+    """Connected components over a LocalGraph: a union-find over the int
+    codes (union by smaller code, path compression). Codes follow the
+    node order, so every root is its component's minimum id."""
+    import pyarrow as pa
+
+    parent = list(range(len(g.ids)))
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in zip(g.src.tolist(), g.dst.tolist()):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    root = pa.array([find(x) for x in range(len(parent))], pa.int64())
+    return _local_frame(g, "component", g.ids.take(root), g.node_type, None)
 
 
 def _driver_graph(edges, flag, *frames):
@@ -450,3 +479,78 @@ def label_propagation(edges, iters: int = 2,
 
     return _tag(labels, "broadcast" if broadcast_labels else "partitioned",
                 _releaser(cached))
+
+
+def connected_components(edges: DataFrame, nodes: DataFrame = None,
+                         max_iter: int = 25) -> DataFrame:
+    """(node, component) labeling of an (id_a, id_b) pair frame,
+    component = the MIN node id (BIGINT): the step that turns near-dup
+    PAIRS into dedup GROUPS. Self-loops and NULL-endpoint edges are
+    dropped. One row per node of the remaining edges or, given ``nodes``
+    (a ``node`` column), per distinct node of it (isolated nodes label
+    themselves).
+
+    The canonical (max, min) distinct edge frame is checkpointed once;
+    local_graph then picks ``result.rm_graph_path``: "driver" runs
+    _components_local, "partitioned" the alternating large-star /
+    small-star loop (Kiveris et al., SoCC'14): O(log^2 n) rounds whatever
+    the component diameter (min-label propagation needs diameter rounds),
+    two (groupBy-min + equi-join) passes per round over ONE bigint of
+    per-node state (a 10M-dup hub costs what a pair does), lineage cut
+    per round by localCheckpoint, and the star-forest test (no root is a
+    child) as the fixpoint.
+    """
+    e = (edges.select(F.col("id_a").cast("bigint").alias("u"),
+                      F.col("id_b").cast("bigint").alias("v"))
+         .filter(F.col("u") != F.col("v")))
+    # canonical orientation (max, min): the small-star input shape
+    e = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")) \
+         .distinct().localCheckpoint(eager=True)
+    local = local_graph(e.toDF("src", "dst"))
+    if local is not None:
+        labeled, path = _components_local(local), "driver"
+    else:
+        def _is_star_forest(df) -> bool:
+            # fixpoint test: no root (v) is also a child (u) — directly the
+            # semantic goal, no confirm round needed
+            return (df.select("v").join(df.select(F.col("u").alias("v")),
+                                        "v", "leftsemi").isEmpty())
+
+        for _ in range(max_iter):
+            # LARGE-STAR: over the symmetric neighborhood, attach every
+            # strictly-larger neighbor v of u to m = min(N(u) + {u})
+            sym = e.unionByName(e.select(F.col("v").alias("u"),
+                                         F.col("u").alias("v")))
+            mins = (sym.groupBy("u").agg(F.min("v").alias("mv"))
+                    .select("u", F.least("u", "mv").alias("m")))
+            e = (sym.join(mins, "u")
+                 .filter(F.col("v") > F.col("u"))
+                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                 .filter(F.col("u") != F.col("v"))
+                 .distinct())
+            # SMALL-STAR: edges oriented (u > v); attach u and all its
+            # smaller neighbors to m = min(N(u)); nothing for v == m
+            mins = e.groupBy("u").agg(F.min("v").alias("m"))
+            e = (e.join(mins, "u")
+                 .filter(F.col("v") != F.col("m"))
+                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                 .unionByName(mins.select("u", F.col("m").alias("v")))
+                 .select(F.greatest("u", "v").alias("u"),
+                         F.least("u", "v").alias("v"))
+                 .distinct()
+                 .localCheckpoint(eager=True))
+            if _is_star_forest(e):
+                break
+        # fixpoint edges are stars (node -> root): label both endpoints
+        labeled = (e.select(F.col("u").alias("node"),
+                            F.col("v").alias("component"))
+                   .unionByName(e.select(F.col("v").alias("node"),
+                                         F.col("v").alias("component")))
+                   .groupBy("node").agg(F.min("component").alias("component")))
+        path = "partitioned"
+    if nodes is not None:
+        allnodes = nodes.select(F.col("node").cast("bigint")).distinct()
+        labeled = (allnodes.join(labeled, "node", "left")
+                   .select("node", F.coalesce("component", "node")
+                           .alias("component")))
+    return _tag(labeled, path)

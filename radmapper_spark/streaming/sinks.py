@@ -120,115 +120,59 @@ def start_neardup_probe(docs_stream: DataFrame, index_path: str,
             jaccard_threshold=jaccard_threshold, hash_mode=hash_mode))
 
 
-# Driver union-find bound for the per-micro-batch intra pair graph —
-# the same documented-gate pattern as dedup.dedup_groups' fast path
-# (micro-batches are operator-sized by contract; a replay avalanche
-# that exceeds this raises rather than silently collecting unbounded
-# rows onto the driver).
-INTRA_PAIRS_MAX_CONF = "rm.stream.intraPairsMax"
-INTRA_PAIRS_MAX_DEFAULT = 2_000_000
-
-
 def _resolve_admission(batch_df: DataFrame, id_col: str,
                        hits: DataFrame, intra: DataFrame,
                        est_col: str):
     """TRANSITIVE intra-batch admission for the streaming ingest loops:
-    near-dup pairs inside a micro-batch are clustered by connected
-    components (near-duplication is treated as an equivalence over the
-    batch, matching the batch-side dedup_groups operator), then
+    near-dup pairs inside a micro-batch (integral ids, id_a < id_b; a
+    repeated pair counts once) cluster by graph.connected_components —
+    near-duplication as an equivalence over the batch, as in the batch
+    dedup_groups, under the same gate, so no batch size fails — then
 
     - a cluster containing ANY index-rejected member is rejected
       wholesale (it chains to already-indexed content);
-    - a clean cluster admits its SMALLEST id and rejects the rest.
+    - a clean cluster admits its SMALLEST id (the component label) and
+      rejects the rest.
 
-    This replaces the earlier pairwise larger-id-loses rule, whose audit
-    rows could name a "winner" that was itself rejected (by the index,
-    or by an even smaller sibling). The invariant now: **every audit
-    row's index_id references a document that IS in the index once the
-    batch commits** — a clean-cluster loser references the admitted
-    representative (with the direct pair estimate when the loser pairs
-    with it, NULL when it only chains transitively), and a tainted-
-    cluster loser references the index document its cluster chains to
-    (NULL estimate, same reason).
+    Invariant: **every audit row's index_id references a document that
+    IS in the index once the batch commits** — a clean-cluster loser
+    references the admitted representative (with the direct pair
+    estimate, NULL when it only chains transitively), a tainted-cluster
+    loser the index document its cluster chains to: the smallest
+    index_id hit by its smallest hit member (NULL estimate). Returns
+    lazy (audit_extra, rejected_ids) frames — audit rows for intra
+    losers in the hits schema, and a 1-column ``rid`` frame of every
+    rejected id for the survivor anti-join."""
+    from pyspark.sql import Window
 
-    The component pass runs on the driver over the batch's pair list
-    (bounded by rm.stream.intraPairsMax, default 2M — raises above it);
-    everything row-scaled (probe, signatures, audit write, index
-    append) stays distributed. Returns (audit_extra, rejected_ids) —
-    audit rows for intra losers in the hits schema, and a 1-column
-    ``rid`` frame of every rejected id for the survivor anti-join."""
-    from pyspark.sql import types as T
+    from ..operators.graph import connected_components
 
-    spark = batch_df.sparkSession
-    try:
-        cap = int(spark.conf.get(INTRA_PAIRS_MAX_CONF,
-                                 str(INTRA_PAIRS_MAX_DEFAULT)))
-    except Exception:
-        cap = INTRA_PAIRS_MAX_DEFAULT
-    pairs = intra.select("id_a", "id_b", est_col).limit(cap + 1).collect()
-    if len(pairs) > cap:
-        raise RuntimeError(
-            f"intra-batch near-dup pair graph exceeds {cap} edges "
-            f"({INTRA_PAIRS_MAX_CONF}); shrink the micro-batch (e.g. "
-            f"maxFilesPerTrigger) or raise the conf — the admission "
-            f"component pass is driver-side by design for batch-sized "
-            f"graphs.")
-    # min index target per index-rejected doc (distributed agg; the
-    # collected map is batch-bounded: one row per rejected batch doc)
-    idx_min = {r["new_id"]: r["_tgt"] for r in
-               hits.groupBy("new_id").agg(F.min("index_id").alias("_tgt"))
-               .collect()}
-
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    est_edge = {}
-    for row in pairs:
-        a, b = row["id_a"], row["id_b"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-        est_edge[(a, b)] = row[est_col]  # id_a < id_b by construction
-    comps: dict = {}
-    for x in parent:
-        comps.setdefault(find(x), []).append(x)
-
-    audit, losers = [], []
-    for members in comps.values():
-        hit_members = sorted(m for m in members if m in idx_min)
-        if hit_members:  # tainted: chains to indexed content
-            tgt = idx_min[hit_members[0]]
-            for m in members:
-                if m not in idx_min:  # direct hits are audited already
-                    losers.append(m)
-                    audit.append((m, tgt, None))
-        else:
-            rep = min(members)
-            for m in members:
-                if m != rep:
-                    losers.append(m)
-                    e = est_edge.get((min(m, rep), max(m, rep)))
-                    audit.append((m, rep,
-                                  None if e is None else float(e)))
     id_t = batch_df.schema[id_col].dataType
     idx_t = hits.schema["index_id"].dataType
-    audit_extra = spark.createDataFrame(audit, T.StructType([
-        T.StructField("new_id", id_t),
-        T.StructField("index_id", idx_t),
-        T.StructField(est_col, T.DoubleType())]))
-    rejected = sorted(set(losers) | set(idx_min))
-    rej_df = spark.createDataFrame([(x,) for x in rejected],
-                                   T.StructType([T.StructField("rid", id_t)]))
-    return audit_extra, rej_df
+    intra = (intra.groupBy("id_a", "id_b").agg(F.max(est_col).alias("_est"))
+             .localCheckpoint(eager=True))
+    tgt = hits.groupBy("new_id").agg(F.min("index_id").alias("_tgt"))
+    hit_node = F.when(F.col("_tgt").isNotNull(), F.col("node"))
+    members = (connected_components(intra)
+               .join(tgt, F.col("node") == F.col("new_id"), "left")
+               .withColumn("_ctgt", F.min_by("_tgt", hit_node)
+                           .over(Window.partitionBy("component"))))
+    # direct hits are audited by the probe already
+    losers = (members.filter(F.col("_tgt").isNull()
+                             & (F.col("_ctgt").isNotNull()
+                                | (F.col("node") != F.col("component"))))
+              .join(intra.select(F.col("id_a").alias("component"),
+                                 F.col("id_b").alias("node"), "_est"),
+                    ["component", "node"], "left"))
+    audit_extra = losers.select(
+        F.col("node").cast(id_t).alias("new_id"),
+        F.coalesce("_ctgt", "component").cast(idx_t).alias("index_id"),
+        F.when(F.col("_ctgt").isNull(), F.col("_est")).cast("double")
+        .alias(est_col))
+    rejected = (losers.select(F.col("node").cast(id_t).alias("rid"))
+                .unionByName(tgt.select(F.col("new_id").cast(id_t)
+                                        .alias("rid"))))
+    return audit_extra, rejected
 
 
 def _admission_loop(stream: DataFrame, out_path: str, checkpoint: str,
@@ -278,10 +222,12 @@ def start_neardup_admission(docs_stream: DataFrame, index_path: str,
 
     Admission is TRANSITIVE per micro-batch (see _resolve_admission):
     intra-batch near-dup pairs (minhash_lsh_pairs over the batch)
-    cluster by connected components; a cluster that chains to indexed
-    content is rejected wholesale, a clean cluster admits its smallest
-    id. Without the intra pass, two identical docs arriving together
-    would both be admitted because neither is in the index yet.
+    cluster by graph.connected_components (driver union-find under
+    rm.broadcastMaxBytes, the Spark star loop above it — no batch-size
+    cap); a cluster that chains to indexed content is rejected
+    wholesale, a clean cluster admits its smallest id. Without the
+    intra pass, two identical docs arriving together would both be
+    admitted because neither is in the index yet.
     Deterministic given the micro-batch contents.
 
     Restart caveat: unlike the pure probe sink, neither the index
@@ -347,13 +293,14 @@ def start_embedding_admission(vec_stream: DataFrame, index_path: str,
     recorded against a vector that IS in the index after the batch
     commits), then ADMIT the surviving vectors (append_to_signlsh_index)
     so future batches see them. Intra-batch duplicates resolve
-    TRANSITIVELY per cluster via _resolve_admission over the batch
-    operator embedding_cosine_pairs (exact cosine, no LSH: the sign-LSH
-    params apply to the index only) — clean clusters admit their
-    smallest id; clusters chaining to indexed content are rejected
-    wholesale. Same restart caveat as the minhash loop: replays append
-    duplicate index AND audit rows (probe answers unaffected; compact /
-    dedupe out-of-band)."""
+    TRANSITIVELY per cluster via _resolve_admission (connected
+    components under the one gate) over the batch operator
+    embedding_cosine_pairs (exact cosine, no LSH: the sign-LSH params
+    apply to the index only) — clean clusters admit their smallest id;
+    clusters chaining to indexed content are rejected wholesale. Same
+    restart caveat as the minhash loop: replays append duplicate index
+    AND audit rows (probe answers unaffected; compact / dedupe
+    out-of-band)."""
     from ..operators.dedup import (append_to_signlsh_index,
                                    embedding_cosine_pairs,
                                    neardup_embedding_vs_index)

@@ -140,7 +140,8 @@ def test_image_dedup_groups_composition(spark):
 
 def test_image_dedup_groups_entry_releases_its_base(spark, monkeypatch):
     """The entrypoint consumes the pairs eagerly (connected components
-    checkpoints at construction) and releases its own persisted phash
+    checkpoints its edge frame and makes the gate's bounded collect at
+    construction) and releases its own persisted phash
     base before returning — no handle to forward, nothing for bench to
     leak (r11 second review: the forwarded handle was dead weight a
     caller had to know to release). The base is captured through the

@@ -802,10 +802,31 @@ def test_salted_join_matches_plain(spark, tables):
     assert len(keys) == 3 and keys[0][1] >= keys[-1][1]
 
 
+def _cc_both_paths(spark, edges, nodes=None):
+    """{node: component} from graph.connected_components on each side of
+    the one gate: the default rm.broadcastMaxBytes admits these graphs
+    (driver union-find); a 1-byte cap forces the large-star/small-star
+    loop. Asserts both paths give the same rows."""
+    from radmapper_spark.operators.graph import connected_components
+    got = {}
+    try:
+        for cap, path in ((None, "driver"), ("1", "partitioned")):
+            if cap is not None:
+                spark.conf.set("rm.broadcastMaxBytes", cap)
+            cc = connected_components(edges, nodes=nodes)
+            assert cc.rm_graph_path == path
+            rows = [(r["node"], r["component"]) for r in cc.collect()]
+            assert len(rows) == len(set(rows)), path
+            got[path] = dict(rows)
+    finally:
+        spark.conf.unset("rm.broadcastMaxBytes")
+    assert got["driver"] == got["partitioned"]
+    return got["driver"]
+
+
 def test_connected_components_vs_union_find(spark):
-    """Random graph: star-algorithm labels must equal brute-force union-find."""
+    """Random graph: both paths' labels must equal brute-force union-find."""
     import random
-    from radmapper_spark.operators.dedup import connected_components
     rng = random.Random(7)
     n = 200
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
@@ -825,23 +846,28 @@ def test_connected_components_vs_union_find(spark):
     expected = {x: find(x) for x in range(n)}
     e = spark.createDataFrame(edges, ["id_a", "id_b"])
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["node"])
-    # BOTH engines must agree with brute force: the driver union-find
-    # fast path (default gate) and the distributed star loop (gate 0)
-    for thr in (2_000_000, 0):
-        got = {r["node"]: r["component"]
-               for r in connected_components(
-                   e, nodes=nodes, local_threshold=thr).collect()}
-        assert got == expected, f"local_threshold={thr}"
+    assert _cc_both_paths(spark, e, nodes) == expected
 
 
 def test_connected_components_long_chain(spark):
-    """A 64-node chain needs multiple star rounds (diameter >> 2)."""
-    from radmapper_spark.operators.dedup import connected_components
+    """A 64-node chain needs multiple star rounds (diameter >> 2) on the
+    Spark loop: a chain is its worst case."""
     e = spark.createDataFrame([(i, i + 1) for i in range(63)], ["id_a", "id_b"])
-    # force the DISTRIBUTED star loop: a chain is its worst case (diameter)
-    out = connected_components(e, local_threshold=0).collect()
-    assert len(out) == 64
-    assert {r["component"] for r in out} == {0}
+    assert _cc_both_paths(spark, e) == {i: 0 for i in range(64)}
+
+
+def test_connected_components_edge_cases(spark):
+    """Self-loops and NULL endpoints drop their edge (a node seen only
+    there is absent unless ``nodes`` names it); repeated and reversed
+    edges count once; negative ids label by the signed minimum."""
+    e = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (5, 5), (7, None), (None, 8),
+         (-3, 4), (4, -10), (-10, -3), (None, None)],
+        "id_a long, id_b long")
+    assert _cc_both_paths(spark, e) == {1: 1, 2: 1, -3: -10, 4: -10,
+                                        -10: -10}
+    nodes = spark.createDataFrame([(5,), (7,), (1,), (4,), (1,)], "node long")
+    assert _cc_both_paths(spark, e, nodes) == {5: 5, 7: 7, 1: 1, 4: -10}
 
 
 def test_dedup_groups_labels_every_doc(spark, tables):

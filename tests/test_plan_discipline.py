@@ -226,8 +226,9 @@ def test_entry_filters_are_pushed_down(spark):
 # entries allowed driver-side jobs during CONSTRUCTION even on a repeat
 # call, with the bounded-by-construction reason
 EAGER_ALLOWED = {
-    # union-find fast path collects the (bounded, <=2M) edge set each call;
-    # the distributed large-star/small-star fallback covers bigger graphs
+    # connected components checkpoints the pair graph and collects it
+    # for the driver union-find (bounded by rm.broadcastMaxBytes) each
+    # call; the large-star/small-star loop covers bigger graphs
     "dedup_groups",
     # persisted-index probes re-open the on-disk index each call (that IS
     # the incremental contract — the index outlives any one batch): the
@@ -328,9 +329,9 @@ def test_band_self_joins_are_shuffled_hash(spark):
 
 def test_engine_conf_keys_are_the_known_set():
     """Every engine conf key (a string literal ``rm.<name>`` anywhere in
-    the package) is one of the two the engine documents: the one
-    broadcast cap (plan_stats.broadcast_gate) and the streaming intra-
-    batch pair cap. A new knob must be added here on purpose."""
+    the package) is the one the engine documents: the one broadcast cap
+    (plan_stats.broadcast_gate), which also gates every driver-side
+    graph collect. A new knob must be added here on purpose."""
     import ast
     import pathlib
     import re
@@ -344,4 +345,4 @@ def test_engine_conf_keys_are_the_known_set():
             if (isinstance(node, ast.Constant) and isinstance(node.value, str)
                     and key.fullmatch(node.value)):
                 found.add(node.value)
-    assert found == {"rm.broadcastMaxBytes", "rm.stream.intraPairsMax"}
+    assert found == {"rm.broadcastMaxBytes"}

@@ -364,23 +364,30 @@ def big_graph(spark, tmp_path_factory):
 
 def test_cc_distributed_equals_driver_unionfind_above_gate(spark, big_graph):
     """The 100x claim for dedup grouping, proven end-to-end: above the
-    2M-edge gate the large-star/small-star loop must label EVERY node
-    identically to the driver union-find (gate lifted to force it) —
-    same components, same min-id labels, zero rows differing."""
-    from radmapper_spark.operators import dedup
+    default rm.broadcastMaxBytes gate the large-star/small-star loop must
+    label EVERY node identically to the driver union-find (gate lifted
+    to force it) — same components, same min-id labels, zero rows
+    differing."""
+    from radmapper_spark.operators import graph
     e = big_graph.select(F.col("src").alias("id_a"),
                          F.col("dst").alias("id_b"))
     n_edges = e.count()
-    assert n_edges > 2_000_000, "fixture must sit above the driver gate"
+    assert n_edges * graph.DRIVER_EDGE_BYTES > 256 << 20, \
+        "fixture must sit above the default driver gate"
 
     t0 = time.time()
-    dist = dedup.connected_components(e).persist()  # default gate: distributed
+    dist = graph.connected_components(e).persist()  # default gate
+    assert dist.rm_graph_path == "partitioned"
     n_dist = dist.count()
     dt_dist = time.time() - t0
 
     t0 = time.time()
-    local = dedup.connected_components(
-        e, local_threshold=50_000_000).persist()  # forced driver union-find
+    spark.conf.set("rm.broadcastMaxBytes", str(8 << 30))
+    try:
+        local = graph.connected_components(e).persist()  # gate lifted
+    finally:
+        spark.conf.unset("rm.broadcastMaxBytes")
+    assert local.rm_graph_path == "driver"
     n_local = local.count()
     dt_local = time.time() - t0
 

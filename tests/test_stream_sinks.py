@@ -336,20 +336,92 @@ def test_resolve_admission_tainted_cluster_rejected_wholesale(spark):
     assert {r.rid for r in rejected.collect()} == {4, 5}
 
 
-def test_resolve_admission_pair_cap_raises(spark):
+def _arrow_df(spark, rows, ddl):
+    """An Arrow-built frame of ``rows`` (a LocalTableScan, no PythonRDD)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    schema = spark.createDataFrame([], ddl).schema
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.fieldNames(), r)) for r in rows],
+        schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def _admit_both_paths(spark, monkeypatch, batch, hits, intra):
+    """_resolve_admission on each side of the one gate: the default cap
+    runs the driver union-find; a 1-byte rm.broadcastMaxBytes forces the
+    large-star/small-star loop (any non-empty pair graph). Checks that
+    neither returned frame scans a PythonRDD and that both caps give the
+    same rows; returns (paths taken, (audit, rejected) sorted rows)."""
+    from radmapper_spark.operators import graph
     from radmapper_spark.streaming.sinks import _resolve_admission
-    batch = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
-    hits = spark.createDataFrame(
-        [], "new_id long, index_id long, est_jaccard double")
-    intra = spark.createDataFrame(
-        [(1, 2, 0.9), (2, 3, 0.8)],
-        "id_a long, id_b long, est_jaccard double")
-    spark.conf.set("rm.stream.intraPairsMax", "1")
+    from tests.test_plan_discipline import _python_rdd_scans
+
+    paths = []
+    cc = graph.connected_components
+
+    def spy(*a, **k):
+        out = cc(*a, **k)
+        paths.append(out.rm_graph_path)
+        return out
+
+    monkeypatch.setattr(graph, "connected_components", spy)
+    b = _arrow_df(spark, [(x,) for x in batch], "doc_id long")
+    h = _arrow_df(spark, hits,
+                  "new_id long, index_id long, est_jaccard double")
+    i = _arrow_df(spark, intra, "id_a long, id_b long, est_jaccard double")
+    got = []
     try:
-        with pytest.raises(RuntimeError, match="intraPairsMax"):
-            _resolve_admission(batch, "doc_id", hits, intra, "est_jaccard")
+        for cap in (None, "1"):
+            if cap is not None:
+                spark.conf.set("rm.broadcastMaxBytes", cap)
+            audit, rejected = _resolve_admission(b, "doc_id", h, i,
+                                                 "est_jaccard")
+            assert _python_rdd_scans(audit) == []
+            assert _python_rdd_scans(rejected) == []
+            got.append((sorted((tuple(r) for r in audit.collect()),
+                               key=lambda r: r[:2]),
+                        sorted(r.rid for r in rejected.collect())))
     finally:
-        spark.conf.unset("rm.stream.intraPairsMax")
+        spark.conf.unset("rm.broadcastMaxBytes")
+    assert got[0] == got[1]
+    return paths, got[0]
+
+
+def test_resolve_admission_same_rows_on_both_gate_sides(spark, monkeypatch):
+    """The clean-chain and tainted-cluster cases, plus a tainted cluster
+    with two hit members (its target is the smallest index_id of the
+    SMALLEST hit member, 150 — not the overall minimum 100): audit and
+    rejected rows are identical on the driver and Spark-loop paths."""
+    got = _admit_both_paths(
+        spark, monkeypatch,
+        batch=[1, 2, 3, 9, 4, 5, 6, 10, 11, 12, 13],
+        hits=[(4, 100, 0.95), (12, 200, 0.9), (12, 150, 0.8),
+              (13, 100, 0.7)],
+        intra=[(1, 2, 0.9), (2, 3, 0.8), (4, 5, 0.9), (10, 11, 0.6),
+               (11, 12, 0.6), (12, 13, 0.6)])
+    want = ([(2, 1, 0.9), (3, 1, None), (5, 100, None), (10, 150, None),
+             (11, 150, None)],
+            [2, 3, 4, 5, 10, 11, 12, 13])
+    assert got == (["driver", "partitioned"], want)
+
+
+def test_resolve_admission_duplicated_pair_audits_once(spark, monkeypatch):
+    """A pair repeated in the intra frame yields one audit row and one
+    rejected id, on both paths."""
+    got = _admit_both_paths(
+        spark, monkeypatch, batch=[1, 2, 3], hits=[],
+        intra=[(1, 2, 0.9), (1, 2, 0.9), (2, 3, 0.8), (2, 3, 0.8)])
+    assert got == (["driver", "partitioned"],
+                   ([(2, 1, 0.9), (3, 1, None)], [2, 3]))
+
+
+def test_resolve_admission_empty_intra(spark, monkeypatch):
+    """No intra pairs: only the index hits are rejected, no audit row
+    (an empty graph passes any cap, so both runs take the driver)."""
+    got = _admit_both_paths(spark, monkeypatch, batch=[1, 2],
+                            hits=[(2, 7, 0.9)], intra=[])
+    assert got == (["driver", "driver"], ([], [2]))
 
 
 def test_embedding_admission_chain_end_to_end(spark, tmp_path):
