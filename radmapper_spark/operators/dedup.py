@@ -719,7 +719,8 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> D
     from .graph import connected_components
 
     comp = connected_components(
-        pairs, nodes=docs.select(F.col(id_col).alias("node")))
+        pairs.select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint")),
+        nodes=docs.select(F.col(id_col).cast("bigint").alias("node")))
     return comp.select(F.col("node").alias(id_col), "component")
 
 

@@ -79,10 +79,14 @@ BROADCAST_ROW_BYTES = 160
 # propagation's iteration peaks ~101 B/edge above that (int64 pair
 # keys, np.unique's sort copy, counts, the (dst, label) split), PageRank
 # ~38, the components union-find ~84 (tracemalloc: the two Python int
-# lists of the codes; its parent list is per node). The JVM buffers the collected Arrow batches too (24 B/edge
-# payload). Worst case ~141 B/edge, rounded up: the 256 MiB default
-# admits ~1.7M edges, the trade graph at sf0.1 (~1M edges) included.
+# lists of the codes; its parent list is per node). The JVM buffers the
+# collected Arrow batches too (24 B/edge payload). Worst case ~141
+# B/edge, rounded up: the 256 MiB default admits ~1.7M edges, the trade
+# graph at sf0.1 (~1M edges) included.
 DRIVER_EDGE_BYTES = 160
+# Round cap of the large-star/small-star loop: it converges in
+# O(log^2 n) rounds, so 25 covers any graph a cluster holds.
+CC_MAX_ROUNDS = 25
 _DRIVER_TYPES = (T.StringType, T.LongType, T.IntegerType, T.ShortType,
                  T.ByteType)
 
@@ -481,14 +485,14 @@ def label_propagation(edges, iters: int = 2,
                 _releaser(cached))
 
 
-def connected_components(edges: DataFrame, nodes: DataFrame = None,
-                         max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame, nodes: DataFrame = None) -> DataFrame:
     """(node, component) labeling of an (id_a, id_b) pair frame,
-    component = the MIN node id (BIGINT): the step that turns near-dup
-    PAIRS into dedup GROUPS. Self-loops and NULL-endpoint edges are
-    dropped. One row per node of the remaining edges or, given ``nodes``
-    (a ``node`` column), per distinct node of it (isolated nodes label
-    themselves).
+    component = the MIN node id, in the ids' own type (the driver path
+    takes string or integral ids; any other type runs the Spark loop):
+    the step that turns near-dup PAIRS into dedup GROUPS. Self-loops and
+    NULL-endpoint edges are dropped. One row per node of the remaining
+    edges or, given ``nodes`` (a ``node`` column of the same type), per
+    distinct node of it (isolated nodes label themselves).
 
     The canonical (max, min) distinct edge frame is checkpointed once;
     local_graph then picks ``result.rm_graph_path``: "driver" runs
@@ -500,8 +504,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame = None,
     per round by localCheckpoint, and the star-forest test (no root is a
     child) as the fixpoint.
     """
-    e = (edges.select(F.col("id_a").cast("bigint").alias("u"),
-                      F.col("id_b").cast("bigint").alias("v"))
+    e = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
          .filter(F.col("u") != F.col("v")))
     # canonical orientation (max, min): the small-star input shape
     e = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")) \
@@ -516,7 +519,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame = None,
             return (df.select("v").join(df.select(F.col("u").alias("v")),
                                         "v", "leftsemi").isEmpty())
 
-        for _ in range(max_iter):
+        for _ in range(CC_MAX_ROUNDS):
             # LARGE-STAR: over the symmetric neighborhood, attach every
             # strictly-larger neighbor v of u to m = min(N(u) + {u})
             sym = e.unionByName(e.select(F.col("v").alias("u"),
@@ -549,7 +552,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame = None,
                    .groupBy("node").agg(F.min("component").alias("component")))
         path = "partitioned"
     if nodes is not None:
-        allnodes = nodes.select(F.col("node").cast("bigint")).distinct()
+        allnodes = nodes.select("node").distinct()
         labeled = (allnodes.join(labeled, "node", "left")
                    .select("node", F.coalesce("component", "node")
                            .alias("component")))

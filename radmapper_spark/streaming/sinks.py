@@ -124,7 +124,7 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
                        hits: DataFrame, intra: DataFrame,
                        est_col: str):
     """TRANSITIVE intra-batch admission for the streaming ingest loops:
-    near-dup pairs inside a micro-batch (integral ids, id_a < id_b; a
+    near-dup pairs inside a micro-batch (id_a < id_b, in any id type; a
     repeated pair counts once) cluster by graph.connected_components —
     near-duplication as an equivalence over the batch, as in the batch
     dedup_groups, under the same gate, so no batch size fails — then
@@ -140,9 +140,9 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
     estimate, NULL when it only chains transitively), a tainted-cluster
     loser the index document its cluster chains to: the smallest
     index_id hit by its smallest hit member (NULL estimate). Returns
-    lazy (audit_extra, rejected_ids) frames — audit rows for intra
-    losers in the hits schema, and a 1-column ``rid`` frame of every
-    rejected id for the survivor anti-join."""
+    (audit_extra, rejected_ids) frames over one checkpointed loser set —
+    audit rows for intra losers in the hits schema, and a 1-column
+    ``rid`` frame of every rejected id for the survivor anti-join."""
     from pyspark.sql import Window
 
     from ..operators.graph import connected_components
@@ -163,10 +163,11 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
                                 | (F.col("node") != F.col("component"))))
               .join(intra.select(F.col("id_a").alias("component"),
                                  F.col("id_b").alias("node"), "_est"),
-                    ["component", "node"], "left"))
+                    ["component", "node"], "left")
+              .localCheckpoint(eager=True))  # read by both outputs
     audit_extra = losers.select(
         F.col("node").cast(id_t).alias("new_id"),
-        F.coalesce("_ctgt", "component").cast(idx_t).alias("index_id"),
+        F.coalesce("_ctgt", F.col("component").cast(idx_t)).alias("index_id"),
         F.when(F.col("_ctgt").isNull(), F.col("_est")).cast("double")
         .alias(est_col))
     rejected = (losers.select(F.col("node").cast(id_t).alias("rid"))

@@ -870,11 +870,29 @@ def test_connected_components_edge_cases(spark):
     assert _cc_both_paths(spark, e, nodes) == {5: 5, 7: 7, 1: 1, 4: -10}
 
 
+def test_connected_components_string_ids(spark):
+    """String ids keep their type and label by the byte-order minimum on
+    both paths: '010' and '10' stay two nodes, 'B' < 'a'."""
+    from radmapper_spark.operators.graph import connected_components
+    e = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("010", "10"), ("x", "x"), ("a", "B")],
+        "id_a string, id_b string")
+    assert dict(connected_components(e).dtypes) == {"node": "string",
+                                                    "component": "string"}
+    nodes = spark.createDataFrame([("x",), ("10",)], "node string")
+    assert _cc_both_paths(spark, e) == {"a": "B", "b": "B", "c": "B",
+                                        "B": "B", "010": "010",
+                                        "10": "010"}
+    assert _cc_both_paths(spark, e, nodes) == {"x": "x", "10": "010"}
+
+
 def test_dedup_groups_labels_every_doc(spark, tables):
-    """Exact-dup pairs -> groups: every doc labeled, copies share a group."""
+    """Exact-dup pairs -> groups: every doc labeled, copies share a group;
+    int ids come out as BIGINT (node and component)."""
     from radmapper_spark.operators import dedup
     from pyspark.sql import functions as F
-    docs = tables["documents"]
+    docs = tables["documents"].withColumn("doc_id",
+                                          F.col("doc_id").cast("int"))
     norm = docs.select(F.col("doc_id"),
                        dedup.normalize_text(F.col("text")).alias("t"))
     pairs = (norm.alias("a").join(norm.alias("b"), "t")
@@ -882,6 +900,7 @@ def test_dedup_groups_labels_every_doc(spark, tables):
              .select(F.col("a.doc_id").alias("id_a"),
                      F.col("b.doc_id").alias("id_b")))
     out = dedup.dedup_groups(docs, pairs)
+    assert dict(out.dtypes) == {"doc_id": "bigint", "component": "bigint"}
     assert out.count() == docs.count()
     # group count == number of distinct normalized texts
     assert out.select("component").distinct().count() == norm.select("t").distinct().count()

@@ -347,12 +347,13 @@ def _arrow_df(spark, rows, ddl):
     return spark.createDataFrame(table, schema)
 
 
-def _admit_both_paths(spark, monkeypatch, batch, hits, intra):
+def _admit_both_paths(spark, monkeypatch, batch, hits, intra, id_t="long"):
     """_resolve_admission on each side of the one gate: the default cap
     runs the driver union-find; a 1-byte rm.broadcastMaxBytes forces the
-    large-star/small-star loop (any non-empty pair graph). Checks that
-    neither returned frame scans a PythonRDD and that both caps give the
-    same rows; returns (paths taken, (audit, rejected) sorted rows)."""
+    large-star/small-star loop (any non-empty pair graph). Every id
+    column is of type ``id_t``. Checks that neither returned frame scans
+    a PythonRDD and that both caps give the same rows; returns (paths
+    taken, (audit, rejected) sorted rows)."""
     from radmapper_spark.operators import graph
     from radmapper_spark.streaming.sinks import _resolve_admission
     from tests.test_plan_discipline import _python_rdd_scans
@@ -366,10 +367,11 @@ def _admit_both_paths(spark, monkeypatch, batch, hits, intra):
         return out
 
     monkeypatch.setattr(graph, "connected_components", spy)
-    b = _arrow_df(spark, [(x,) for x in batch], "doc_id long")
+    b = _arrow_df(spark, [(x,) for x in batch], f"doc_id {id_t}")
     h = _arrow_df(spark, hits,
-                  "new_id long, index_id long, est_jaccard double")
-    i = _arrow_df(spark, intra, "id_a long, id_b long, est_jaccard double")
+                  f"new_id {id_t}, index_id {id_t}, est_jaccard double")
+    i = _arrow_df(spark, intra,
+                  f"id_a {id_t}, id_b {id_t}, est_jaccard double")
     got = []
     try:
         for cap in (None, "1"):
@@ -414,6 +416,21 @@ def test_resolve_admission_duplicated_pair_audits_once(spark, monkeypatch):
         intra=[(1, 2, 0.9), (1, 2, 0.9), (2, 3, 0.8), (2, 3, 0.8)])
     assert got == (["driver", "partitioned"],
                    ([(2, 1, 0.9), (3, 1, None)], [2, 3]))
+
+
+def test_resolve_admission_string_ids(spark, monkeypatch):
+    """String ids keep their type and compare in byte order on both
+    paths: '010' and '10' are distinct documents ('010' is the smaller,
+    so it is kept), and a tainted cluster's target is the byte-order
+    smallest index_id of its hit member ('i10' < 'i9')."""
+    got = _admit_both_paths(
+        spark, monkeypatch, batch=["p1", "p2", "p10", "010", "10", "q"],
+        hits=[("p2", "i9", 0.9), ("p2", "i10", 0.8)],
+        intra=[("p1", "p2", 0.9), ("p10", "p2", 0.8), ("010", "10", 0.7)],
+        id_t="string")
+    assert got == (["driver", "partitioned"],
+                   ([("10", "010", 0.7), ("p1", "i10", None),
+                     ("p10", "i10", None)], ["10", "p1", "p10", "p2"]))
 
 
 def test_resolve_admission_empty_intra(spark, monkeypatch):
