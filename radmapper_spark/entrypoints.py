@@ -920,27 +920,23 @@ def neardup_admit_sql() -> str:
 
 def embedding_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding near-dup admission against the PERSISTED
-    sign-LSH index (dedup.build_signlsh_index /
+    embedding index (dedup.build_embedding_index /
     neardup_embedding_vs_index): vectors with vec_id % 5 == 0 probe an
-    index built (once, memoized) over the other ~4/5. b=256/r=8 gives
-    per-pair miss probability ~8e-4 at the 0.42 threshold, and recall is
-    empirically 100% at all three fixture SFs (RM_SF_SWEEP=1
-    tests/test_sf_sweep.py), so the exact-cosine output equals the
-    oracle's all-cross-pairs join — the driver hash-checks true cosines
-    while the Spark side never goes all-pairs and never re-reads the
-    corpus."""
+    index built (once, memoized) over the other ~4/5. The probe is one
+    exact cosine_join of the index's vectors table against the batch, so
+    it equals the oracle's all-cross-pairs join by construction at every
+    scale; its cost is batch x index dot products, and the Spark side
+    never re-reads the corpus."""
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     path = _probe_index_path(
-        spark, sf_dir, "signlsh",
-        lambda p: dedup.build_signlsh_index(
-            emb.filter(F.col("vec_id") % 5 != 0), p,
-            bands=256, planes_per_band=8))
+        spark, sf_dir, "embedding",
+        lambda p: dedup.build_embedding_index(
+            emb.filter(F.col("vec_id") % 5 != 0), p))
     hits = dedup.neardup_embedding_vs_index(
-        emb.filter(F.col("vec_id") % 5 == 0), path, threshold=0.42,
-        bands=256, planes_per_band=8)
-    return _carry_release(hits, hits.select(
-        "new_id", "index_id", F.round(F.col("cosine"), 6).alias("cosine")))
+        emb.filter(F.col("vec_id") % 5 == 0), path, threshold=0.42)
+    return hits.select("new_id", "index_id",
+                       F.round(F.col("cosine"), 6).alias("cosine"))
 
 
 def embedding_probe_sql() -> str:
@@ -3326,7 +3322,7 @@ def stream_quality_filter_sql() -> str:
 # ==================================================== embedding decontam
 
 _EDC_BENCH = "vec_id % 17 = 0"   # benchmark stand-in: bounded eval slice
-_EDC_TAU = 0.42                  # same floor as embedding_probe's verify
+_EDC_TAU = 0.42                  # same threshold as embedding_probe
 
 
 def decontam_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1521,10 +1521,11 @@ def _t_compact_neardup_index(ip, env, path=NOMATCH):
 
 @builtin("$compactEmbeddingIndex", 1)
 def _t_compact_embedding_index(ip, env, path=NOMATCH):
-    """Compact a persisted sign-LSH index (dedup.compact_signlsh_index).
-    Returns the rows removed."""
+    """Compact a persisted embedding index (drop replay-duplicate
+    vectors rows; dedup.compact_embedding_index). Returns the rows
+    removed."""
     from ..operators import dedup
-    return dedup.compact_signlsh_index(
+    return dedup.compact_embedding_index(
         ip.spark, _s(path, "$compactEmbeddingIndex"))
 
 
@@ -1554,38 +1555,40 @@ def _t_probe_neardup_index(ip, env, table=NOMATCH, path=NOMATCH,
 
 @builtin("$buildEmbeddingIndex", 2)
 def _t_build_embedding_index(ip, env, table=NOMATCH, path=NOMATCH):
-    """Persist the banded sign-LSH embedding index
-    (dedup.build_signlsh_index) — returns the path for chaining."""
+    """Persist the embedding index, the corpus's (id, v) vectors table
+    (dedup.build_embedding_index) — returns the path for chaining."""
     from ..operators import dedup
     p = _s(path, "$buildEmbeddingIndex")
-    dedup.build_signlsh_index(_table_df(table, "$buildEmbeddingIndex"), p)
+    dedup.build_embedding_index(_table_df(table, "$buildEmbeddingIndex"),
+                                p)
     return p
 
 
 @builtin("$admitEmbeddingIndex", 2)
 def _t_admit_embedding_index(ip, env, table=NOMATCH, path=NOMATCH):
-    """ADMIT a vector batch into a persisted sign-LSH index
-    (dedup.append_to_signlsh_index) — returns the path for chaining."""
+    """ADMIT a vector batch into a persisted embedding index
+    (dedup.append_to_embedding_index — the batch's vectors rows are
+    appended; an index of another kind raises) — returns the path for
+    chaining."""
     from ..operators import dedup
     p = _s(path, "$admitEmbeddingIndex")
-    dedup.append_to_signlsh_index(_table_df(table, "$admitEmbeddingIndex"),
-                                  p)
+    dedup.append_to_embedding_index(
+        _table_df(table, "$admitEmbeddingIndex"), p)
     return p
 
 
 @builtin("$probeEmbeddingIndex", 2)
 def _t_probe_embedding_index(ip, env, table=NOMATCH, path=NOMATCH,
                              threshold=0.45):
-    """Probe a persisted sign-LSH index with a batch of new vectors
-    (dedup.neardup_embedding_vs_index): (new_id, index_id, cosine)."""
+    """Probe a persisted embedding index with a batch of new vectors
+    (dedup.neardup_embedding_vs_index, one exact cosine_join; an
+    oversized batch loses the broadcast under rm.broadcastMaxBytes):
+    (new_id, index_id, cosine)."""
     from ..operators import dedup
-    out = dedup.neardup_embedding_vs_index(
+    return _as_sdb(dedup.neardup_embedding_vs_index(
         _table_df(table, "$probeEmbeddingIndex"),
         _s(path, "$probeEmbeddingIndex"),
-        threshold=float(_n(threshold, "$probeEmbeddingIndex")))
-    sdb = _as_sdb(out)
-    sdb.df.rm_release_cache = getattr(out, "rm_release_cache", None)
-    return sdb
+        threshold=float(_n(threshold, "$probeEmbeddingIndex"))))
 
 
 @builtin("$gramMatrix", 1)

@@ -19,8 +19,9 @@ All operators are pure DataFrame plans:
 - embedding_cosine_pairs: near-dup by exact embedding cosine, the
   cosine_join self-join. The embedding family has two Arrow kernels, one
   per shape: cosine_join for dense products (blocked GEMM) and
-  cosine_verify for given candidate pairs. Sign-LSH (sign_lsh_base)
-  remains only behind the persisted embedding index.
+  cosine_verify for given candidate pairs. The persisted embedding
+  index is its (id, v) vectors table, and a probe is one two-sided
+  cosine_join against it: no LSH anywhere in the family.
 
 The text operators stay JVM-side (built-in functions only — no Python
 UDFs in the hot path): xxhash64, transform, aggregate, explode.
@@ -785,127 +786,28 @@ def keep_best(groups: DataFrame, scored: DataFrame,
 
 # -------------------------------------------------------------- embedding cosine
 
-def sign_lsh_base(emb: DataFrame, vec_col: str = "embedding",
-                  id_col: str = "vec_id", bands: int = 64,
-                  planes_per_band: int = 8, sketch_planes: int = 512,
-                  seed: int = 42) -> DataFrame:
-    """(id, bb, wd) frame: per-row banded sign-LSH signatures `bb`
-    (`bands` ints of `planes_per_band` hyperplane sign bits each) plus a
-    `sketch_planes`-bit packed sign sketch `wd` (bigint words), computed in
-    ONE Arrow-batched pass over the vectors. Shared by the persisted
-    sign-LSH index (build, append, probe) and the candidate-volume
-    instrumentation in tests; NOT persisted — callers decide caching."""
-    from pyspark.sql.functions import pandas_udf
-
-    nplanes = bands * planes_per_band
-    assert sketch_planes % 64 == 0
-    total_planes = max(nplanes, sketch_planes)
-    nwords = sketch_planes // 64
-
-    # Signature + sketch in ONE Arrow-batched pandas UDF: the plane dots are
-    # a (batch x dim) @ (dim x planes) matmul — dense linear algebra that
-    # Catalyst higher-order functions can only run as interpreted per-element
-    # lambdas (~60x slower measured), i.e. the documented "genuinely can't
-    # express it" case for a vectorized UDF. Hyperplanes are Uniform(-0.5,
-    # 0.5) from a seeded numpy Generator — deterministic, built lazily from
-    # the batch's dim, no driver-side collect. Closure is self-contained
-    # (ships by value; executors never import radmapper_spark).
-    b_, r_, sk_, tp_, seed_ = bands, planes_per_band, sketch_planes, total_planes, seed
-
-    def sig_sketch(s):
-        import numpy as np
-        import pandas as pd
-        if len(s) == 0:
-            return pd.Series([], dtype=object)
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in s])
-        W = np.random.default_rng(seed_).uniform(-0.5, 0.5, (tp_, M.shape[1]))
-        bits = (M @ W.T) >= 0.0  # (n, total_planes)
-        # band sigs: r_ consecutive plane bits per band, MSB first —
-        # packed as ONE reshape+matmul (the b_*r_ shift-or loop was
-        # 1536 tiny numpy calls per batch at b=192 and dominated the
-        # signature pass)
-        wts = (np.int64(1) << np.arange(r_ - 1, -1, -1, dtype=np.int64))
-        sig = bits[:, :b_ * r_].reshape(len(s), b_, r_).astype(np.int64) @ wts
-        # sketch words: 64 consecutive plane bits per word, wrapped to int64
-        packed = np.packbits(bits[:, :sk_], axis=1, bitorder="big")
-        words = (packed.reshape(len(s), sk_ // 64, 8)
-                 .astype(np.uint64) @ (np.uint64(256) **
-                                       np.arange(7, -1, -1, dtype=np.uint64))
-                 ).astype(np.int64)
-        return pd.Series([np.concatenate([sig[i], words[i]]).tolist()
-                          for i in range(len(s))])
-
-    import pandas as _pd
-    sig_sketch.__annotations__ = {"s": _pd.Series, "return": _pd.Series}
-    sig_udf = pandas_udf(sig_sketch, "array<bigint>")
-
-    # Parallelism floor (r10): a small fixture corpus arrives as ONE
-    # parquet file -> one partition -> the whole Arrow signature pass on
-    # a single Python worker (measured 1.9-2.3 s serial vs 0.5 s at 16
-    # partitions, sf0.1). Signatures are per-row deterministic (each
-    # batch rebuilds the same seeded hyperplanes), so repartitioning
-    # never changes a bit. At scale the input has >= cluster-parallelism
-    # partitions and this is a no-op — no shuffle is added at 100 TB.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < min(par, 16):
-        emb = emb.repartition(min(par, 16))
-
-    return (emb.select(F.col(id_col).alias("id"),
-                       sig_udf(F.col(vec_col)).alias("sg"))
-            .select("id",
-                    F.slice("sg", 1, bands).alias("bb"),
-                    F.slice("sg", bands + 1, nwords).alias("wd")))
-
-
-def _sketch_screen(wd_a, wd_b, threshold: float, sketch_planes: int):
-    """Popcount prefilter on two packed sign sketches (bigint-word array
-    columns): True where the estimated sign agreement clears
-    p_t - 4.5 sigma, p_t the agreement a pair at exactly `threshold`
-    cosine has in expectation. At threshold 0.45 with 512 planes this
-    kills ~99.5% of random candidates while a true pair's miss
-    probability stays ~3e-6. The word count is static, so the popcount
-    sum is UNROLLED into flat bit_count terms — whole-stage-codegen-able,
-    unlike an aggregate() lambda."""
-    import math
-
-    p_t = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    margin = 4.5 * math.sqrt(p_t * (1.0 - p_t) / sketch_planes)
-    disagree = sum(
-        (F.bit_count(F.element_at(wd_a, w + 1)
-                     .bitwiseXOR(F.element_at(wd_b, w + 1)))
-         for w in range(sketch_planes // 64)),
-        F.lit(0))
-    est_p = (F.lit(sketch_planes) - disagree) / F.lit(float(sketch_planes))
-    return est_p >= F.lit(p_t - margin)
-
-
 def cosine_verify(pairs: DataFrame, va: str, vb: str,
                   threshold: float = None) -> DataFrame:
     """Exact cosine of GIVEN candidate pairs: the embedding family's
-    kernel for that shape (neardup_embedding_vs_index,
-    similarity.semantic_dedup_pairs, and the ivf_topk, pq_topk and
-    search_ivf_index rescoring). Dense all-pairs products go through
-    its twin, cosine_join.
+    kernel for that shape (similarity.semantic_dedup_pairs and the
+    ivf_topk, pq_topk and search_ivf_index rescoring). Dense all-pairs
+    products go through its twin, cosine_join.
 
     `pairs` carries two array<float|double> vector columns `va` and `vb`;
     every other column is a key passed through with its input type.
     Returns the keys plus an UNROUNDED `cosine` double for each pair whose
     cosine is >= `threshold`, or for every pair when it is None (the
     filter runs on the unrounded value, as in the oracles; callers round
-    for output). A pair with a NULL vector
-    or two vectors of different lengths is dropped — operators that must
-    reject such input do so upstream (sign_lsh_base raises on it, and
-    so does cosine_join).
+    for output). A pair with a NULL vector or two vectors of different
+    lengths is dropped; operators that must reject such input go
+    through cosine_join, which raises on it.
 
     One mapInArrow kernel: a list column is ONE flat values buffer plus
-    offsets, so each (m, dim) matrix is a single vectorized gather (the
-    pandas form np.stack'ed a per-cell object array row by row, ~µs/row,
-    the dominant slice at sf1's 20M+ candidates). Vectors cross Arrow in
-    their storage type and widen to double inside the kernel: float ->
-    double is exact, so the einsum sees the same doubles a JVM-side cast
-    would produce at half the boundary bytes. The closure captures only
-    strings and a float, so it ships by value to executors that cannot
-    import this module."""
+    offsets, so each (m, dim) matrix is a single vectorized gather.
+    Vectors cross Arrow in their storage type and widen to double inside
+    the kernel (float -> double is exact, at half the boundary bytes of
+    a JVM-side cast). The closure captures only strings and a float, so
+    it ships by value to executors that cannot import this module."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     keys = [c for c in pairs.columns if c not in (va, vb)]
@@ -965,9 +867,9 @@ def cosine_join(left: DataFrame, right: DataFrame = None,
                 threshold: float = None) -> DataFrame:
     """Exact cosine over every (left, right) row pair: the ONE
     dense-product kernel of the embedding family (embedding_cosine_pairs,
-    similarity.brute_force_topk / range_search,
-    decontam.embedding_decontam). Given candidate pairs go through its
-    twin, cosine_verify.
+    neardup_embedding_vs_index, similarity.brute_force_topk /
+    range_search, decontam.embedding_decontam). Given candidate pairs go
+    through its twin, cosine_verify.
 
     `left` and `right` are (id, vector) frames: the first column is the
     id (any type, passed through), the second an array<float|double>
@@ -975,9 +877,12 @@ def cosine_join(left: DataFrame, right: DataFrame = None,
     `right`, with the UNROUNDED cosine; with a `threshold`, only pairs at
     or above it (the filter runs on the unrounded value, as in the
     oracles; callers round for output). `right` is the small side (the
-    queries, the benchmark set): its blocks are broadcast. `right=None`
-    is the self-join of `left`: each unordered pair once, as
-    id_a < id_b, no self pair.
+    queries, the benchmark set, a probe batch): its blocks are broadcast
+    while plan_stats.broadcast_gate passes its estimated size (unknown,
+    as for local and micro-batch frames, passes), else the block rows
+    meet in a shuffled cartesian product; ``result.rm_broadcast_path``
+    says which. `right=None` is the self-join of `left`: each unordered
+    pair once, as id_a < id_b, no self pair.
 
     Plan: each side is cut into B = defaultParallelism hash blocks of
     its (id, vector) rows, one collect_list row per block; block pairs
@@ -1006,8 +911,11 @@ def cosine_join(left: DataFrame, right: DataFrame = None,
             .groupBy("b" + tag).agg(F.collect_list("r").alias("r" + tag)))
 
     a, b = blocks(left, "a"), blocks(right, "b")
+    use_bc = None if self_join else broadcast_gate(
+        left.sparkSession, est_plan_bytes(right), if_unknown=True)
     pairs = a.join(b, F.col("ba") <= F.col("bb")) if self_join \
-        else a.crossJoin(F.broadcast(b))
+        else a.crossJoin(F.broadcast(b) if use_bc
+                         else b.hint("shuffle_replicate_nl"))
     # B tasks, not one per block pair: each Arrow task pays a fixed
     # ~0.1 s of Python worker cost. The number is explicit because AQE
     # would coalesce the few block rows into one task and serialise
@@ -1066,7 +974,9 @@ def cosine_join(left: DataFrame, right: DataFrame = None,
                         yield batch.filter(pc.not_equal(*out[:2])) \
                             if self_join else batch
 
-    return pairs.mapInArrow(_kernel, schema)
+    out = pairs.mapInArrow(_kernel, schema)
+    out.rm_broadcast_path = use_bc
+    return out
 
 
 def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
@@ -1076,12 +986,9 @@ def embedding_cosine_pairs(emb: DataFrame, vec_col: str = "embedding",
     cosine) for every pair with id_a < id_b whose UNROUNDED cosine is
     >= `threshold` — the cosine_join self-join of the (id, vector)
     rows, with no candidate stage and no recall parameter. A NULL or
-    ragged vector raises. The result carries a no-op
-    ``rm_release_cache`` (nothing is persisted), so callers release it
-    like the other pair operators."""
-    out = cosine_join(emb.select(id_col, vec_col), threshold=threshold)
-    out.rm_release_cache = lambda: None
-    return out
+    ragged vector raises. Nothing is persisted, so there is no cache to
+    release."""
+    return cosine_join(emb.select(id_col, vec_col), threshold=threshold)
 
 
 # -------------------------------------------------------- fuzzy string join
@@ -1218,170 +1125,82 @@ def neardup_vs_index(new_docs: DataFrame, path: str,
             .select("new_id", "index_id", "est_jaccard"))
 
 
-# ------------------------------------------- persisted sign-LSH index
+# ---------------------------------------- persisted embedding index
 
-def build_signlsh_index(emb: DataFrame, path: str,
-                        vec_col: str = "embedding", id_col: str = "vec_id",
-                        bands: int = 192, planes_per_band: int = 8,
-                        sketch_planes: int = 512, seed: int = 42) -> None:
-    """Persist the corpus's banded sign-LSH embedding index — the
-    embedding twin of build_minhash_index, for INCREMENTAL near-dup over
-    a growing vector corpus: signature extraction is paid once per
-    vector ever; a probe batch (below) computes signatures for itself
-    only and never re-reads the corpus table.
+_VECTORS_KIND = "vectors"  # the embedding index's sidecar kind
 
-    Two tables under `path`:
 
-    - ``bands/``   (band, sig, id)            — the candidate equi-join side
-    - ``vectors/`` (id, wd bigint[], v double[]) — sketch words for the
-      popcount prefilter + the exact vector for the cosine verify, so the
-      probe is SELF-CONTAINED against the index
-
-    Probe with the SAME (bands, planes_per_band, sketch_planes, seed):
-    hyperplanes are a pure function of (seed, dim), so index and probe
-    signatures live in the same LSH family by construction. Build params
-    are persisted in a ``_meta`` sidecar; probes assert them and RAISE
-    on mismatch (index_meta.check_index_meta).
-    """
+def build_embedding_index(emb: DataFrame, path: str,
+                          vec_col: str = "embedding",
+                          id_col: str = "vec_id") -> None:
+    """Persist the corpus's embedding index, the embedding twin of
+    build_minhash_index: the ``vectors/`` table (id, v double[]) under
+    `path` plus a ``_meta`` sidecar of kind "vectors" with no params.
+    A probe batch (neardup_embedding_vs_index) never re-reads the
+    corpus table."""
     from .index_meta import write_index_meta
 
-    params = {"bands": bands, "planes_per_band": planes_per_band,
-              "sketch_planes": sketch_planes, "seed": seed}
-    _write_signlsh(emb, path, vec_col, id_col, params, "overwrite")
-    write_index_meta(emb.sparkSession, path, "signlsh", params)
+    _write_vectors(emb, path, vec_col, id_col, "overwrite")
+    write_index_meta(emb.sparkSession, path, _VECTORS_KIND, {})
 
 
-def _write_signlsh(emb: DataFrame, path: str, vec_col: str, id_col: str,
-                   params: dict, mode: str) -> None:
-    """Write `emb`'s rows into the ``bands``/``vectors`` tables of the
-    sign-LSH index at `path` with Spark write mode `mode` ("overwrite" to
-    build, "append" to admit)."""
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = sign_lsh_base(emb, vec_col, id_col, **params).persist()
-    (base.select("id", F.posexplode("bb").alias("band", "sig"))
-     .select("band", "sig", "id")
-     .write.mode(mode).parquet(f"{path}/bands"))
-    (base.select("id", "wd")
-     .join(emb.select(F.col(id_col).alias("id"), vec.alias("v")), "id")
+def _write_vectors(emb: DataFrame, path: str, vec_col: str, id_col: str,
+                   mode: str) -> None:
+    """Write `emb`'s (id, v double[]) rows to `path`/vectors."""
+    (emb.select(F.col(id_col).alias("id"),
+                F.transform(F.col(vec_col), lambda x: x.cast("double"))
+                .alias("v"))
      .write.mode(mode).parquet(f"{path}/vectors"))
-    base.unpersist()
 
 
-def append_to_signlsh_index(new_emb: DataFrame, path: str,
-                            vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            bands: int = 192, planes_per_band: int = 8,
-                            sketch_planes: int = 512,
-                            seed: int = 42) -> None:
-    """ADMIT a vector batch into the persisted sign-LSH index — the
-    embedding twin of append_to_minhash_index: signatures + sketch are
-    computed for the batch only and appended to the ``bands``/
-    ``vectors`` tables; params are asserted against the ``_meta``
-    sidecar (wrong-family appends would poison the index — raises)."""
+def append_to_embedding_index(new_emb: DataFrame, path: str,
+                              vec_col: str = "embedding",
+                              id_col: str = "vec_id") -> None:
+    """ADMIT a vector batch into the persisted embedding index (the
+    twin of append_to_minhash_index): its (id, v) rows append to the
+    ``vectors`` table; an index of another kind raises
+    IndexParamMismatch."""
     from .index_meta import check_index_meta
 
-    params = {"bands": bands, "planes_per_band": planes_per_band,
-              "sketch_planes": sketch_planes, "seed": seed}
-    check_index_meta(new_emb.sparkSession, path, "signlsh", params,
-                     "append_to_signlsh_index")
-    _write_signlsh(new_emb, path, vec_col, id_col, params, "append")
+    check_index_meta(new_emb.sparkSession, path, _VECTORS_KIND, {},
+                     "append_to_embedding_index")
+    _write_vectors(new_emb, path, vec_col, id_col, "append")
 
 
 def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
                                vec_col: str = "embedding",
                                id_col: str = "vec_id",
-                               threshold: float = 0.45,
-                               bands: int = 192, planes_per_band: int = 8,
-                               sketch_planes: int = 512,
-                               seed: int = 42) -> DataFrame:
-    """Probe a persisted sign-LSH index with a batch of NEW vectors:
-    (new_id, index_id, cosine) for every new vector whose cosine against
-    an indexed one clears `threshold`. Cosines come from cosine_verify
-    (float64 dot over the norm product).
-
-    Plan: probe signatures+sketch in one Arrow pass over the BATCH only
-    -> equi-join the persisted bands table on (band, sig) -> dedupe
-    (new_id, index_id) -> join the index vectors table (brings the
-    corpus-side sketch words AND vector; the corpus table itself is
-    never read) -> inline popcount prefilter (_sketch_screen) -> exact
-    cosine verify on survivors (cosine_verify).
-
-    Raises IndexParamMismatch when (bands, planes_per_band,
-    sketch_planes, seed) disagree with the index's ``_meta`` sidecar.
-    Id columns keep their input types (any equality-joinable type
-    works); the probe side is broadcast into the verify join only while
-    its plan-estimated size stays under ``rm.broadcastMaxBytes``
-    (default 256 MiB; plan_stats.broadcast_gate) — a huge probe batch
-    falls back to a shuffled join instead of OOMing. The chosen path is
-    exposed as ``result.rm_broadcast_path``.
-    """
+                               threshold: float = 0.45) -> DataFrame:
+    """Probe a persisted embedding index with a batch of NEW vectors:
+    (new_id, index_id, cosine) for EVERY (new, indexed) pair whose
+    cosine clears `threshold`, exactly. One two-sided cosine_join: the
+    index's ``vectors`` table on the left, the batch on the right (the
+    broadcast side under the gate, ``result.rm_broadcast_path``), so the
+    index never has to fit in a broadcast and the corpus table is never
+    read. Cost grows as batch x index dot products, not sublinearly in
+    the index (sf1: a 4k batch x a 16k index, dim 64). Id columns keep
+    their input types; a NULL or ragged vector raises; an index of
+    another kind (the old banded sign-LSH one) raises
+    IndexParamMismatch."""
     from .index_meta import check_index_meta
 
     spark = new_emb.sparkSession
-    check_index_meta(spark, path, "signlsh",
-                     {"bands": bands, "planes_per_band": planes_per_band,
-                      "sketch_planes": sketch_planes, "seed": seed},
+    check_index_meta(spark, path, _VECTORS_KIND, {},
                      "neardup_embedding_vs_index")
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    probe_base = sign_lsh_base(new_emb, vec_col, id_col, bands,
-                               planes_per_band, sketch_planes,
-                               seed).persist()
-    probes = (probe_base
-              .select("id", F.posexplode("bb").alias("band", "sig"))
-              .select(F.col("id").alias("new_id"), "band", "sig"))
-    idx_bands = spark.read.parquet(f"{path}/bands")
-    cand = (probes.join(idx_bands.hint("shuffle_hash"), on=["band", "sig"])
-            .select("new_id", F.col("id").alias("index_id"))
-            .dropDuplicates(["new_id", "index_id"]))
-    # corpus side: sketch words + exact vector from the index only
-    idx_vec = spark.read.parquet(f"{path}/vectors").select(
-        F.col("id").alias("index_id"), F.col("wd").alias("wd_i"),
-        F.col("v").alias("v_b"))
-    probe_side = (probe_base.select(F.col("id").alias("new_id"),
-                                    F.col("wd").alias("wd_n"))
-                  .join(new_emb.select(F.col(id_col).alias("new_id"),
-                                       vec.alias("v_a")), "new_id"))
-    # broadcast the probe batch only while the optimizer's size estimate
-    # says it fits; an unboundedly large batch (the operator is exposed
-    # to arbitrary tables via $probeEmbeddingIndex) falls back to a
-    # shuffled hash join instead of OOMing the broadcast.
-    # Size a SINGLE relation, not probe_side: probe_side is an inner
-    # join, and Catalyst's size-only estimate for a join is the PRODUCT
-    # of the child sizes — comparing that against the cap inverts the
-    # gate (mid-size batches overflow the product and lose the
-    # broadcast). new_emb's (id, vector) projection carries the
-    # dominant width of the probe batch (the vector; the wd sketch
-    # words the join adds are a few dozen bytes/row next to it), so its
-    # estimate is the honest per-batch size. An UNKNOWN size (local,
-    # RDD-backed and streaming micro-batch frames carry no stats) keeps
-    # the broadcast: probe batches are small by contract, and the gate
-    # exists for the pathological huge batch, which only arises from
-    # stats-bearing scans.
-    est = est_plan_bytes(new_emb.select(F.col(id_col), vec.alias("v_a")))
-    use_bc = broadcast_gate(spark, est, if_unknown=True)
-    p_in = (F.broadcast(probe_side) if use_bc
-            else probe_side.hint("shuffle_hash"))
-    out = cosine_verify(
-        cand.join(idx_vec, "index_id").join(p_in, "new_id")
-        .filter(_sketch_screen(F.col("wd_n"), F.col("wd_i"), threshold,
-                               sketch_planes))
-        .select("new_id", "index_id", "v_a", "v_b"),
-        "v_a", "v_b", threshold)
-    out.rm_release_cache = probe_base.unpersist
-    out.rm_broadcast_path = use_bc
+    pairs = cosine_join(spark.read.parquet(f"{path}/vectors"),
+                        new_emb.select(id_col, vec_col), threshold)
+    out = pairs.select(F.col("id_b").alias("new_id"),
+                       F.col("id_a").alias("index_id"), "cosine")
+    out.rm_broadcast_path = pairs.rm_broadcast_path
     return out
 
 
 def _swap_index_dir(path: str, tmp: str) -> None:
     """Crash-safe local-FS directory swap for index compaction: rename
     the live index aside (``path__old``), move the compacted copy into
-    place, then delete the old copy — the index exists under its
-    canonical path at every instant except the gap between the two
-    renames, and a failure moving the new copy in restores the old one.
-    (The previous delete-then-move ordering lost the index entirely on a
-    crash between the two calls.) Debris from a prior completed swap
-    (``path__old`` left by a crash during its final cleanup) is removed
-    first."""
+    place, then delete the old copy; a failure moving the new copy in
+    restores the old one. A ``path__old`` left by a crash in an earlier
+    swap's cleanup is removed first."""
     import shutil
 
     old = path.rstrip("/") + "__old"
@@ -1396,75 +1215,52 @@ def _swap_index_dir(path: str, tmp: str) -> None:
     shutil.rmtree(old)
 
 
-def _compacted_kind(meta: dict, path: str) -> str:
-    """The sidecar's ``kind``, failing loudly on a corrupt sidecar (a
-    _meta that exists but lacks 'kind' would otherwise KeyError with no
-    context, or worse get re-written without its kind tag)."""
-    from .index_meta import IndexParamMismatch
+def _compact_table(spark, path: str, table: str, keys: list,
+                   partition_by: str = None) -> int:
+    """Rewrite the index table at `table` (under the index at `path`)
+    with rows duplicate on `keys` dropped, into a temp sibling dir, then
+    swap it in via rename-aside (_swap_index_dir: the live table is
+    never deleted before its replacement is in place; probes in flight
+    during the swap are the caller's exclusion to manage, as for a
+    rebuild). The ``_meta`` sidecar is preserved; one without a kind is
+    corrupt and raises rather than being rewritten without it. Returns
+    rows removed."""
+    from .index_meta import (IndexParamMismatch, read_index_meta,
+                             write_index_meta)
 
-    if "kind" not in meta:
+    meta = read_index_meta(spark, path)
+    if meta is not None and "kind" not in meta:
         raise IndexParamMismatch(
             f"index at {path} has a _meta sidecar without a 'kind' "
             f"field — the sidecar is corrupt; rebuild the index rather "
             f"than compacting it.")
-    return meta["kind"]
+    df = spark.read.parquet(table)
+    before = df.count()
+    tmp = table.rstrip("/") + "__compact"
+    w = df.dropDuplicates(keys).write.mode("overwrite")
+    (w.partitionBy(partition_by) if partition_by else w).parquet(tmp)
+    removed = before - spark.read.parquet(tmp).count()
+    _swap_index_dir(table, tmp)
+    if meta is not None:
+        write_index_meta(spark, path, meta.pop("kind"), meta)
+    return int(removed)
 
 
 def compact_minhash_index(spark, path: str) -> int:
     """Out-of-band maintenance for an append-mode minhash index:
     replayed micro-batches (see start_neardup_admission's restart
-    caveat) append byte-identical (band, bhash, id, minhash) rows, which
-    cost storage and candidate-join width but never correctness. This
-    rewrites the index with exact duplicates dropped — one distinct
-    shuffle keyed like the index itself — into a temp sibling dir, then
-    swaps it in via rename-aside (_swap_index_dir: the live index is
-    never deleted before its replacement is in place; a cluster
-    deployment swaps through the filesystem API in the same out-of-band
-    window that owns index builds — probes in flight during the swap
-    are the caller's exclusion to manage, exactly as for a rebuild).
-    The ``_meta`` sidecar is preserved. Returns rows removed."""
-    from .index_meta import read_index_meta, write_index_meta
-
-    meta = read_index_meta(spark, path)
-    kind = None if meta is None else _compacted_kind(meta, path)
-    idx = spark.read.parquet(path)
-    before = idx.count()
-    tmp = path.rstrip("/") + "__compact"
-    (idx.dropDuplicates(["band", "bhash", "id"])
-     .write.mode("overwrite").partitionBy("band").parquet(tmp))
-    after = spark.read.parquet(tmp).count()
-    _swap_index_dir(path, tmp)
-    if meta is not None:
-        params = {k: v for k, v in meta.items() if k != "kind"}
-        write_index_meta(spark, path, kind, params)
-    return int(before - after)
-
-
-def compact_signlsh_index(spark, path: str) -> int:
-    """Sign-LSH twin of compact_minhash_index: drops exact duplicate
-    rows from BOTH index tables (``bands`` on (band, sig, id);
-    ``vectors`` on id — replayed appends write byte-identical rows, so
-    any surviving row is the original). Stage-then-rename-aside swap per
-    table (_swap_index_dir); ``_meta`` preserved. Returns total rows
+    caveat) append byte-identical (band, bhash, id, minhash) rows; one
+    distinct shuffle keyed like the index drops them. Returns rows
     removed."""
-    from .index_meta import read_index_meta, write_index_meta
+    return _compact_table(spark, path, path, ["band", "bhash", "id"],
+                          partition_by="band")
 
-    meta = read_index_meta(spark, path)
-    kind = None if meta is None else _compacted_kind(meta, path)
-    removed = 0
-    for sub, keys in (("bands", ["band", "sig", "id"]),
-                      ("vectors", ["id"])):
-        t = f"{path}/{sub}"
-        df = spark.read.parquet(t)
-        before = df.count()
-        tmp = t + "__compact"
-        df.dropDuplicates(keys).write.mode("overwrite").parquet(tmp)
-        removed += before - spark.read.parquet(tmp).count()
-        _swap_index_dir(t, tmp)
-    if meta is not None:
-        params = {k: v for k, v in meta.items() if k != "kind"}
-        write_index_meta(spark, path, kind, params)
-    return int(removed)
+
+def compact_embedding_index(spark, path: str) -> int:
+    """Embedding twin of compact_minhash_index: drops the ``vectors``
+    rows duplicate on id (replayed appends write byte-identical rows).
+    Returns rows removed."""
+    return _compact_table(spark, path, f"{path}/vectors", ["id"])
 
 
 # -------------------------------------------------- repeated span pairs

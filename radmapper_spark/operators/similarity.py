@@ -434,7 +434,7 @@ def search_ivf_index(spark, path: str, queries: DataFrame, k: int = 10,
     PartitionFilters)."""
     from .index_meta import check_index_meta
     # ncentroids is read FROM the index (no probe-side twin to mismatch);
-    # the kind check stops e.g. a sign-LSH path being searched as IVF
+    # the kind check stops e.g. an embedding index being searched as IVF
     check_index_meta(spark, path, "ivf", {}, "search_ivf_index")
     cents_rows = (spark.read.parquet(f"{path}/centroids")
                   .orderBy("cell").collect())

@@ -9,7 +9,7 @@ LISTING cost grows linearly with stream age and eventually dominates
 the probe itself. This module rewrites all partitions strictly below a
 watermark into the seed partition (``_rm_batch_id = -1``), preserving
 the probe contract exactly, behind the same crash-safe rename-aside
-swap the minhash/sign-LSH index compactors use
+swap the minhash and embedding index compactors use
 (operators/dedup.py `_swap_index_dir`).
 
 Listing-cost bound: a table compacted every K micro-batches holds at

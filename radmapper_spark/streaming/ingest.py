@@ -23,7 +23,7 @@ batch side is micro-batch-sized (broadcastable); the gate is the
 stream-static broadcast token join; chunking and shard assignment are
 map-only; the index APPEND writes only the batch's admitted hashes
 (the index is never rewritten in-band — same incremental contract as
-the minhash/sign-LSH admission loops in streaming/sinks.py;
+the minhash and embedding admission loops in streaming/sinks.py;
 streaming/compaction.py folds old per-batch partitions into the seed
 out-of-band so file-listing cost stays bounded over the stream's
 lifetime). At 100 TB the norm-hash index is a long-skinny BIGINT

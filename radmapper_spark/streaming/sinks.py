@@ -259,60 +259,53 @@ def start_embedding_probe(vec_stream: DataFrame, index_path: str,
                           out_path: str, checkpoint: str,
                           vec_col: str = "embedding",
                           id_col: str = "vec_id",
-                          threshold: float = 0.45,
-                          bands: int = 192, planes_per_band: int = 8,
-                          sketch_planes: int = 512, seed: int = 42):
-    """Streaming embedding near-dup admission control — the sign-LSH twin
-    of start_neardup_probe: each micro-batch of incoming vectors is
-    probed against the PERSISTED sign-LSH index
-    (dedup.neardup_embedding_vs_index — signatures computed for the
-    batch only, corpus vectors served from the index) and the hits
-    (new_id, index_id, cosine) append to out_path. Same checkpoint /
-    replay contract as the minhash probe."""
+                          threshold: float = 0.45):
+    """Streaming embedding near-dup admission control — the embedding
+    twin of start_neardup_probe: each micro-batch of incoming vectors is
+    probed against the PERSISTED embedding index
+    (dedup.neardup_embedding_vs_index — one exact cosine_join of the
+    index's vectors table against the batch; the corpus table is never
+    read) and the hits (new_id, index_id, cosine) append to out_path.
+    Same checkpoint / replay contract as the minhash probe."""
     from ..operators.dedup import neardup_embedding_vs_index
 
     return _probe_loop(
         vec_stream, out_path, checkpoint,
         lambda b: neardup_embedding_vs_index(
             b, index_path, vec_col=vec_col, id_col=id_col,
-            threshold=threshold, bands=bands,
-            planes_per_band=planes_per_band,
-            sketch_planes=sketch_planes, seed=seed))
+            threshold=threshold))
 
 
 def start_embedding_admission(vec_stream: DataFrame, index_path: str,
                               out_path: str, checkpoint: str,
                               vec_col: str = "embedding",
                               id_col: str = "vec_id",
-                              threshold: float = 0.45,
-                              bands: int = 192, planes_per_band: int = 8,
-                              sketch_planes: int = 512, seed: int = 42):
-    """The sign-LSH twin of start_neardup_admission — the full streaming
-    ingest loop for vectors: per micro-batch, probe the persisted
-    embedding index, write the audit trail of EVERY rejection to
-    ``out_path`` (index duplicates AND intra-batch losers, the latter
-    recorded against a vector that IS in the index after the batch
-    commits), then ADMIT the surviving vectors (append_to_signlsh_index)
-    so future batches see them. Intra-batch duplicates resolve
-    TRANSITIVELY per cluster via _resolve_admission (connected
-    components under the one gate) over the batch operator
-    embedding_cosine_pairs (exact cosine, no LSH: the sign-LSH params
-    apply to the index only) — clean clusters admit their smallest id;
-    clusters chaining to indexed content are rejected wholesale. Same
-    restart caveat as the minhash loop: replays append duplicate index
-    AND audit rows (probe answers unaffected; compact / dedupe
-    out-of-band)."""
-    from ..operators.dedup import (append_to_signlsh_index,
+                              threshold: float = 0.45):
+    """The embedding twin of start_neardup_admission — the full
+    streaming ingest loop for vectors: per micro-batch, probe the
+    persisted embedding index (neardup_embedding_vs_index, exact), write
+    the audit trail of EVERY rejection to ``out_path`` (index duplicates
+    AND intra-batch losers, the latter recorded against a vector that IS
+    in the index after the batch commits), then ADMIT the surviving
+    vectors (append_to_embedding_index) so future batches see them.
+    Intra-batch duplicates resolve TRANSITIVELY per cluster via
+    _resolve_admission (connected components under the one gate) over
+    the batch operator embedding_cosine_pairs — both passes are
+    cosine_join, so the probe and the intra pairs apply the same exact
+    threshold. Clean clusters admit their smallest id; clusters
+    chaining to indexed content are rejected wholesale. Same restart
+    caveat as the minhash loop: replays append duplicate index AND
+    audit rows, and a duplicated index row repeats its probe hits until
+    dedup.compact_embedding_index drops it."""
+    from ..operators.dedup import (append_to_embedding_index,
                                    embedding_cosine_pairs,
                                    neardup_embedding_vs_index)
 
-    params = dict(vec_col=vec_col, id_col=id_col, bands=bands,
-                  planes_per_band=planes_per_band,
-                  sketch_planes=sketch_planes, seed=seed)
+    params = dict(vec_col=vec_col, id_col=id_col)
     return _admission_loop(
         vec_stream, out_path, checkpoint, id_col,
         lambda b: neardup_embedding_vs_index(b, index_path,
                                              threshold=threshold, **params),
         lambda b: embedding_cosine_pairs(b, vec_col, id_col, threshold),
-        lambda b: append_to_signlsh_index(b, index_path, **params),
+        lambda b: append_to_embedding_index(b, index_path, **params),
         "cosine")

@@ -1,5 +1,15 @@
-"""Generate a one-off deterministic ~sf1 (10x sf0.1) table set under
-/tmp/sf1 for the headline linearity stress (r13 verdict item #5).
+"""Generate a one-off deterministic ~sf1 (10x sf0.1) table set for the
+headline linearity stress (r13 verdict item #5):
+
+    SPARK_GRAFT_CPUS=4 SPARK_GRAFT_DRIVER_MEM=4g \
+        python scripts/gen_sf1.py [OUT_DIR]        # OUT_DIR: /tmp/sf1
+
+The session comes from session.get_spark, so the master's cores are
+SPARK_GRAFT_CPUS and the driver memory SPARK_GRAFT_DRIVER_MEM. Each
+table is ONE parquet file, ``OUT_DIR/<table>.parquet`` — the fixture
+layout, so the DuckDB oracle (tests/oracle.duck_conn), sf_fingerprint
+and the memo read sf1 as they read sf0.1.
+
 documents/embeddings are synthesized fresh (same vocab/shape/stat
 profile as the driver fixtures, hash-seeded — NOT replicated copies);
 orders/lineitem are 10 key-shifted copies (10x the edges for the graph
@@ -25,20 +35,36 @@ rate_report pair joins only in their scan-dominated regime):
 
 All three regimes key off the SEED (not the doc), so exact-dup pairs
 stay byte-identical including the appended span."""
+import os
 import shutil
 import sys
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
-from pyspark.sql import SparkSession, functions as F
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
+from radmapper_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
-DST = "/tmp/sf1"
+DST = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
+os.makedirs(DST, exist_ok=True)
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "64")
-         .config("spark.driver.memory", "48g")
-         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-         .getOrCreate())
+spark = get_spark("gen-sf1")
+
+
+def write_table(df, name):
+    """Write ``df`` as the single file DST/<name>.parquet: Spark writes
+    its part files to a scratch dir, whose batches stream into one
+    parquet file (one row group per batch)."""
+    out, tmp = f"{DST}/{name}.parquet", f"{DST}/_{name}"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(out):  # a directory from an older generator run
+        shutil.rmtree(out)
+    parts = ds.dataset(tmp, format="parquet")
+    with pq.ParquetWriter(out, parts.schema) as w:
+        for b in parts.to_batches():
+            w.write_batch(b)
+    shutil.rmtree(tmp)
 
 import duckdb
 base_vocab = [r[0] for r in duckdb.connect().execute(
@@ -113,7 +139,7 @@ docs = (spark.range(N_DOCS)
                                  F.lit(20)).cast("string")))
         .withColumn("n_chars", F.length("text"))
         .drop("_len", "_seed", "_mut"))
-docs.write.mode("overwrite").parquet(f"{DST}/documents.parquet")
+write_table(docs, "documents")
 
 # ---- embeddings: 64-dim hash-uniform in [-0.4, 0.4]
 emb = (spark.range(N_EMB).select(F.col("id").alias("vec_id"))
@@ -122,7 +148,7 @@ emb = (spark.range(N_EMB).select(F.col("id").alias("vec_id"))
            lambda i: ((F.pmod(F.xxhash64(F.col("vec_id"), i, F.lit(5)),
                               F.lit(2001)) - 1000) / 2500.0).cast("float")))
        .withColumn("label", F.pmod(F.col("vec_id"), F.lit(10)).cast("int")))
-emb.write.mode("overwrite").parquet(f"{DST}/embeddings.parquet")
+write_table(emb, "embeddings")
 
 # ---- orders/lineitem: 10 key-shifted copies
 o = spark.read.parquet(f"{SRC}/orders.parquet")
@@ -139,13 +165,13 @@ for c in copies_o[1:]:
 out_l = copies_l[0]
 for c in copies_l[1:]:
     out_l = out_l.unionByName(c)
-out_o.write.mode("overwrite").parquet(f"{DST}/orders.parquet")
-out_l.write.mode("overwrite").parquet(f"{DST}/lineitem.parquet")
+write_table(out_o, "orders")
+write_table(out_l, "lineitem")
 
 # ---- small dims + events: copy as-is
 for t in ["region", "nation", "customer", "supplier", "part", "events"]:
     shutil.copy(f"{SRC}/{t}.parquet", f"{DST}/{t}.parquet")
 
 for t in ["documents", "embeddings", "orders", "lineitem"]:
-    print(t, spark.read.parquet(f"{DST}/{t}.parquet").count())
+    print(t, pq.ParquetFile(f"{DST}/{t}.parquet").metadata.num_rows)
 print("GEN DONE")

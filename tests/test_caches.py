@@ -220,7 +220,7 @@ def _rewrite_embeddings(sfd):
 @pytest.mark.parametrize("name,kind", [
     ("embedding_pca", "pca_fit"),
     ("quality_probe", "probe_fit"),
-    ("embedding_probe", "index:signlsh"),
+    ("embedding_probe", "index:embedding"),
     ("ann_ivf_topk", "codebook:ivf:embedding"),
     ("graph_pagerank", "edges"),
 ])

@@ -149,7 +149,7 @@ def test_fuzzy_pairs_rejects_higher_distance(spark, tables):
         dedup.fuzzy_pairs_levenshtein(tables["part"], "p_name", max_dist=2)
 
 
-def test_signlsh_index_probe_matches_bruteforce(spark, tables, tmp_path):
+def test_embedding_index_probe_matches_bruteforce(spark, tables, tmp_path):
     """Incremental embedding near-dup: index the corpus (vec_id % 10 != 0),
     probe the held-out batch — results must EQUAL the brute-force
     batch-x-corpus cosine pairs >= threshold, with cosines matching the
@@ -166,7 +166,7 @@ def test_signlsh_index_probe_matches_bruteforce(spark, tables, tmp_path):
     corpus = spark.read.parquet(str(tmp_path / "corpus"))
     batch = spark.read.parquet(str(tmp_path / "batch"))
     path = str(tmp_path / "slsh")
-    dedup.build_signlsh_index(corpus, path)
+    dedup.build_embedding_index(corpus, path)
 
     got_df = dedup.neardup_embedding_vs_index(batch, path, threshold=0.45)
     files = set(got_df.inputFiles())
@@ -175,7 +175,6 @@ def test_signlsh_index_probe_matches_bruteforce(spark, tables, tmp_path):
         "probe must NEVER re-read the corpus table (the incremental contract)"
     got = {(r["new_id"], r["index_id"]): r["cosine"]
            for r in got_df.collect()}
-    got_df.rm_release_cache()
 
     v = lambda df, n: df.select(F.col("vec_id").alias(n),  # noqa: E731
                                 F.transform("embedding",

@@ -98,20 +98,22 @@ def test_minhash_index_meta_mismatch_raises(spark, tmp_path):
 
 
 def test_signlsh_index_meta_mismatch_raises(spark, tmp_path):
+    """An index whose sidecar says it is a banded sign-LSH index (the
+    layout before the exact vectors index) must raise on probe AND on
+    append instead of being misread or mixed with new rows."""
     from radmapper_spark.operators import dedup
     from radmapper_spark.operators.index_meta import IndexParamMismatch
     emb = _tiny_emb(spark)
     path = str(tmp_path / "sl")
-    dedup.build_signlsh_index(emb, path, bands=24, planes_per_band=8)
-    got = dedup.neardup_embedding_vs_index(
-        emb, path, bands=24, planes_per_band=8)
-    got.collect()
-    got.rm_release_cache()
-    with pytest.raises(IndexParamMismatch, match="seed"):
-        dedup.neardup_embedding_vs_index(emb, path, bands=24,
-                                         planes_per_band=8, seed=43)
-    with pytest.raises(IndexParamMismatch, match="bands"):
-        dedup.neardup_embedding_vs_index(emb, path)  # default bands=192
+    dedup.build_embedding_index(emb, path)
+    assert dedup.neardup_embedding_vs_index(emb, path).count() >= 30
+    _rewrite_sidecar(path, {"kind": "signlsh", "bands": 192,
+                            "planes_per_band": 8, "sketch_planes": 512,
+                            "seed": 42})
+    with pytest.raises(IndexParamMismatch, match="kind"):
+        dedup.neardup_embedding_vs_index(emb, path)
+    with pytest.raises(IndexParamMismatch, match="append_to_embedding"):
+        dedup.append_to_embedding_index(emb, path)
 
 
 def test_ivf_search_rejects_wrong_index_kind(spark, tmp_path):
@@ -119,7 +121,7 @@ def test_ivf_search_rejects_wrong_index_kind(spark, tmp_path):
     from radmapper_spark.operators.index_meta import IndexParamMismatch
     emb = _tiny_emb(spark)
     path = str(tmp_path / "sl2")
-    dedup.build_signlsh_index(emb, path, bands=8, planes_per_band=8)
+    dedup.build_embedding_index(emb, path)
     q = emb.limit(2).select(F.col("vec_id").alias("qid"), "embedding")
     with pytest.raises(IndexParamMismatch, match="kind"):
         similarity.search_ivf_index(spark, path, q, k=3)
@@ -147,50 +149,57 @@ def test_embedding_probe_string_ids(spark, tmp_path):
         [(k, v) for k, v in vecs.items()],
         "vec_id string, embedding array<double>")
     path = str(tmp_path / "slstr")
-    dedup.build_signlsh_index(corpus, path, bands=16, planes_per_band=4)
+    dedup.build_embedding_index(corpus, path)
     probe = spark.createDataFrame(
         [("p1", vecs["a"])], "vec_id string, embedding array<double>")
-    out = dedup.neardup_embedding_vs_index(
-        probe, path, bands=16, planes_per_band=4, threshold=0.99)
+    out = dedup.neardup_embedding_vs_index(probe, path, threshold=0.99)
     dt = dict(out.dtypes)
     assert dt["new_id"] == "string" and dt["index_id"] == "string"
     rows = out.collect()
-    out.rm_release_cache()
     assert {(r.new_id, r.index_id) for r in rows} == {("p1", "a")}
     assert abs(rows[0].cosine - 1.0) < 1e-12
 
 
+def _gate_runs(left, right, path):
+    """(rows, plan, rm_broadcast_path) of cosine_join(left, right, 0.9)
+    and of the index probe of `right` against `path`, which is that
+    cosine_join with the index vectors on the left."""
+    from radmapper_spark.operators import dedup
+    out = dedup.cosine_join(left, right, threshold=0.9)
+    probe = dedup.neardup_embedding_vs_index(right, path, threshold=0.9)
+    return [({(r[0], r[1], round(r[2], 9)) for r in df.collect()},
+             df._jdf.queryExecution().executedPlan().toString(),
+             df.rm_broadcast_path) for df in (out, probe)]
+
+
 def test_embedding_probe_broadcast_gated_by_size(spark, tmp_path):
-    """With rm.broadcastMaxBytes=1 the probe side must NOT be
-    broadcast (fall back to a shuffled join) — and results must be
-    identical to the broadcast path. The probe comes from parquet so
-    the optimizer has REAL size stats: stats-less frames (local
-    relations, streaming micro-batches) carry the no-stats sentinel and
-    deliberately KEEP the broadcast."""
+    """The gate lives in cosine_join's two-sided branch: with
+    rm.broadcastMaxBytes=1 its right side (the probe batch) must NOT be
+    broadcast (the block rows meet in a shuffled cartesian product),
+    and results must be identical to the broadcast path. The right
+    side comes from parquet so the optimizer has REAL size stats:
+    stats-less frames (local relations, streaming micro-batches) carry
+    the no-stats sentinel and deliberately KEEP the broadcast."""
     from radmapper_spark.operators import dedup
     _tiny_emb(spark).write.parquet(str(tmp_path / "embp"))
     emb = spark.read.parquet(str(tmp_path / "embp"))
     path = str(tmp_path / "slbc")
-    dedup.build_signlsh_index(emb, path, bands=16, planes_per_band=4)
-
-    def run():
-        out = dedup.neardup_embedding_vs_index(
-            emb, path, bands=16, planes_per_band=4, threshold=0.9)
-        rows = {(r.new_id, r.index_id, round(r.cosine, 9))
-                for r in out.collect()}
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        out.rm_release_cache()
-        return rows, plan
-
-    bc_rows, bc_plan = run()
+    dedup.build_embedding_index(emb, path)
+    vecs = spark.read.parquet(f"{path}/vectors")
+    bc = _gate_runs(vecs, emb, path)
     spark.conf.set("rm.broadcastMaxBytes", "1")
     try:
-        sh_rows, sh_plan = run()
+        sh = _gate_runs(vecs, emb, path)
     finally:
         spark.conf.unset("rm.broadcastMaxBytes")
-    assert sh_rows == bc_rows
-    # self-probe of the index always hits (cos=1.0), so the plan really ran
-    assert bc_rows, "probe found no pairs — test is vacuous"
+    for (bc_rows, bc_plan, bc_flag), (sh_rows, sh_plan, sh_flag) in \
+            zip(bc, sh):
+        assert (bc_flag, sh_flag) == (True, False)
+        assert "BroadcastExchange" in bc_plan
+        assert "BroadcastExchange" not in sh_plan
+        assert sh_rows == bc_rows
+        # every vector meets itself (cos=1.0), so the plan really ran
+        assert len(bc_rows) >= 30, "no pairs — test is vacuous"
 
 
 def test_index_rebuild_updates_meta(spark, tmp_path):
@@ -240,33 +249,25 @@ def test_minhash_append_param_mismatch_raises(spark, tmp_path):
         dedup.append_to_minhash_index(docs, path, num_hashes=16, bands=4)
 
 
-def test_signlsh_append_equals_full_rebuild(spark, tmp_path):
+def test_embedding_append_equals_full_rebuild(spark, tmp_path):
     from radmapper_spark.operators import dedup
     from radmapper_spark.session import load_tables
     emb = load_tables(spark, SF_SMOKE)["embeddings"]
     base = emb.filter(F.col("vec_id") % 3 == 0)
     admit = emb.filter(F.col("vec_id") % 3 == 1)
     probe = emb.filter(F.col("vec_id") % 3 == 2)
-    kw = dict(bands=64, planes_per_band=8)
     inc, full = str(tmp_path / "sinc"), str(tmp_path / "sfull")
-    dedup.build_signlsh_index(base, inc, **kw)
-    dedup.append_to_signlsh_index(admit, inc, **kw)
-    dedup.build_signlsh_index(base.unionByName(admit), full, **kw)
+    dedup.build_embedding_index(base, inc)
+    dedup.append_to_embedding_index(admit, inc)
+    dedup.build_embedding_index(base.unionByName(admit), full)
 
     def hits(path):
-        df = dedup.neardup_embedding_vs_index(probe, path, threshold=0.4,
-                                              **kw)
-        out = {(r.new_id, r.index_id, round(r.cosine, 9))
-               for r in df.collect()}
-        df.rm_release_cache()
-        return out
+        df = dedup.neardup_embedding_vs_index(probe, path, threshold=0.4)
+        return {(r.new_id, r.index_id, round(r.cosine, 9))
+                for r in df.collect()}
 
     got, want = hits(inc), hits(full)
     assert got == want and want, "append diverged from full rebuild"
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
-    with pytest.raises(IndexParamMismatch, match="append_to_signlsh"):
-        dedup.append_to_signlsh_index(admit, inc, bands=64,
-                                      planes_per_band=8, seed=7)
 
 
 def test_compact_minhash_index_after_replay(spark, tmp_path):
@@ -296,55 +297,51 @@ def test_compact_minhash_index_after_replay(spark, tmp_path):
 
 
 def test_embedding_probe_stats_less_batch_keeps_broadcast(spark, tmp_path):
-    """Stats-less probe frames (local relations, foreachBatch micro-
+    """Stats-less probe batches (local relations, foreachBatch micro-
     batches) carry Catalyst's no-stats sentinel (~Long.MaxValue) — the
-    size gate must treat that as UNKNOWN and keep the broadcast, even
-    under a tiny rm.broadcastMaxBytes (regression guard: a
-    first cut read the sentinel as 'too big' and silently shuffled
-    every in-memory probe batch)."""
+    size gate in cosine_join must treat that as UNKNOWN and keep the
+    broadcast, even under a tiny rm.broadcastMaxBytes (regression
+    guard: a first cut read the sentinel as 'too big' and silently
+    shuffled every in-memory probe batch)."""
     from radmapper_spark.operators import dedup
     emb = _tiny_emb(spark)  # local relation: no real stats
     path = str(tmp_path / "slsent")
-    dedup.build_signlsh_index(emb, path, bands=16, planes_per_band=4)
+    dedup.build_embedding_index(emb, path)
     spark.conf.set("rm.broadcastMaxBytes", "1")
     try:
-        out = dedup.neardup_embedding_vs_index(
-            emb, path, bands=16, planes_per_band=4, threshold=0.9)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        n = out.count()
-        out.rm_release_cache()
+        runs = _gate_runs(spark.read.parquet(f"{path}/vectors"), emb, path)
     finally:
         spark.conf.unset("rm.broadcastMaxBytes")
-    assert "BroadcastHashJoin" in plan, \
-        "no-stats probe side must still broadcast"
-    assert n > 0
+    for rows, plan, flag in runs:
+        assert flag is True
+        assert "BroadcastExchange" in plan, \
+            "no-stats probe batch must still broadcast"
+        assert len(rows) >= 30
 
 
-def test_compact_signlsh_index_after_replay(spark, tmp_path):
-    """Replayed embedding append leaves duplicates in BOTH index tables;
-    compaction removes exactly them and probes answer identically."""
+def test_compact_embedding_index_after_replay(spark, tmp_path):
+    """Replayed embedding append leaves duplicate vectors rows;
+    compaction removes exactly them (one row per replayed vector),
+    preserves the _meta sidecar, and probes answer identically."""
     from radmapper_spark.operators import dedup
+    from radmapper_spark.operators.index_meta import read_index_meta
     emb = _tiny_emb(spark)
-    kw = dict(bands=16, planes_per_band=4)
     path = str(tmp_path / "slc")
-    dedup.build_signlsh_index(emb.filter(F.col("vec_id") < 20), path, **kw)
+    dedup.build_embedding_index(emb.filter(F.col("vec_id") < 20), path)
     batch = emb.filter(F.col("vec_id") >= 20)
-    dedup.append_to_signlsh_index(batch, path, **kw)
-    dedup.append_to_signlsh_index(batch, path, **kw)  # replay
+    dedup.append_to_embedding_index(batch, path)
+    dedup.append_to_embedding_index(batch, path)  # replay
 
     def probe():
-        df = dedup.neardup_embedding_vs_index(emb, path, threshold=0.9,
-                                              **kw)
-        out = {(r.new_id, r.index_id, round(r.cosine, 9))
-               for r in df.collect()}
-        df.rm_release_cache()
-        return out
+        df = dedup.neardup_embedding_vs_index(emb, path, threshold=0.9)
+        return {(r.new_id, r.index_id, round(r.cosine, 9))
+                for r in df.collect()}
 
     before = probe()
-    n_batch = batch.count()
-    removed = dedup.compact_signlsh_index(spark, path)
-    assert removed == n_batch * 16 + n_batch  # bands rows + vectors rows
+    removed = dedup.compact_embedding_index(spark, path)
+    assert removed == batch.count()
     assert probe() == before and before
+    assert read_index_meta(spark, path) == {"kind": "vectors"}
 
 
 def test_compact_builtins(spark, tmp_path):
@@ -365,28 +362,27 @@ def test_compact_builtins(spark, tmp_path):
 
 def test_compact_embedding_builtin(spark, tmp_path):
     """$compactEmbeddingIndex from RM source returns the removed count
-    (bands rows + vectors rows for the replayed batch)."""
+    (one vectors row per replayed vector)."""
     from radmapper_spark.lang.interp import Interp
     from radmapper_spark.operators import dedup
     emb = _tiny_emb(spark)
-    kw = dict(bands=16, planes_per_band=4)
     path = str(tmp_path / "slb")
-    dedup.build_signlsh_index(emb.filter(F.col("vec_id") < 20), path, **kw)
+    dedup.build_embedding_index(emb.filter(F.col("vec_id") < 20), path)
     batch = emb.filter(F.col("vec_id") >= 20)
-    dedup.append_to_signlsh_index(batch, path, **kw)
-    dedup.append_to_signlsh_index(batch, path, **kw)  # replay
+    dedup.append_to_embedding_index(batch, path)
+    dedup.append_to_embedding_index(batch, path)  # replay
     ip = Interp(spark)
     removed = ip.run_raw("$compactEmbeddingIndex($p)",
                          bindings={"$p": path})
-    assert removed == batch.count() * 16 + batch.count()
+    assert removed == batch.count()
 
 
 # ======================== from test_round9.py (r14 consolidation) ========
 def test_probe_broadcast_gate_sizes_single_side(spark, tmp_path):
     """A mid-size stats-bearing probe batch must KEEP the broadcast:
-    each join child here is ~300 KB, so the former join-PRODUCT
-    estimate (~90 GB) silently lost the broadcast while the honest
-    single-side size is far under the 256 MiB default cap."""
+    each side here is ~300 KB, so a join-PRODUCT estimate (~90 GB)
+    would silently lose the broadcast while the honest single-side size
+    of cosine_join's right side is far under the 256 MiB default cap."""
     from radmapper_spark.operators import dedup
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(64)])
@@ -399,12 +395,10 @@ def test_probe_broadcast_gate_sizes_single_side(spark, tmp_path):
     assert one_side is not None and one_side > 16384, \
         "fixture too small for the product-vs-side distinction"
     path = str(tmp_path / "slidx")
-    dedup.build_signlsh_index(emb, path, bands=16, planes_per_band=4)
-    out = dedup.neardup_embedding_vs_index(
-        emb, path, bands=16, planes_per_band=4, threshold=0.9)
+    dedup.build_embedding_index(emb, path)
+    out = dedup.neardup_embedding_vs_index(emb, path, threshold=0.9)
     assert out.rm_broadcast_path is True
     assert out.count() >= 600  # self-probe: every vector hits itself
-    out.rm_release_cache()
 
 
 def _tiny_docs_r9(spark):

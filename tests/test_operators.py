@@ -207,11 +207,9 @@ def test_cosine_join_rejects_null_or_ragged_vector(spark, bad):
 def test_embedding_near_dup_dirty_vectors_drop_or_raise(spark, tmp_path):
     """A NULL and a wrong-dimension vector through each operator that
     ends in the shared pair-cosine kernel: semantic_dedup_pairs drops
-    them, while embedding_cosine_pairs (cosine_join) and
-    neardup_embedding_vs_index (sign_lsh_base) reject the dirty rows
-    before a drop rule could silently lose pairs. One input partition,
-    so sign_lsh_base's round-robin spread leaves every dirty row in a
-    batch with other rows."""
+    them, while embedding_cosine_pairs and neardup_embedding_vs_index
+    (both cosine_join) reject the dirty rows before a drop rule could
+    silently lose pairs."""
     import random
     rng = random.Random(11)
     clean = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(32)]
@@ -225,29 +223,19 @@ def test_embedding_near_dup_dirty_vectors_drop_or_raise(spark, tmp_path):
     assert ids and not ids & {100, 101}
 
     with pytest.raises(Exception, match="cosine_join"):
-        out = dedup.embedding_cosine_pairs(dirty, threshold=0.0)
-        try:
-            out.collect()
-        finally:
-            out.rm_release_cache()
+        dedup.embedding_cosine_pairs(dirty, threshold=0.0).collect()
 
     path = str(tmp_path / "idx")
-    dedup.build_signlsh_index(spark.createDataFrame(clean, schema), path)
-    with pytest.raises(Exception, match="sig_sketch"):
-        out = dedup.neardup_embedding_vs_index(dirty, path, threshold=0.0)
-        try:
-            out.collect()
-        finally:
-            out.rm_release_cache()
+    dedup.build_embedding_index(spark.createDataFrame(clean, schema), path)
+    with pytest.raises(Exception, match="cosine_join"):
+        dedup.neardup_embedding_vs_index(dirty, path,
+                                         threshold=0.0).collect()
 
 
-def test_embedding_lsh_candidate_volume_subquadratic(spark):
-    """Scale regression: at production params (r=16 planes/band, b=24,
-    cos >= 0.9) the banded candidate join volume on a 10k-vector set must
-    stay a tiny fraction of all-pairs — the property that makes the
-    operator a narrow bucketed equi-join at 100 TB instead of a quadratic
-    shuffle. The batch operator embedding_cosine_pairs (exact, no LSH)
-    must recover the planted near-dup pairs."""
+def test_embedding_cosine_pairs_recovers_planted_pairs(spark):
+    """On a 10k-vector set the batch operator embedding_cosine_pairs
+    (exact cosine_join, no LSH) must recover the planted near-dup pairs
+    at cos >= 0.9."""
     import numpy as np
     n, dim, nplanted = 10_000, 32, 250
     rng = np.random.default_rng(7)
@@ -260,19 +248,8 @@ def test_embedding_lsh_candidate_volume_subquadratic(spark):
         [(i, [float(x) for x in base[i]]) for i in range(n)],
         "vec_id bigint, embedding array<double>").repartition(8)
 
-    sigs = dedup.sign_lsh_base(emb, bands=24, planes_per_band=16)
-    buckets = (sigs.select(F.posexplode("bb").alias("band", "sig"))
-               .groupBy("band", "sig").count())
-    volume = buckets.select(
-        F.sum(F.col("count") * (F.col("count") - 1) / 2).alias("v")
-    ).head()["v"]
-    all_pairs = n * (n - 1) / 2
-    assert volume < 0.002 * all_pairs, \
-        f"candidate join volume {volume} is not sub-quadratic vs {all_pairs}"
-
     pairs = dedup.embedding_cosine_pairs(emb, threshold=0.9)
     found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    pairs.rm_release_cache()
     truth = {(i, i + nplanted) for i in range(nplanted)
              if float(base[i] @ base[i + nplanted]
                       / (np.linalg.norm(base[i])

@@ -25,8 +25,8 @@ ARROW_ALLOWED = {
     "ann_ivf_topk",            # IVF cell-assignment matmul
     "ann_pq_topk",             # PQ encode + ADC lookup-table matmuls
     "multimodal_features",     # binary decode boundary (mapInPandas)
-    "embedding_probe",         # sign-LSH signature matmul + the shared
-                               # pair-cosine kernel (dedup.cosine_verify)
+    "embedding_probe",         # blocked-GEMM index x batch product
+                               # (dedup.cosine_join)
     "semantic_dedup",          # within-cluster pairs through the shared
                                # pair-cosine kernel (dedup.cosine_verify)
     "embedding_gram",          # per-batch d×d partial-gram reduction
@@ -232,9 +232,10 @@ EAGER_ALLOWED = {
     "dedup_groups",
     # persisted-index probes re-open the on-disk index each call (that IS
     # the incremental contract — the index outlives any one batch): the
-    # 1-2 jobs are directory-listing/footer reads of the index layout,
-    # bounded by the band-partition count, never a data scan (reading
-    # the _meta sidecar is a plain file read, not a job)
+    # 1-2 jobs are directory-listing/footer reads of the index layout
+    # (the minhash band partitions, the embedding vectors table), never
+    # a data scan (reading the _meta sidecar is a plain file read, not
+    # a job)
     "neardup_probe",
     "embedding_probe",
     "neardup_admit",

@@ -435,11 +435,11 @@ def test_pagerank_copartitioned_equals_broadcast_4m_edges(spark, big_graph):
     assert dt_s < 300
 
 
-def test_signlsh_index_probe_50k_vectors(spark, tmp_path_factory):
-    """Persisted sign-LSH index at 50k vectors / probe with a 5k batch:
-    the probe must stay seconds-scale (signatures for the batch only;
-    banded equi-join + sketch prefilter bound the verify) and find the
-    planted near-dups."""
+def test_embedding_index_probe_50k_vectors(spark, tmp_path_factory):
+    """Persisted embedding index at 50k vectors / probe with a 5k batch:
+    the exact probe (one 5k x 50k cosine_join) must stay seconds-scale
+    and return exactly the pairs a brute-force numpy product counts,
+    planted near-dups included."""
     import numpy as np
     from radmapper_spark.operators import dedup
     root = tmp_path_factory.mktemp("slsh_stress")
@@ -460,23 +460,26 @@ def test_signlsh_index_probe_50k_vectors(spark, tmp_path_factory):
 
     t0 = time.time()
     path = str(root / "idx")
-    dedup.build_signlsh_index(corpus, path, bands=24, planes_per_band=16)
+    dedup.build_embedding_index(corpus, path)
     t_build = time.time() - t0
     t0 = time.time()
-    hits = dedup.neardup_embedding_vs_index(
-        batch, path, threshold=0.9, bands=24, planes_per_band=16)
+    hits = dedup.neardup_embedding_vs_index(batch, path, threshold=0.9)
     got = {(r["new_id"], r["index_id"]) for r in hits.collect()}
     t_probe = time.time() - t0
-    hits.rm_release_cache()
     truth = {(1_000_000 + i, i) for i in range(nplant)
              if float(batch_m[i] @ corpus_m[i]
                       / (np.linalg.norm(batch_m[i])
                          * np.linalg.norm(corpus_m[i]))) >= 0.9}
     assert len(truth) > 400, "fixture should plant enough true pairs"
-    recall = len(truth & got) / len(truth)
-    print(f"\nsignlsh index 50k: build {t_build:.1f}s, probe {t_probe:.1f}s, "
-          f"recall {recall:.3f}, {len(got)} hits")
-    assert recall >= 0.98
+    unit = lambda m: m / np.linalg.norm(m, axis=1, keepdims=True)  # noqa
+    cos = unit(batch_m) @ unit(corpus_m).T
+    bi, ci = np.nonzero(cos >= 0.9)
+    brute = {(1_000_000 + int(b), int(c)) for b, c in zip(bi, ci)}
+    print(f"\nembedding index 50k: build {t_build:.1f}s, "
+          f"probe {t_probe:.1f}s, {len(got)} hits, "
+          f"{len(brute)} brute-force pairs")
+    assert truth <= got
+    assert got == brute
     assert t_probe < 60
 
 
@@ -739,7 +742,7 @@ def test_admission_loop_20_batch_fold_differential(spark, tmp_path_factory):
 
 def test_embedding_admission_20_batch_fold_differential(
         spark, tmp_path_factory):
-    """Sign-LSH twin of the minhash fold differential: 20 micro-batches
+    """Embedding twin of the minhash fold differential: 20 micro-batches
     through start_embedding_admission must leave exactly the index and
     audit trail of a sequential per-batch fold of the batch operators
     under the transitive-cluster spec (independent union-find here, not
@@ -753,7 +756,6 @@ def test_embedding_admission_20_batch_fold_differential(
 
     root = tmp_path_factory.mktemp("eadmit20")
     n_batches, per_batch, groups = 20, 25, 61
-    kw = dict(bands=32, planes_per_band=4)
     thr = 0.9
 
     def vec(i, dim=16):
@@ -783,7 +785,7 @@ def test_embedding_admission_20_batch_fold_differential(
 
     # --- streaming loop
     idx_s = str(root / "idx_stream")
-    dedup.build_signlsh_index(corpus, idx_s, **kw)
+    dedup.build_embedding_index(corpus, idx_s)
     src = str(root / "vin")
     out, ckpt = str(root / "vhits"), str(root / "vck")
     for b in range(n_batches):
@@ -792,20 +794,17 @@ def test_embedding_admission_20_batch_fold_differential(
         q = sinks.start_embedding_admission(
             (spark.readStream.schema(corpus.schema)
              .option("maxFilesPerTrigger", 1).parquet(src)),
-            idx_s, out, ckpt, threshold=thr, **kw)
+            idx_s, out, ckpt, threshold=thr)
         q.awaitTermination(180)
 
     # --- sequential batch fold (independent transitive spec)
     idx_f = str(root / "idx_fold")
-    dedup.build_signlsh_index(corpus, idx_f, **kw)
+    dedup.build_embedding_index(corpus, idx_f)
     audit_f = []
     for b in range(n_batches):
         bdf = spark.createDataFrame(batch_rows(b), schema)
-        hits = dedup.neardup_embedding_vs_index(
-            bdf, idx_f, threshold=thr, **kw)
-        hrows = hits.collect()
-        rel = getattr(hits, "rm_release_cache", None)
-        rel and rel()
+        hrows = dedup.neardup_embedding_vs_index(
+            bdf, idx_f, threshold=thr).collect()
         intra = dedup.embedding_cosine_pairs(bdf, threshold=thr)
         irows = intra.collect()
         rel = getattr(intra, "rm_release_cache", None)
@@ -850,21 +849,20 @@ def test_embedding_admission_20_batch_fold_differential(
                         rejected.add(m)
                         audit_f.append(
                             (m, rep, est.get((min(m, rep), max(m, rep)))))
-        dedup.append_to_signlsh_index(
+        dedup.append_to_embedding_index(
             bdf.filter(~F.col("vec_id").isin(*rejected))
-            if rejected else bdf, idx_f, **kw)
+            if rejected else bdf, idx_f)
 
     def canon(rows):
         return sorted(((a, i, None if e is None else round(e, 9))
                        for a, i, e in rows),
                       key=lambda t: (t[0], t[1], repr(t[2])))
 
-    for sub in ("bands", "vectors"):
-        got = sorted(map(tuple, spark.read.parquet(
-            f"{idx_s}/{sub}").collect()))
-        want = sorted(map(tuple, spark.read.parquet(
-            f"{idx_f}/{sub}").collect()))
-        assert got == want, f"index table {sub} diverged"
+    got = sorted(map(tuple, spark.read.parquet(f"{idx_s}/vectors")
+                     .collect()))
+    want = sorted(map(tuple, spark.read.parquet(f"{idx_f}/vectors")
+                      .collect()))
+    assert got == want, "index vectors table diverged"
     got_audit = canon((r.new_id, r.index_id, r.cosine) for r in
                       spark.read.parquet(out).collect())
     assert got_audit == canon(audit_f)

@@ -131,7 +131,7 @@ def test_streaming_neardup_probe_matches_batch(spark, tmp_path):
 
 
 def test_streaming_embedding_probe_matches_batch(spark, tmp_path):
-    """Stream 2 micro-batches of vectors against a persisted sign-LSH
+    """Stream 2 micro-batches of vectors against a persisted embedding
     index; the appended hits equal the batch probe over the full set."""
     from pyspark.sql import functions as F
     from radmapper_spark.operators import dedup
@@ -142,7 +142,7 @@ def test_streaming_embedding_probe_matches_batch(spark, tmp_path):
     new = emb.filter(F.col("vec_id") % 10 == 0) \
         .select("vec_id", "embedding").cache()
     idx = str(tmp_path / "slsh")
-    dedup.build_signlsh_index(old, idx)
+    dedup.build_embedding_index(old, idx)
     src = str(tmp_path / "in")
     rows = new.collect()
     half = len(rows) // 2
@@ -160,7 +160,6 @@ def test_streaming_embedding_probe_matches_batch(spark, tmp_path):
     batch = dedup.neardup_embedding_vs_index(new, idx)
     want = {(r.new_id, r.index_id): round(r.cosine, 9)
             for r in batch.collect()}
-    batch.rm_release_cache()
     assert got == want
     assert len(got) > 0
     new.unpersist()
@@ -220,7 +219,7 @@ def test_streaming_neardup_admission_loop(spark, tmp_path):
 
 
 def test_streaming_embedding_admission_loop(spark, tmp_path):
-    """Sign-LSH twin of the admission-loop test: a vector admitted in
+    """Embedding twin of the admission-loop test: a vector admitted in
     micro-batch 1 must be found by micro-batch 2's probe; intra-batch
     duplicates resolve first-writer-wins; rejected vectors never enter
     the index."""
@@ -236,12 +235,11 @@ def test_streaming_embedding_admission_loop(spark, tmp_path):
         return [random.Random(seed * 1000 + j).uniform(-1, 1)
                 for j in range(dim)]
 
-    kw = dict(bands=32, planes_per_band=4)
     corpus = spark.createDataFrame(
         [(i, vec(i)) for i in range(10)],
         "vec_id long, embedding array<double>")
     idx = str(tmp_path / "eidx")
-    dedup.build_signlsh_index(corpus, idx, **kw)
+    dedup.build_embedding_index(corpus, idx)
 
     b1 = [(100, vec(0)),   # dup of corpus 0 -> rejected
           (101, vec(50)),  # new -> admitted
@@ -260,7 +258,7 @@ def test_streaming_embedding_admission_loop(spark, tmp_path):
         stream = (spark.readStream.schema(corpus.schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q = sinks.start_embedding_admission(
-            stream, idx, out, ckpt, threshold=0.95, **kw)
+            stream, idx, out, ckpt, threshold=0.95)
         q.awaitTermination(120)
 
     run()
@@ -449,7 +447,6 @@ def test_embedding_admission_chain_end_to_end(spark, tmp_path):
     the index gains nothing from batch 2."""
     from radmapper_spark.operators import dedup
     from radmapper_spark.streaming import sinks
-    kw = dict(bands=32, planes_per_band=4)
     thr = 0.9
     # exact cosines in the (e1,e2) plane: A-B = cos(.3)=.955, B-C =
     # cos(.3)=.955, A-C = cos(.6)=.825 < thr. D at .37 rad from A
@@ -459,7 +456,7 @@ def test_embedding_admission_chain_end_to_end(spark, tmp_path):
         [(0, _plane_vec(math.pi / 2))],  # unrelated seed doc
         "vec_id long, embedding array<double>")
     idx = str(tmp_path / "chidx")
-    dedup.build_signlsh_index(corpus, idx, **kw)
+    dedup.build_embedding_index(corpus, idx)
     b1 = [(1, _plane_vec(0.0)), (2, _plane_vec(0.3)),
           (3, _plane_vec(0.6))]
     b2 = [(4, _plane_vec(0.37)), (5, _plane_vec(0.69))]
@@ -473,7 +470,7 @@ def test_embedding_admission_chain_end_to_end(spark, tmp_path):
         stream = (spark.readStream.schema(corpus.schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q = sinks.start_embedding_admission(
-            stream, idx, out, ckpt, threshold=thr, **kw)
+            stream, idx, out, ckpt, threshold=thr)
         q.awaitTermination(120)
 
     run()
