@@ -884,8 +884,8 @@ def neardup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end incremental ADMISSION loop on the persisted minhash
     index: index the base corpus (doc_id % 7 >= 2), ADMIT the
     doc_id % 7 == 1 batch via dedup.append_to_minhash_index (signatures
-    computed for the batch only, parquet-appended into the band
-    partitions — the index is never rewritten), then probe the
+    computed for the batch only, parquet-appended to the index's seed
+    partition — the index is never rewritten), then probe the
     doc_id % 7 == 0 batch. Hits land against BOTH the original corpus
     and the admitted batch (1/3/12 admitted-batch hits at
     sf0.001/0.01/0.1 — non-vacuous), so a green row proves append

@@ -1512,7 +1512,8 @@ def _t_build_neardup_index(ip, env, table=NOMATCH, path=NOMATCH):
 
 @builtin("$compactNearDupIndex", 1)
 def _t_compact_neardup_index(ip, env, path=NOMATCH):
-    """Compact a persisted minhash index (drop replay-duplicate rows;
+    """Compact a persisted minhash index (fold its committed batch
+    partitions into the seed, dropping duplicate rows;
     dedup.compact_minhash_index). Returns the rows removed."""
     from ..operators import dedup
     return dedup.compact_minhash_index(
@@ -1521,9 +1522,9 @@ def _t_compact_neardup_index(ip, env, path=NOMATCH):
 
 @builtin("$compactEmbeddingIndex", 1)
 def _t_compact_embedding_index(ip, env, path=NOMATCH):
-    """Compact a persisted embedding index (drop replay-duplicate
-    vectors rows; dedup.compact_embedding_index). Returns the rows
-    removed."""
+    """Compact a persisted embedding index (fold its committed batch
+    partitions into the seed, dropping vectors rows duplicate on id;
+    dedup.compact_embedding_index). Returns the rows removed."""
     from ..operators import dedup
     return dedup.compact_embedding_index(
         ip.spark, _s(path, "$compactEmbeddingIndex"))
@@ -1533,7 +1534,7 @@ def _t_compact_embedding_index(ip, env, path=NOMATCH):
 def _t_admit_neardup_index(ip, env, table=NOMATCH, path=NOMATCH):
     """ADMIT a document batch into a persisted minhash index
     (dedup.append_to_minhash_index — signatures for the batch only,
-    appended into the band partitions; wrong-family params raise).
+    appended to the index's seed partition; wrong-family params raise).
     Returns the path for chaining with $probeNearDupIndex."""
     from ..operators import dedup
     p = _s(path, "$admitNearDupIndex")
@@ -1568,8 +1569,8 @@ def _t_build_embedding_index(ip, env, table=NOMATCH, path=NOMATCH):
 def _t_admit_embedding_index(ip, env, table=NOMATCH, path=NOMATCH):
     """ADMIT a vector batch into a persisted embedding index
     (dedup.append_to_embedding_index — the batch's vectors rows are
-    appended; an index of another kind raises) — returns the path for
-    chaining."""
+    appended to the seed partition; an index of another kind raises) —
+    returns the path for chaining."""
     from ..operators import dedup
     p = _s(path, "$admitEmbeddingIndex")
     dedup.append_to_embedding_index(

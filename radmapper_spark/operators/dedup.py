@@ -12,8 +12,6 @@ All operators are pure DataFrame plans:
   the stream (streaming/neardup.py) all feed it minhash_base
   signatures, so every minhash path drops blank docs, and all of them
   verify with one estimate (_est_jaccard).
-- simhash_dedup: 64-bit simhash via token-hash bit voting; near-dups share
-  the simhash prefix buckets.
 - ngram_jaccard_pairs: exact n-gram Jaccard on candidate pairs (verification
   stage after LSH).
 - embedding_cosine_pairs: near-dup by exact embedding cosine, the
@@ -28,8 +26,6 @@ UDFs in the hot path): xxhash64, transform, aggregate, explode.
 """
 
 from __future__ import annotations
-
-import os as _os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -436,33 +432,6 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        F.lit(bit_vals[i]).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         fingerprint = piece if fingerprint is None else fingerprint.bitwiseOR(piece)
     return votes.select(F.col(id_col), fingerprint.alias("simhash"))
-
-
-def simhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  prefix_bits: int = 16, max_ids: int = 100) -> DataFrame:
-    """Bucket-summary diagnostic: docs sharing a simhash prefix. Returns
-    (bucket, n_docs, ids) for buckets with >1 doc; rows are pre-limited to
-    the `max_ids` smallest ids per bucket with a row_number window BEFORE
-    the collect_list, so a hot bucket (e.g. near-empty docs) bounds the
-    aggregation BUFFER too, not just the output row (a post-agg slice
-    still collects every id into the buffer). For the scalable pairwise
-    form use simhash_pairs()."""
-    from pyspark.sql import Window
-    sh = simhash(docs, text_col, id_col)
-    bucket = F.shiftrightunsigned(F.col("simhash"), 64 - prefix_bits)
-    w = Window.partitionBy("bucket")
-    # count + row_number share the bucket partitioning; the groupBy below
-    # reuses the same exchange (HashPartitioning(bucket) satisfies the
-    # (bucket, n_docs) clustering), so this is still a one-shuffle plan
-    return (
-        sh.withColumn("bucket", bucket)
-        .withColumn("n_docs", F.count(F.lit(1)).over(w))
-        .withColumn("rn", F.row_number().over(w.orderBy(id_col)))
-        .filter((F.col("n_docs") > 1) & (F.col("rn") <= max_ids))
-        .groupBy("bucket", "n_docs")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .select("bucket", "n_docs", "ids")
-    )
 
 
 def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -1032,15 +1001,57 @@ def fuzzy_pairs_levenshtein(df: DataFrame, col: str,
             .select("name_a", "name_b", "dist"))
 
 
-# ----------------------------------------------- persisted minhash index
+# ------------------------------------------------------ persisted indexes
+#
+# A persisted index is a directory: its data table (``bands/`` for
+# minhash, ``vectors/`` for embeddings) in the per-batch state layout
+# of streaming/state.py, beside a ``_meta`` sidecar (index_meta.py).
+# Builds write the seed partition, out-of-stream admits append to it,
+# and the streaming admission loop (streaming/sinks.py) probes the
+# prior view and writes its admits as its own batch partition, so a
+# replayed batch rewrites exactly its own rows.
+
+_VECTORS_KIND = "vectors"  # the embedding index's sidecar kind
+_TABLES = {"minhash": "bands", _VECTORS_KIND: "vectors"}
+
+
+def _index_table(spark, path: str, kind: str, params: dict,
+                 who: str) -> str:
+    """The data table of the `kind` index at `path`, after checking
+    the sidecar against (kind, params) (IndexParamMismatch) and the
+    table's per-batch layout (ValueError: an index written before it
+    is refused, never misread)."""
+    from ..streaming.state import check_layout
+    from .index_meta import check_index_meta
+
+    check_index_meta(spark, path, kind, params, who)
+    table = f"{path}/{_TABLES[kind]}"
+    check_layout(spark, table, f"{kind} index")
+    return table
+
+
+def _minhash_params(num_hashes, bands, shingle_k, hash_mode) -> dict:
+    return {"num_hashes": num_hashes, "bands": bands,
+            "shingle_k": shingle_k, "hash_mode": hash_mode}
+
+
+def _minhash_rows(docs: DataFrame, text_col: str, id_col: str,
+                  num_hashes: int, bands: int, shingle_k: int,
+                  hash_mode: str) -> DataFrame:
+    """`docs`' (band, bhash, id, minhash) index rows."""
+    sigs = minhash_base(docs, text_col, id_col, num_hashes, shingle_k,
+                        hash_mode=hash_mode)
+    return minhash_bands(sigs, num_hashes, bands, hash_mode)
+
 
 def build_minhash_index(docs: DataFrame, path: str,
                         text_col: str = "text", id_col: str = "doc_id",
                         num_hashes: int = 32, bands: int = 8,
                         shingle_k: int = 5,
                         hash_mode: str = "xxhash64") -> None:
-    """Persist the corpus's banded minhash index: one parquet table
-    partitioned by band, rows (band, bhash, id, minhash). Incremental
+    """Persist the corpus's banded minhash index: the ``bands/`` table
+    of (band, bhash, id, minhash) rows, partitioned by band below the
+    batch column (the corpus is the seed partition). Incremental
     near-dup (below) probes it WITHOUT touching the corpus text — the
     at-scale shape for a growing corpus: signature extraction is paid
     once per document ever, and a probe batch shuffles only its own
@@ -1048,15 +1059,15 @@ def build_minhash_index(docs: DataFrame, path: str,
     are persisted in a ``_meta`` sidecar; probes assert them and RAISE
     on mismatch (index_meta.check_index_meta).
     """
+    from ..streaming.state import write_seed
     from .index_meta import write_index_meta
 
-    sigs = minhash_base(docs, text_col, id_col, num_hashes, shingle_k,
-                        hash_mode=hash_mode)
-    minhash_bands(sigs, num_hashes, bands, hash_mode) \
-        .write.mode("overwrite").partitionBy("band").parquet(path)
+    write_seed(_minhash_rows(docs, text_col, id_col, num_hashes, bands,
+                             shingle_k, hash_mode),
+               f"{path}/bands", "band")
     write_index_meta(docs.sparkSession, path, "minhash",
-                     {"num_hashes": num_hashes, "bands": bands,
-                      "shingle_k": shingle_k, "hash_mode": hash_mode})
+                     _minhash_params(num_hashes, bands, shingle_k,
+                                     hash_mode))
 
 
 def append_to_minhash_index(new_docs: DataFrame, path: str,
@@ -1065,51 +1076,30 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
                             num_hashes: int = 32, bands: int = 8,
                             shingle_k: int = 5,
                             hash_mode: str = "xxhash64") -> None:
-    """ADMIT a batch into the persisted minhash index: append the
-    batch's (band, bhash, id, minhash) rows into the band partitions —
-    the write-side half of the incremental-admission loop (probe asks
-    "seen before?", append makes the batch visible to every future
-    probe). Only the batch's signatures are computed; the existing index
-    is never rewritten (parquet append into hive band partitions).
+    """ADMIT a batch into the persisted minhash index out of stream:
+    append the batch's (band, bhash, id, minhash) rows to the seed
+    partition, so every future probe sees them. Only the batch's
+    signatures are computed; the existing index is never rewritten.
     Params are asserted against the index's ``_meta`` sidecar — an
     append in the wrong hash family would poison the index, so it
     raises IndexParamMismatch instead."""
-    from .index_meta import check_index_meta
+    from ..streaming.state import write_seed
 
-    check_index_meta(new_docs.sparkSession, path, "minhash",
-                     {"num_hashes": num_hashes, "bands": bands,
-                      "shingle_k": shingle_k, "hash_mode": hash_mode},
-                     "append_to_minhash_index")
-    sigs = minhash_base(new_docs, text_col, id_col, num_hashes, shingle_k,
-                        hash_mode=hash_mode)
-    minhash_bands(sigs, num_hashes, bands, hash_mode) \
-        .write.mode("append").partitionBy("band").parquet(path)
+    table = _index_table(new_docs.sparkSession, path, "minhash",
+                         _minhash_params(num_hashes, bands, shingle_k,
+                                         hash_mode),
+                         "append_to_minhash_index")
+    write_seed(_minhash_rows(new_docs, text_col, id_col, num_hashes,
+                             bands, shingle_k, hash_mode),
+               table, "band", mode="append")
 
 
-def neardup_vs_index(new_docs: DataFrame, path: str,
-                     text_col: str = "text", id_col: str = "doc_id",
-                     num_hashes: int = 32, bands: int = 8,
-                     shingle_k: int = 5,
-                     jaccard_threshold: float = 0.5,
-                     hash_mode: str = "xxhash64") -> DataFrame:
-    """Probe a persisted minhash index with a batch of NEW documents:
-    returns (new_id, index_id, est_jaccard) for every new doc that
-    near-duplicates an indexed one. The probe computes signatures for
-    the batch only, equi-joins the index on (band, bhash) — partition
-    pruning keeps the scan to matching band dirs; the index text is
-    never read — and verifies on the stored signatures. Estimated
-    jaccard is identical to the batch operator's (same signature family).
-    Raises IndexParamMismatch when (num_hashes, bands, shingle_k,
-    hash_mode) disagree with the index's persisted ``_meta`` sidecar.
-    """
-    from .index_meta import check_index_meta
-
-    spark = new_docs.sparkSession
-    check_index_meta(spark, path, "minhash",
-                     {"num_hashes": num_hashes, "bands": bands,
-                      "shingle_k": shingle_k, "hash_mode": hash_mode},
-                     "neardup_vs_index")
-    idx = spark.read.parquet(path)
+def _minhash_probe(new_docs: DataFrame, idx: DataFrame, text_col: str,
+                   id_col: str, num_hashes: int, bands: int,
+                   shingle_k: int, jaccard_threshold: float,
+                   hash_mode: str) -> DataFrame:
+    """neardup_vs_index against the index rows `idx` (the whole table,
+    or a streaming batch's prior view of it)."""
     sigs = minhash_base(new_docs, text_col, id_col, num_hashes, shingle_k,
                         hash_mode=hash_mode)
     probes = minhash_bands(sigs, num_hashes, bands, hash_mode).select(
@@ -1125,9 +1115,36 @@ def neardup_vs_index(new_docs: DataFrame, path: str,
             .select("new_id", "index_id", "est_jaccard"))
 
 
-# ---------------------------------------- persisted embedding index
+def neardup_vs_index(new_docs: DataFrame, path: str,
+                     text_col: str = "text", id_col: str = "doc_id",
+                     num_hashes: int = 32, bands: int = 8,
+                     shingle_k: int = 5,
+                     jaccard_threshold: float = 0.5,
+                     hash_mode: str = "xxhash64") -> DataFrame:
+    """Probe a persisted minhash index with a batch of NEW documents:
+    returns (new_id, index_id, est_jaccard) for every new doc that
+    near-duplicates an indexed one. The probe computes signatures for
+    the batch only, equi-joins the index on (band, bhash) — the index
+    text is never read — and verifies on the stored signatures.
+    Estimated jaccard is identical to the batch operator's (same
+    signature family). Raises IndexParamMismatch when (num_hashes,
+    bands, shingle_k, hash_mode) disagree with the index's persisted
+    ``_meta`` sidecar.
+    """
+    spark = new_docs.sparkSession
+    table = _index_table(spark, path, "minhash",
+                         _minhash_params(num_hashes, bands, shingle_k,
+                                         hash_mode), "neardup_vs_index")
+    return _minhash_probe(new_docs, spark.read.parquet(table), text_col,
+                          id_col, num_hashes, bands, shingle_k,
+                          jaccard_threshold, hash_mode)
 
-_VECTORS_KIND = "vectors"  # the embedding index's sidecar kind
+
+def _vector_rows(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """`emb`'s (id, v double[]) index rows."""
+    return emb.select(F.col(id_col).alias("id"),
+                      F.transform(F.col(vec_col), lambda x: x.cast("double"))
+                      .alias("v"))
 
 
 def build_embedding_index(emb: DataFrame, path: str,
@@ -1135,36 +1152,42 @@ def build_embedding_index(emb: DataFrame, path: str,
                           id_col: str = "vec_id") -> None:
     """Persist the corpus's embedding index, the embedding twin of
     build_minhash_index: the ``vectors/`` table (id, v double[]) under
-    `path` plus a ``_meta`` sidecar of kind "vectors" with no params.
-    A probe batch (neardup_embedding_vs_index) never re-reads the
-    corpus table."""
+    `path` (the corpus is its seed partition) plus a ``_meta`` sidecar
+    of kind "vectors" with no params. A probe batch
+    (neardup_embedding_vs_index) never re-reads the corpus table."""
+    from ..streaming.state import write_seed
     from .index_meta import write_index_meta
 
-    _write_vectors(emb, path, vec_col, id_col, "overwrite")
+    write_seed(_vector_rows(emb, vec_col, id_col), f"{path}/vectors")
     write_index_meta(emb.sparkSession, path, _VECTORS_KIND, {})
-
-
-def _write_vectors(emb: DataFrame, path: str, vec_col: str, id_col: str,
-                   mode: str) -> None:
-    """Write `emb`'s (id, v double[]) rows to `path`/vectors."""
-    (emb.select(F.col(id_col).alias("id"),
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                .alias("v"))
-     .write.mode(mode).parquet(f"{path}/vectors"))
 
 
 def append_to_embedding_index(new_emb: DataFrame, path: str,
                               vec_col: str = "embedding",
                               id_col: str = "vec_id") -> None:
-    """ADMIT a vector batch into the persisted embedding index (the
-    twin of append_to_minhash_index): its (id, v) rows append to the
-    ``vectors`` table; an index of another kind raises
-    IndexParamMismatch."""
-    from .index_meta import check_index_meta
+    """ADMIT a vector batch into the persisted embedding index out of
+    stream (the twin of append_to_minhash_index): its (id, v) rows
+    append to the seed partition of the ``vectors`` table; an index of
+    another kind raises IndexParamMismatch."""
+    from ..streaming.state import write_seed
 
-    check_index_meta(new_emb.sparkSession, path, _VECTORS_KIND, {},
-                     "append_to_embedding_index")
-    _write_vectors(new_emb, path, vec_col, id_col, "append")
+    table = _index_table(new_emb.sparkSession, path, _VECTORS_KIND, {},
+                         "append_to_embedding_index")
+    write_seed(_vector_rows(new_emb, vec_col, id_col), table,
+               mode="append")
+
+
+def _embedding_probe(new_emb: DataFrame, vectors: DataFrame,
+                     vec_col: str, id_col: str,
+                     threshold: float) -> DataFrame:
+    """neardup_embedding_vs_index against the index rows `vectors`
+    (the whole table, or a streaming batch's prior view of it)."""
+    pairs = cosine_join(vectors.select("id", "v"),
+                        new_emb.select(id_col, vec_col), threshold)
+    out = pairs.select(F.col("id_b").alias("new_id"),
+                       F.col("id_a").alias("index_id"), "cosine")
+    out.rm_broadcast_path = pairs.rm_broadcast_path
+    return out
 
 
 def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
@@ -1182,85 +1205,41 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     their input types; a NULL or ragged vector raises; an index of
     another kind (the old banded sign-LSH one) raises
     IndexParamMismatch."""
-    from .index_meta import check_index_meta
-
     spark = new_emb.sparkSession
-    check_index_meta(spark, path, _VECTORS_KIND, {},
-                     "neardup_embedding_vs_index")
-    pairs = cosine_join(spark.read.parquet(f"{path}/vectors"),
-                        new_emb.select(id_col, vec_col), threshold)
-    out = pairs.select(F.col("id_b").alias("new_id"),
-                       F.col("id_a").alias("index_id"), "cosine")
-    out.rm_broadcast_path = pairs.rm_broadcast_path
-    return out
+    table = _index_table(spark, path, _VECTORS_KIND, {},
+                         "neardup_embedding_vs_index")
+    return _embedding_probe(new_emb, spark.read.parquet(table), vec_col,
+                            id_col, threshold)
 
 
-def _swap_index_dir(path: str, tmp: str) -> None:
-    """Crash-safe local-FS directory swap for index compaction: rename
-    the live index aside (``path__old``), move the compacted copy into
-    place, then delete the old copy; a failure moving the new copy in
-    restores the old one. A ``path__old`` left by a crash in an earlier
-    swap's cleanup is removed first."""
-    import shutil
-
-    old = path.rstrip("/") + "__old"
-    if _os.path.exists(old):
-        shutil.rmtree(old)
-    _os.rename(path, old)
-    try:
-        shutil.move(tmp, path)
-    except Exception:
-        _os.rename(old, path)  # restore the live index before failing
-        raise
-    shutil.rmtree(old)
-
-
-def _compact_table(spark, path: str, table: str, keys: list,
-                   partition_by: str = None) -> int:
-    """Rewrite the index table at `table` (under the index at `path`)
-    with rows duplicate on `keys` dropped, into a temp sibling dir, then
-    swap it in via rename-aside (_swap_index_dir: the live table is
-    never deleted before its replacement is in place; probes in flight
-    during the swap are the caller's exclusion to manage, as for a
-    rebuild). The ``_meta`` sidecar is preserved; one without a kind is
-    corrupt and raises rather than being rewritten without it. Returns
+def _compact_index(spark, path: str, kind: str, keys: list,
+                   partition_by: tuple = ()) -> int:
+    """Fold the `kind` index's table (streaming/state.py
+    compact_batch_partitions) with rows duplicate on `keys` dropped:
+    repeated out-of-stream admits of the same rows leave exact
+    duplicates in the seed. The sidecar is untouched; a sidecar of
+    another kind, or without one, raises IndexParamMismatch. Returns
     rows removed."""
-    from .index_meta import (IndexParamMismatch, read_index_meta,
-                             write_index_meta)
+    from ..streaming.state import compact_batch_partitions
 
-    meta = read_index_meta(spark, path)
-    if meta is not None and "kind" not in meta:
-        raise IndexParamMismatch(
-            f"index at {path} has a _meta sidecar without a 'kind' "
-            f"field — the sidecar is corrupt; rebuild the index rather "
-            f"than compacting it.")
-    df = spark.read.parquet(table)
-    before = df.count()
-    tmp = table.rstrip("/") + "__compact"
-    w = df.dropDuplicates(keys).write.mode("overwrite")
-    (w.partitionBy(partition_by) if partition_by else w).parquet(tmp)
-    removed = before - spark.read.parquet(tmp).count()
-    _swap_index_dir(table, tmp)
-    if meta is not None:
-        write_index_meta(spark, path, meta.pop("kind"), meta)
-    return int(removed)
+    table = _index_table(spark, path, kind, {}, f"compact {kind} index")
+    return compact_batch_partitions(
+        spark, table, None, lambda old: old.dropDuplicates(keys),
+        partition_by=partition_by)["rows_removed"]
 
 
 def compact_minhash_index(spark, path: str) -> int:
-    """Out-of-band maintenance for an append-mode minhash index:
-    replayed micro-batches (see start_neardup_admission's restart
-    caveat) append byte-identical (band, bhash, id, minhash) rows; one
-    distinct shuffle keyed like the index drops them. Returns rows
-    removed."""
-    return _compact_table(spark, path, path, ["band", "bhash", "id"],
-                          partition_by="band")
+    """Out-of-band maintenance for a minhash index: folds the seed and
+    the committed batch partitions into the seed, dropping rows
+    duplicate on (band, bhash, id). Returns rows removed."""
+    return _compact_index(spark, path, "minhash", ["band", "bhash", "id"],
+                          ("band",))
 
 
 def compact_embedding_index(spark, path: str) -> int:
-    """Embedding twin of compact_minhash_index: drops the ``vectors``
-    rows duplicate on id (replayed appends write byte-identical rows).
-    Returns rows removed."""
-    return _compact_table(spark, path, f"{path}/vectors", ["id"])
+    """Embedding twin of compact_minhash_index: the fold drops
+    ``vectors`` rows duplicate on id. Returns rows removed."""
+    return _compact_index(spark, path, _VECTORS_KIND, ["id"])
 
 
 # -------------------------------------------------- repeated span pairs

@@ -10,9 +10,10 @@ writes a one-row ``_meta`` text dataset of its parameters next to the
 data, and every probe asserts its own parameters against it — a
 mismatch RAISES instead of returning garbage.
 
-The sidecar is written through Spark itself (``createDataFrame`` ..
-``write.text``) and read back through the Hadoop FS API, so it works on
-any Hadoop-visible filesystem, not just the local disk.
+The sidecar is written and read through the Hadoop FS API (no Spark
+job), so it works on any Hadoop-visible filesystem, not just the local
+disk. The reader also takes a sidecar Spark's text writer made (part
+files plus ``_SUCCESS``).
 """
 
 from __future__ import annotations
@@ -26,13 +27,25 @@ class IndexParamMismatch(ValueError):
     not run."""
 
 
+def _meta_fs(spark, path: str):
+    """(jvm, Hadoop FileSystem, Path of ``<path>/_meta``)."""
+    jvm = spark._jvm
+    meta_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
+    return jvm, meta_dir.getFileSystem(spark._jsc.hadoopConfiguration()), \
+        meta_dir
+
+
 def write_index_meta(spark, path: str, kind: str, params: dict) -> None:
-    """Persist ``{kind, **params}`` as ``<path>/_meta`` (one text row)."""
-    meta = {"kind": kind, **params}
-    key = f"{path}/_meta"
-    (spark.createDataFrame([(json.dumps(meta, sort_keys=True),)],
-                           "meta string")
-     .coalesce(1).write.mode("overwrite").text(key))
+    """Persist ``{kind, **params}`` as ``<path>/_meta`` (one text row in
+    one part file, replacing the directory)."""
+    jvm, fs, meta_dir = _meta_fs(spark, path)
+    fs.delete(meta_dir, True)
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(meta_dir, "part-00000"))
+    try:
+        out.write(bytearray(json.dumps({"kind": kind, **params},
+                                       sort_keys=True) + "\n", "utf-8"))
+    finally:
+        out.close()
 
 
 def read_index_meta(spark, path: str):
@@ -42,9 +55,7 @@ def read_index_meta(spark, path: str):
     no cache, so a sidecar another process rewrote is seen at once. Any
     other filesystem error propagates, and so does a sidecar that does
     not parse (or is empty): corruption must never pass the guard."""
-    jvm = spark._jvm
-    meta_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
-    fs = meta_dir.getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm, fs, meta_dir = _meta_fs(spark, path)
     if not fs.exists(meta_dir):
         return None
     # the part files, in name order; like spark.read.text, skip the

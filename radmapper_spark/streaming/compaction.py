@@ -1,139 +1,30 @@
-"""Out-of-band COMPACTION for the streaming loops' per-batch state
-tables (r15 verdict item #1 — the claimed-but-missing op): the crawl
-loop's url-hash index and host-counts table (streaming/crawl.py) and
-the text-ingest loop's norm-hash index (streaming/ingest.py) each grow
-ONE parquet partition per micro-batch, forever. Correctness never
-degrades — every probe is a union over partitions — but at 100 TB
-stream lifetimes (millions of micro-batches) the per-probe FILE
-LISTING cost grows linearly with stream age and eventually dominates
-the probe itself. This module rewrites all partitions strictly below a
-watermark into the seed partition (``_rm_batch_id = -1``), preserving
-the probe contract exactly, behind the same crash-safe rename-aside
-swap the minhash and embedding index compactors use
-(operators/dedup.py `_swap_index_dir`).
+"""Out-of-band COMPACTION of the streaming loops' per-batch state
+tables: the crawl loop's url-hash index and host-counts table
+(streaming/crawl.py) and the text-ingest loop's norm-hash index
+(streaming/ingest.py) each grow one partition per micro-batch. Each
+compactor here is streaming/state.compact_batch_partitions with the
+table's own probe reduction as the fold (distinct membership for the
+hash indexes, a BIGINT pre-sum for the counts); the state module
+docstring says why folding below the default watermark keeps every
+probe answer and kill -> compact -> restart byte-identical (tested for
+both loops in tests/test_compaction.py).
 
-Listing-cost bound: a table compacted every K micro-batches holds at
-most K + 2 partitions at any instant (seed, up to K uncompacted batch
-partitions, plus the in-flight batch), so the probe's listing cost is
-O(K) for the stream's whole lifetime instead of O(age).
-
-Why folding below the watermark preserves BOTH probe answers and
-replay determinism:
-
-* every probe reads the table EXCLUDING the probing batch's own
-  partition (``_rm_batch_id != batch_id``) and then reduces over what
-  remains — set membership for the hash indexes (anti-join), per-host
-  SUM for the counts table. Both reductions are associative and
-  insensitive to which partition a row lives in, so re-homing rows to
-  the seed partition (and dropping exact duplicates / pre-summing, the
-  reductions' own idempotence) leaves every probe answer unchanged;
-* micro-batches COMMIT IN ORDER, so when partition ``m`` is the
-  maximum present, every partition strictly below ``m`` belongs to a
-  committed batch — only the maximum can be the half-written partition
-  of a crashed, about-to-replay batch. The default watermark
-  (``upto=None`` -> the max present id) therefore never folds a
-  partition a replay could still OVERWRITE (dynamic partition
-  overwrite targets the batch's own id) or need to EXCLUDE (the
-  replayed id stays a standalone partition; folded rows, all from
-  earlier committed batches, are correctly visible as prior state).
-  Kill -> compact -> restart is byte-identical on the admitted output
-  (test-proven for both loops in tests/test_stream_crawl.py /
-  test_stream_ingest.py).
-
-Operational contract (same as compact_minhash_index): run OUT OF BAND
-— between micro-batches or while the stream is stopped; probes in
-flight during the swap are the caller's exclusion to manage. An
-explicit ``upto`` above the max present id would fold EVERYTHING
-including a possibly-uncommitted tail; that is refused unless
-``allow_uncommitted_tail=True`` is passed, which is only safe when the
-stream is stopped with all batches committed.
-
-Reference: the reference repo has no streaming; this is maintenance
-for this repo's own incremental-admission state contract.
+Operational contract: run OUT OF BAND, between micro-batches or while
+the stream is stopped; probes in flight during the swap are the
+caller's exclusion to manage. An explicit ``upto`` above the max
+present id is refused unless ``allow_uncommitted_tail=True`` (only
+safe with the stream stopped and every batch committed).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from ..operators.dedup import _swap_index_dir
 from . import crawl as _crawl
 from . import ingest as _ingest
-
-_BATCH_COL = "_rm_batch_id"
-_SEED_BATCH_ID = -1
-
-
-def compact_batch_partitions(spark: SparkSession, path: str, schema: str,
-                             fold: Callable[[DataFrame], DataFrame],
-                             upto: Optional[int] = None, *,
-                             allow_uncommitted_tail: bool = False) -> dict:
-    """Generic per-batch-partitioned state compactor: rows with
-    ``_rm_batch_id < upto`` are re-homed (via ``fold``, the table's own
-    probe reduction — distinct for membership indexes, a pre-sum for
-    the counts table) into the seed partition; partitions at or above
-    the watermark are carried over untouched. ``upto=None`` derives
-    the always-safe watermark (the maximum batch id present — see the
-    module docstring). The rewrite stages into a ``__compact`` sibling
-    and swaps in via rename-aside, so the live table exists at every
-    instant and a crash never loses it. Returns
-    ``{"rows_before", "rows_after", "rows_removed",
-    "batches_folded"}``; a table with no foldable partitions is a
-    no-op (no swap)."""
-    df = spark.read.schema(schema).parquet(path)
-    flat = df.filter(F.col(_BATCH_COL).isNull()).limit(1).count()
-    if flat:
-        raise ValueError(
-            f"state table at {path} has rows without a {_BATCH_COL} "
-            f"partition (flat layout) — the streaming probes would "
-            f"silently drop them (see the loops' start-time guard). "
-            f"Rebuild the table via its build_* helper instead of "
-            f"compacting it.")
-    mx = df.agg(F.max(_BATCH_COL)).first()[0]
-    if mx is None:
-        return {"rows_before": 0, "rows_after": 0,
-                "rows_removed": 0, "batches_folded": 0}
-    if upto is None:
-        upto = int(mx)
-    elif upto > int(mx) and not allow_uncommitted_tail:
-        # only the MAX present partition can be a crashed batch's
-        # half-write (batches commit in order); a watermark above it
-        # would fold that possibly-uncommitted tail into the seed, and
-        # the replaying batch would then see its own partial state as
-        # prior history. Folding it is only safe when the stream is
-        # stopped with all batches committed — demand the explicit
-        # opt-in instead of trusting a docstring.
-        raise ValueError(
-            f"upto={upto} is above the max present batch id ({int(mx)}) "
-            f"at {path}: folding the tail partition is only safe when "
-            f"the stream is stopped with all batches committed; pass "
-            f"allow_uncommitted_tail=True to opt in.")
-    old = df.filter(F.col(_BATCH_COL) < upto)
-    n_old_batches = old.select(_BATCH_COL).distinct().count()
-    if n_old_batches <= 1:
-        # nothing to gain: at most the seed itself sits below the
-        # watermark, and rewriting one partition into itself buys no
-        # listing-cost reduction (the fold's dedup would still run, but
-        # replayed-duplicate rows cannot exist below the watermark —
-        # dynamic partition overwrite heals them in place)
-        before = df.count()
-        return {"rows_before": int(before), "rows_after": int(before),
-                "rows_removed": 0, "batches_folded": 0}
-    before = df.count()
-    folded = (fold(old.drop(_BATCH_COL))
-              .withColumn(_BATCH_COL,
-                          F.lit(_SEED_BATCH_ID).cast("long")))
-    keep = df.filter(F.col(_BATCH_COL) >= upto)
-    tmp = path.rstrip("/") + "__compact"
-    (folded.unionByName(keep)
-     .write.mode("overwrite").partitionBy(_BATCH_COL).parquet(tmp))
-    after = spark.read.schema(schema).parquet(tmp).count()
-    _swap_index_dir(path, tmp)
-    return {"rows_before": int(before), "rows_after": int(after),
-            "rows_removed": int(before - after),
-            "batches_folded": int(n_old_batches)}
+from .state import compact_batch_partitions
 
 
 def compact_url_index(spark: SparkSession, path: str,

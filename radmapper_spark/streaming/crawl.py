@@ -25,19 +25,15 @@ entry (entrypoints.stream_crawl_ingest) ranks by doc_id to match.
 Scale shape per micro-batch: canonicalization and extraction are
 map-only projections; the URL probe is one anti-join whose batch side
 is micro-batch-sized; the host-cap join reads the long-skinny
-(host, n, _rm_batch_id) counts table — an aggregate bounded by
-(#hosts x #batches) rows; streaming/compaction.py rewrites old
-partitions into the seed out-of-band so the per-probe file-listing
-cost stays O(batches since last compaction) for the stream's whole
-lifetime. The Gopher gate runs AFTER the
-cap, so the expensive string work touches only surviving pages.
+(host, n) counts table, an aggregate bounded by (#hosts x #batches)
+rows that streaming/compaction.py folds out-of-band. The Gopher gate
+runs AFTER the cap, so the expensive string work touches only
+surviving pages.
 
-Replay safety — the same foreachBatch idempotence pattern as
-streaming/ingest.py (r14 verdict item #2): every sink is keyed by
-``_rm_batch_id`` and written with dynamic partition OVERWRITE, and
-both state reads EXCLUDE the batch's own partition, so a replayed
-batch recomputes exactly its own output and state from exactly the
-pre-crash view — kill-and-restart is byte-identical (test-proven).
+Replay safety: every table (both state tables and the output) follows
+the per-batch state protocol of streaming/state.py (prior-view reads,
+own-partition writes), so kill and restart is byte-identical
+(test-proven).
 
 Reference: the reference repo has no streaming and no web operators —
 this module composes the repo's own oracle-gated crawl stages
@@ -51,14 +47,15 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import portable_hash as PH
 from ..operators import web
+from . import state
+from .state import BATCH_COL
 
 #: salt for the canonical-URL dedup hash (both engines)
 URL_SALT = "crawlurl"
 #: persisted state schemas — read with EXPLICIT schemas so empty seeds
 #: (zero files) load and the partition column types as LONG
-_URL_IDX_SCHEMA = "url_hash long, _rm_batch_id long"
-_HOST_CNT_SCHEMA = "host string, n long, _rm_batch_id long"
-_SEED_BATCH_ID = -1
+_URL_IDX_SCHEMA = f"url_hash long, {BATCH_COL} long"
+_HOST_CNT_SCHEMA = f"host string, n long, {BATCH_COL} long"
 
 
 def url_hash(canonical_url_col) -> F.Column:
@@ -75,23 +72,21 @@ def duck_url_hash(expr: str) -> str:
 def build_url_index(pages: DataFrame, path: str,
                     url_col: str = "url") -> None:
     """Seed the URL dedup index from an already-fetched page set:
-    canonicalize, hash, distinct, under the seed's ``_rm_batch_id=-1``
-    partition. Overwrites ``path``; pass an empty frame to start from
-    nothing."""
+    canonicalize, hash, distinct, as the seed partition. Overwrites
+    ``path``; pass an empty frame to start from nothing."""
     canon = web.canonicalize_urls(pages, url_col=url_col)
-    (canon.filter(F.col("canonical_url").isNotNull())
-     .select(url_hash(F.col("canonical_url")).alias("url_hash"))
-     .distinct()
-     .withColumn("_rm_batch_id", F.lit(_SEED_BATCH_ID).cast("long"))
-     .write.mode("overwrite").partitionBy("_rm_batch_id").parquet(path))
+    state.write_seed(
+        canon.filter(F.col("canonical_url").isNotNull())
+        .select(url_hash(F.col("canonical_url")).alias("url_hash"))
+        .distinct(), path)
 
 
 def build_host_counts(path: str, spark) -> None:
     """Initialize an EMPTY per-batch host-counts table (the seed
     partition carries no rows — a fresh stream owes every host its
     full budget)."""
-    (spark.createDataFrame([], _HOST_CNT_SCHEMA)
-     .write.mode("overwrite").partitionBy("_rm_batch_id").parquet(path))
+    state.write_seed(spark.createDataFrame([], "host string, n long"),
+                     path)
 
 
 def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
@@ -101,37 +96,15 @@ def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
                        id_col: str = "doc_id"):
     """Start the composed crawl-admission loop on a fetched-pages
     stream (columns: id_col, url, html). Returns the StreamingQuery
-    (availableNow trigger). ``build_url_index`` and
-    ``build_host_counts`` must have created the state tables (possibly
-    empty)."""
-
-    # LOUD legacy/flat-layout guard for BOTH state tables (same
-    # contract as streaming/ingest.py, r15 review: rows without a
-    # _rm_batch_id partition read as NULL under the explicit schema and
-    # the != batch_id probe filter silently DROPS them — the whole seed
-    # would be ignored and every URL re-admitted / every host budget
-    # reset). One limit(1) job per table at stream START, never per
-    # batch.
+    (it drains what the source holds, then stops). ``build_url_index``
+    and ``build_host_counts`` must have created the state tables
+    (possibly empty)."""
     spark0 = pages_stream.sparkSession
-    for path, schema, what in ((url_index_path, _URL_IDX_SCHEMA,
-                                "url index"),
-                               (host_counts_path, _HOST_CNT_SCHEMA,
-                                "host counts")):
-        flat = (spark0.read.schema(schema).parquet(path)
-                .filter(F.col("_rm_batch_id").isNull()).limit(1)
-                .count())
-        if flat:
-            raise ValueError(
-                f"{what} at {path} has rows without a _rm_batch_id "
-                f"partition (flat layout). The batch-excluding probe "
-                f"would silently ignore them and re-admit the whole "
-                f"fetched history. Rebuild via build_url_index / "
-                f"build_host_counts (they write the partitioned "
-                f"layout), then restart.")
+    state.check_layout(spark0, url_index_path, "url index")
+    state.check_layout(spark0, host_counts_path, "host counts")
 
     def ingest_batch(batch_df, batch_id):
         spark = batch_df.sparkSession
-        bid = F.lit(int(batch_id)).cast("long")
         canon = (web.canonicalize_urls(batch_df)
                  .filter(F.col("canonical_url").isNotNull())
                  .withColumn("_rm_uh",
@@ -145,17 +118,13 @@ def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
         first = (canon
                  .withColumn("_rm_cr_rn", F.row_number().over(wurl))
                  .filter(F.col("_rm_cr_rn") == 1).drop("_rm_cr_rn"))
-        # both state reads EXCLUDE the batch's own partition so a
-        # replay sees exactly the pre-crash view (see module docstring)
-        idx = (spark.read.schema(_URL_IDX_SCHEMA)
-               .parquet(url_index_path)
-               .filter(F.col("_rm_batch_id") != int(batch_id)))
+        idx = state.read_prior(spark, url_index_path, batch_id,
+                               _URL_IDX_SCHEMA)
         fresh = (first.join(
             idx, first["_rm_uh"] == idx["url_hash"], "left_anti")
             .persist())
-        prior = (spark.read.schema(_HOST_CNT_SCHEMA)
-                 .parquet(host_counts_path)
-                 .filter(F.col("_rm_batch_id") != int(batch_id))
+        prior = (state.read_prior(spark, host_counts_path, batch_id,
+                                  _HOST_CNT_SCHEMA)
                  .groupBy("host")
                  .agg(F.sum("n").alias("_rm_prior_n")))
         whost = Window.partitionBy("host").orderBy(F.col(id_col).asc())
@@ -174,13 +143,9 @@ def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
                     .persist())
         gated = web.extract_floor_gate(admitted,
                                        min_tokens=min_tokens)
-        out = gated.select(
+        state.write_batch(gated.select(
             id_col, "canonical_url", "host", "n_lines_kept",
-            "n_extracted_tokens", "extracted_text").withColumn(
-            "_rm_batch_id", bid)
-        (out.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_rm_batch_id").parquet(out_path))
+            "n_extracted_tokens", "extracted_text"), out_path, batch_id)
         # state updates, both replay-deterministic: the host counts
         # record CAP-ADMITTED pages (the cap governs fetch volume, not
         # extraction quality); the URL index claims EVERY fresh
@@ -198,22 +163,12 @@ def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
         # under _rm_batch_id= dirs trips Spark's partition-values
         # assertion (found by the differential test; ingest.py's loop
         # has the same index-write-last shape for the same reason).
-        (admitted.groupBy("host")
-         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-         .withColumn("_rm_batch_id", bid)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_rm_batch_id").parquet(host_counts_path))
-        (fresh.select(F.col("_rm_uh").alias("url_hash"))
-         .withColumn("_rm_batch_id", bid)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_rm_batch_id").parquet(url_index_path))
+        state.write_batch(admitted.groupBy("host")
+                          .agg(F.count(F.lit(1)).cast("long").alias("n")),
+                          host_counts_path, batch_id)
+        state.write_batch(fresh.select(F.col("_rm_uh").alias("url_hash")),
+                          url_index_path, batch_id)
         admitted.unpersist()
         fresh.unpersist()
 
-    return (pages_stream.writeStream
-            .foreachBatch(ingest_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start_batches(pages_stream, ingest_batch, checkpoint)

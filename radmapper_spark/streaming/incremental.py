@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state import start_batches
+
 DEC = "decimal(18,2)"
 
 
@@ -41,10 +43,10 @@ def hourly_rollup_frame(raw: DataFrame, key_col: str = "event_type",
 def incremental_hourly_rollup(spark: SparkSession, src_path: str,
                               out_path: str, checkpoint: str,
                               key_col: str = "event_type"):
-    """Start an availableNow incremental maintenance run: drains new
-    files from src_path, recomputes the affected day-partitions of the
-    hourly rollup at out_path, and terminates. Re-running resumes from
-    the checkpoint (new files only); replays are idempotent."""
+    """Start an incremental maintenance run: drains new files from
+    src_path, recomputes the affected day-partitions of the hourly
+    rollup at out_path, and terminates. Re-running resumes from the
+    checkpoint (new files only); replays are idempotent."""
     schema = spark.read.parquet(src_path).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(src_path))
@@ -62,6 +64,4 @@ def incremental_hourly_rollup(spark: SparkSession, src_path: str,
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("day").parquet(out_path))
 
-    return (stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return start_batches(stream, process, checkpoint)

@@ -21,41 +21,21 @@ against the batch twin in entrypoints.stream_training_ingest).
 Scale shape per micro-batch: the index probe is one anti-join whose
 batch side is micro-batch-sized (broadcastable); the gate is the
 stream-static broadcast token join; chunking and shard assignment are
-map-only; the index APPEND writes only the batch's admitted hashes
-(the index is never rewritten in-band — same incremental contract as
-the minhash and embedding admission loops in streaming/sinks.py;
+map-only; the index write holds only the batch's admitted hashes, and
 streaming/compaction.py folds old per-batch partitions into the seed
-out-of-band so file-listing cost stays bounded over the stream's
-lifetime). At 100 TB the norm-hash index is a long-skinny BIGINT
+out-of-band. At 100 TB the norm-hash index is a long-skinny BIGINT
 table; bucket it by ``norm_hash % B`` out-of-band if the probe's
-index-scan side ever dominates (the batch side already prunes nothing
-— membership is the question being asked).
+index-scan side ever dominates.
 
-Restart safety (r14 verdict item #2 — the shards ARE the training
-data, so a replayed batch must append NOTHING, not merely "cost
-storage"): both sinks are keyed by ``_rm_batch_id`` and written with
-dynamic partition OVERWRITE — the foreachBatch idempotence pattern.
-A replayed batch recomputes exactly its own partitions and replaces
-them in place:
-
-* the index probe EXCLUDES the batch's own partition
-  (``_rm_batch_id != batch_id``), so the admitted set is a pure
-  function of (batch input, all EARLIER batches) — identical across
-  replay attempts even if the crashed attempt half-wrote this batch's
-  own index partition;
-* the chunk write overwrites only the partitions the batch produces
-  (dynamic mode), so a half-written partition from the crashed attempt
-  is replaced, never duplicated;
-* the index write overwrites the batch's own ``_rm_batch_id``
-  partition with the full recomputed hash set, healing a partial
-  first attempt.
-
-Consumers therefore read shards partitioned by
-``(_rm_batch_id, shard)`` — the extra provenance column is the price
-of exactly-once output (and is useful at 100 TB anyway: per-batch
-lineage and retention become partition operations). Proven by the
-kill-and-restart test in tests/test_stream_ingest.py (checkpoint
-commit marker deleted, stream restarted, byte-identical output).
+Restart safety: the shards ARE the training data, so a replayed batch
+must append nothing. The index and the chunk output both follow the
+per-batch state protocol of streaming/state.py: the probe reads the
+index without the batch's own partition, and both writes replace
+exactly the batch's own partitions. Consumers therefore read shards
+partitioned by ``(_rm_batch_id, shard)``; the provenance column is
+the price of exactly-once output (and per-batch lineage and retention
+become partition operations). Proven by the kill-and-restart tests in
+tests/test_stream_ingest.py and tests/test_compaction.py.
 """
 
 from __future__ import annotations
@@ -63,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import portable_hash as PH
+from . import state
+from .state import BATCH_COL
 
 #: salt for the normalized-text dedup hash (both engines)
 NORM_SALT = "ingest-norm"
@@ -156,24 +138,19 @@ def duck_first_per_normhash_rn(text_expr: str = "text",
 
 #: the persisted norm-hash index schema — read with this EXPLICIT
 #: schema so an empty seed (zero files) still loads (inference would
-#: fail), and so the ``_rm_batch_id`` partition column types as LONG
-_IDX_SCHEMA = "norm_hash long, _rm_batch_id long"
-#: the seed (pre-existing corpus) owns batch id -1 — a real
-#: StreamingQuery batch id is never negative
-_SEED_BATCH_ID = -1
+#: fail), and so the batch partition column types as LONG
+_IDX_SCHEMA = f"norm_hash long, {BATCH_COL} long"
 
 
 def build_normhash_index(docs: DataFrame, path: str,
                          text_col: str = "text") -> None:
     """Materialize the dedup index over an existing corpus: one BIGINT
-    ``norm_hash`` column, distinct, under the seed's ``_rm_batch_id=-1``
-    partition (the same layout the ingest loop appends to, so replays
-    can overwrite exactly their own partition). Overwrites ``path``.
-    Pass an empty frame to start an ingest from nothing."""
-    (docs.select(norm_text_hash(F.col(text_col)).alias("norm_hash"))
-     .distinct()
-     .withColumn("_rm_batch_id", F.lit(_SEED_BATCH_ID).cast("long"))
-     .write.mode("overwrite").partitionBy("_rm_batch_id").parquet(path))
+    ``norm_hash`` column, distinct, as the seed partition of the
+    per-batch layout (streaming/state.py). Overwrites ``path``. Pass an
+    empty frame to start an ingest from nothing."""
+    state.write_seed(
+        docs.select(norm_text_hash(F.col(text_col)).alias("norm_hash"))
+        .distinct(), path)
 
 
 def start_training_ingest(docs_stream: DataFrame, index_path: str,
@@ -203,42 +180,20 @@ def start_training_ingest(docs_stream: DataFrame, index_path: str,
        under ``out_path`` (dynamic partition overwrite — a replay
        replaces its own output in place; see the module docstring).
 
-    Returns the StreamingQuery (availableNow trigger — drain whatever
-    the source holds, checkpointed)."""
+    Returns the StreamingQuery (it drains whatever the source holds,
+    checkpointed, then stops)."""
     from ..operators.classifier import quality_admit
     from ..operators.tokenizer import bpe_chunk_documents
 
-    # LOUD legacy-layout guard (r15 review): an index written by the
-    # pre-batch-id layout (flat norm_hash files, no _rm_batch_id
-    # partition) reads as NULL batch ids under the explicit schema, and
-    # the probe's `_rm_batch_id != batch_id` filter would silently DROP
-    # every pre-upgrade hash — re-admitting the whole ingested history
-    # as duplicate training shards. Refuse to start instead; rebuilding
-    # via build_normhash_index over the ingested corpus migrates. One
-    # tiny limit(1) job at stream START only, never per batch.
-    legacy = (docs_stream.sparkSession.read.schema(_IDX_SCHEMA)
-              .parquet(index_path)
-              .filter(F.col("_rm_batch_id").isNull()).limit(1).count())
-    if legacy:
-        raise ValueError(
-            f"norm-hash index at {index_path} has rows without a "
-            f"_rm_batch_id partition (pre-r15 flat layout). The "
-            f"batch-excluding probe would silently ignore them and "
-            f"re-admit every previously ingested text. Rebuild the "
-            f"index with build_normhash_index over the ingested corpus "
-            f"(it writes the partitioned layout), then restart.")
+    state.check_layout(docs_stream.sparkSession, index_path,
+                       "norm-hash index")
 
     def ingest_batch(batch_df, batch_id):
         spark = batch_df.sparkSession
         nh = "_rm_ing_nh"
-        bid = F.lit(int(batch_id)).cast("long")
         survivors = first_per_normhash(batch_df, text_col, id_col,
                                        keep_hash_col=nh)
-        # explicit schema: an empty seed index has zero data files, and
-        # the batch's OWN partition is excluded so a replay sees the
-        # exact index state the crashed attempt saw
-        idx = (spark.read.schema(_IDX_SCHEMA).parquet(index_path)
-               .filter(F.col("_rm_batch_id") != int(batch_id)))
+        idx = state.read_prior(spark, index_path, batch_id, _IDX_SCHEMA)
         # NULL-SAFE anti-join (r14 review): a NULL-text doc hashes to
         # NULL, and `NULL == NULL` is never TRUE — a plain equi
         # anti-join would re-admit one null-text doc per micro-batch
@@ -255,26 +210,11 @@ def start_training_ingest(docs_stream: DataFrame, index_path: str,
                                      chunk_tokens=chunk_tokens)
         out = (chunks.withColumn(
             "shard", shard_col(chunk_id_col(id_col), n_shards))
-            .withColumn("_rm_batch_id", bid)
             .select(id_col, "chunk_seq", "chunk_start",
-                    "n_chunk_tokens", "_rm_batch_id", "shard",
-                    "chunk_text"))
-        # dynamic overwrite: only the (_rm_batch_id, shard) partitions
-        # present in THIS batch's output are replaced — a replayed
-        # batch swaps its own output in place, every other batch's
-        # partitions untouched (exactly-once shards, r14 verdict #2)
-        (out.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_rm_batch_id", "shard").parquet(out_path))
-        (fresh.select(F.col(nh).alias("norm_hash"))
-         .withColumn("_rm_batch_id", bid)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_rm_batch_id").parquet(index_path))
+                    "n_chunk_tokens", "shard", "chunk_text"))
+        state.write_batch(out, out_path, batch_id, "shard")
+        state.write_batch(fresh.select(F.col(nh).alias("norm_hash")),
+                          index_path, batch_id)
         fresh.unpersist()
 
-    return (docs_stream.writeStream
-            .foreachBatch(ingest_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start_batches(docs_stream, ingest_batch, checkpoint)

@@ -5,12 +5,22 @@ and sink-committed batch ids live in the checkpoint, so a crashed or
 stopped query RESUMES where it left off — re-running it neither skips
 nor duplicates data (test-asserted by restarting a query over a grown
 source against the same checkpoint).
+
+The index probe and admission loops keep their outputs, and the
+admission loops their index, in the per-batch state protocol of
+streaming/state.py: a micro-batch probes the index without its own
+partition and writes its hits, audit rows and admitted index rows as
+its own batch partitions, so a replayed batch rewrites exactly its own
+output (kill and restart is byte-identical, tested for both index
+kinds).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import state
 
 
 def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
@@ -21,13 +31,9 @@ def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
     drains everything currently available and terminates: the batch-job
     shape of an incremental pipeline (run it on a schedule; each run
     processes exactly the new data)."""
-    w = (df.writeStream.format("parquet")
-         .option("path", path)
-         .option("checkpointLocation", checkpoint)
-         .outputMode(output_mode))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return state.start(df.writeStream.format("parquet")
+                       .option("path", path).outputMode(output_mode),
+                       checkpoint, available_now)
 
 
 def start_cdc_apply(changes: DataFrame, base_path: str, out_path: str,
@@ -45,8 +51,8 @@ def start_cdc_apply(changes: DataFrame, base_path: str, out_path: str,
     table format with upsert support (the whole-table rewrite here is the
     plain-parquet stand-in); merge_latest's max-struct reduce — one key
     shuffle, map-side partials — is the part that carries to 100 TB.
-    availableNow trigger: each run drains the currently-available
-    changes, the scheduled-incremental shape."""
+    Each run drains the currently-available changes, the
+    scheduled-incremental shape."""
     from ..operators.cdc import merge_latest
 
     def apply_batch(batch_df, batch_id):
@@ -59,17 +65,7 @@ def start_cdc_apply(changes: DataFrame, base_path: str, out_path: str,
         # parquet has no atomic swap; a table format would MERGE instead)
         merged.write.mode("overwrite").parquet(out_path)
 
-    return _start_batches(changes, apply_batch, checkpoint)
-
-
-def _start_batches(stream: DataFrame, fn, checkpoint: str):
-    """Drain ``stream`` through ``fn(batch_df, batch_id)`` with the
-    availableNow trigger against ``checkpoint``."""
-    return (stream.writeStream
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start_batches(changes, apply_batch, checkpoint)
 
 
 def _release(df: DataFrame) -> None:
@@ -80,15 +76,15 @@ def _release(df: DataFrame) -> None:
 
 
 def _probe_loop(stream: DataFrame, out_path: str, checkpoint: str, probe):
-    """The probe sink of both index kinds: per micro-batch, append
-    ``probe(batch_df)``'s hits to out_path, then release the probe's
-    cache."""
+    """The probe sink of both index kinds: per micro-batch, write
+    ``probe(batch_df)``'s hits as the batch's partition of out_path,
+    then release the probe's cache."""
     def probe_batch(batch_df, batch_id):
         hits = probe(batch_df)
-        hits.write.mode("append").parquet(out_path)
+        state.write_batch(hits, out_path, batch_id)
         _release(hits)
 
-    return _start_batches(stream, probe_batch, checkpoint)
+    return state.start_batches(stream, probe_batch, checkpoint)
 
 
 def start_neardup_probe(docs_stream: DataFrame, index_path: str,
@@ -102,9 +98,7 @@ def start_neardup_probe(docs_stream: DataFrame, index_path: str,
     documents is probed against the PERSISTED minhash index
     (dedup.neardup_vs_index — signatures computed for the batch only,
     equi-join on the banded index, corpus text never read) and the hits
-    are appended to out_path. The checkpoint dedupes batches across
-    restarts; the probe itself is a pure function of (batch, index), so
-    replays append identical rows at worst into distinct batch files.
+    are written to out_path as the batch's partition.
 
     This is the ingest-pipeline shape: new crawl data streams in, the
     index answers "have we seen this before" incrementally, and the
@@ -149,8 +143,10 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
 
     id_t = batch_df.schema[id_col].dataType
     idx_t = hits.schema["index_id"].dataType
+    # cached, not checkpointed: connected_components checkpoints the
+    # pairs once, and the losers' estimate join reads this cache
     intra = (intra.groupBy("id_a", "id_b").agg(F.max(est_col).alias("_est"))
-             .localCheckpoint(eager=True))
+             .persist())
     tgt = hits.groupBy("new_id").agg(F.min("index_id").alias("_tgt"))
     hit_node = F.when(F.col("_tgt").isNotNull(), F.col("node"))
     members = (connected_components(intra)
@@ -165,6 +161,7 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
                                  F.col("id_b").alias("node"), "_est"),
                     ["component", "node"], "left")
               .localCheckpoint(eager=True))  # read by both outputs
+    intra.unpersist()
     audit_extra = losers.select(
         F.col("node").cast(id_t).alias("new_id"),
         F.coalesce("_ctgt", F.col("component").cast(idx_t)).alias("index_id"),
@@ -176,29 +173,34 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
     return audit_extra, rejected
 
 
-def _admission_loop(stream: DataFrame, out_path: str, checkpoint: str,
-                    id_col: str, probe, intra_pairs, append, est_col: str):
+def _admission_loop(stream: DataFrame, table: str, out_path: str,
+                    checkpoint: str, id_col: str, probe, intra_pairs,
+                    index_rows, est_col: str, partition_by: tuple = ()):
     """The admission loop of both index kinds: per micro-batch, probe
-    the index (``probe``), resolve the batch's own near-dup pairs
-    (``intra_pairs``, estimate column ``est_col``) transitively via
-    _resolve_admission, append the audit trail to out_path, admit the
-    survivors (``append``), then release every cache the operators
-    attached."""
+    the prior view of the index data table ``table``
+    (``probe(batch_df, prior)``), resolve the batch's own near-dup
+    pairs (``intra_pairs``, estimate column ``est_col``) transitively
+    via _resolve_admission, write the audit trail and the survivors'
+    ``index_rows`` as the batch's partitions of out_path and of the
+    table, then release every cache the operators attached."""
     def admit_batch(batch_df, batch_id):
         batch_df = batch_df.persist()
-        hits = probe(batch_df).persist()
+        prior = state.read_prior(batch_df.sparkSession, table, batch_id)
+        hits = probe(batch_df, prior).persist()
         intra = intra_pairs(batch_df)
         audit_extra, rejected = _resolve_admission(
             batch_df, id_col, hits, intra, est_col)
-        hits.unionByName(audit_extra).write.mode("append").parquet(out_path)
-        append(batch_df.join(
-            rejected, batch_df[id_col] == F.col("rid"), "left_anti"))
+        state.write_batch(hits.unionByName(audit_extra), out_path,
+                          batch_id)
+        state.write_batch(index_rows(batch_df.join(
+            rejected, batch_df[id_col] == F.col("rid"), "left_anti")),
+            table, batch_id, *partition_by)
         _release(intra)
         _release(hits)
         hits.unpersist()
         batch_df.unpersist()
 
-    return _start_batches(stream, admit_batch, checkpoint)
+    return state.start_batches(stream, admit_batch, checkpoint)
 
 
 def start_neardup_admission(docs_stream: DataFrame, index_path: str,
@@ -211,15 +213,15 @@ def start_neardup_admission(docs_stream: DataFrame, index_path: str,
     """The FULL streaming admission loop: for each micro-batch of
     incoming documents,
 
-    1. PROBE the persisted minhash index (neardup_vs_index — batch
-       signatures only, corpus text never read);
+    1. PROBE the persisted minhash index as every earlier batch left it
+       (batch signatures only, corpus text never read);
     2. write the AUDIT TRAIL of every rejection to ``out_path``: index
        duplicates as (new_id, index_id, est_jaccard), and intra-batch
        losers against a document that IS in the index after the batch
        commits (_resolve_admission's invariant) — a rejected document
        always leaves a record;
-    3. ADMIT the batch's surviving documents into the index
-       (append_to_minhash_index), so every FUTURE batch sees them.
+    3. ADMIT the batch's surviving documents into the index, so every
+       FUTURE batch sees them.
 
     Admission is TRANSITIVE per micro-batch (see _resolve_admission):
     intra-batch near-dup pairs (minhash_lsh_pairs over the batch)
@@ -229,30 +231,24 @@ def start_neardup_admission(docs_stream: DataFrame, index_path: str,
     wholesale, a clean cluster admits its smallest id. Without the
     intra pass, two identical docs arriving together would both be
     admitted because neither is in the index yet.
-    Deterministic given the micro-batch contents.
+    Deterministic given the micro-batch contents and the index, and
+    replay-safe: the audit and the admitted rows are the batch's own
+    partitions (streaming/state.py)."""
+    from ..operators import dedup
 
-    Restart caveat: unlike the pure probe sink, neither the index
-    append NOR the audit write is idempotent under batch replay — a
-    replayed batch appends duplicate index rows and duplicate audit
-    rows. Probes stay CORRECT (candidate pairs are dropDuplicates'd on
-    (new_id, index_id) and duplicate signatures carry identical
-    estimates), so replay costs storage, not answers; compact the index
-    out-of-band (and dedupe the audit on read) if replays accumulate."""
-    from ..operators.dedup import (append_to_minhash_index,
-                                   minhash_lsh_pairs, neardup_vs_index)
-
-    params = dict(text_col=text_col, id_col=id_col,
-                  num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-                  hash_mode=hash_mode)
+    cols = dict(text_col=text_col, id_col=id_col)
+    params = dedup._minhash_params(num_hashes, bands, shingle_k, hash_mode)
+    table = dedup._index_table(docs_stream.sparkSession, index_path,
+                               "minhash", params, "start_neardup_admission")
     return _admission_loop(
-        docs_stream, out_path, checkpoint, id_col,
-        lambda b: neardup_vs_index(b, index_path,
-                                   jaccard_threshold=jaccard_threshold,
-                                   **params),
-        lambda b: minhash_lsh_pairs(b, jaccard_threshold=jaccard_threshold,
-                                    **params),
-        lambda b: append_to_minhash_index(b, index_path, **params),
-        "est_jaccard")
+        docs_stream, table, out_path, checkpoint, id_col,
+        lambda b, prior: dedup._minhash_probe(
+            b, prior, jaccard_threshold=jaccard_threshold, **cols,
+            **params),
+        lambda b: dedup.minhash_lsh_pairs(
+            b, jaccard_threshold=jaccard_threshold, **cols, **params),
+        lambda b: dedup._minhash_rows(b, **cols, **params),
+        "est_jaccard", ("band",))
 
 
 def start_embedding_probe(vec_stream: DataFrame, index_path: str,
@@ -265,8 +261,8 @@ def start_embedding_probe(vec_stream: DataFrame, index_path: str,
     probed against the PERSISTED embedding index
     (dedup.neardup_embedding_vs_index — one exact cosine_join of the
     index's vectors table against the batch; the corpus table is never
-    read) and the hits (new_id, index_id, cosine) append to out_path.
-    Same checkpoint / replay contract as the minhash probe."""
+    read) and the hits (new_id, index_id, cosine) are written to
+    out_path as the batch's partition."""
     from ..operators.dedup import neardup_embedding_vs_index
 
     return _probe_loop(
@@ -283,29 +279,27 @@ def start_embedding_admission(vec_stream: DataFrame, index_path: str,
                               threshold: float = 0.45):
     """The embedding twin of start_neardup_admission — the full
     streaming ingest loop for vectors: per micro-batch, probe the
-    persisted embedding index (neardup_embedding_vs_index, exact), write
-    the audit trail of EVERY rejection to ``out_path`` (index duplicates
-    AND intra-batch losers, the latter recorded against a vector that IS
-    in the index after the batch commits), then ADMIT the surviving
-    vectors (append_to_embedding_index) so future batches see them.
-    Intra-batch duplicates resolve TRANSITIVELY per cluster via
+    persisted embedding index as every earlier batch left it (exact
+    cosine_join), write the audit trail of EVERY rejection to
+    ``out_path`` (index duplicates AND intra-batch losers, the latter
+    recorded against a vector that IS in the index after the batch
+    commits), then ADMIT the surviving vectors so future batches see
+    them. Intra-batch duplicates resolve TRANSITIVELY per cluster via
     _resolve_admission (connected components under the one gate) over
     the batch operator embedding_cosine_pairs — both passes are
     cosine_join, so the probe and the intra pairs apply the same exact
     threshold. Clean clusters admit their smallest id; clusters
-    chaining to indexed content are rejected wholesale. Same restart
-    caveat as the minhash loop: replays append duplicate index AND
-    audit rows, and a duplicated index row repeats its probe hits until
-    dedup.compact_embedding_index drops it."""
-    from ..operators.dedup import (append_to_embedding_index,
-                                   embedding_cosine_pairs,
-                                   neardup_embedding_vs_index)
+    chaining to indexed content are rejected wholesale. Replay-safe
+    like the minhash loop."""
+    from ..operators import dedup
 
-    params = dict(vec_col=vec_col, id_col=id_col)
+    table = dedup._index_table(vec_stream.sparkSession, index_path,
+                               dedup._VECTORS_KIND, {},
+                               "start_embedding_admission")
     return _admission_loop(
-        vec_stream, out_path, checkpoint, id_col,
-        lambda b: neardup_embedding_vs_index(b, index_path,
-                                             threshold=threshold, **params),
-        lambda b: embedding_cosine_pairs(b, vec_col, id_col, threshold),
-        lambda b: append_to_embedding_index(b, index_path, **params),
-        "cosine")
+        vec_stream, table, out_path, checkpoint, id_col,
+        lambda b, prior: dedup._embedding_probe(b, prior, vec_col, id_col,
+                                                threshold),
+        lambda b: dedup.embedding_cosine_pairs(b, vec_col, id_col,
+                                               threshold),
+        lambda b: dedup._vector_rows(b, vec_col, id_col), "cosine")

@@ -53,15 +53,17 @@ def test_minhash_index_probe_equals_batch(spark, tmp_path):
 
 
 def test_minhash_index_probe_prunes_partitions(spark, tmp_path):
-    """The probe scan must carry partition filters on band (the index is
-    partitioned by band, and the probe joins on it)."""
+    """The probe scan must carry partition filters on band (the index's
+    bands/ table is partitioned by band below the batch column, and the
+    probe joins on it)."""
     from radmapper_spark.operators import dedup
     from radmapper_spark.session import load_tables
     docs = load_tables(spark, "/root/testdata/sf0.001")["documents"]
     path = str(tmp_path / "mh_index2")
     dedup.build_minhash_index(docs, path)
     import os
-    bands = [d for d in os.listdir(path) if d.startswith("band=")]
+    bands = [d for d in os.listdir(f"{path}/bands/_rm_batch_id=-1")
+             if d.startswith("band=")]
     assert len(bands) == 8
 
 
@@ -135,7 +137,7 @@ def test_index_meta_invisible_to_parquet_reader(spark, tmp_path):
     path = str(tmp_path / "mh2")
     dedup.build_minhash_index(docs, path)
     cols = set(spark.read.parquet(path).columns)
-    assert cols == {"band", "bhash", "id", "minhash"}
+    assert cols == {"band", "bhash", "id", "minhash", "_rm_batch_id"}
 
 
 def test_embedding_probe_string_ids(spark, tmp_path):
@@ -270,9 +272,9 @@ def test_embedding_append_equals_full_rebuild(spark, tmp_path):
     assert got == want and want, "append diverged from full rebuild"
 
 
-def test_compact_minhash_index_after_replay(spark, tmp_path):
-    """A replayed append (the admission sink's restart caveat) leaves
-    duplicate rows; compaction removes exactly them, preserves the
+def test_compact_minhash_index_after_repeated_admit(spark, tmp_path):
+    """A repeated out-of-stream admit of the same batch leaves duplicate
+    rows in the seed; compaction removes exactly them, preserves the
     _meta sidecar, and probes answer identically before/after."""
     from radmapper_spark.operators import dedup
     from radmapper_spark.operators.index_meta import IndexParamMismatch
@@ -281,13 +283,14 @@ def test_compact_minhash_index_after_replay(spark, tmp_path):
     dedup.build_minhash_index(docs.filter(F.col("doc_id") < 10), path)
     batch = docs.filter(F.col("doc_id") >= 10)
     dedup.append_to_minhash_index(batch, path)
-    dedup.append_to_minhash_index(batch, path)  # replay
+    dedup.append_to_minhash_index(batch, path)  # repeated admit
     probe = docs.limit(5)
     before = {(r.new_id, r.index_id, r.est_jaccard)
               for r in dedup.neardup_vs_index(probe, path).collect()}
     n_batch_rows = batch.count() * 8  # 8 bands per doc
     removed = dedup.compact_minhash_index(spark, path)
-    assert removed == n_batch_rows, "compaction must drop exactly the replay"
+    assert removed == n_batch_rows, \
+        "compaction must drop exactly the repeated admit"
     after = {(r.new_id, r.index_id, r.est_jaccard)
              for r in dedup.neardup_vs_index(probe, path).collect()}
     assert after == before and before
@@ -319,9 +322,9 @@ def test_embedding_probe_stats_less_batch_keeps_broadcast(spark, tmp_path):
         assert len(rows) >= 30
 
 
-def test_compact_embedding_index_after_replay(spark, tmp_path):
-    """Replayed embedding append leaves duplicate vectors rows;
-    compaction removes exactly them (one row per replayed vector),
+def test_compact_embedding_index_after_repeated_admit(spark, tmp_path):
+    """A repeated embedding admit leaves duplicate vectors rows;
+    compaction removes exactly them (one row per repeated vector),
     preserves the _meta sidecar, and probes answer identically."""
     from radmapper_spark.operators import dedup
     from radmapper_spark.operators.index_meta import read_index_meta
@@ -330,7 +333,7 @@ def test_compact_embedding_index_after_replay(spark, tmp_path):
     dedup.build_embedding_index(emb.filter(F.col("vec_id") < 20), path)
     batch = emb.filter(F.col("vec_id") >= 20)
     dedup.append_to_embedding_index(batch, path)
-    dedup.append_to_embedding_index(batch, path)  # replay
+    dedup.append_to_embedding_index(batch, path)  # repeated admit
 
     def probe():
         df = dedup.neardup_embedding_vs_index(emb, path, threshold=0.9)
@@ -362,7 +365,7 @@ def test_compact_builtins(spark, tmp_path):
 
 def test_compact_embedding_builtin(spark, tmp_path):
     """$compactEmbeddingIndex from RM source returns the removed count
-    (one vectors row per replayed vector)."""
+    (one vectors row per repeated vector)."""
     from radmapper_spark.lang.interp import Interp
     from radmapper_spark.operators import dedup
     emb = _tiny_emb(spark)
@@ -370,7 +373,7 @@ def test_compact_embedding_builtin(spark, tmp_path):
     dedup.build_embedding_index(emb.filter(F.col("vec_id") < 20), path)
     batch = emb.filter(F.col("vec_id") >= 20)
     dedup.append_to_embedding_index(batch, path)
-    dedup.append_to_embedding_index(batch, path)  # replay
+    dedup.append_to_embedding_index(batch, path)  # repeated admit
     ip = Interp(spark)
     removed = ip.run_raw("$compactEmbeddingIndex($p)",
                          bindings={"$p": path})
@@ -418,7 +421,7 @@ def test_compact_swap_failure_keeps_live_index(spark, tmp_path,
     docs = _tiny_docs_r9(spark)
     path = str(tmp_path / "mh")
     dedup.build_minhash_index(docs, path)
-    dedup.append_to_minhash_index(docs.limit(3), path)  # replay dups
+    dedup.append_to_minhash_index(docs.limit(3), path)  # repeated admit
     before = spark.read.parquet(path).count()
 
     real_move = shutil.move
@@ -430,14 +433,16 @@ def test_compact_swap_failure_keeps_live_index(spark, tmp_path,
     with pytest.raises(OSError, match="simulated crash"):
         dedup.compact_minhash_index(spark, path)
     monkeypatch.setattr(shutil, "move", real_move)
-    # live index restored under the canonical path, old-copy debris gone
+    # live index restored under the canonical path, no debris left
+    table = f"{path}/bands"
     assert spark.read.parquet(path).count() == before
-    assert not os.path.exists(path + "__old")
+    assert not os.path.exists(table + "__old")
+    assert not os.path.exists(table + "__compact")
     # and a subsequent compaction (move works again) succeeds
     removed = dedup.compact_minhash_index(spark, path)
     assert removed > 0
-    assert not os.path.exists(path + "__old")
-    assert not os.path.exists(path + "__compact")
+    assert not os.path.exists(table + "__old")
+    assert not os.path.exists(table + "__compact")
 
 
 def _rewrite_sidecar(path: str, meta: dict) -> None:
@@ -551,3 +556,24 @@ def test_sidecar_rewrite_visible_to_next_read(spark, tmp_path):
     im.write_index_meta(spark, p, "k", {"bands": 8})
     im.write_index_meta(spark, p, "k", {"bands": 16})
     assert im.read_index_meta(spark, p)["bands"] == 16
+
+
+def test_spark_written_sidecar_still_read(spark, tmp_path):
+    """A sidecar written by Spark's text writer (the earlier writer:
+    a part file plus _SUCCESS and checksum files) reads back, and
+    rewriting it through write_index_meta replaces it whole."""
+    import json as _json
+    from radmapper_spark.operators import index_meta as im
+    p = str(tmp_path / "idx")
+    meta = {"kind": "k", "bands": 8}
+    (spark.createDataFrame([(_json.dumps(meta, sort_keys=True),)],
+                           "meta string")
+     .coalesce(1).write.mode("overwrite").text(f"{p}/_meta"))
+    names = os.listdir(f"{p}/_meta")
+    assert "_SUCCESS" in names and any(n.startswith("part-")
+                                       for n in names)
+    assert im.read_index_meta(spark, p) == meta
+    im.write_index_meta(spark, p, "k", {"bands": 16})
+    assert im.read_index_meta(spark, p) == {"kind": "k", "bands": 16}
+    assert [n for n in os.listdir(f"{p}/_meta")
+            if not n.startswith(".")] == ["part-00000"]

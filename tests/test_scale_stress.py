@@ -858,10 +858,11 @@ def test_embedding_admission_20_batch_fold_differential(
                        for a, i, e in rows),
                       key=lambda t: (t[0], t[1], repr(t[2])))
 
+    # the stream's admits are batch partitions, the fold's the seed
     got = sorted(map(tuple, spark.read.parquet(f"{idx_s}/vectors")
-                     .collect()))
+                     .select("id", "v").collect()))
     want = sorted(map(tuple, spark.read.parquet(f"{idx_f}/vectors")
-                      .collect()))
+                      .select("id", "v").collect()))
     assert got == want, "index vectors table diverged"
     got_audit = canon((r.new_id, r.index_id, r.cosine) for r in
                       spark.read.parquet(out).collect())

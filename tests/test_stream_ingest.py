@@ -219,33 +219,3 @@ def test_inlined_norm_sql_matches_helper():
     assert inlined == {want.replace("\\s", "\\\\s")} or inlined == {want}, (
         f"inlined normalization SQL drifted from duck_normalize_text: "
         f"{inlined} != {want}")
-
-
-def test_legacy_flat_index_layout_refused(spark, tmp_path):
-    """An index written by the pre-batch-id flat layout must be REFUSED
-    at stream start (r15 review): the batch-excluding probe would read
-    its rows as NULL _rm_batch_id, silently drop the whole ingested
-    history, and re-admit every previously seen text as duplicate
-    shards."""
-    import pytest
-
-    idx = str(tmp_path / "legacy_idx")
-    (spark.range(3).select(F.col("id").alias("norm_hash"))
-     .write.mode("overwrite").parquet(idx))  # flat, no partition col
-    schema = "doc_id long, text string"
-    src = str(tmp_path / "in")
-    spark.createDataFrame([(1, "a b c")], schema) \
-        .write.mode("overwrite").parquet(src)
-    vocab, consts = classifier.nb_model(
-        spark.createDataFrame([(1, "good words here")], schema),
-        spark.createDataFrame([(2, "bad spam words")], schema))
-    params = classifier.nb_model_params(consts)
-    merges = tokenizer.bpe_train(
-        spark.createDataFrame([(1, "a b c")], schema),
-        n_merges=2, top_words=8)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    with pytest.raises(ValueError, match="pre-r15 flat layout"):
-        ingest.start_training_ingest(
-            stream, idx, str(tmp_path / "out"), str(tmp_path / "ck"),
-            merges, vocab, params, chunk_tokens=8, n_shards=2)
