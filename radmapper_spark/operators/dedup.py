@@ -68,112 +68,60 @@ def exact_dedup_keep(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     return docs.join(reps, on=id_col, how="inner")
 
 
-def _stamp_base_params(frame: DataFrame, **params) -> DataFrame:
-    """Record the build parameters on a signature-base frame (plain
-    Python attr — pyspark DataFrames accept them and persist() returns
-    the same object). Pair generators that accept a caller-supplied
-    persisted ``base`` compare these against their own parameters and
-    FAIL LOUDLY on mismatch (r10 advice): a minhash base built with a
-    different num_hashes otherwise indexes past the signature array
-    (NULL band hashes -> silently dropped pairs), and a simhash base
-    with fewer nbits than bands*band_bits collapses high bands to a
-    single all-zero hot bucket."""
-    frame.rm_base_params = dict(params)
-    return frame
+# ------------------------------------------------------ build parameters
+#
+# Which hash family and parameters built a signature frame or a
+# persisted index is recorded ONCE, as Spark field metadata on its
+# signature (or vector) column under _BUILD_KEY. The record rides the
+# schema through select, filter, explode, persist and a parquet write
+# and read, so an in-memory base and an on-disk index carry the same
+# witness, and every consumer compares it through check_params: a
+# mismatch, or no record at all, raises (the reference fails loudly on
+# mismatched inputs rather than coercing them, query.cljc:11-23). An
+# expression that rebuilds the column drops the record (so does the
+# aggregate the optimizer makes of a dropDuplicates, which is why
+# state.compact_batch_partitions restores it before writing).
+
+_BUILD_KEY = "rm_build"
 
 
-def _check_base_params(base: DataFrame, op: str, **expect) -> None:
-    """Validate a caller-supplied signature base against the consuming
-    operator's parameters. Primary check: the rm_base_params attr every
-    builder in this module stamps. Fallback for attr-less frames (built
-    by hand, or round-tripped through a transformation that dropped the
-    attr): a structural probe where the schema allows one — minhash
-    signature LENGTH is visible in a one-row sample (the probe result
-    is memoized back onto the frame object so repeated calls don't
-    re-pay the job), and for packed-hash bases (simhash/phash bigints)
-    a BOUNDED-SAMPLE min/max range probe (limit(256) before the
-    aggregate — never a full scan of a caller-supplied 100 TB base)
-    that catches a base packed with MORE bits than the consumer expects
-    (r11 advice: a hand-built 64-bit base fed to a 60-bit-band operator
-    would otherwise collapse the high bands to one hot bucket). The
-    sample makes the wider-packed check probabilistic, and it is a
-    PREFIX sample, not a uniform one: Spark's limit() reads the first
-    rows of the first partition(s), so the 16^-256 miss-odds figure
-    (each uniformly packed 64-bit value fits a 60-bit range w.p. 1/16)
-    holds only when row order is independent of the packed value. A
-    base SORTED by the packed hash keeps its out-of-range values past
-    the prefix and passes the probe (r12 advice) — the probe is a
-    cheap rejection witness for the common unsorted layout, never a
-    guarantee. It stays a bounded prefix read on purpose: a uniform
-    df.sample() needs a fraction (unknowable without a count) and a
-    cross-partition sample pays a job over every file of a 100 TB
-    base; the memo only helps same-object reuse, so the probe must
-    stay cheap for parquet-round-tripped frames that arrive as fresh
-    objects every read (r12 review). DOCUMENTED LIMIT: values carry no
-    witness for shingle_k/hash_mode (minhash) or for a base packed
-    with FEWER bits than expected (small values fit any wider range),
-    so an attr-less base mismatched ONLY in those — or hash-sorted as
-    above — still passes; keep the stamped attr (or the frame's
-    parquet round-trip parameters) authoritative for them."""
-    params = getattr(base, "rm_base_params", None)
-    if params is not None:
-        bad = {k: (params[k], v) for k, v in expect.items()
-               if k in params and params[k] != v}
-        if bad:
-            raise ValueError(
-                f"{op}: caller-supplied base was built with mismatched "
-                f"parameters {{{', '.join(f'{k}: base={b!r} != caller={c!r}' for k, (b, c) in sorted(bad.items()))}}} "
-                f"— rebuild the base with the operator's parameters")
-        return
-    if "num_hashes" in expect and "minhash" in base.columns:
-        row = base.select(F.size("minhash").alias("n")).first()
-        if row is not None and row["n"] != expect["num_hashes"]:
-            raise ValueError(
-                f"{op}: caller-supplied base has {row['n']}-hash "
-                f"signatures but the operator expects "
-                f"{expect['num_hashes']} — band hashing would index "
-                f"past the array and silently drop pairs")
-        if row is not None:
-            # memoize ONLY the probed fact (never the caller's
-            # unverified expectations) so the next call skips the job
-            try:
-                base.rm_base_params = {"num_hashes": int(row["n"])}
-            except Exception:
-                pass
-        return
-    # Packed-hash range probe (simhash: `nbits`; phash: `bits`). The
-    # builders pack into the LOW n bits of a non-negative bigint, so an
-    # observed value outside [0, 2^n) proves the base was built wider
-    # than the consumer's band layout assumes. Vacuous at n == 64 (the
-    # full signed range is in play) — nothing checkable there.
-    for key, col in (("nbits", "simhash"), ("bits", "phash")):
-        if key in expect and expect[key] < 64 and col in base.columns:
-            probed = getattr(base, "_rm_probed_hash_range", None)
-            if probed is None:
-                row = (base.select(col).limit(256)
-                       .agg(F.min(col).alias("lo"),
-                            F.max(col).alias("hi")).first())
-                if row is None or row["lo"] is None:
-                    return  # empty base: nothing to witness
-                probed = (int(row["lo"]), int(row["hi"]))
-                try:
-                    # the observed range is a fact about (a sample of)
-                    # the frame — a valid witness for REJECTION but it
-                    # does NOT pin the build params — memoized on a
-                    # separate attr so rm_base_params stays authoritative
-                    base._rm_probed_hash_range = probed
-                except Exception:
-                    pass
-            lo, hi = probed
-            if lo < 0 or hi >= (1 << expect[key]):
-                raise ValueError(
-                    f"{op}: caller-supplied base holds hash values in "
-                    f"[{lo}, {hi}], outside the {expect[key]}-bit range "
-                    f"the operator's band layout expects — a wider-packed "
-                    f"base would collapse the high bands to one hot "
-                    f"bucket; rebuild the base with the operator's "
-                    f"parameters")
-            return
+class IndexParamMismatch(ValueError):
+    """A signature base or persisted index was built with other
+    parameters than its consumer's, or records none: its candidates
+    would be plausible but wrong, so the consumer must not run."""
+
+
+def build_params(frame: DataFrame, col: str) -> dict:
+    """The build parameters recorded on ``frame``'s ``col`` ({} when
+    none are). Schema only: no Spark job."""
+    if col not in frame.columns:
+        return {}
+    return frame.schema[col].metadata.get(_BUILD_KEY, {})
+
+
+def stamp_params(col: str, **params):
+    """Column ``col`` recording ``params`` (a ``kind`` and that family's
+    parameters) as its build parameters."""
+    return F.col(col).alias(col, metadata={_BUILD_KEY: params})
+
+
+def check_params(frame: DataFrame, col: str, who: str, **expect) -> None:
+    """Raise IndexParamMismatch unless ``frame``'s ``col`` records every
+    ``expect`` item. A frame recording nothing (built by hand, or before
+    the record existed) is refused: nothing vouches for it."""
+    got = build_params(frame, col)
+    if not got:
+        raise IndexParamMismatch(
+            f"{who}: {col!r} carries no build parameters (built by hand "
+            f"or before they were recorded): rebuild it with its builder")
+    bad = sorted((k, got.get(k), v) for k, v in expect.items()
+                 if got.get(k) != v)
+    if bad:
+        raise IndexParamMismatch(
+            f"{who}: {col!r} was built with mismatched parameters {{"
+            + ", ".join(f"{k}: base={b!r} != caller={c!r}"
+                        for k, b, c in bad)
+            + "}: rebuild it with the caller's parameters")
 
 
 def drop_blank_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -276,13 +224,15 @@ def minhash_base(docs: DataFrame, text_col: str = "text",
     per session (the simhash_base contract: signatures are a pure
     function of (corpus, params), and the shingling pass is
     the operator's dominant cost — measured 4.8 s to materialize vs
-    0.24 s cached at sf0.1). NOT persisted here; callers decide."""
-    return _stamp_base_params(
-        minhash_signature(drop_blank_docs(docs, text_col), text_col,
-                          num_hashes, shingle_k,
-                          hash_mode=hash_mode).select(
-            F.col(id_col).alias("id"), "minhash"),
-        num_hashes=num_hashes, shingle_k=shingle_k, hash_mode=hash_mode)
+    0.24 s cached at sf0.1). NOT persisted here; callers decide. The
+    ``minhash`` column records {kind "minhash", num_hashes, shingle_k,
+    hash_mode} (check_params)."""
+    return minhash_signature(drop_blank_docs(docs, text_col), text_col,
+                             num_hashes, shingle_k,
+                             hash_mode=hash_mode).select(
+        F.col(id_col).alias("id"),
+        stamp_params("minhash", kind="minhash", num_hashes=num_hashes,
+                     shingle_k=shingle_k, hash_mode=hash_mode))
 
 
 def minhash_bands(sigs: DataFrame, num_hashes: int = 32, bands: int = 8,
@@ -294,7 +244,9 @@ def minhash_bands(sigs: DataFrame, num_hashes: int = 32, bands: int = 8,
     hashes signature positions [b*r, (b+1)*r), r = num_hashes // bands,
     with xxhash64 or (hash_mode "portable") the polynomial combine
     DuckDB reproduces. The persisted index rows have exactly this
-    shape. Stateless Catalyst only, so it runs on a stream too."""
+    shape; their ``minhash`` column records the signatures' build
+    parameters plus ``bands``. Stateless Catalyst only, so it runs on a
+    stream too."""
     from ..functions import portable_hash as PH
 
     rows_per_band = num_hashes // bands
@@ -312,7 +264,9 @@ def minhash_bands(sigs: DataFrame, num_hashes: int = 32, bands: int = 8,
             F.struct(F.lit(b).alias("band"), band_hash(b).alias("bhash"))
             for b in range(bands)])).alias("bb"),
     ).select(F.col("bb.band").alias("band"),
-             F.col("bb.bhash").alias("bhash"), "id", "minhash")
+             F.col("bb.bhash").alias("bhash"), "id",
+             stamp_params("minhash", **build_params(sigs, "minhash"),
+                          bands=bands))
 
 
 def _est_jaccard(mh_a: str, mh_b: str, num_hashes: int):
@@ -340,16 +294,19 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     hash_mode "portable" makes every hash (base, family, band) an
     md5/affine/polynomial construction DuckDB reproduces bit-for-bit
     (see functions.portable_hash) — plan shape is IDENTICAL; only the
-    leaf hash expressions change."""
+    leaf hash expressions change.
+
+    ``base``: a caller-persisted minhash_base frame; its recorded
+    (num_hashes, shingle_k, hash_mode) must match (check_params)."""
     # persist the (small: id + num_hashes longs per doc) signature frame so
     # the self-join's two sides don't recompute the shingling; callers
     # over an IMMUTABLE corpus pass a persisted `base` instead and the
     # shingling is paid once per corpus ever
     owns_base = base is None
     if not owns_base:
-        _check_base_params(base, "minhash_lsh_pairs",
-                           num_hashes=num_hashes, shingle_k=shingle_k,
-                           hash_mode=hash_mode)
+        check_params(base, "minhash", "minhash_lsh_pairs", kind="minhash",
+                     num_hashes=num_hashes, shingle_k=shingle_k,
+                     hash_mode=hash_mode)
     sigs = (minhash_base(docs, text_col, id_col, num_hashes, shingle_k,
                          hash_mode=hash_mode).persist()
             if owns_base else base)
@@ -462,7 +419,8 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     ``base``: callers holding the persisted (id, simhash) frame for an
     IMMUTABLE corpus pass it in so repeated invocations skip the
     fingerprint pass (same contract as minhash_lsh_pairs' `base`:
-    fingerprints are a pure function of (corpus, params)). The caller
+    fingerprints are a pure function of (corpus, params)); its
+    recorded nbits and hash_mode must match (check_params). The caller
     owns its cache; the result's rm_release_cache is then a no-op.
     """
     assert bands * band_bits <= nbits
@@ -471,8 +429,8 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
         base = simhash_base(docs, text_col, id_col, nbits=nbits,
                             hash_mode=hash_mode).persist()
     else:
-        _check_base_params(base, "simhash_pairs",
-                           nbits=nbits, hash_mode=hash_mode)
+        check_params(base, "simhash", "simhash_pairs", kind="simhash",
+                     nbits=nbits, hash_mode=hash_mode)
     out = hamming_band_pairs(base, hash_col="simhash",
                              max_hamming=max_hamming, bands=bands,
                              band_bits=band_bits)
@@ -526,12 +484,13 @@ def simhash_base(docs: DataFrame, text_col: str = "text",
     """(id, simhash) fingerprint frame consumed by simhash_pairs — split
     out so callers over an immutable corpus can persist it once per
     session (the minhash_base contract). NOT persisted here;
-    callers decide caching."""
-    return _stamp_base_params(
-        simhash(drop_blank_docs(docs, text_col), text_col, id_col,
-                nbits=nbits, hash_mode=hash_mode).select(
-            F.col(id_col).alias("id"), "simhash"),
-        nbits=nbits, hash_mode=hash_mode)
+    callers decide caching. The ``simhash`` column records {kind
+    "simhash", nbits, hash_mode}."""
+    return simhash(drop_blank_docs(docs, text_col), text_col, id_col,
+                   nbits=nbits, hash_mode=hash_mode).select(
+        F.col(id_col).alias("id"),
+        stamp_params("simhash", kind="simhash", nbits=nbits,
+                     hash_mode=hash_mode))
 
 
 # -------------------------------------------------------------- ngram jaccard
@@ -1005,29 +964,35 @@ def fuzzy_pairs_levenshtein(df: DataFrame, col: str,
 #
 # A persisted index is a directory: its data table (``bands/`` for
 # minhash, ``vectors/`` for embeddings) in the per-batch state layout
-# of streaming/state.py, beside a ``_meta`` sidecar (index_meta.py).
+# of streaming/state.py. Its build parameters are the ones its rows'
+# signature (or vector) column records (check_params), so they travel
+# in every parquet footer of the table, with no file beside it.
 # Builds write the seed partition, out-of-stream admits append to it,
 # and the streaming admission loop (streaming/sinks.py) probes the
 # prior view and writes its admits as its own batch partition, so a
 # replayed batch rewrites exactly its own rows.
 
-_VECTORS_KIND = "vectors"  # the embedding index's sidecar kind
-_TABLES = {"minhash": "bands", _VECTORS_KIND: "vectors"}
+_VECTORS_KIND = "vectors"  # the embedding index's recorded kind
+# kind -> (data table under the index path, the column recording it)
+_TABLES = {"minhash": ("bands", "minhash"), _VECTORS_KIND: ("vectors", "v")}
 
 
-def _index_table(spark, path: str, kind: str, params: dict,
-                 who: str) -> str:
-    """The data table of the `kind` index at `path`, after checking
-    the sidecar against (kind, params) (IndexParamMismatch) and the
-    table's per-batch layout (ValueError: an index written before it
-    is refused, never misread)."""
+def _index_table(spark, path: str, kind: str, params: dict, who: str):
+    """(path, frame) of the `kind` index's data table at `path`, after
+    checking its per-batch layout (ValueError: a table written before
+    it is refused, never misread) and the build parameters its column
+    records against (kind, params) (IndexParamMismatch). A probe scans
+    this frame, so the check adds no Spark job to it. Spark reads the
+    record from one footer, so an append checks here before it writes:
+    a table never holds files of two parameter sets."""
     from ..streaming.state import check_layout
-    from .index_meta import check_index_meta
 
-    check_index_meta(spark, path, kind, params, who)
-    table = f"{path}/{_TABLES[kind]}"
+    name, col = _TABLES[kind]
+    table = f"{path}/{name}"
     check_layout(spark, table, f"{kind} index")
-    return table
+    frame = spark.read.parquet(table)
+    check_params(frame, col, who, kind=kind, **params)
+    return table, frame
 
 
 def _minhash_params(num_hashes, bands, shingle_k, hash_mode) -> dict:
@@ -1055,19 +1020,15 @@ def build_minhash_index(docs: DataFrame, path: str,
     near-dup (below) probes it WITHOUT touching the corpus text — the
     at-scale shape for a growing corpus: signature extraction is paid
     once per document ever, and a probe batch shuffles only its own
-    signatures. Build params (num_hashes, bands, shingle_k, hash_mode)
-    are persisted in a ``_meta`` sidecar; probes assert them and RAISE
-    on mismatch (index_meta.check_index_meta).
+    signatures. The rows' ``minhash`` column records the build params
+    (num_hashes, bands, shingle_k, hash_mode); probes, appends and
+    compaction check them and RAISE on mismatch (_index_table).
     """
     from ..streaming.state import write_seed
-    from .index_meta import write_index_meta
 
     write_seed(_minhash_rows(docs, text_col, id_col, num_hashes, bands,
                              shingle_k, hash_mode),
                f"{path}/bands", "band")
-    write_index_meta(docs.sparkSession, path, "minhash",
-                     _minhash_params(num_hashes, bands, shingle_k,
-                                     hash_mode))
 
 
 def append_to_minhash_index(new_docs: DataFrame, path: str,
@@ -1080,15 +1041,15 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
     append the batch's (band, bhash, id, minhash) rows to the seed
     partition, so every future probe sees them. Only the batch's
     signatures are computed; the existing index is never rewritten.
-    Params are asserted against the index's ``_meta`` sidecar — an
-    append in the wrong hash family would poison the index, so it
-    raises IndexParamMismatch instead."""
+    Params are checked against the ones the index records before
+    anything is written — an append in the wrong hash family would
+    poison the index, so it raises IndexParamMismatch instead."""
     from ..streaming.state import write_seed
 
-    table = _index_table(new_docs.sparkSession, path, "minhash",
-                         _minhash_params(num_hashes, bands, shingle_k,
-                                         hash_mode),
-                         "append_to_minhash_index")
+    table, _ = _index_table(new_docs.sparkSession, path, "minhash",
+                            _minhash_params(num_hashes, bands, shingle_k,
+                                            hash_mode),
+                            "append_to_minhash_index")
     write_seed(_minhash_rows(new_docs, text_col, id_col, num_hashes,
                              bands, shingle_k, hash_mode),
                table, "band", mode="append")
@@ -1128,23 +1089,23 @@ def neardup_vs_index(new_docs: DataFrame, path: str,
     text is never read — and verifies on the stored signatures.
     Estimated jaccard is identical to the batch operator's (same
     signature family). Raises IndexParamMismatch when (num_hashes,
-    bands, shingle_k, hash_mode) disagree with the index's persisted
-    ``_meta`` sidecar.
+    bands, shingle_k, hash_mode) disagree with the ones the index
+    records.
     """
-    spark = new_docs.sparkSession
-    table = _index_table(spark, path, "minhash",
-                         _minhash_params(num_hashes, bands, shingle_k,
-                                         hash_mode), "neardup_vs_index")
-    return _minhash_probe(new_docs, spark.read.parquet(table), text_col,
-                          id_col, num_hashes, bands, shingle_k,
-                          jaccard_threshold, hash_mode)
+    _, idx = _index_table(new_docs.sparkSession, path, "minhash",
+                          _minhash_params(num_hashes, bands, shingle_k,
+                                          hash_mode), "neardup_vs_index")
+    return _minhash_probe(new_docs, idx, text_col, id_col, num_hashes,
+                          bands, shingle_k, jaccard_threshold, hash_mode)
 
 
 def _vector_rows(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-    """`emb`'s (id, v double[]) index rows."""
+    """`emb`'s (id, v double[]) index rows; ``v`` records kind
+    "vectors"."""
     return emb.select(F.col(id_col).alias("id"),
                       F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                      .alias("v"))
+                      .alias("v")).withColumn(
+        "v", stamp_params("v", kind=_VECTORS_KIND))
 
 
 def build_embedding_index(emb: DataFrame, path: str,
@@ -1152,14 +1113,12 @@ def build_embedding_index(emb: DataFrame, path: str,
                           id_col: str = "vec_id") -> None:
     """Persist the corpus's embedding index, the embedding twin of
     build_minhash_index: the ``vectors/`` table (id, v double[]) under
-    `path` (the corpus is its seed partition) plus a ``_meta`` sidecar
-    of kind "vectors" with no params. A probe batch
+    `path` (the corpus is its seed partition), whose ``v`` column
+    records kind "vectors" and no params. A probe batch
     (neardup_embedding_vs_index) never re-reads the corpus table."""
     from ..streaming.state import write_seed
-    from .index_meta import write_index_meta
 
     write_seed(_vector_rows(emb, vec_col, id_col), f"{path}/vectors")
-    write_index_meta(emb.sparkSession, path, _VECTORS_KIND, {})
 
 
 def append_to_embedding_index(new_emb: DataFrame, path: str,
@@ -1168,11 +1127,11 @@ def append_to_embedding_index(new_emb: DataFrame, path: str,
     """ADMIT a vector batch into the persisted embedding index out of
     stream (the twin of append_to_minhash_index): its (id, v) rows
     append to the seed partition of the ``vectors`` table; an index of
-    another kind raises IndexParamMismatch."""
+    another kind, or recording none, raises IndexParamMismatch."""
     from ..streaming.state import write_seed
 
-    table = _index_table(new_emb.sparkSession, path, _VECTORS_KIND, {},
-                         "append_to_embedding_index")
+    table, _ = _index_table(new_emb.sparkSession, path, _VECTORS_KIND,
+                            {}, "append_to_embedding_index")
     write_seed(_vector_rows(new_emb, vec_col, id_col), table,
                mode="append")
 
@@ -1203,13 +1162,12 @@ def neardup_embedding_vs_index(new_emb: DataFrame, path: str,
     read. Cost grows as batch x index dot products, not sublinearly in
     the index (sf1: a 4k batch x a 16k index, dim 64). Id columns keep
     their input types; a NULL or ragged vector raises; an index of
-    another kind (the old banded sign-LSH one) raises
+    another kind, or recording none (one built before the record
+    existed, such as the old banded sign-LSH one), raises
     IndexParamMismatch."""
-    spark = new_emb.sparkSession
-    table = _index_table(spark, path, _VECTORS_KIND, {},
-                         "neardup_embedding_vs_index")
-    return _embedding_probe(new_emb, spark.read.parquet(table), vec_col,
-                            id_col, threshold)
+    _, vectors = _index_table(new_emb.sparkSession, path, _VECTORS_KIND,
+                              {}, "neardup_embedding_vs_index")
+    return _embedding_probe(new_emb, vectors, vec_col, id_col, threshold)
 
 
 def _compact_index(spark, path: str, kind: str, keys: list,
@@ -1217,12 +1175,13 @@ def _compact_index(spark, path: str, kind: str, keys: list,
     """Fold the `kind` index's table (streaming/state.py
     compact_batch_partitions) with rows duplicate on `keys` dropped:
     repeated out-of-stream admits of the same rows leave exact
-    duplicates in the seed. The sidecar is untouched; a sidecar of
-    another kind, or without one, raises IndexParamMismatch. Returns
-    rows removed."""
+    duplicates in the seed. The fold keeps the rows' columns, so the
+    compacted table records the same build parameters; a table of
+    another kind, or recording none, raises IndexParamMismatch.
+    Returns rows removed."""
     from ..streaming.state import compact_batch_partitions
 
-    table = _index_table(spark, path, kind, {}, f"compact {kind} index")
+    table, _ = _index_table(spark, path, kind, {}, f"compact {kind} index")
     return compact_batch_partitions(
         spark, table, None, lambda old: old.dropDuplicates(keys),
         partition_by=partition_by)["rows_removed"]

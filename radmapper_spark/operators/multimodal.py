@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata; decode/feature-extract/resize/frame-sample as
+with typed metadata; decode/feature-extract/frame-sample as
 Arrow-batched pandas UDFs over mapInPandas.
 
 The real PIL decode body is written and IMPORT-GUARDED: when pillow is
@@ -13,9 +13,7 @@ end-to-end; with the env var unset the decode raises instead of faking.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import struct
 from typing import Iterator
 
 from pyspark.sql import DataFrame
@@ -56,30 +54,6 @@ def synthesize_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                      {"mime": f"{kind}/x-fake", "width": 64 + i % 128,
                       "height": 64 + (i * 3) % 128, "duration_ms": 1000 * (i % 30)}))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def _decode_image_bytes(payload: bytes, meta=None) -> list:
-    """Import-guarded decode: real PIL body when pillow is installed,
-    deterministic sha256 fake otherwise (only with RM_MM_FAKE_DECODE=1)."""
-    try:
-        import io
-
-        from PIL import Image
-        try:
-            img = Image.open(io.BytesIO(payload)).convert("L").resize((4, 4))
-            return [p / 255.0 for p in img.getdata()]
-        except Exception:
-            if os.environ.get("RM_MM_FAKE_DECODE", "1") == "1":
-                pass  # test fixtures aren't real images; fall through to fake
-            else:
-                raise
-    except ImportError:
-        if os.environ.get("RM_MM_FAKE_DECODE", "1") != "1":
-            raise NotImplementedError(
-                "image decode requires pillow/libvips on the executors "
-                "(pip install pillow, or ship via --py-files)")
-    h = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in h[:16]]  # deterministic 16-dim fake feature
 
 
 def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
@@ -152,15 +126,6 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def resize_meta(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning (aspect-preserving target dims) as pure column math;
-    the pixel op itself happens inside the decode UDF."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(max_side) / w, F.lit(max_side) / h, F.lit(1.0))
-    return media.withColumn("target_width", F.ceil(w * scale).cast("int")) \
-                .withColumn("target_height", F.ceil(h * scale).cast("int"))
-
-
 def perceptual_hash(media: DataFrame, payload_col: str = "payload",
                     id_col: str = "media_id", pixels: int = 61,
                     bits: int = 60, carry_cols: tuple = ()) -> DataFrame:
@@ -186,7 +151,8 @@ def perceptual_hash(media: DataFrame, payload_col: str = "payload",
 
     NULL/empty payloads are dropped (a hash of nothing is the blank-doc
     hot bucket — same rationale as dedup.drop_blank_docs). Map-only
-    Arrow pass: one output row per input row, no shuffle."""
+    Arrow pass: one output row per input row, no shuffle. The ``phash``
+    column records kind "phash" and ``bits`` (dedup.check_params)."""
     import pandas as pd
 
     if not 1 <= bits <= 60:
@@ -258,7 +224,7 @@ def perceptual_hash(media: DataFrame, payload_col: str = "payload",
                 out[c] = pdf[c]  # pass-through, untouched
             yield pd.DataFrame(out)
 
-    from .dedup import _stamp_base_params
+    from .dedup import stamp_params
 
     # id + carried types follow the input schema (the r10 span-kernel
     # lesson: never hardcode field types of a mapInPandas schema)
@@ -266,11 +232,11 @@ def perceptual_hash(media: DataFrame, payload_col: str = "payload",
         [T.StructField("media_id", media.schema[id_col].dataType),
          T.StructField("phash", T.LongType())]
         + [T.StructField(c, media.schema[c].dataType) for c in carry_])
-    return _stamp_base_params(
-        media.select(F.col(id_col), F.col(payload_col),
-                     *[F.col(c) for c in carry_])
-        .mapInPandas(hash_batches, schema),
-        bits=bits_)
+    return (media.select(F.col(id_col), F.col(payload_col),
+                         *[F.col(c) for c in carry_])
+            .mapInPandas(hash_batches, schema)
+            .withColumn("phash", stamp_params("phash", kind="phash",
+                                              bits=bits_)))
 
 
 def phash_neardup_pairs(media: DataFrame, payload_col: str = "payload",
@@ -289,7 +255,8 @@ def phash_neardup_pairs(media: DataFrame, payload_col: str = "payload",
     decode the hash pass is the dominant cost and must not run on both
     join sides) and released via the result's ``rm_release_cache``
     handle; callers over an immutable corpus pass a persisted ``base``
-    (id, phash) instead and own its cache."""
+    (id, phash) instead, recording the same ``bits``, and own its
+    cache."""
     from . import dedup as _dedup
 
     if bands * band_bits > bits:
@@ -305,7 +272,8 @@ def phash_neardup_pairs(media: DataFrame, payload_col: str = "payload",
         base = perceptual_hash(media, payload_col, id_col,
                                pixels=bits + 1, bits=bits).persist()
     else:
-        _dedup._check_base_params(base, "phash_neardup_pairs", bits=bits)
+        _dedup.check_params(base, "phash", "phash_neardup_pairs",
+                            kind="phash", bits=bits)
     out = _dedup.hamming_band_pairs(base, hash_col="phash",
                                     id_col="media_id",
                                     max_hamming=max_hamming,

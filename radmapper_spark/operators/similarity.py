@@ -407,21 +407,25 @@ def build_ivf_index(corpus: DataFrame, path: str,
     PARTITIONED BY cell. The partition layout is the point: a probe
     reads only its nprobe cell directories (partition pruning at the
     file-listing level), so at 100 TB a search scans
-    ~nprobe/ncentroids of the corpus without any index server."""
+    ~nprobe/ncentroids of the corpus without any index server. The
+    ``centroid`` column records kind "ivf" and ncentroids
+    (dedup.check_params)."""
+    from .dedup import stamp_params
+
     cents = train_centroids(corpus, vec_col, ncentroids)
     spark = corpus.sparkSession
     import pandas as pd
     spark.createDataFrame(
         pd.DataFrame({"cell": range(len(cents)),
                       "centroid": [list(map(float, c)) for c in cents]})) \
+        .select("cell", stamp_params("centroid", kind="ivf",
+                                     ncentroids=ncentroids)) \
         .write.mode("overwrite").parquet(f"{path}/centroids")
     assign1 = _nearest_centroid_udf(cents, 1)
     (corpus.select(F.col(id_col).alias("cid"),
                    _to_double(F.col(vec_col)).alias("cv"))
      .withColumn("cell", assign1(F.col("cv"))[0])
      .write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells"))
-    from .index_meta import write_index_meta
-    write_index_meta(spark, path, "ivf", {"ncentroids": ncentroids})
 
 
 def search_ivf_index(spark, path: str, queries: DataFrame, k: int = 10,
@@ -431,13 +435,22 @@ def search_ivf_index(spark, path: str, queries: DataFrame, k: int = 10,
     centroid table (tiny by construction) is collected to route queries;
     the cells scan carries a `cell IN (probed)` filter that prunes to
     the probed partition directories (asserted in tests via
-    PartitionFilters)."""
-    from .index_meta import check_index_meta
-    # ncentroids is read FROM the index (no probe-side twin to mismatch);
-    # the kind check stops e.g. an embedding index being searched as IVF
-    check_index_meta(spark, path, "ivf", {}, "search_ivf_index")
-    cents_rows = (spark.read.parquet(f"{path}/centroids")
-                  .orderBy("cell").collect())
+    PartitionFilters). An index of another kind (no centroids table)
+    or recording no kind raises IndexParamMismatch."""
+    from pyspark.errors import AnalysisException
+
+    from .dedup import IndexParamMismatch, check_params
+    try:
+        cents_df = spark.read.parquet(f"{path}/centroids")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise IndexParamMismatch(
+            f"search_ivf_index: {path} has no centroids table: not an "
+            f"index of kind 'ivf'") from e
+    # ncentroids is read FROM the index (no probe-side twin to mismatch)
+    check_params(cents_df, "centroid", "search_ivf_index", kind="ivf")
+    cents_rows = cents_df.orderBy("cell").collect()
     cents = [r["centroid"] for r in cents_rows]
     assignp = _nearest_centroid_udf(cents, nprobe)
     q = queries.select(F.col(qid_col).alias("qid"),

@@ -238,8 +238,9 @@ def start_neardup_admission(docs_stream: DataFrame, index_path: str,
 
     cols = dict(text_col=text_col, id_col=id_col)
     params = dedup._minhash_params(num_hashes, bands, shingle_k, hash_mode)
-    table = dedup._index_table(docs_stream.sparkSession, index_path,
-                               "minhash", params, "start_neardup_admission")
+    table, _ = dedup._index_table(docs_stream.sparkSession, index_path,
+                                  "minhash", params,
+                                  "start_neardup_admission")
     return _admission_loop(
         docs_stream, table, out_path, checkpoint, id_col,
         lambda b, prior: dedup._minhash_probe(
@@ -293,9 +294,9 @@ def start_embedding_admission(vec_stream: DataFrame, index_path: str,
     like the minhash loop."""
     from ..operators import dedup
 
-    table = dedup._index_table(vec_stream.sparkSession, index_path,
-                               dedup._VECTORS_KIND, {},
-                               "start_embedding_admission")
+    table, _ = dedup._index_table(vec_stream.sparkSession, index_path,
+                                  dedup._VECTORS_KIND, {},
+                                  "start_embedding_admission")
     return _admission_loop(
         vec_stream, table, out_path, checkpoint, id_col,
         lambda b, prior: dedup._embedding_probe(b, prior, vec_col, id_col,

@@ -131,13 +131,22 @@ def start_batches(stream: DataFrame, fn, checkpoint: str):
     return start(stream.writeStream.foreachBatch(fn), checkpoint)
 
 
+def _staged(path: str, tag: str) -> str:
+    """The hidden sibling ``_<table>__<tag>`` of the table at ``path``:
+    Hadoop listings skip ``_`` names without ``=``, so a copy a killed
+    compaction leaves there is never read as part of the parent
+    directory (an index root reads as its one data table)."""
+    head, name = os.path.split(path.rstrip("/"))
+    return os.path.join(head, f"_{name}__{tag}")
+
+
 def _swap_dir(path: str, tmp: str) -> None:
     """Crash-safe local-FS directory swap: rename the live table aside
-    (``path__old``), move ``tmp`` into place, then delete the old copy;
-    a failure moving the new copy in restores the old one and drops
-    ``tmp``. A ``path__old`` left by a crash in an earlier swap's
+    (its ``old`` staged sibling), move ``tmp`` into place, then delete
+    the old copy; a failure moving the new copy in restores the old one
+    and drops ``tmp``. An old copy left by a crash in an earlier swap's
     cleanup is removed first."""
-    old = path.rstrip("/") + "__old"
+    old = _staged(path, "old")
     if os.path.exists(old):
         shutil.rmtree(old)
     os.rename(path, old)
@@ -161,8 +170,10 @@ def compact_batch_partitions(spark: SparkSession, path: str,
     the rows without the batch column); later partitions are carried
     over untouched. ``upto=None`` is the always-safe watermark, the
     maximum batch id present (see the module docstring). The rewrite
-    stages into a ``__compact`` sibling and swaps in by rename-aside,
-    so the live table exists at every instant. Returns
+    stages into the hidden ``_<table>__compact`` sibling (replacing one
+    a killed run left) and swaps in by rename-aside, so the live table
+    exists at every instant. The rewrite keeps the table's column
+    metadata (an index's recorded build parameters). Returns
     ``{"rows_before", "rows_after", "rows_removed", "batches_folded"}``;
     when nothing would change (no partition to fold, or only one whose
     fold removes no row) it is a no-op, with no swap."""
@@ -193,13 +204,16 @@ def compact_batch_partitions(spark: SparkSession, path: str,
                               and folded.count() == old.count()):
         return {"rows_before": int(before), "rows_after": int(before),
                 "rows_removed": 0, "batches_folded": 0}
-    tmp = path.rstrip("/") + "__compact"
-    (folded.withColumn(BATCH_COL, F.lit(SEED_BATCH_ID).cast("long"))
-     .unionByName(df.filter(col >= upto).filter(col != SEED_BATCH_ID))
-     .write.mode("overwrite").partitionBy(BATCH_COL, *partition_by)
+    out = (folded.withColumn(BATCH_COL, F.lit(SEED_BATCH_ID).cast("long"))
+           .unionByName(df.filter(col >= upto).filter(col != SEED_BATCH_ID)))
+    for f in df.schema:
+        if f.metadata:  # the optimizer's dedup aggregate would drop it
+            out = out.withMetadata(f.name, f.metadata)
+    tmp = _staged(path, "compact")
+    (out.write.mode("overwrite").partitionBy(BATCH_COL, *partition_by)
      .parquet(tmp))
-    after = _read(spark, tmp, schema).count()
     _swap_dir(path, tmp)
+    after = _read(spark, path, schema).count()
     return {"rows_before": int(before), "rows_after": int(after),
             "rows_removed": int(before - after),
             "batches_folded": int(n_old_batches)}

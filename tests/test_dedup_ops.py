@@ -180,13 +180,25 @@ def test_minhash_base_param_mismatch_raises(spark):
 
 
 def test_minhash_attrless_base_sample_check(spark):
-    """A base frame that lost its attr (round-tripped through a select)
-    still fails loudly via the one-row signature-length probe."""
+    """A base round-tripped through select, alias, filter and persist
+    keeps its recorded parameters, so a mismatch still fails loudly
+    (shingle_k and hash_mode included, which no sample of the
+    signatures could witness); a base recording none is refused."""
     docs = _docs_r11(spark, [(1, DUPTXT), (2, DUPTXT)])
-    stripped = dedup.minhash_base(docs, num_hashes=16).select("id", "minhash")
-    assert getattr(stripped, "rm_base_params", None) is None
-    with pytest.raises(ValueError, match="16-hash"):
-        dedup.minhash_lsh_pairs(docs, num_hashes=32, base=stripped)
+    moved = (dedup.minhash_base(docs, num_hashes=16).alias("b")
+             .select("id", "minhash").filter("id > 0").persist())
+    try:
+        for kw, key in (({"num_hashes": 32}, "num_hashes"),
+                        ({"num_hashes": 16, "shingle_k": 3}, "shingle_k"),
+                        ({"num_hashes": 16, "hash_mode": "portable"},
+                         "hash_mode")):
+            with pytest.raises(dedup.IndexParamMismatch, match=key):
+                dedup.minhash_lsh_pairs(docs, base=moved, **kw)
+    finally:
+        moved.unpersist()
+    bare = spark.createDataFrame([(1, [1, 2])], "id long, minhash array<long>")
+    with pytest.raises(dedup.IndexParamMismatch, match="no build parameters"):
+        dedup.minhash_lsh_pairs(docs, num_hashes=2, bands=1, base=bare)
 
 
 def test_simhash_base_param_mismatch_raises(spark):
@@ -194,6 +206,12 @@ def test_simhash_base_param_mismatch_raises(spark):
     base = dedup.simhash_base(docs, hash_mode="portable", nbits=60)
     with pytest.raises(ValueError, match="hash_mode"):
         dedup.simhash_pairs(docs, hash_mode="xxhash64", base=base)
+    with pytest.raises(ValueError, match="nbits"):
+        dedup.simhash_pairs(docs, hash_mode="portable", nbits=64,
+                            base=base)
+    bare = spark.createDataFrame([(1, 5)], "id long, simhash long")
+    with pytest.raises(dedup.IndexParamMismatch, match="no build parameters"):
+        dedup.simhash_pairs(docs, base=bare)
 
 
 def test_apply_removal_spans_semantics(spark):

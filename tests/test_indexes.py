@@ -1,4 +1,4 @@
-"""Persisted near-dup/ANN index machinery: metadata guards, append/rebuild, compaction, probes (operators/dedup.py + index_meta.py).
+"""Persisted near-dup/ANN index machinery: build-parameter guards, append/rebuild, compaction, probes (operators/dedup.py).
 
 Consolidated from the per-round test files (r14 governance pass) — test bodies unchanged."""
 
@@ -87,7 +87,7 @@ def _tiny_emb(spark, ids=None):
 
 def test_minhash_index_meta_mismatch_raises(spark, tmp_path):
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     docs = _tiny_docs(spark)
     path = str(tmp_path / "mh")
     dedup.build_minhash_index(docs, path)
@@ -100,38 +100,55 @@ def test_minhash_index_meta_mismatch_raises(spark, tmp_path):
 
 
 def test_signlsh_index_meta_mismatch_raises(spark, tmp_path):
-    """An index whose sidecar says it is a banded sign-LSH index (the
-    layout before the exact vectors index) must raise on probe AND on
+    """An index whose table records a banded sign-LSH build (the index
+    before the exact vectors index), or records nothing (any index
+    written before the record existed), must raise on probe AND on
     append instead of being misread or mixed with new rows."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     emb = _tiny_emb(spark)
     path = str(tmp_path / "sl")
     dedup.build_embedding_index(emb, path)
     assert dedup.neardup_embedding_vs_index(emb, path).count() >= 30
-    _rewrite_sidecar(path, {"kind": "signlsh", "bands": 192,
-                            "planes_per_band": 8, "sketch_planes": 512,
-                            "seed": 42})
+    _rewrite_index(spark, path, "vectors", "v",
+                   {"kind": "signlsh", "bands": 192, "planes_per_band": 8,
+                    "sketch_planes": 512, "seed": 42})
     with pytest.raises(IndexParamMismatch, match="kind"):
         dedup.neardup_embedding_vs_index(emb, path)
     with pytest.raises(IndexParamMismatch, match="append_to_embedding"):
         dedup.append_to_embedding_index(emb, path)
+    _rewrite_index(spark, path, "vectors", "v", None)
+    with pytest.raises(IndexParamMismatch, match="no build parameters"):
+        dedup.neardup_embedding_vs_index(emb, path)
+    with pytest.raises(IndexParamMismatch, match="no build parameters"):
+        dedup.append_to_embedding_index(emb, path)
 
 
 def test_ivf_search_rejects_wrong_index_kind(spark, tmp_path):
+    """An embedding index searched as IVF raises, and so does an IVF
+    index whose centroids record another kind or none."""
     from radmapper_spark.operators import dedup, similarity
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     emb = _tiny_emb(spark)
     path = str(tmp_path / "sl2")
     dedup.build_embedding_index(emb, path)
     q = emb.limit(2).select(F.col("vec_id").alias("qid"), "embedding")
     with pytest.raises(IndexParamMismatch, match="kind"):
         similarity.search_ivf_index(spark, path, q, k=3)
+    ivf = str(tmp_path / "ivf")
+    similarity.build_ivf_index(emb, ivf, ncentroids=4)
+    assert similarity.search_ivf_index(spark, ivf, q, k=3).count() == 6
+    for meta, match in (({"kind": "vectors"}, "kind"),
+                        (None, "no build parameters")):
+        _rewrite_index(spark, ivf, "centroids", "centroid", meta)
+        with pytest.raises(IndexParamMismatch, match=match):
+            similarity.search_ivf_index(spark, ivf, q, k=3)
 
 
 def test_index_meta_invisible_to_parquet_reader(spark, tmp_path):
-    """The _meta sidecar must not pollute the index data scan (underscore
-    paths are hidden from Hadoop input listings)."""
+    """The index root reads as its data table alone: the build
+    parameters ride in the table's own schema, with no file beside
+    it."""
     from radmapper_spark.operators import dedup
     docs = _tiny_docs(spark)
     path = str(tmp_path / "mh2")
@@ -206,10 +223,10 @@ def test_embedding_probe_broadcast_gated_by_size(spark, tmp_path):
 
 def test_index_rebuild_updates_meta(spark, tmp_path):
     """Rebuilding an index at the same path with different parameters
-    must refresh the _meta sidecar: probes with the OLD params raise,
-    probes with the new params run."""
+    must refresh the recorded parameters: probes with the OLD params
+    raise, probes with the new params run."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     docs = _tiny_docs(spark)
     path = str(tmp_path / "mh_rebuild")
     dedup.build_minhash_index(docs, path)  # defaults: 32 hashes, 8 bands
@@ -241,14 +258,28 @@ def test_minhash_append_equals_full_rebuild(spark, tmp_path):
     assert got == want and want, "append diverged from full rebuild"
 
 
+def _tree(path):
+    """{relative file path: size} under ``path``."""
+    return {os.path.relpath(os.path.join(d, f), path):
+            os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(path) for f in fs}
+
+
 def test_minhash_append_param_mismatch_raises(spark, tmp_path):
+    """A mixed-parameter append is refused before anything is written:
+    Spark reads a table's recorded parameters from one footer, so a
+    file of another parameter set could otherwise hide in the table."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     docs = _tiny_docs(spark)
     path = str(tmp_path / "mh_ap")
     dedup.build_minhash_index(docs, path)
-    with pytest.raises(IndexParamMismatch, match="append_to_minhash"):
-        dedup.append_to_minhash_index(docs, path, num_hashes=16, bands=4)
+    before = _tree(path)
+    for kw in ({"num_hashes": 16, "bands": 4}, {"bands": 4},
+               {"shingle_k": 3}, {"hash_mode": "portable"}):
+        with pytest.raises(IndexParamMismatch, match="append_to_minhash"):
+            dedup.append_to_minhash_index(docs, path, **kw)
+    assert _tree(path) == before
 
 
 def test_embedding_append_equals_full_rebuild(spark, tmp_path):
@@ -274,10 +305,11 @@ def test_embedding_append_equals_full_rebuild(spark, tmp_path):
 
 def test_compact_minhash_index_after_repeated_admit(spark, tmp_path):
     """A repeated out-of-stream admit of the same batch leaves duplicate
-    rows in the seed; compaction removes exactly them, preserves the
-    _meta sidecar, and probes answer identically before/after."""
+    rows in the seed; compaction removes exactly them, keeps the
+    recorded build parameters, and probes answer identically
+    before/after."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     docs = _tiny_docs(spark)
     path = str(tmp_path / "mhc")
     dedup.build_minhash_index(docs.filter(F.col("doc_id") < 10), path)
@@ -294,9 +326,18 @@ def test_compact_minhash_index_after_repeated_admit(spark, tmp_path):
     after = {(r.new_id, r.index_id, r.est_jaccard)
              for r in dedup.neardup_vs_index(probe, path).collect()}
     assert after == before and before
-    # the sidecar survived: a mismatched probe still raises
+    # the record survived the rewrite: mismatched probes and appends
+    # still raise
+    assert dedup.build_params(spark.read.parquet(f"{path}/bands"),
+                              "minhash") == {
+        "kind": "minhash", "num_hashes": 32, "bands": 8, "shingle_k": 5,
+        "hash_mode": "xxhash64"}
     with pytest.raises(IndexParamMismatch):
         dedup.neardup_vs_index(probe, path, num_hashes=16, bands=4)
+    with pytest.raises(IndexParamMismatch):
+        dedup.neardup_vs_index(probe, path, bands=4)
+    with pytest.raises(IndexParamMismatch):
+        dedup.append_to_minhash_index(probe, path, hash_mode="portable")
 
 
 def test_embedding_probe_stats_less_batch_keeps_broadcast(spark, tmp_path):
@@ -325,9 +366,8 @@ def test_embedding_probe_stats_less_batch_keeps_broadcast(spark, tmp_path):
 def test_compact_embedding_index_after_repeated_admit(spark, tmp_path):
     """A repeated embedding admit leaves duplicate vectors rows;
     compaction removes exactly them (one row per repeated vector),
-    preserves the _meta sidecar, and probes answer identically."""
+    keeps the recorded kind, and probes answer identically."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import read_index_meta
     emb = _tiny_emb(spark)
     path = str(tmp_path / "slc")
     dedup.build_embedding_index(emb.filter(F.col("vec_id") < 20), path)
@@ -344,7 +384,8 @@ def test_compact_embedding_index_after_repeated_admit(spark, tmp_path):
     removed = dedup.compact_embedding_index(spark, path)
     assert removed == batch.count()
     assert probe() == before and before
-    assert read_index_meta(spark, path) == {"kind": "vectors"}
+    assert dedup.build_params(spark.read.parquet(f"{path}/vectors"),
+                              "v") == {"kind": "vectors"}
 
 
 def test_compact_builtins(spark, tmp_path):
@@ -434,146 +475,154 @@ def test_compact_swap_failure_keeps_live_index(spark, tmp_path,
         dedup.compact_minhash_index(spark, path)
     monkeypatch.setattr(shutil, "move", real_move)
     # live index restored under the canonical path, no debris left
-    table = f"{path}/bands"
     assert spark.read.parquet(path).count() == before
-    assert not os.path.exists(table + "__old")
-    assert not os.path.exists(table + "__compact")
+    assert sorted(os.listdir(path)) == ["bands"]
     # and a subsequent compaction (move works again) succeeds
     removed = dedup.compact_minhash_index(spark, path)
     assert removed > 0
-    assert not os.path.exists(table + "__old")
-    assert not os.path.exists(table + "__compact")
+    assert sorted(os.listdir(path)) == ["bands"]
 
 
-def _rewrite_sidecar(path: str, meta: dict) -> None:
-    """Simulate ANOTHER PROCESS rewriting <path>/_meta: write the text
-    file directly and push the directory mtime forward (local-FS mtime
-    is millisecond-granular; successive writes in the same tick would
-    hide the change)."""
-    d = os.path.join(path, "_meta")
-    for f in os.listdir(d):
-        if f.endswith(".txt") or f.startswith("part-"):
-            os.remove(os.path.join(d, f))
-    with open(os.path.join(d, "part-00000-external.txt"), "w") as fh:
-        fh.write(json.dumps(meta, sort_keys=True) + "\n")
-    future = time.time() + 5
-    os.utime(d, (future, future))
+def test_compact_killed_before_swap_leaves_index_readable(spark, tmp_path,
+                                                          monkeypatch):
+    """A compaction killed between writing its staged copy and the swap
+    leaves the copy under a hidden name: the index root still reads as
+    its one table, a probe answers as before, and the next compaction
+    replaces the copy."""
+    from radmapper_spark.operators import dedup
+    from radmapper_spark.streaming import state
+    docs = _tiny_docs_r9(spark)
+    path = str(tmp_path / "mh")
+    dedup.build_minhash_index(docs, path)
+    dedup.append_to_minhash_index(docs.limit(3), path)  # repeated admit
+    before = spark.read.parquet(path).count()
+    probe = docs.limit(4)
+
+    def hits():
+        return sorted(tuple(r) for r in
+                      dedup.neardup_vs_index(probe, path).collect())
+
+    want = hits()
+    monkeypatch.setattr(state, "_swap_dir", lambda path, tmp: None)
+    dedup.compact_minhash_index(spark, path)  # "killed" before the swap
+    monkeypatch.undo()
+    assert sorted(os.listdir(path)) == ["_bands__compact", "bands"]
+    assert spark.read.parquet(path).count() == before
+    assert hits() == want and want
+    assert dedup.compact_minhash_index(spark, path) == 3 * 8
+    assert sorted(os.listdir(path)) == ["bands"]
+    assert spark.read.parquet(path).count() == before - 3 * 8
+    assert hits() == want
+
+
+def _rewrite_index(spark, path: str, table: str, col: str, meta) -> None:
+    """Simulate ANOTHER PROCESS rewriting the index's ``table`` with
+    ``col`` recording ``meta`` as its build parameters (nothing when
+    ``meta`` is None), keeping the table's rows and layout."""
+    from radmapper_spark.operators.dedup import _BUILD_KEY
+    src = f"{path}/{table}"
+    df = spark.read.parquet(src)
+    parts = ([c for c in ("_rm_batch_id", "band") if c in df.columns]
+             if table != "centroids" else [])
+    df = df.withMetadata(col, {} if meta is None else {_BUILD_KEY: meta})
+    tmp = str(path) + "__rewrite"
+    df.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
+    import shutil
+    shutil.rmtree(src)
+    os.rename(tmp, src)
 
 
 def test_index_meta_cache_sees_external_rewrite(spark, tmp_path):
-    """A long-lived session must NOT validate probes against a stale
-    cached sidecar: after an external rebuild writes new parameters,
-    the old-parameter probe must raise (the memoized meta is
-    mtime-validated and re-read)."""
+    """A long-lived session must NOT validate probes against stale
+    parameters: after an external rebuild records new ones, the
+    old-parameter probe must raise (nothing is cached; every probe
+    reads the table's record)."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     docs = _tiny_docs_r9(spark)
     path = str(tmp_path / "mhx")
     dedup.build_minhash_index(docs, path, num_hashes=32, bands=8)
-    # warm the cache with the build-time parameters
+    # probe once with the build-time parameters
     dedup.neardup_vs_index(docs.limit(2), path,
                            num_hashes=32, bands=8).collect()
-    _rewrite_sidecar(path, {"kind": "minhash", "num_hashes": 64,
-                            "bands": 16, "shingle_k": 5,
-                            "hash_mode": "xxhash64"})
+    _rewrite_index(spark, path, "bands", "minhash",
+                   {"kind": "minhash", "num_hashes": 64, "bands": 16,
+                    "shingle_k": 5, "hash_mode": "xxhash64"})
     with pytest.raises(IndexParamMismatch):
         dedup.neardup_vs_index(docs.limit(2), path,
                                num_hashes=32, bands=8).collect()
 
 
 def test_compact_corrupt_sidecar_missing_kind_raises(spark, tmp_path):
+    """A record without a kind (or no record at all) is refused by the
+    compactor before it rewrites anything."""
     from radmapper_spark.operators import dedup
-    from radmapper_spark.operators.index_meta import IndexParamMismatch
+    from radmapper_spark.operators.dedup import IndexParamMismatch
     docs = _tiny_docs_r9(spark)
     path = str(tmp_path / "mhk")
     dedup.build_minhash_index(docs, path)
-    _rewrite_sidecar(path, {"num_hashes": 32, "bands": 8,
-                            "shingle_k": 5, "hash_mode": "xxhash64"})
-    with pytest.raises(IndexParamMismatch, match="kind"):
-        dedup.compact_minhash_index(spark, path)
+    dedup.append_to_minhash_index(docs.limit(3), path)  # something to fold
+    for meta, match in (({"num_hashes": 32, "bands": 8, "shingle_k": 5,
+                          "hash_mode": "xxhash64"}, "kind"),
+                        (None, "no build parameters")):
+        _rewrite_index(spark, path, "bands", "minhash", meta)
+        before = _tree(path)
+        with pytest.raises(IndexParamMismatch, match=match):
+            dedup.compact_minhash_index(spark, path)
+        assert _tree(path) == before
 
 
-def test_index_meta_stat_error_keeps_guard(spark, tmp_path):
-    """A failing filesystem read must NOT disable the mismatch guard:
-    check_index_meta raises instead of passing as if no sidecar were
-    there (a failed read is not an absent sidecar). So does a sidecar
-    that does not parse."""
-    import types
-    from py4j.protocol import Py4JJavaError
-    from radmapper_spark.operators import index_meta as im
-    p = str(tmp_path / "idx")
-    im.write_index_meta(spark, p, "test_kind", {"bands": 8})
-    # a session whose every Hadoop FS call fails (an outage): the local
-    # filesystem's implementation class cannot be loaded
-    conf = spark._jvm.org.apache.hadoop.conf.Configuration(
-        spark._jsc.hadoopConfiguration())
-    conf.set("fs.file.impl", "no.such.FileSystem")
-    conf.set("fs.file.impl.disable.cache", "true")
-    failing = types.SimpleNamespace(
-        _jvm=spark._jvm,
-        _jsc=types.SimpleNamespace(hadoopConfiguration=lambda: conf))
-    for bands in (8, 9):
-        with pytest.raises(Py4JJavaError):
-            im.check_index_meta(failing, p, "test_kind", {"bands": bands},
-                                "probe")
-    assert im.read_index_meta(spark, p)["bands"] == 8
-    d = os.path.join(p, "_meta")
-    for f in os.listdir(d):
-        if "part-" in f:  # the part file and its checksum
-            os.remove(os.path.join(d, f))
-    with open(os.path.join(d, "part-00000-external.txt"), "w") as fh:
-        fh.write("not json\n")
-    with pytest.raises(ValueError):
-        im.check_index_meta(spark, p, "test_kind", {"bands": 8}, "probe")
+def test_unstamped_index_raises_everywhere(spark, tmp_path):
+    """A minhash index whose table records no build parameters (written
+    before they were recorded, or by hand) is refused by the probe, the
+    append, the admission loop and the compactor: it is never passed
+    as matching."""
+    from radmapper_spark.operators import dedup
+    from radmapper_spark.operators.dedup import IndexParamMismatch
+    from radmapper_spark.streaming import sinks
+    docs = _tiny_docs_r9(spark)
+    path = str(tmp_path / "mhu")
+    dedup.build_minhash_index(docs, path)
+    _rewrite_index(spark, path, "bands", "minhash", None)
+    src = str(tmp_path / "src")
+    docs.limit(0).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    for call in (
+            lambda: dedup.neardup_vs_index(docs, path),
+            lambda: dedup.append_to_minhash_index(docs, path),
+            lambda: sinks.start_neardup_admission(
+                stream, path, str(tmp_path / "out"), str(tmp_path / "ck")),
+            lambda: dedup.compact_minhash_index(spark, path)):
+        with pytest.raises(IndexParamMismatch, match="no build parameters"):
+            call()
+    assert not spark.streams.active
 
 
 def test_index_meta_read_sees_rewrite_without_a_job(spark, tmp_path):
-    """The sidecar is read straight from its part file: after another
-    process rewrites it, the next read returns the new parameters and
-    runs no Spark job."""
-    from radmapper_spark.operators import index_meta as im
-    p = str(tmp_path / "idx")
-    im.write_index_meta(spark, p, "k", {"bands": 8})
-    assert im.read_index_meta(spark, p)["bands"] == 8
-    _rewrite_sidecar(p, {"kind": "k", "bands": 16})
+    """The probe reads the recorded parameters from the table scan it
+    runs anyway: building a probe runs no more Spark jobs than reading
+    the table, and after another process rewrites the record the next
+    probe sees it."""
+    from radmapper_spark.operators import dedup
+    from radmapper_spark.operators.dedup import IndexParamMismatch
+    docs = _tiny_docs_r9(spark)
+    path = str(tmp_path / "mhj")
+    dedup.build_minhash_index(docs, path)
     sc = spark.sparkContext
-    sc.setJobGroup("g_meta", "g_meta")
-    try:
-        meta = im.read_index_meta(spark, p)
-    finally:
-        sc.setJobGroup(None, None)
-    assert meta == {"kind": "k", "bands": 16}
-    assert len(sc.statusTracker().getJobIdsForGroup("g_meta")) == 0, (
-        "reading the sidecar ran a Spark job")
 
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-# ======================== from test_round10.py (r14 consolidation) ========
-def test_sidecar_rewrite_visible_to_next_read(spark, tmp_path):
-    """Rewriting the sidecar through write_index_meta is seen by the
-    next read."""
-    from radmapper_spark.operators import index_meta as im
-    p = str(tmp_path / "idx")
-    im.write_index_meta(spark, p, "k", {"bands": 8})
-    im.write_index_meta(spark, p, "k", {"bands": 16})
-    assert im.read_index_meta(spark, p)["bands"] == 16
-
-
-def test_spark_written_sidecar_still_read(spark, tmp_path):
-    """A sidecar written by Spark's text writer (the earlier writer:
-    a part file plus _SUCCESS and checksum files) reads back, and
-    rewriting it through write_index_meta replaces it whole."""
-    import json as _json
-    from radmapper_spark.operators import index_meta as im
-    p = str(tmp_path / "idx")
-    meta = {"kind": "k", "bands": 8}
-    (spark.createDataFrame([(_json.dumps(meta, sort_keys=True),)],
-                           "meta string")
-     .coalesce(1).write.mode("overwrite").text(f"{p}/_meta"))
-    names = os.listdir(f"{p}/_meta")
-    assert "_SUCCESS" in names and any(n.startswith("part-")
-                                       for n in names)
-    assert im.read_index_meta(spark, p) == meta
-    im.write_index_meta(spark, p, "k", {"bands": 16})
-    assert im.read_index_meta(spark, p) == {"kind": "k", "bands": 16}
-    assert [n for n in os.listdir(f"{p}/_meta")
-            if not n.startswith(".")] == ["part-00000"]
+    read = jobs("g_read", lambda: spark.read.parquet(f"{path}/bands"))
+    probe = jobs("g_probe", lambda: dedup.neardup_vs_index(docs, path))
+    assert probe == read, (probe, read)
+    _rewrite_index(spark, path, "bands", "minhash",
+                   {"kind": "minhash", "num_hashes": 32, "bands": 16,
+                    "shingle_k": 5, "hash_mode": "xxhash64"})
+    with pytest.raises(IndexParamMismatch, match="bands: base=16"):
+        dedup.neardup_vs_index(docs, path)

@@ -110,7 +110,9 @@ def test_phash_pairs_base_contract(spark):
     assert out.count() == 1
     out.rm_release_cache()  # owned base: handle releases the persist
     base = mm.perceptual_hash(media, bits=50, pixels=51)
-    assert base.rm_base_params == {"bits": 50}  # builder stamps
+    # the builder records its parameters on the phash column
+    assert dedup.build_params(base, "phash") == {"kind": "phash",
+                                                 "bits": 50}
     with pytest.raises(ValueError, match="bits"):
         mm.phash_neardup_pairs(media, bits=60, base=base)
     ok = mm.phash_neardup_pairs(media, bits=50, bands=3, band_bits=15,
@@ -256,55 +258,28 @@ def _fake_media_base(spark, hashes):
 
 
 def test_packed_hash_probe_rejects_wider_base(spark):
-    """An attr-less base holding a 64-bit value fed to a 60-bit band
-    consumer fails loudly (r11 advice: high bands would otherwise
-    collapse to one hot bucket and the recall guarantee silently dies)."""
+    """A hand-built base (here one holding a 64-bit value, and one with
+    the sign bit set, fed to a 60-bit band consumer) records no build
+    parameters, so it fails loudly whatever its values: no sample of
+    them is a witness for how it was packed."""
     from radmapper_spark.operators import multimodal
+    from radmapper_spark.operators.dedup import IndexParamMismatch
 
     media = spark.createDataFrame([(1, b"x")], "media_id: long, payload: binary")
-    wide = _fake_media_base(spark, [1 << 62, 5])
-    with pytest.raises(ValueError, match="outside the 60-bit range"):
-        multimodal.phash_neardup_pairs(media, base=wide, bits=60)
-    # negative values (sign bit in play) are also out of range
-    neg = _fake_media_base(spark, [-1, 5])
-    with pytest.raises(ValueError, match="outside the 60-bit range"):
-        multimodal.phash_neardup_pairs(media, base=neg, bits=60)
-
-
-def test_packed_hash_probe_accepts_compliant_base_and_memoizes(spark):
-    """In-range attr-less base passes; the probed range is memoized on a
-    separate attr (a second check runs no job) and rm_base_params stays
-    unset (the range does NOT pin the build params)."""
-    from radmapper_spark.operators import dedup
-
-    base = _fake_media_base(spark, [0, (1 << 60) - 1])
-    dedup._check_base_params(base, "phash_neardup_pairs", bits=60)
-    assert base._rm_probed_hash_range == (0, (1 << 60) - 1)
-    assert getattr(base, "rm_base_params", None) is None
-    # memoized: poison the probe's entry point to prove no second job
-    base.select = None
-    dedup._check_base_params(base, "phash_neardup_pairs", bits=60)
-    # but a tighter consumer still rejects via the memoized range
-    with pytest.raises(ValueError, match="outside the 48-bit range"):
-        dedup._check_base_params(base, "x", bits=48)
-
-
-def test_packed_hash_probe_vacuous_at_64_bits(spark):
-    """nbits=64 leaves the full signed range in play — nothing checkable,
-    no probe job (the simhash default path stays job-free)."""
-    from radmapper_spark.operators import dedup
-
-    base = _fake_media_base(spark, [-5]).withColumnRenamed("phash", "simhash")
-    base.select = None  # would raise if the probe ran a job
-    dedup._check_base_params(base, "simhash_pairs", nbits=64)
+    for hashes in ([1 << 62, 5], [-1, 5], [0, (1 << 60) - 1]):
+        with pytest.raises(IndexParamMismatch, match="no build parameters"):
+            multimodal.phash_neardup_pairs(
+                media, base=_fake_media_base(spark, hashes), bits=60)
 
 
 def test_stamped_attr_still_authoritative(spark):
-    """A stamped base mismatched in bits raises from the attr compare
-    (primary path), not the probe."""
+    """A base recording other bits raises from the record compare,
+    whatever its values."""
     from radmapper_spark.operators import dedup
 
-    base = _fake_media_base(spark, [5])
-    base.rm_base_params = {"bits": 64}
-    with pytest.raises(ValueError, match="mismatched"):
-        dedup._check_base_params(base, "phash_neardup_pairs", bits=60)
+    base = _fake_media_base(spark, [5]).withMetadata(
+        "phash", {dedup._BUILD_KEY: {"kind": "phash", "bits": 64}})
+    with pytest.raises(dedup.IndexParamMismatch,
+                       match="bits: base=64 != caller=60"):
+        dedup.check_params(base, "phash", "phash_neardup_pairs",
+                           kind="phash", bits=60)

@@ -234,8 +234,8 @@ EAGER_ALLOWED = {
     # the incremental contract — the index outlives any one batch): the
     # 1-2 jobs are directory-listing/footer reads of the index layout
     # (the minhash band partitions, the embedding vectors table), never
-    # a data scan (reading the _meta sidecar is a plain file read, not
-    # a job)
+    # a data scan (the build-parameter check reads the schema of that
+    # same read)
     "neardup_probe",
     "embedding_probe",
     "neardup_admit",

@@ -40,6 +40,35 @@ def test_entry_repeat_invocation_identical(spark, name):
     assert run_once() == run_once()
 
 
+@pytest.mark.parametrize("name,sf", [
+    ("lm_bucket", "sf0.1"), ("materialize_training_shards", "sf0.001")])
+def test_global_rank_entry_repeat_identical(spark, name, sf):
+    """ranking.global_rank and global_cumsum persist their
+    range-partitioned frame so that the per-partition count branch and
+    the rank branch read one partitioning. Without the persist, repeat
+    runs of lm_bucket at sf0.1 return different row sets and the shard
+    artifact stops matching its oracle. Each entry runs twice, the
+    shard artifact's memo released in between so it is rebuilt, and
+    both runs must equal the oracle. Each SF is the smallest fixture at
+    which a build without the persist fails this test (lm_bucket still
+    matches at sf0.01)."""
+    from radmapper_spark.session import release_memos
+    from tests.conftest import SF_SMOKE
+    from tests.oracle import _canon, duck_conn
+    sf = os.path.join(os.path.dirname(SF_SMOKE), sf)
+    runs = []
+    for _ in range(2):
+        df = entrymod.queries()[name](spark, sf)
+        cols, rows = df.columns, df.collect()
+        rel = getattr(df, "rm_release_cache", None)
+        rel and rel()
+        release_memos("index:train_shards")
+        runs.append(_canon(rows, cols))
+    oracle = duck_conn(sf).execute(entrymod.oracle_sql()[name])
+    want = _canon(oracle.fetchall(), [d[0] for d in oracle.description])
+    assert runs[0] == want and runs[1] == want
+
+
 # ======================== from test_round9.py (r14 consolidation) ========
 def test_customer_deciles_window_is_partitioned(spark):
     """The decile entry must not run an UNPARTITIONED window over the
