@@ -12,8 +12,9 @@ from sandbox load spikes, so this is deliberately spike-robust):
   landed both samples inside the same spike);
 - per-query result = min across passes, plus ONE adaptive extra sample
   when the passes disagree by more than 1.5x.
-Any operator cache the entry attached via `rm_release_cache` is released
-after each run so persisted frames don't accumulate across the session.
+After each run the entry's `rm_release_cache` releases its build scope:
+every frame the build persisted or checkpointed outside a memo, so
+persisted frames don't accumulate across the session.
 The per-query sidecar (BENCH_QUERIES*.json) also records, per query, each
 memo kind's hit/miss/rebuild counts over its runs (session.memo_stats).
 """

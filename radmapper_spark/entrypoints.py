@@ -10,6 +10,8 @@ doubles surfaced to the driver are rounded identically on both sides.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,20 +19,10 @@ from . import headline
 from .lang.interp import Interp
 from .operators import (decontam, dedup, multimodal, similarity, temporal,
                         textstats, tokenizer, web)
-from .session import load_tables, memo, release_memos
+from .session import load_tables, memo, owned, persist, release_memos, scope
 from .streaming import windows as W
 
 DEC = "decimal(18,2)"
-
-
-def _carry_release(src: DataFrame, out: DataFrame) -> DataFrame:
-    """Entry projections build NEW DataFrame objects, which would drop the
-    `rm_release_cache` handle an operator attached — re-attach it so the
-    bench/driver can unpersist operator caches after each run."""
-    release = getattr(src, "rm_release_cache", None)
-    if release is not None:
-        out.rm_release_cache = release
-    return out
 
 LANGS = sorted(textstats.LANG_PROFILES.keys())  # de, en, es, fr
 
@@ -377,9 +369,8 @@ def dedup_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=("source",), length_col="n_chars", length_window=40)
         pairs = dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.5,
                                           candidates=cand)
-        return pairs.select(
-            "id_a", "id_b",
-            F.round(F.col("jaccard"), 6).alias("jaccard")).persist()
+        return persist(pairs.select(
+            "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard")))
     return _frames("pairs", spark, sf_dir, build)
 
 
@@ -460,9 +451,9 @@ def _minhash_base(spark: SparkSession, sf_dir: str):
     """Persisted (id, minhash) signature frame at the entry's fixed
     params (32 hashes, k=5 shingles, portable); the shingling pass is
     this operator's dominant cost."""
-    return _frames("minhash", spark, sf_dir, lambda t: dedup.minhash_base(
-        t["documents"], num_hashes=32, shingle_k=5,
-        hash_mode="portable").persist())
+    return _frames("minhash", spark, sf_dir, lambda t: persist(
+        dedup.minhash_base(t["documents"], num_hashes=32, shingle_k=5,
+                           hash_mode="portable")))
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,8 +465,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(t["documents"], jaccard_threshold=0.5,
                                     hash_mode="portable",
                                     base=_minhash_base(spark, sf_dir))
-    return _carry_release(pairs, pairs.select(
-        "id_a", "id_b", F.round(F.col("est_jaccard"), 6).alias("est_jaccard")))
+    return pairs.select(
+        "id_a", "id_b", F.round(F.col("est_jaccard"), 6).alias("est_jaccard"))
 
 
 def _duck_minhash_sql(ids: str, cand: str, sig_join: str) -> str:
@@ -535,8 +526,8 @@ def dedup_minhash_lsh_sql() -> str:
 def _simhash_base(spark: SparkSession, sf_dir: str):
     """Persisted (id, simhash) fingerprint frame at the entry's fixed
     params (nbits=60, portable)."""
-    return _frames("simhash", spark, sf_dir, lambda t: dedup.simhash_base(
-        t["documents"], nbits=60, hash_mode="portable").persist())
+    return _frames("simhash", spark, sf_dir, lambda t: persist(
+        dedup.simhash_base(t["documents"], nbits=60, hash_mode="portable")))
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,8 +542,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 band_bits=15, nbits=60,
                                 hash_mode="portable",
                                 base=_simhash_base(spark, sf_dir))
-    return _carry_release(pairs, pairs.select(
-        "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming")))
+    return pairs.select(
+        "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
 
 
 def dedup_simhash_sql() -> str:
@@ -1450,16 +1441,16 @@ def image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                          & (F.length("text") > 0))
              .select(F.col("doc_id").alias("media_id"),
                      F.encode("text", "UTF-8").alias("payload")))
-    pairs = multimodal.phash_neardup_pairs(media, max_hamming=3)
+    pairs, base = owned(
+        lambda: multimodal.phash_neardup_pairs(media, max_hamming=3))
     out = dedup.dedup_groups(
         media.select(F.col("media_id").alias("doc_id")),
         pairs, id_col="doc_id").select(
             F.col("doc_id").alias("media_id"), "component")
     # connected_components consumes the pairs EAGERLY at construction
     # (localCheckpoint + the gate's bounded collect), so the persisted
-    # phash base is dead by now — release it here instead of forwarding
-    # a handle the caller has to know about (r11 second review)
-    pairs.rm_release_cache()
+    # phash base is dead by now: free it before the entry returns
+    base.release()
     return out
 
 
@@ -2320,7 +2311,7 @@ def customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                        [F.col("_spend").desc(), F.col("o_custkey").asc()],
                        tile_col="decile")
     total = dec.agg(F.sum("_spend").alias("_tot"))
-    return _carry_release(dec, (
+    return (
         dec.groupBy("decile")
         .agg(F.count(F.lit(1)).alias("n_customers"),
              F.sum("_spend").alias("_rev"))
@@ -2333,7 +2324,7 @@ def customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # double division of exact decimals is IEEE-identical
                 F.round(F.col("_rev").cast("double")
                         / F.col("_tot").cast("double"), 6)
-                .alias("share"))))
+                .alias("share")))
 
 
 def customer_deciles_sql() -> str:
@@ -2355,22 +2346,15 @@ def customer_deciles_sql() -> str:
 
 def _frames(kind: str, spark: SparkSession, sf_dir: str, build):
     """Memoized persisted frame (or dict of frames) derived from the
-    tables: ``build(tables)`` must return frames that are already
-    persisted (and, if it had internal persisted scaffolding, already
-    released — see _embedding_kmeans_asg); the memo unpersists them on
-    release. Operators also take the derived frame as an explicit
-    argument (``base=``/``deg=``/...), so production callers over
-    genuinely growing tables own invalidation outright and never touch
-    these fixture-shaped memos."""
+    tables: ``build(tables)`` returns what it persisted (and, if it had
+    internal persisted scaffolding, already released — see
+    _embedding_kmeans_asg); the memo's scope frees it on release.
+    Operators also take the derived frame as an explicit argument
+    (``base=``/``deg=``/...), so production callers over genuinely
+    growing tables own invalidation outright and never touch these
+    fixture-shaped memos."""
     return memo(kind, spark, sf_dir, (),
-                lambda: build(load_tables(spark, sf_dir)),
-                release=_unpersist)
-
-
-def _unpersist(frames) -> None:
-    for f in (frames.values() if isinstance(frames, dict) else (frames,)):
-        if isinstance(f, DataFrame):
-            f.unpersist()
+                lambda: build(load_tables(spark, sf_dir)))
 
 
 def release_edge_cache() -> int:
@@ -2412,21 +2396,20 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
         local = _graph.local_graph(edges)
         if local is not None:
             return {"edges": local, "deg": None, "nodes": None}, None
-        e = edges.persist()
+        e = persist(edges)
         # deg is a pure function of the immutable edge table — persist
         # it once with it (a full edge aggregate otherwise re-runs on
         # every graph entry invocation). This edge table is SYMMETRIC by
         # construction (both directions unioned above), so every
         # endpoint appears as a src and node_set(e) == deg.select(src)
         # exactly — a free projection instead of a second aggregate.
-        deg = _graph.out_degrees(e).persist()
+        deg = persist(_graph.out_degrees(e))
         nodes = deg.select(F.col("src").alias("node"))
         # the node count fills the persisted deg the loop reads anyway
         return ({"edges": e, "deg": deg, "nodes": nodes},
                 _graph.broadcast_path(nodes))
 
-    return memo("edges", spark, sf_dir, (), build,
-                release=lambda v: _unpersist(v[0]))
+    return memo("edges", spark, sf_dir, (), build)
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2440,8 +2423,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     g, bc = _trade_edges(spark, sf_dir)
     pr = graph.pagerank(g["edges"], iters=3, deg=g["deg"],
                         nodes=g["nodes"], broadcast_ranks=bc)
-    return _carry_release(
-        pr, pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(20))
+    return pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(20)
 
 
 def graph_pagerank_sql() -> str:
@@ -3010,9 +2992,9 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored, _TBS_BUDGET,
         [F.col("score_micro").desc(), F.col("doc_id").asc()],
         "n_tokens")
-    return _carry_release(out, out.select(
+    return out.select(
         "doc_id", "n_tokens", "score_micro", "select_rank",
-        "cum_tokens"))
+        "cum_tokens")
 
 
 def token_budget_select_sql() -> str:
@@ -3067,9 +3049,9 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = sampling.curriculum_order(
         scored, [F.col("score_micro").desc(), F.col("doc_id").asc()],
         _CURR_STAGES, "doc_id", shard_size=_SHUF_SHARD)
-    return _carry_release(out, out.select(
+    return out.select(
         "doc_id", F.col("stage").cast("long").alias("stage"),
-        "curriculum_rank", "shard", "shard_pos"))
+        "curriculum_rank", "shard", "shard_pos")
 
 
 def curriculum_order_sql() -> str:
@@ -3177,7 +3159,7 @@ def nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(f"CASE WHEN {_NB_POS} THEN 1 ELSE 0 END").alias("is_pos"))
     out = classifier.score_calibration(scored, labels, k=_CAL_K)
-    return _carry_release(out, out.select("tile", "n_docs", "n_pos"))
+    return out.select("tile", "n_docs", "n_pos")
 
 
 def nb_calibration_sql() -> str:
@@ -3214,9 +3196,9 @@ def token_budget_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored, "source", _TBS_GROUP_BUDGET,
         [F.col("score_micro").desc(), F.col("doc_id").asc()],
         "n_tokens")
-    return _carry_release(out, out.select(
+    return out.select(
         "doc_id", "source", "n_tokens", "score_micro", "select_rank",
-        "cum_tokens"))
+        "cum_tokens")
 
 
 def token_budget_per_source_sql() -> str:
@@ -3622,9 +3604,9 @@ def _materialized_shards(spark: SparkSession, sf_dir: str, kind: str,
     from .sources import writers
 
     def build(p):
-        shuffled = frame_fn(spark, sf_dir)
-        writers.write_training_shards(shuffled.select(*_TRAIN_COLS), p)
-        shuffled.rm_release_cache()
+        with scope():  # the rank's range cache dies with the write
+            writers.write_training_shards(
+                frame_fn(spark, sf_dir).select(*_TRAIN_COLS), p)
 
     path = _probe_index_path(spark, sf_dir, kind, build)
     back = spark.read.parquet(path)
@@ -3673,13 +3655,12 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one map-side-combined groupBy on the hive partition key —
     bounded output (one row per shard)."""
     df = materialize_training_shards(spark, sf_dir)
-    out = (df.groupBy(F.col("shard").cast("long").alias("shard"))
-           .agg(F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col("n_chunk_tokens").cast("long"))
-                .alias("n_tokens"),
-                F.min("shuffle_rank").alias("rank_lo"),
-                F.max("shuffle_rank").alias("rank_hi")))
-    return _carry_release(df, out)
+    return (df.groupBy(F.col("shard").cast("long").alias("shard"))
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.sum(F.col("n_chunk_tokens").cast("long"))
+                 .alias("n_tokens"),
+                 F.min("shuffle_rank").alias("rank_lo"),
+                 F.max("shuffle_rank").alias("rank_hi")))
 
 
 def shard_manifest_sql() -> str:
@@ -3991,8 +3972,7 @@ def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import sampling
     docs = load_tables(spark, sf_dir)["documents"]
     out = sampling.corpus_shuffle(docs, "doc_id", _SHUF_SHARD)
-    return _carry_release(
-        out, out.select("doc_id", "shuffle_rank", "shard", "shard_pos"))
+    return out.select("doc_id", "shuffle_rank", "shard", "shard_pos")
 
 
 def corpus_shuffle_sql() -> str:
@@ -4020,21 +4000,13 @@ def corpus_shuffle_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators import sampling
     docs = load_tables(spark, sf_dir)["documents"]
-    outs, rels = [], []
+    outs = []
     for e in _SHUF_EPOCHS:
         o = sampling.corpus_shuffle(docs, "doc_id", _SHUF_SHARD, epoch=e)
-        rels.append(o.rm_release_cache)
         outs.append(o.select(
             F.lit(e).cast("int").alias("epoch"),
             "doc_id", "shuffle_rank", "shard", "shard_pos"))
-    out = reduce(lambda a, b: a.unionByName(b), outs)
-
-    def release(_rels=tuple(rels)):
-        for r in _rels:
-            r()
-
-    out.rm_release_cache = release
-    return out
+    return reduce(lambda a, b: a.unionByName(b), outs)
 
 
 def corpus_shuffle_epoch_sql() -> str:
@@ -4060,9 +4032,8 @@ def mixture_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
     out = sampling.mixture_interleave(docs, "source", "doc_id",
                                       shard_size=_SHUF_SHARD)
-    return _carry_release(
-        out, out.select("doc_id", "source", "interleave_rank",
-                        "shard", "shard_pos"))
+    return out.select("doc_id", "source", "interleave_rank",
+                      "shard", "shard_pos")
 
 
 def mixture_interleave_sql() -> str:
@@ -4466,8 +4437,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled-integer arithmetic: iterative distributed ML with bit-exact
     cross-engine results — see similarity.kmeans_lloyd."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    out = similarity.kmeans_lloyd(emb, k=_SEMKM_K, iters=_SEMKM_ITERS)
-    return _carry_release(out, out)
+    return similarity.kmeans_lloyd(emb, k=_SEMKM_K, iters=_SEMKM_ITERS)
 
 
 def embedding_kmeans_lloyd_sql() -> str:
@@ -4514,18 +4484,15 @@ def _embedding_kmeans_asg(spark: SparkSession, sf_dir: str):
     """Persisted Lloyd assignment frame at the entry's fixed params
     (_SEMKM_K/_SEMKM_ITERS), memoized like the trade edges."""
     def build(t):
-        km = similarity.kmeans_lloyd(t["embeddings"],
-                                     k=_SEMKM_K, iters=_SEMKM_ITERS)
-        asg = km.persist()
+        km, lloyd = owned(lambda: similarity.kmeans_lloyd(
+            t["embeddings"], k=_SEMKM_K, iters=_SEMKM_ITERS))
+        asg = persist(km)
         # materialize the small assignment frame NOW, then free the
         # Lloyd internals (the full scaled-point table + per-iteration
         # centroid frames) — otherwise they'd sit persisted for the
         # whole session alongside the frame that made them redundant
         asg.count()
-        try:
-            getattr(km, "rm_release_cache", lambda: None)()
-        except Exception:
-            pass
+        lloyd.release()
         return asg
 
     return _frames("semasg", spark, sf_dir, build)
@@ -4544,10 +4511,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment frame, this entry, and the DuckDB oracle SQL must all
     agree or the pair set silently diverges from the oracle."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    out = similarity.semantic_dedup_pairs(
+    return similarity.semantic_dedup_pairs(
         emb, k=_SEMKM_K, iters=_SEMKM_ITERS, threshold=0.4,
         asg=_embedding_kmeans_asg(spark, sf_dir))
-    return _carry_release(out, out)
 
 
 def semantic_dedup_sql() -> str:
@@ -4685,8 +4651,8 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = sizes.orderBy(F.col("n_members").desc(),
                         F.col("label").asc()).limit(30)
     order = [F.col("n_members").desc(), F.col("label").asc()]
-    return _carry_release(lp, bounded_global_rank(top, order, "rank")
-                          .select("rank", "label", "n_members"))
+    return (bounded_global_rank(top, order, "rank")
+            .select("rank", "label", "n_members"))
 
 
 def graph_communities_sql() -> str:
@@ -4814,21 +4780,6 @@ def host_volume_cap_sql() -> str:
     """
 
 
-def _local_ckpt(df: DataFrame):
-    """``localCheckpoint(eager=False)`` plus a REAL block-release handle:
-    ``(ckpt_frame, release)``. The r17 form relied on the ContextCleaner
-    GC-ing the unreferenced RDD (ADVICE r17: MEMORY_AND_DISK blocks pin
-    memory until a GC cycle, unbounded by contract across a long bench
-    session); the handle unpersists the checkpointed RDD directly. Under
-    AQE the checkpoint's toRdd executes the subtree's stages at
-    CONSTRUCTION time (callers must be in the plan-discipline
-    EAGER_ALLOWED list) — the work still runs exactly once per
-    invocation, inside the bench's timed fn()+collect window."""
-    ckpt = df.localCheckpoint(eager=False)
-    jrdd = ckpt._jdf.queryExecution().analyzed().rdd()
-    return ckpt, (lambda: jrdd.unpersist(False))
-
-
 def _pipeline_crawl_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LAZY decide-narrow head of pipeline_web_crawl up to and
     including the payload-attach join — factored out so the plan-shape
@@ -4890,21 +4841,24 @@ def pipeline_web_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     and extraction runs AFTER the cap so the expensive string work
     touches only surviving pages — the order a crawl pipeline needs at
     100 TB, where most fetched bytes are discarded before parsing."""
-    gated, release = _crawl_gate_barrier(
-        _pipeline_crawl_joined(spark, sf_dir))
-    out = gated.select("doc_id", "canonical_url", "host", "host_rank",
-                       "n_lines_kept", "n_extracted_tokens",
-                       "extracted_text")
-    out.rm_release_cache = release
-    return out
+    gated = _crawl_gate_barrier(_pipeline_crawl_joined(spark, sf_dir))
+    return gated.select("doc_id", "canonical_url", "host", "host_rank",
+                        "n_lines_kept", "n_extracted_tokens",
+                        "extracted_text")
 
 
 def _crawl_gate_barrier(joined: DataFrame):
     """Synthesize + extract + compute the Gopher gate columns for the
     capped survivors, MATERIALIZE (localCheckpoint) the narrow result,
     and apply the floor/Gopher admission as trivial column filters
-    above the leaf. Returns ``(gated_frame, release)``; shared by
-    pipeline_web_crawl and stream_crawl_ingest.
+    above the leaf. Shared by pipeline_web_crawl and
+    stream_crawl_ingest.
+
+    The checkpoint is lazy (``eager=False``): under AQE its toRdd
+    executes the subtree's stages at CONSTRUCTION time (the callers are
+    in the plan-discipline EAGER_ALLOWED list), and the work still runs
+    exactly once per invocation, inside the bench's timed fn()+collect
+    window.
 
     Two things the barrier placement buys (r18, replaces the r17
     OR-pin; guide §5/§7.3 and _pipeline_crawl_joined's docstring):
@@ -4930,10 +4884,9 @@ def _crawl_gate_barrier(joined: DataFrame):
     slim = cols.select("doc_id", "canonical_url", "host", "host_rank",
                        "n_lines_kept", "n_extracted_tokens",
                        "extracted_text", "gopher_pass")
-    barrier, release = _local_ckpt(slim)
-    gated = (barrier.filter(F.col("n_extracted_tokens") >= F.lit(60))
-             .filter(F.col("gopher_pass")))
-    return gated, release
+    barrier = persist(slim, checkpoint=True, eager=False)
+    return (barrier.filter(F.col("n_extracted_tokens") >= F.lit(60))
+            .filter(F.col("gopher_pass")))
 
 
 def pipeline_web_crawl_sql() -> str:
@@ -5069,9 +5022,9 @@ def _crawl_shards_tail(spark: SparkSession, sf_dir: str,
     # stages at construction time (the EAGER_ALLOWED entry in
     # test_plan_discipline documents it) — the work still runs exactly
     # once per invocation, inside the bench's timed fn()+collect window
-    head_release = getattr(crawl_df, "rm_release_cache", None)
-    deduped, ded_release = _local_ckpt(
-        ingest.first_per_normhash(crawl_df, text_col="extracted_text"))
+    deduped = persist(
+        ingest.first_per_normhash(crawl_df, text_col="extracted_text"),
+        checkpoint=True, eager=False)
     docs = load_tables(spark, sf_dir)["documents"]
     vocab, consts = classifier.nb_model(docs.filter(F.expr(_NB_POS)),
                                         docs.filter(F.expr(_NB_NEG)))
@@ -5085,21 +5038,11 @@ def _crawl_shards_tail(spark: SparkSession, sf_dir: str,
                     F.col("extracted_text").alias("text")))
     chunks = tokenizer.bpe_chunk_documents(kept, merges,
                                            chunk_tokens=_BPE_CHUNK)
-    out = chunks.select(
+    return chunks.select(
         "doc_id", "chunk_seq", "chunk_start", "n_chunk_tokens",
         ingest.shard_col(ingest.chunk_id_col(), _INGEST_SHARDS)
         .alias("shard"),
         "chunk_text")
-    # release BOTH checkpoints' blocks (the head's payload barrier and
-    # the dedup boundary) — ADVICE r17: relying on the ContextCleaner
-    # leaves MEMORY_AND_DISK blocks pinned until a GC cycle
-    def _release():
-        ded_release()
-        if head_release is not None:
-            head_release()
-
-    out.rm_release_cache = _release
-    return out
 
 
 def _crawl_shards_tail_sql(head_sql: str) -> str:
@@ -5212,13 +5155,10 @@ def stream_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap — no global sort, no token-grain shuffle."""
     # extraction+gate behind the same materialization barrier as
     # pipeline_web_crawl (_crawl_gate_barrier docstring — r18)
-    gated, release = _crawl_gate_barrier(
-        _stream_crawl_joined(spark, sf_dir))
-    out = gated.select("doc_id", "canonical_url", "host",
-                       "n_lines_kept", "n_extracted_tokens",
-                       "extracted_text")
-    out.rm_release_cache = release
-    return out
+    gated = _crawl_gate_barrier(_stream_crawl_joined(spark, sf_dir))
+    return gated.select("doc_id", "canonical_url", "host",
+                        "n_lines_kept", "n_extracted_tokens",
+                        "extracted_text")
 
 
 def stream_crawl_ingest_sql() -> str:
@@ -5321,9 +5261,23 @@ def stream_training_ingest_sql() -> str:
 
 
 # =============================================================== registry
+
+def _entry(fn):
+    """An entry as the registry hands it out: the build runs in a scope
+    of its own (entries it calls, unwrapped, share it), and the
+    returned frame's ``rm_release_cache`` releases that scope — the
+    caller calls it after its collect."""
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        out, frames = owned(lambda: fn(spark, sf_dir))
+        out.rm_release_cache = frames.release
+        return out
+    return build
+
+
 # name -> (entry fn, oracle SQL fn). The written order is the only order;
 # __spark_entry__.queries() sorts it least-recently-green for the driver.
-
+# Each fn is wrapped once by _entry.
 ENTRIES: dict = {
     "temporal_asof_join": (temporal_asof_join, temporal_asof_join_sql),
     "temporal_range_join": (temporal_range_join, temporal_range_join_sql),
@@ -5553,3 +5507,4 @@ ENTRIES: dict = {
     "stream_crawl_to_shards": (stream_crawl_to_shards,
                                stream_crawl_to_shards_sql),
 }
+ENTRIES = {name: (_entry(fn), sql) for name, (fn, sql) in ENTRIES.items()}

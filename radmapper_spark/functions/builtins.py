@@ -1172,11 +1172,9 @@ def _t_dedup_exact(ip, env, table=NOMATCH):
 @builtin("$nearDupPairs", 1)
 def _t_neardup(ip, env, table=NOMATCH, threshold=0.5):
     from ..operators import dedup
-    out = dedup.minhash_lsh_pairs(_table_df(table, "$nearDupPairs"),
-                                  jaccard_threshold=float(threshold))
-    sdb = _as_sdb(out)
-    sdb.df.rm_release_cache = getattr(out, "rm_release_cache", None)
-    return sdb
+    return _as_sdb(dedup.minhash_lsh_pairs(
+        _table_df(table, "$nearDupPairs"),
+        jaccard_threshold=float(threshold)))
 
 
 @builtin("$langID", 1)
@@ -1454,14 +1452,11 @@ def _t_semantic_dedup(ip, env, table=NOMATCH, k=NOMATCH, threshold=0.4,
     """SemDeDup-style within-cluster near-dup pairs
     (similarity.semantic_dedup_pairs): (cluster, id_a, id_b, cosine)."""
     from ..operators import similarity
-    out = similarity.semantic_dedup_pairs(
+    return _as_sdb(similarity.semantic_dedup_pairs(
         _table_df(table, "$semanticDedup"),
         k=int(_n(k, "$semanticDedup")),
         threshold=float(_n(threshold, "$semanticDedup")),
-        iters=int(_n(iters, "$semanticDedup")))
-    sdb = _as_sdb(out)
-    sdb.df.rm_release_cache = getattr(out, "rm_release_cache", None)
-    return sdb
+        iters=int(_n(iters, "$semanticDedup"))))
 
 
 @builtin("$uniqueCheck", 2)

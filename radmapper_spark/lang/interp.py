@@ -18,6 +18,7 @@ import re
 from dataclasses import dataclass
 from typing import Any, Optional
 
+from ..session import scope
 from . import ast as A
 from .parser import parse
 from .values import (
@@ -148,13 +149,16 @@ class Interp:
 
     # ------------------------------------------------------------ entry
     def run(self, src: str, bindings: Optional[dict] = None, data=None):
+        """Evaluate and materialize. Frames the program persists live in
+        a scope released once the result is forced (a table result
+        stays a lazy SparkDB and recomputes from lineage)."""
         node = parse(src)
         env = Env({"$": data if data is not None else NOMATCH, "$$": data if data is not None else NOMATCH})
         if bindings:
             for k, v in bindings.items():
                 env.define(k if k.startswith("$") else f"${k}", v)
-        out = self.eval(node, env)
-        return finalize(self._force(out))
+        with scope():
+            return finalize(self._force(self.eval(node, env)))
 
     def run_raw(self, src: str, bindings: Optional[dict] = None, data=None):
         """Like run(), but returns lazy Spark values (SparkBindingSets /

@@ -450,8 +450,7 @@ def score_calibration(scored: DataFrame, labels: DataFrame, k: int = 10,
     k-row aggregate: (tile, n_docs, n_pos).
 
     This is the eval loop a production quality gate needs: retrain ->
-    calibrate -> pick the admission quantile. Carries
-    rm_release_cache (the ntile's internal range cache)."""
+    calibrate -> pick the admission quantile."""
     from .ranking import global_ntile
     tiled = global_ntile(scored.select(id_col, score_col), k,
                          [F.col(score_col).desc(), F.col(id_col).asc()],
@@ -460,7 +459,5 @@ def score_calibration(scored: DataFrame, labels: DataFrame, k: int = 10,
            .groupBy("tile")
            .agg(F.count(F.lit(1)).alias("n_docs"),
                 F.sum(F.col(label_col).cast("long")).alias("n_pos")))
-    out = out.select(F.col("tile").cast("long").alias("tile"),
-                     "n_docs", "n_pos")
-    out.rm_release_cache = tiled.rm_release_cache
-    return out
+    return out.select(F.col("tile").cast("long").alias("tile"),
+                      "n_docs", "n_pos")

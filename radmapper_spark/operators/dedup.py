@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import persist
 from .plan_stats import broadcast_gate, est_plan_bytes
 
 # -------------------------------------------------------------- exact
@@ -60,12 +61,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         .agg(F.min(F.col(id_col)).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
         .drop("__norm")
     )
-
-
-def exact_dedup_keep(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """The deduplicated document set itself."""
-    reps = exact_dedup(docs, text_col, id_col).select(F.col("keep_id").alias(id_col))
-    return docs.join(reps, on=id_col, how="inner")
 
 
 # ------------------------------------------------------ build parameters
@@ -299,17 +294,18 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     ``base``: a caller-persisted minhash_base frame; its recorded
     (num_hashes, shingle_k, hash_mode) must match (check_params)."""
     # persist the (small: id + num_hashes longs per doc) signature frame so
-    # the self-join's two sides don't recompute the shingling; callers
-    # over an IMMUTABLE corpus pass a persisted `base` instead and the
-    # shingling is paid once per corpus ever
-    owns_base = base is None
-    if not owns_base:
+    # the self-join's two sides don't recompute the shingling (the
+    # caller's scope releases it); callers over an IMMUTABLE corpus pass
+    # a persisted `base` instead and the shingling is paid once per
+    # corpus ever
+    if base is None:
+        sigs = persist(minhash_base(docs, text_col, id_col, num_hashes,
+                                    shingle_k, hash_mode=hash_mode))
+    else:
         check_params(base, "minhash", "minhash_lsh_pairs", kind="minhash",
                      num_hashes=num_hashes, shingle_k=shingle_k,
                      hash_mode=hash_mode)
-    sigs = (minhash_base(docs, text_col, id_col, num_hashes, shingle_k,
-                         hash_mode=hash_mode).persist()
-            if owns_base else base)
+        sigs = base
     banded = minhash_bands(sigs, num_hashes, bands, hash_mode) \
         .select("id", "band", "bhash")
     left = banded.alias("l")
@@ -329,17 +325,12 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     sa = sigs.select(F.col("id").alias("id_a"), F.col("minhash").alias("mh_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("minhash").alias("mh_b"))
     cand = cand.join(sa, on="id_a").join(sb, on="id_b")
-    out = (
+    return (
         cand.withColumn("est_jaccard",
                         _est_jaccard("mh_a", "mh_b", num_hashes))
         .filter(F.col("est_jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    # hand the persisted-signature handle to the caller: the cache must stay
-    # live until the plan's action runs, so release is caller-scheduled
-    # (a caller-owned base releases via the caller's own cache instead)
-    out.rm_release_cache = sigs.unpersist if owns_base else (lambda: None)
-    return out
 
 
 # -------------------------------------------------------------- simhash
@@ -420,22 +411,20 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     IMMUTABLE corpus pass it in so repeated invocations skip the
     fingerprint pass (same contract as minhash_lsh_pairs' `base`:
     fingerprints are a pure function of (corpus, params)); its
-    recorded nbits and hash_mode must match (check_params). The caller
-    owns its cache; the result's rm_release_cache is then a no-op.
+    recorded nbits and hash_mode must match (check_params), and the
+    caller owns its cache; without it the fingerprints persist in the
+    caller's scope.
     """
     assert bands * band_bits <= nbits
-    owns_base = base is None
-    if owns_base:
-        base = simhash_base(docs, text_col, id_col, nbits=nbits,
-                            hash_mode=hash_mode).persist()
+    if base is None:
+        base = persist(simhash_base(docs, text_col, id_col, nbits=nbits,
+                                    hash_mode=hash_mode))
     else:
         check_params(base, "simhash", "simhash_pairs", kind="simhash",
                      nbits=nbits, hash_mode=hash_mode)
-    out = hamming_band_pairs(base, hash_col="simhash",
-                             max_hamming=max_hamming, bands=bands,
-                             band_bits=band_bits)
-    out.rm_release_cache = base.unpersist if owns_base else (lambda: None)
-    return out
+    return hamming_band_pairs(base, hash_col="simhash",
+                              max_hamming=max_hamming, bands=bands,
+                              band_bits=band_bits)
 
 
 def hamming_band_pairs(base: DataFrame, hash_col: str = "simhash",
@@ -596,10 +585,6 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
     if candidates is None:
         candidates = minhash_lsh_pairs(docs, text_col, id_col,
                                        jaccard_threshold=0.0)
-    # the repartition below builds a NEW DataFrame object — capture the
-    # upstream cache-release handle first so callers can still unpersist
-    # the minhash signatures (else a long-lived session leaks the cache)
-    release = getattr(candidates, "rm_release_cache", None)
     # spread the verify: candidate frames often arrive with the probe
     # side's input partitioning (a broadcast-join chain over one small
     # parquet file = ONE task), and the per-pair set math is the hot loop —
@@ -633,11 +618,8 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
     # >= 0, so the result never depends on partitioning. (rand() < -1
     # stopped working as a fence: pyspark 4.1 folds out-of-range rand
     # comparisons.) test_jaccard_threshold_stays_out_of_join guards this.
-    out = scored.filter((F.col("jaccard") >= threshold)
-                        | (F.spark_partition_id() < F.lit(0)))
-    if release is not None:
-        out.rm_release_cache = release
-    return out
+    return scored.filter((F.col("jaccard") >= threshold)
+                         | (F.spark_partition_id() < F.lit(0)))
 
 
 def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

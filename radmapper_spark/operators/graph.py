@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import persist, release
 from .plan_stats import broadcast_cap, broadcast_gate
 
 SCALE = 10 ** 12
@@ -265,10 +266,9 @@ def _driver_graph(edges, flag, *frames):
     return None
 
 
-def _tag(df: DataFrame, path: str, release=lambda: None) -> DataFrame:
+def _tag(df: DataFrame, path: str) -> DataFrame:
     df.rm_graph_path = path
     df.rm_broadcast_path = path != "partitioned"
-    df.rm_release_cache = release
     return df
 
 
@@ -291,31 +291,20 @@ def node_set(edges: DataFrame) -> DataFrame:
 
 
 def _loop_inputs(edges: DataFrame, nodes, flag):
-    """(e, nodes, broadcast, cached) for an iteration loop: the (src,
-    dst) edge table and the node set, the broadcast decision
-    (broadcast_path) and the frames persisted here. A caller-passed node
-    set is caller-owned: not re-persisted, not released here."""
+    """(e, nodes, broadcast) for an iteration loop: the (src, dst) edge
+    table and the node set, persisted in the caller's scope, and the
+    broadcast decision (broadcast_path). A caller-passed node set is
+    caller-owned: not re-persisted here."""
     e = edges.select("src", "dst")
-    cached = []
     # skip the re-persist when the caller already caches the edge table
     # (the registry's shared _trade_edges does): a second materialized
     # copy of the same 1.17M rows buys nothing and costs a full pass +
     # executor memory per invocation
     if not edges.is_cached:
-        e = e.persist()
-        cached.append(e)
+        e = persist(e)
     if nodes is None:
-        nodes = node_set(e).persist()
-        cached.append(nodes)
-    return e, nodes, broadcast_path(nodes, flag), cached
-
-
-def _releaser(frames: list):
-    """rm_release_cache for a loop result: unpersist what it persisted."""
-    def release():
-        for f in frames:
-            f.unpersist()
-    return release
+        nodes = persist(node_set(e))
+    return e, nodes, broadcast_path(nodes, flag)
 
 
 def pagerank(edges, iters: int = 3,
@@ -358,7 +347,6 @@ def pagerank(edges, iters: int = 3,
         # must not fall through to the loop (sums would stay unbound).
         nodes0 = nodes if nodes is not None else node_set(edges)
         out = nodes0.select("node", F.lit(SCALE).cast("long").alias("rank"))
-        out.rm_release_cache = lambda: None
         out.rm_graph_path = None
         out.rm_broadcast_path = broadcast_ranks
         return out
@@ -370,18 +358,15 @@ def pagerank(edges, iters: int = 3,
     # caller's (possibly expensive) edge derivation once per reference —
     # measured 8.7s -> ~3s at sf0.1 with 3 iterations. No action is
     # triggered here (construction stays job-free); each cache fills on
-    # the first action that uses it. rm_release_cache on the result
-    # unpersists everything.
-    e, nodes, broadcast_ranks, cached = _loop_inputs(edges, nodes,
-                                                     broadcast_ranks)
+    # the first action that uses it. The caller's scope releases them.
+    e, nodes, broadcast_ranks = _loop_inputs(edges, nodes, broadcast_ranks)
     # deg, like nodes, is a pure function of the edge table; callers
     # over an IMMUTABLE edge set (the registry's cached trade graph)
     # persist it once (out_degrees) and pass it in — re-deriving a full
     # edge-table aggregate per invocation is pure waste. A passed deg is
-    # caller-owned: not re-persisted, not released here.
+    # caller-owned: not re-persisted here.
     if deg is None:
-        deg = out_degrees(e).persist()
-        cached.append(deg)
+        deg = persist(out_degrees(e))
     base = ((100 - damping_pct) * SCALE) // 100
     # Iteration state is rd = (src, rank div out-degree) — the ONLY thing
     # the edge pass needs — not the rank table itself. rank_next is an
@@ -407,8 +392,7 @@ def pagerank(edges, iters: int = 3,
                            F.col("_rc").alias("_c")))
         # map-side partial sums -> node-sized exchange; persist bounds
         # the lineage (the O(iters^2) blowup the docstring describes)
-        sums = contrib.groupBy("node").agg(F.sum("_c").alias("_s")).persist()
-        cached.append(sums)
+        sums = persist(contrib.groupBy("node").agg(F.sum("_c").alias("_s")))
         if i < iters - 1:
             s_in = F.broadcast(sums) if broadcast_ranks else sums
             rd = (deg.join(s_in, deg.src == F.col("node"), "left")
@@ -419,8 +403,7 @@ def pagerank(edges, iters: int = 3,
                      (F.lit(base)
                       + F.expr(f"({damping_pct} * coalesce(_s, 0)) "
                                f"div 100")).cast("long").alias("rank")))
-    return _tag(ranks, "broadcast" if broadcast_ranks else "partitioned",
-                _releaser(cached))
+    return _tag(ranks, "broadcast" if broadcast_ranks else "partitioned")
 
 
 def label_propagation(edges, iters: int = 2,
@@ -450,8 +433,8 @@ def label_propagation(edges, iters: int = 2,
     local = _driver_graph(edges, broadcast_labels, nodes)
     if local is not None:
         return _tag(_label_propagation_local(local, iters), "driver")
-    e, nodes, broadcast_labels, cached = _loop_inputs(edges, nodes,
-                                                      broadcast_labels)
+    e, nodes, broadcast_labels = _loop_inputs(edges, nodes,
+                                              broadcast_labels)
     labels = nodes.select("node", F.col("node").alias("label"))
     for i in range(iters):
         lab = labels.select(F.col("node").alias("src"), "label")
@@ -478,11 +461,9 @@ def label_propagation(edges, iters: int = 2,
                   .select("node", F.coalesce("_new", "label")
                           .alias("label")))
         if i < iters - 1:
-            labels = labels.persist()
-            cached.append(labels)
+            labels = persist(labels)
 
-    return _tag(labels, "broadcast" if broadcast_labels else "partitioned",
-                _releaser(cached))
+    return _tag(labels, "broadcast" if broadcast_labels else "partitioned")
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame = None) -> DataFrame:
@@ -496,21 +477,25 @@ def connected_components(edges: DataFrame, nodes: DataFrame = None) -> DataFrame
 
     The canonical (max, min) distinct edge frame is checkpointed once;
     local_graph then picks ``result.rm_graph_path``: "driver" runs
-    _components_local, "partitioned" the alternating large-star /
-    small-star loop (Kiveris et al., SoCC'14): O(log^2 n) rounds whatever
-    the component diameter (min-label propagation needs diameter rounds),
-    two (groupBy-min + equi-join) passes per round over ONE bigint of
-    per-node state (a 10M-dup hub costs what a pair does), lineage cut
-    per round by localCheckpoint, and the star-forest test (no root is a
-    child) as the fixpoint.
+    _components_local and frees the checkpoint at once (the labels are
+    built from its Arrow collect), "partitioned" the alternating
+    large-star / small-star loop (Kiveris et al., SoCC'14): O(log^2 n)
+    rounds whatever the component diameter (min-label propagation needs
+    diameter rounds), two (groupBy-min + equi-join) passes per round
+    over ONE bigint of per-node state (a 10M-dup hub costs what a pair
+    does), lineage cut per round by a checkpoint that frees the round
+    before it, and the star-forest test (no root is a child) as the
+    fixpoint. The last round's checkpoint belongs to the caller's scope.
     """
     e = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
          .filter(F.col("u") != F.col("v")))
     # canonical orientation (max, min): the small-star input shape
-    e = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")) \
-         .distinct().localCheckpoint(eager=True)
+    e = persist(e.select(F.greatest("u", "v").alias("u"),
+                         F.least("u", "v").alias("v")).distinct(),
+                checkpoint=True)
     local = local_graph(e.toDF("src", "dst"))
     if local is not None:
+        release(e)
         labeled, path = _components_local(local), "driver"
     else:
         def _is_star_forest(df) -> bool:
@@ -519,6 +504,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame = None) -> DataFrame
             return (df.select("v").join(df.select(F.col("u").alias("v")),
                                         "v", "leftsemi").isEmpty())
 
+        ckpt = e
         for _ in range(CC_MAX_ROUNDS):
             # LARGE-STAR: over the symmetric neighborhood, attach every
             # strictly-larger neighbor v of u to m = min(N(u) + {u})
@@ -534,14 +520,15 @@ def connected_components(edges: DataFrame, nodes: DataFrame = None) -> DataFrame
             # SMALL-STAR: edges oriented (u > v); attach u and all its
             # smaller neighbors to m = min(N(u)); nothing for v == m
             mins = e.groupBy("u").agg(F.min("v").alias("m"))
-            e = (e.join(mins, "u")
-                 .filter(F.col("v") != F.col("m"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .unionByName(mins.select("u", F.col("m").alias("v")))
-                 .select(F.greatest("u", "v").alias("u"),
-                         F.least("u", "v").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
+            e = persist(e.join(mins, "u")
+                        .filter(F.col("v") != F.col("m"))
+                        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                        .unionByName(mins.select("u", F.col("m").alias("v")))
+                        .select(F.greatest("u", "v").alias("u"),
+                                F.least("u", "v").alias("v"))
+                        .distinct(), checkpoint=True)
+            release(ckpt)  # the round before is materialized into e
+            ckpt = e
             if _is_star_forest(e):
                 break
         # fixpoint edges are stars (node -> root): label both endpoints

@@ -194,12 +194,8 @@ def lm_bucket(scored: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bucket = (F.when(F.col("_tile") == 1, F.lit("head"))
               .when(F.col("_tile") == 2, F.lit("middle"))
               .otherwise(F.lit("tail")))
-    out = tiled.select(id_col, "n_scored", "lp_micro", "avg_logprob",
-                       bucket.alias("bucket"))
-    release = getattr(tiled, "rm_release_cache", None)
-    if release is not None:
-        out.rm_release_cache = release
-    return out
+    return tiled.select(id_col, "n_scored", "lp_micro", "avg_logprob",
+                        bucket.alias("bucket"))
 
 
 def moore_lewis_select(docs: DataFrame, in_ref: DataFrame,

@@ -1,6 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata; decode/feature-extract/frame-sample as
-Arrow-batched pandas UDFs over mapInPandas.
+with typed metadata; decode/feature-extract as Arrow-batched pandas
+UDFs over mapInPandas.
 
 The real PIL decode body is written and IMPORT-GUARDED: when pillow is
 present on the executors it activates automatically (grayscale 4x4
@@ -19,6 +19,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import persist
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -111,19 +113,6 @@ def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(extract, FEATURE_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled timestamp
-    (the decode of the actual frame is the same stub boundary)."""
-    n_frames = F.greatest((F.col("meta.duration_ms") / F.lit(every_ms)).cast("int"), F.lit(1))
-    return (
-        media.filter(F.col("kind") == "video")
-        .withColumn("frame_ts_ms",
-                    F.explode(F.transform(F.sequence(F.lit(0), n_frames - 1),
-                                          lambda i: i * every_ms)))
-        .select("media_id", "frame_ts_ms", "payload", "meta")
-    )
 
 
 def perceptual_hash(media: DataFrame, payload_col: str = "payload",
@@ -253,10 +242,9 @@ def phash_neardup_pairs(media: DataFrame, payload_col: str = "payload",
     100 TB shape as dedup_simhash. The hash frame is PERSISTED for the
     self-join (the module's persist-the-base contract: with real PIL
     decode the hash pass is the dominant cost and must not run on both
-    join sides) and released via the result's ``rm_release_cache``
-    handle; callers over an immutable corpus pass a persisted ``base``
-    (id, phash) instead, recording the same ``bits``, and own its
-    cache."""
+    join sides) in the caller's scope; callers over an immutable corpus
+    pass a persisted ``base`` (id, phash) instead, recording the same
+    ``bits``, and own its cache."""
     from . import dedup as _dedup
 
     if bands * band_bits > bits:
@@ -267,19 +255,16 @@ def phash_neardup_pairs(media: DataFrame, payload_col: str = "payload",
             f"max_hamming ({max_hamming}) must be < bands ({bands}) — "
             f"the pigeonhole recall guarantee needs at least one "
             f"untouched band per true pair")
-    owns_base = base is None
-    if owns_base:
-        base = perceptual_hash(media, payload_col, id_col,
-                               pixels=bits + 1, bits=bits).persist()
+    if base is None:
+        base = persist(perceptual_hash(media, payload_col, id_col,
+                                       pixels=bits + 1, bits=bits))
     else:
         _dedup.check_params(base, "phash", "phash_neardup_pairs",
                             kind="phash", bits=bits)
-    out = _dedup.hamming_band_pairs(base, hash_col="phash",
-                                    id_col="media_id",
-                                    max_hamming=max_hamming,
-                                    bands=bands, band_bits=band_bits)
-    out.rm_release_cache = base.unpersist if owns_base else (lambda: None)
-    return out
+    return _dedup.hamming_band_pairs(base, hash_col="phash",
+                                     id_col="media_id",
+                                     max_hamming=max_hamming,
+                                     bands=bands, band_bits=band_bits)
 
 
 def media_dedup(media: DataFrame, payload_col: str = "payload",

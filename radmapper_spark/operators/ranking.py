@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import persist
+
 
 def bounded_global_rank(top: DataFrame, order_cols,
                         rank_col: str = "rank") -> DataFrame:
@@ -64,9 +66,10 @@ def global_rank(df: DataFrame, order_cols, rank_col: str = "rank",
     """Exact 1-based global rank (row_number semantics: ties broken by
     the caller's tiebreaker columns) over an unbounded frame, computed
     without a single-partition window. Returns df + rank_col (+ a total
-    row-count column when ``_total_col`` is set — ntile needs it); the
-    result carries ``rm_release_cache`` to free the internal range-
-    partitioned cache."""
+    row-count column when ``_total_col`` is set — ntile needs it). The
+    internal range-partitioned frame is persisted in the caller's scope:
+    both branches must read one partitioning, so it has to live until
+    the result is consumed."""
     spark = df.sparkSession
     try:
         p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -74,9 +77,8 @@ def global_rank(df: DataFrame, order_cols, rank_col: str = "rank",
         p = 200
     pid, off, cnt = (_free_name(df, "_rm_pid"), _free_name(df, "_rm_off"),
                      _free_name(df, "_rm_n"))
-    parts = (df.repartitionByRange(p, *order_cols)
-             .withColumn(pid, F.spark_partition_id())
-             .persist())
+    parts = persist(df.repartitionByRange(p, *order_cols)
+                    .withColumn(pid, F.spark_partition_id()))
     counts = (parts.groupBy(pid)
               .agg(F.count(F.lit(1)).alias(cnt)))
     # cumulative offsets over the <= p count rows: a bounded single
@@ -94,9 +96,7 @@ def global_rank(df: DataFrame, order_cols, rank_col: str = "rank",
     if _total_col is not None:
         tot = counts.agg(F.sum(cnt).alias(_total_col))
         out = out.crossJoin(F.broadcast(tot))
-    out = out.drop(pid, off)
-    out.rm_release_cache = parts.unpersist
-    return out
+    return out.drop(pid, off)
 
 
 def global_cumsum(df: DataFrame, order_cols, weight_col: str,
@@ -126,7 +126,7 @@ def global_cumsum(df: DataFrame, order_cols, weight_col: str,
     must be a TOTAL order (callers pass a unique tiebreaker, same
     contract as global_rank). When ``rank_col`` is set the global
     row_number rides along on the same range exchange (no second
-    shuffle). Carries ``rm_release_cache``."""
+    shuffle). Persists like ``global_rank``."""
     spark = df.sparkSession
     if weight_col not in df.columns:
         raise ValueError(f"global_cumsum: weight column {weight_col!r} "
@@ -144,9 +144,8 @@ def global_cumsum(df: DataFrame, order_cols, weight_col: str,
     pid, off, wsum = (_free_name(df, "_rm_pid"), _free_name(df, "_rm_off"),
                       _free_name(df, "_rm_w"))
     rank_off, cnt = _free_name(df, "_rm_roff"), _free_name(df, "_rm_n")
-    parts = (df.repartitionByRange(p, *order_cols)
-             .withColumn(pid, F.spark_partition_id())
-             .persist())
+    parts = persist(df.repartitionByRange(p, *order_cols)
+                    .withColumn(pid, F.spark_partition_id()))
     # ONE P-row aggregate carries both the weight sums and (when the
     # rank rides along) the row counts, so both offset kinds come from
     # a single pass and a single broadcast join
@@ -202,9 +201,7 @@ def global_cumsum(df: DataFrame, order_cols, weight_col: str,
                               (F.row_number().over(wr) + F.col(rank_off))
                               .cast("long"))
                .drop(rank_off))
-    out = out.drop(pid, off)
-    out.rm_release_cache = parts.unpersist
-    return out
+    return out.drop(pid, off)
 
 
 def global_ntile(df: DataFrame, k: int, order_cols,
@@ -229,7 +226,5 @@ def global_ntile(df: DataFrame, k: int, order_cols,
         # unreachable when base == 0 (then head == n), so greatest(,1)
         # only dodges a div-by-zero in the never-taken branch
         rem + F.floor((r - head - 1) / F.greatest(base, F.lit(1))) + 1)
-    out = (ranked.withColumn(tile_col, tile.cast("int"))
-           .drop(rcol, tcol))
-    out.rm_release_cache = ranked.rm_release_cache
-    return out
+    return (ranked.withColumn(tile_col, tile.cast("int"))
+            .drop(rcol, tcol))

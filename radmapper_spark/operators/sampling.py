@@ -221,9 +221,7 @@ def corpus_shuffle(df: DataFrame, id_col: str, shard_size: int,
     legitimate global sort and it runs on an 8-byte key; the output is
     ready for a partitionBy("shard") write (sources/writers.py).
 
-    Output: df's columns + (shuffle_rank, shard, shard_pos). Carries
-    ``rm_release_cache`` for the rank's internal range-partitioned
-    cache."""
+    Output: df's columns + (shuffle_rank, shard, shard_pos)."""
     if shard_size <= 0:
         raise ValueError(f"corpus_shuffle: shard_size must be positive, "
                          f"got {shard_size}")
@@ -235,9 +233,7 @@ def corpus_shuffle(df: DataFrame, id_col: str, shard_size: int,
     ranked = global_rank(keyed,
                          [F.col(key).asc(), F.col(id_col).asc()],
                          rank_col="shuffle_rank")
-    out = _with_shards(ranked, "shuffle_rank", shard_size).drop(key)
-    out.rm_release_cache = ranked.rm_release_cache
-    return out
+    return _with_shards(ranked, "shuffle_rank", shard_size).drop(key)
 
 
 def duck_corpus_shuffle_sql(id_expr: str, shard_size: int,
@@ -278,8 +274,7 @@ def mixture_interleave(df: DataFrame, group_col: str, id_col: str,
     With shard_size > 0, shard/shard_pos arithmetic is appended (the
     corpus_shuffle layout, mixture-balanced per shard).
 
-    Output: df's columns + (interleave_rank[, shard, shard_pos]).
-    Carries rm_release_cache."""
+    Output: df's columns + (interleave_rank[, shard, shard_pos])."""
     if shard_size < 0:
         raise ValueError(f"mixture_interleave: shard_size must be >= 0 "
                          f"(0 disables sharding), got {shard_size}")
@@ -301,10 +296,8 @@ def mixture_interleave(df: DataFrame, group_col: str, id_col: str,
                 F.col(id_col).asc()],
         rank_col="interleave_rank")
     out = ranked.drop(rk, nk, kk)
-    if shard_size:
-        out = _with_shards(out, "interleave_rank", shard_size)
-    out.rm_release_cache = ranked.rm_release_cache
-    return out
+    return (_with_shards(out, "interleave_rank", shard_size) if shard_size
+            else out)
 
 
 def duck_mixture_interleave_sql(group_expr: str, id_expr: str,
@@ -364,16 +357,14 @@ def token_budget_select(scored: DataFrame, budget: int, order_cols,
     DuckDB twin (duck_token_budget_sql).
 
     Output: scored's columns + (rank_col, cum_col), filtered to the
-    kept prefix. Carries rm_release_cache."""
+    kept prefix."""
     if budget < 0:
         raise ValueError(f"token_budget_select: budget must be >= 0, "
                          f"got {budget}")
     from .ranking import global_cumsum
     cum = global_cumsum(scored, order_cols, weight_col,
                         cum_col=cum_col, rank_col=rank_col)
-    out = cum.filter(F.col(cum_col) <= F.lit(int(budget)))
-    out.rm_release_cache = cum.rm_release_cache
-    return out
+    return cum.filter(F.col(cum_col) <= F.lit(int(budget)))
 
 
 def duck_token_budget_sql(rel: str, budget: int, order_sql: str,
@@ -601,8 +592,7 @@ def curriculum_order(df: DataFrame, difficulty_cols, stages: int,
     never straddle stages when stage sizes are multiples of the shard
     size; otherwise exactly one straddling shard per boundary).
 
-    Output: df's columns + (stage_col, rank_col[, shard, shard_pos]).
-    Carries rm_release_cache (releases BOTH internal range caches)."""
+    Output: df's columns + (stage_col, rank_col[, shard, shard_pos])."""
     if stages <= 0:
         raise ValueError(f"curriculum_order: stages must be positive, "
                          f"got {stages}")
@@ -612,22 +602,13 @@ def curriculum_order(df: DataFrame, difficulty_cols, stages: int,
     from .ranking import global_ntile, global_rank
     staged = global_ntile(df, stages, difficulty_cols,
                           tile_col=stage_col)
-    rel1 = staged.rm_release_cache
     h = PH.ph60(F.concat(F.lit(f"{salt}:"),
                          F.col(id_col).cast("string")))
     ranked = global_rank(
         staged, [F.col(stage_col).asc(), h.asc(), F.col(id_col).asc()],
         rank_col=rank_col)
-    rel2 = ranked.rm_release_cache
-    out = (_with_shards(ranked, rank_col, shard_size) if shard_size
-           else ranked)
-
-    def release(_r1=rel1, _r2=rel2):
-        _r1()
-        _r2()
-
-    out.rm_release_cache = release
-    return out
+    return (_with_shards(ranked, rank_col, shard_size) if shard_size
+            else ranked)
 
 
 def duck_curriculum_sql(rel: str, difficulty_sql: str, stages: int,

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import persist
 from .dedup import cosine_join, cosine_verify
 
 
@@ -569,10 +570,9 @@ def kmeans_lloyd(emb: DataFrame, k: int = 8, iters: int = 2,
     sx = F.transform(F.col(vec_col),
                      lambda x: F.floor(x.cast("double") * 1e6)
                      .cast("long"))
-    pts = emb.select(F.col(id_col).alias("id"), sx.alias("sv")).persist()
+    pts = persist(emb.select(F.col(id_col).alias("id"), sx.alias("sv")))
     cents = pts.filter(F.col("id") < k).select(
         F.col("id").alias("cid"), F.col("sv").alias("cv"))
-    cached = [pts]
     assigned = None
     for i in range(iters):
         dist = F.aggregate(
@@ -594,26 +594,18 @@ def kmeans_lloyd(emb: DataFrame, k: int = 8, iters: int = 2,
                    .agg(F.floor(F.sum("val").cast("double")
                                 / F.count(F.lit(1))).cast("long")
                         .alias("cval")))
-            cents = (upd.groupBy("cid")
-                     .agg(F.transform(
-                         F.array_sort(F.collect_list(
-                             F.struct(F.col("pos").alias("p"),
-                                      F.col("cval").alias("v")))),
-                         lambda s: s["v"]).alias("cv"))
-                     .persist())
-            cached.append(cents)
-    out = assigned.select(
+            cents = persist(
+                upd.groupBy("cid")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(
+                        F.struct(F.col("pos").alias("p"),
+                                 F.col("cval").alias("v")))),
+                    lambda s: s["v"]).alias("cv")))
+    return assigned.select(
         "id",
         F.col("_best.c").alias("cluster"),
         F.col("_best.d").alias("dist_scaled")) \
         .withColumnRenamed("id", id_col)
-
-    def _release(frames=tuple(cached)):
-        for f in frames:
-            f.unpersist()
-
-    out.rm_release_cache = _release
-    return out
 
 
 # ------------------------------------------------------- semantic dedup
@@ -653,12 +645,9 @@ def semantic_dedup_pairs(emb: DataFrame, k: int = 8, iters: int = 2,
     kmeans_lloyd assignment frame so repeated invocations skip the
     Lloyd iterations — caller-owned, not released here (same contract
     as minhash_lsh_pairs' `base`)."""
-    owns_asg = asg is None
-    if owns_asg:
+    if asg is None:
         asg = kmeans_lloyd(emb, k=k, iters=iters, vec_col=vec_col,
                            id_col=id_col)
-    rel = getattr(asg, "rm_release_cache", lambda: None) if owns_asg \
-        else (lambda: None)
     sid = asg.select(F.col(id_col).alias("_sid"), "cluster")
     v = emb.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("_v"))
     # explicit REPARTITION_BY_NUM of the (tiny) per-vector side (r18):
@@ -676,7 +665,5 @@ def semantic_dedup_pairs(emb: DataFrame, k: int = 8, iters: int = 2,
     pairs = cosine_verify(
         paired.select("cluster", "id_a", "id_b", "_va", "_vb"),
         "_va", "_vb", threshold)
-    pairs = pairs.select("cluster", "id_a", "id_b",
-                         F.round(F.col("cosine"), 6).alias("cosine"))
-    pairs.rm_release_cache = rel
-    return pairs
+    return pairs.select("cluster", "id_a", "id_b",
+                        F.round(F.col("cosine"), 6).alias("cosine"))

@@ -14,13 +14,26 @@ cluster at ~100 TB:
 - Broadcast threshold left at default; plans additionally use explicit
   ``F.broadcast`` hints for dimension tables (region/nation/supplier) so the
   intent survives even where stats are missing.
+
+Persisted intermediates have one owner. Every persist and local
+checkpoint in the package goes through ``persist``, which registers the
+frame with the active ``Scope``; releasing the scope frees everything
+registered with it at once. Four places open a scope: an entry build
+(the ``entrypoints.ENTRIES`` wrapper, released by the caller after its
+collect through the returned frame's release handle), a streaming
+micro-batch (``streaming.state.start_batches``, released when the batch
+body ends), a ``memo`` build (released with the memo entry) and
+``Interp.run`` (released once the result is materialized). A persist
+made outside any scope belongs to the caller, as in plain PySpark.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -113,6 +126,88 @@ def session_key(spark: SparkSession) -> tuple:
     return (sc.applicationId, sc.startTime)
 
 
+class Scope:
+    """The frames persisted while the scope was active (``with scope:``;
+    scopes nest, and a frame joins the innermost). ``release()`` frees
+    them all."""
+
+    def __init__(self):
+        self._held: list = []
+        self._token = None
+
+    def __enter__(self) -> "Scope":
+        self._token = _ACTIVE.set(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _ACTIVE.reset(self._token)
+
+    def release(self) -> None:
+        held, self._held = self._held, []
+        for df in held:
+            _free(df)
+
+
+# a ContextVar, not a global: a stream thread's micro-batch scope never
+# sees (or releases) a build running concurrently on another thread
+_ACTIVE: ContextVar = ContextVar("rm_scope", default=None)
+
+
+def owned(build):
+    """``(build(), scope)``: run ``build`` in a fresh scope and hand
+    the scope to the caller, who releases it once the value is
+    consumed; a build that raises releases it at once."""
+    s = Scope()
+    try:
+        with s:
+            return build(), s
+    except BaseException:
+        s.release()
+        raise
+
+
+@contextlib.contextmanager
+def scope():
+    """Run the block in a fresh scope, released when the block ends."""
+    s = Scope()
+    with s:
+        try:
+            yield s
+        finally:
+            s.release()
+
+
+def persist(df: DataFrame, checkpoint: bool = False,
+            eager: bool = True) -> DataFrame:
+    """The package's one persist: ``df.persist()``, or with
+    ``checkpoint`` a ``localCheckpoint(eager)`` (which also cuts the
+    lineage), registered with the active scope."""
+    df = df.localCheckpoint(eager=eager) if checkpoint else df.persist()
+    active = _ACTIVE.get()
+    if active is not None:
+        active._held.append(df)
+    return df
+
+
+def release(df: DataFrame) -> None:
+    """Free one frame made by ``persist`` now, before its scope ends
+    (a checkpoint the caller has already consumed)."""
+    active = _ACTIVE.get()
+    if active is not None:
+        active._held = [f for f in active._held if f is not df]
+    _free(df)
+
+
+def _free(df: DataFrame) -> None:
+    try:
+        if df.is_cached:
+            df.unpersist()
+        else:  # a local checkpoint: its LogicalRDD's blocks
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass  # a dead session's frames cannot be unpersisted
+
+
 # kind -> {(session_key, sf_dir, *params): (fingerprint, value, release)},
 # at most one entry per kind (see memo).
 _MEMO: dict = {}
@@ -127,6 +222,10 @@ def memo(kind: str, spark: SparkSession, sf_dir: str, params: tuple,
     """The one memo for state derived from an sf_dir: table plans,
     persisted derived frames, driver-side fits and codebooks, on-disk
     index trees.
+
+    ``build()`` runs in a scope of its own, released with the memo
+    entry, so frames it persists live exactly as long as the entry;
+    ``release(value)`` is for state that is not a frame.
 
     The key is (session_key, sf_dir, *params). The sf_dir fingerprint
     is taken BEFORE ``build()`` runs (a rewrite racing the build leaves
@@ -147,19 +246,25 @@ def memo(kind: str, spark: SparkSession, sf_dir: str, params: tuple,
         return hit[1]
     stats[1 if hit is None else 2] += 1
     _release_store(store)
-    value = build()
-    store[key] = (fp, value, release)
+    value, frames = owned(build)
+
+    def free(v):
+        try:
+            if release is not None:
+                release(v)
+        finally:
+            frames.release()
+    store[key] = (fp, value, free)
     return value
 
 
 def _release_store(store: dict) -> int:
     n = len(store)
     for _fp, value, release in store.values():
-        if release is not None:
-            try:
-                release(value)
-            except Exception:
-                pass  # a dead session's frames cannot be unpersisted
+        try:
+            release(value)
+        except Exception:
+            pass  # a dead session's state cannot be released
     store.clear()
     return n
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import portable_hash as PH
 from ..operators import web
+from ..session import persist
 from . import state
 from .state import BATCH_COL
 
@@ -120,27 +121,22 @@ def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
                  .filter(F.col("_rm_cr_rn") == 1).drop("_rm_cr_rn"))
         idx = state.read_prior(spark, url_index_path, batch_id,
                                _URL_IDX_SCHEMA)
-        fresh = (first.join(
-            idx, first["_rm_uh"] == idx["url_hash"], "left_anti")
-            .persist())
+        fresh = persist(first.join(
+            idx, first["_rm_uh"] == idx["url_hash"], "left_anti"))
         prior = (state.read_prior(spark, host_counts_path, batch_id,
                                   _HOST_CNT_SCHEMA)
                  .groupBy("host")
                  .agg(F.sum("n").alias("_rm_prior_n")))
         whost = Window.partitionBy("host").orderBy(F.col(id_col).asc())
-        admitted = (fresh
-                    .withColumn("_rm_hr", F.row_number().over(whost))
-                    .join(prior, "host", "left")
-                    .withColumn("_rm_prior_n",
-                                F.coalesce(F.col("_rm_prior_n"),
-                                           F.lit(0)))
-                    .filter(F.col("_rm_prior_n") + F.col("_rm_hr")
-                            <= host_cap)
-                    # persisted: the out write AND the host-counts
-                    # write both consume it — without the cache the
-                    # second job re-reads the growing counts table and
-                    # re-runs the window (r15 third review)
-                    .persist())
+        # persisted: the out write AND the host-counts write both
+        # consume it — without the cache the second job re-reads the
+        # growing counts table and re-runs the window (r15 third review)
+        admitted = persist(
+            fresh.withColumn("_rm_hr", F.row_number().over(whost))
+            .join(prior, "host", "left")
+            .withColumn("_rm_prior_n",
+                        F.coalesce(F.col("_rm_prior_n"), F.lit(0)))
+            .filter(F.col("_rm_prior_n") + F.col("_rm_hr") <= host_cap))
         gated = web.extract_floor_gate(admitted,
                                        min_tokens=min_tokens)
         state.write_batch(gated.select(
@@ -168,7 +164,5 @@ def start_crawl_ingest(pages_stream: DataFrame, url_index_path: str,
                           host_counts_path, batch_id)
         state.write_batch(fresh.select(F.col("_rm_uh").alias("url_hash")),
                           url_index_path, batch_id)
-        admitted.unpersist()
-        fresh.unpersist()
 
     return state.start_batches(pages_stream, ingest_batch, checkpoint)

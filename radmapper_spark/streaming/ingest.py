@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import portable_hash as PH
+from ..session import persist
 from . import state
 from .state import BATCH_COL
 
@@ -198,10 +199,8 @@ def start_training_ingest(docs_stream: DataFrame, index_path: str,
         # NULL, and `NULL == NULL` is never TRUE — a plain equi
         # anti-join would re-admit one null-text doc per micro-batch
         # while the batch twin's window keeps exactly one
-        fresh = (survivors.join(
-            idx, survivors[nh].eqNullSafe(idx["norm_hash"]),
-            "left_anti")
-            .persist())
+        fresh = persist(survivors.join(
+            idx, survivors[nh].eqNullSafe(idx["norm_hash"]), "left_anti"))
         kept_ids = quality_admit(fresh, vocab, params,
                                  text_col=text_col, id_col=id_col
                                  ).select(id_col)
@@ -215,6 +214,5 @@ def start_training_ingest(docs_stream: DataFrame, index_path: str,
         state.write_batch(out, out_path, batch_id, "shard")
         state.write_batch(fresh.select(F.col(nh).alias("norm_hash")),
                           index_path, batch_id)
-        fresh.unpersist()
 
     return state.start_batches(docs_stream, ingest_batch, checkpoint)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import persist
 from . import state
 
 
@@ -68,21 +69,11 @@ def start_cdc_apply(changes: DataFrame, base_path: str, out_path: str,
     return state.start_batches(changes, apply_batch, checkpoint)
 
 
-def _release(df: DataFrame) -> None:
-    """Call the ``rm_release_cache`` an operator attached to ``df``."""
-    rel = getattr(df, "rm_release_cache", None)
-    if rel is not None:
-        rel()
-
-
 def _probe_loop(stream: DataFrame, out_path: str, checkpoint: str, probe):
     """The probe sink of both index kinds: per micro-batch, write
-    ``probe(batch_df)``'s hits as the batch's partition of out_path,
-    then release the probe's cache."""
+    ``probe(batch_df)``'s hits as the batch's partition of out_path."""
     def probe_batch(batch_df, batch_id):
-        hits = probe(batch_df)
-        state.write_batch(hits, out_path, batch_id)
-        _release(hits)
+        state.write_batch(probe(batch_df), out_path, batch_id)
 
     return state.start_batches(stream, probe_batch, checkpoint)
 
@@ -145,8 +136,8 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
     idx_t = hits.schema["index_id"].dataType
     # cached, not checkpointed: connected_components checkpoints the
     # pairs once, and the losers' estimate join reads this cache
-    intra = (intra.groupBy("id_a", "id_b").agg(F.max(est_col).alias("_est"))
-             .persist())
+    intra = persist(intra.groupBy("id_a", "id_b")
+                    .agg(F.max(est_col).alias("_est")))
     tgt = hits.groupBy("new_id").agg(F.min("index_id").alias("_tgt"))
     hit_node = F.when(F.col("_tgt").isNotNull(), F.col("node"))
     members = (connected_components(intra)
@@ -154,14 +145,13 @@ def _resolve_admission(batch_df: DataFrame, id_col: str,
                .withColumn("_ctgt", F.min_by("_tgt", hit_node)
                            .over(Window.partitionBy("component"))))
     # direct hits are audited by the probe already
-    losers = (members.filter(F.col("_tgt").isNull()
-                             & (F.col("_ctgt").isNotNull()
-                                | (F.col("node") != F.col("component"))))
-              .join(intra.select(F.col("id_a").alias("component"),
-                                 F.col("id_b").alias("node"), "_est"),
-                    ["component", "node"], "left")
-              .localCheckpoint(eager=True))  # read by both outputs
-    intra.unpersist()
+    losers = persist(  # read by both outputs
+        members.filter(F.col("_tgt").isNull()
+                       & (F.col("_ctgt").isNotNull()
+                          | (F.col("node") != F.col("component"))))
+        .join(intra.select(F.col("id_a").alias("component"),
+                           F.col("id_b").alias("node"), "_est"),
+              ["component", "node"], "left"), checkpoint=True)
     audit_extra = losers.select(
         F.col("node").cast(id_t).alias("new_id"),
         F.coalesce("_ctgt", F.col("component").cast(idx_t)).alias("index_id"),
@@ -182,11 +172,11 @@ def _admission_loop(stream: DataFrame, table: str, out_path: str,
     pairs (``intra_pairs``, estimate column ``est_col``) transitively
     via _resolve_admission, write the audit trail and the survivors'
     ``index_rows`` as the batch's partitions of out_path and of the
-    table, then release every cache the operators attached."""
+    table. The batch's scope (start_batches) frees what they persist."""
     def admit_batch(batch_df, batch_id):
-        batch_df = batch_df.persist()
+        batch_df = persist(batch_df)
         prior = state.read_prior(batch_df.sparkSession, table, batch_id)
-        hits = probe(batch_df, prior).persist()
+        hits = persist(probe(batch_df, prior))
         intra = intra_pairs(batch_df)
         audit_extra, rejected = _resolve_admission(
             batch_df, id_col, hits, intra, est_col)
@@ -195,10 +185,6 @@ def _admission_loop(stream: DataFrame, table: str, out_path: str,
         state.write_batch(index_rows(batch_df.join(
             rejected, batch_df[id_col] == F.col("rid"), "left_anti")),
             table, batch_id, *partition_by)
-        _release(intra)
-        _release(hits)
-        hits.unpersist()
-        batch_df.unpersist()
 
     return state.start_batches(stream, admit_batch, checkpoint)
 

@@ -43,6 +43,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import scope
+
 BATCH_COL = "_rm_batch_id"
 #: the seed (pre-existing and out-of-stream) rows' batch id
 SEED_BATCH_ID = -1
@@ -127,8 +129,14 @@ def start(writer, checkpoint: str, available_now: bool = True):
 
 
 def start_batches(stream: DataFrame, fn, checkpoint: str):
-    """Drain ``stream`` through ``fn(batch_df, batch_id)``."""
-    return start(stream.writeStream.foreachBatch(fn), checkpoint)
+    """Drain ``stream`` through ``fn(batch_df, batch_id)``, each call in
+    a scope of its own: whatever the batch persists is released when
+    its body ends."""
+    def batch(batch_df, batch_id):
+        with scope():
+            fn(batch_df, batch_id)
+
+    return start(stream.writeStream.foreachBatch(batch), checkpoint)
 
 
 def _staged(path: str, tag: str) -> str:

@@ -67,7 +67,7 @@ def test_cached_frames_rebuild_on_input_change(spark, tmp_path):
     import shutil
 
     from radmapper_spark import entrypoints as E
-    from radmapper_spark.session import memo_stats, release_memos
+    from radmapper_spark.session import memo_stats, persist, release_memos
 
     sfd = tmp_path / "sf"
     shutil.copytree("/root/testdata/sf0.001", sfd)
@@ -78,7 +78,7 @@ def test_cached_frames_rebuild_on_input_change(spark, tmp_path):
         # derive a FRESH frame (load_tables memoizes the raw table
         # object per (session, sf_dir), so persisting it directly would
         # hand every build the same object)
-        return {"docs": tables["documents"].select("doc_id").persist()}
+        return {"docs": persist(tables["documents"].select("doc_id"))}
 
     a = E._frames("test_docs", spark, str(sfd), build)["docs"]
     n_before = a.count()
@@ -137,7 +137,7 @@ def test_first_derived_build_after_rewrite_sees_fresh_data(spark, tmp_path):
     stale-hit invalidate runs). The build must see the rewritten data,
     and the fingerprint it stamps must validate as fresh afterwards."""
     from radmapper_spark import entrypoints as E
-    from radmapper_spark.session import release_memos
+    from radmapper_spark.session import persist, release_memos
 
     sfd = tmp_path / "sf"
     shutil.copytree(SF_SMOKE_r12, sfd)
@@ -149,7 +149,7 @@ def test_first_derived_build_after_rewrite_sees_fresh_data(spark, tmp_path):
 
     def build(tables):
         calls.append(1)
-        return {"docs": tables["documents"].select("doc_id").persist()}
+        return {"docs": persist(tables["documents"].select("doc_id"))}
 
     a = E._frames("test_docs", spark, str(sfd), build)["docs"]
     assert len(calls) == 1

@@ -362,12 +362,6 @@ def test_quality_admit_state_evicts_under_watermark(spark, tmp_path):
 
 
 # ======================== from test_round13.py (r14 consolidation) ========
-def _release(df):
-    rel = getattr(df, "rm_release_cache", None)
-    if rel is not None:
-        rel()
-
-
 def test_score_calibration_counts(spark):
     """Exact tile sizes (ntile rule) and per-tile positive counts,
     recomputed in Python over the same deterministic ordering."""
@@ -380,7 +374,6 @@ def test_score_calibration_counts(spark):
         [(i, p) for i, _, p in rows], "doc_id long, is_pos int")
     out = classifier.score_calibration(scored, labels, k=5)
     got = {r["tile"]: (r["n_docs"], r["n_pos"]) for r in out.collect()}
-    _release(out)
     ordered = sorted(rows, key=lambda t: (-t[1], t[0]))
     base, rem = divmod(len(rows), 5)
     want, pos = {}, 0

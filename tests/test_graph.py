@@ -34,7 +34,6 @@ def test_label_propagation_two_triangles(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     out = graph.label_propagation(df, iters=4)
     got = {r.node: r.label for r in out.collect()}
-    rel = getattr(out, "rm_release_cache", None); rel and rel()
     assert {got["a"], got["b"], got["c"]} == {got["a"]}
     assert {got["x"], got["y"], got["z"]} == {got["x"]}
     assert got["a"] != got["x"]
@@ -50,7 +49,6 @@ def test_label_propagation_deterministic_tie(spark):
     def run():
         out = graph.label_propagation(df, iters=1)
         got = {r.node: r.label for r in out.collect()}
-        rel = getattr(out, "rm_release_cache", None); rel and rel()
         return got
 
     g1, g2 = run(), run()
@@ -97,10 +95,8 @@ def test_graph_auto_selects_broadcast_path(spark):
     e = _toy_edges(spark)
     pr = graph.pagerank(e, iters=2)
     assert pr.rm_broadcast_path is True
-    pr.rm_release_cache()
     lp = graph.label_propagation(e, iters=1)
     assert lp.rm_broadcast_path is True
-    lp.rm_release_cache()
 
 
 def test_graph_auto_selects_partitioned_above_threshold(spark, tmp_path):
@@ -119,10 +115,8 @@ def test_graph_auto_selects_partitioned_above_threshold(spark, tmp_path):
         pr = graph.pagerank(e, iters=2)
         assert pr.rm_broadcast_path is False
         assert {(r.node, r.rank) for r in pr.collect()} == base
-        pr.rm_release_cache()
         lp = graph.label_propagation(e, iters=1)
         assert lp.rm_broadcast_path is False
-        lp.rm_release_cache()
     finally:
         spark.conf.unset("rm.broadcastMaxBytes")
 
@@ -168,7 +162,6 @@ def test_graph_auto_broadcasts_small_nodes_on_large_edge_scan(spark, tmp_path):
     try:
         pr = graph.pagerank(e, iters=1)
         assert pr.rm_broadcast_path is True
-        pr.rm_release_cache()
     finally:
         spark.conf.unset("rm.broadcastMaxBytes")
 
@@ -187,9 +180,7 @@ _LONG_EDGES = [(2 ** 62, -5), (-5, 2 ** 62), (7, -5), (7, 2 ** 40),
 
 
 def _rows(df):
-    out = sorted((tuple(r) for r in df.collect()), key=repr)
-    df.rm_release_cache()
-    return out
+    return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
 def _three_paths(op, edges, iters):
@@ -319,3 +310,36 @@ def test_trade_graph_repeat_build_runs_no_job(spark):
     assert memo_stats()["edges"]["hits"] == hits + 2
     assert sc._jsc.getPersistentRDDs().size() == persisted
     assert all(len(df.collect()) > 0 for df in dfs)
+
+
+@pytest.mark.parametrize("cap,path", [(None, "driver"), ("1", "partitioned")])
+def test_components_scope_releases_every_checkpoint(spark, cap, path):
+    """connected_components on both sides of its gate leaves no
+    persisted RDD once its scope is released. The driver path frees its
+    edge checkpoint as soon as local_graph has collected it; the star
+    loop (forced by a 1-byte rm.broadcastMaxBytes) frees each round's
+    checkpoint once the next one is materialized, so the scope holds
+    only the last round's."""
+    from radmapper_spark.session import scope
+    from tests.conftest import persisted_rdd_ids
+
+    # a 24-node path plus a triangle: several star rounds
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(24)] + [(100, 101), (101, 102),
+                                           (100, 102)],
+        "id_a long, id_b long")
+    before = persisted_rdd_ids(spark)
+    try:
+        if cap is not None:
+            spark.conf.set("rm.broadcastMaxBytes", cap)
+        with scope():
+            out = graph.connected_components(pairs)
+            held = persisted_rdd_ids(spark) - before
+            rows = dict(_rows(out))
+    finally:
+        spark.conf.unset("rm.broadcastMaxBytes")
+    assert out.rm_graph_path == path
+    assert len(held) == (0 if path == "driver" else 1)
+    assert rows == {**{i: 0 for i in range(25)},
+                    **{i: 100 for i in (100, 101, 102)}}
+    assert persisted_rdd_ids(spark) - before == set()

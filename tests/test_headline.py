@@ -3,7 +3,8 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_SMOKE
+from radmapper_spark.session import release_memos
+from tests.conftest import SF_SMOKE, persisted_rdd_ids
 from tests.oracle import assert_matches_oracle
 
 QUERY_NAMES = sorted(entrymod.queries().keys())
@@ -30,8 +31,14 @@ EMPTY_OK: frozenset = frozenset({"stream_crawl_to_shards"})
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, name):
+    """The entry matches its oracle at sf0.001 and then leaves nothing
+    persisted: once the caller releases it (rm_release_cache) and every
+    memo is released, no RDD its build persisted or checkpointed may be
+    left (derived state never outlives its owner; the one pass over the
+    registry serves both checks)."""
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    before = persisted_rdd_ids(spark)
     df = qs[name](spark, SF_SMOKE)
     if name in oracles:
         assert_matches_oracle(df, oracles[name], SF_SMOKE)
@@ -41,3 +48,7 @@ def test_query_matches_oracle(spark, name):
                 f"is vacuous; re-calibrate the fixture or add to EMPTY_OK")
     else:
         assert df.count() >= 0
+    df.rm_release_cache()
+    release_memos()
+    left = persisted_rdd_ids(spark) - before
+    assert not left, f"entry '{name}' left {len(left)} persisted RDD(s)"

@@ -87,9 +87,6 @@ def test_lm_bucket_tie_determinism(spark):
     ref = _docs(spark, [(0, "same words repeated here same words")])
     out = lm.lm_bucket(lm.lm_score(docs, ref))
     got = {r.doc_id: r.bucket for r in out.collect()}
-    rel = getattr(out, "rm_release_cache", None)
-    if rel is not None:
-        rel()
     assert got == {1: "head", 2: "head", 3: "head",
                    4: "middle", 5: "middle", 6: "middle",
                    7: "tail", 8: "tail", 9: "tail"}

@@ -103,22 +103,30 @@ def test_perceptual_hash_param_guards(spark):
 
 def test_phash_pairs_base_contract(spark):
     """The persist-the-base contract (r11 review): owned bases are
-    persisted and released via rm_release_cache; caller-supplied bases
-    are param-validated and never released by the operator."""
+    persisted in the caller's scope and freed with it; caller-supplied
+    bases are param-validated and never released by the operator."""
+    from radmapper_spark.session import scope
+    from tests.conftest import persisted_rdd_ids
+
     media = _media(spark, [(1, DUPTXT), (2, DUPTXT)])
-    out = mm.phash_neardup_pairs(media)
-    assert out.count() == 1
-    out.rm_release_cache()  # owned base: handle releases the persist
-    base = mm.perceptual_hash(media, bits=50, pixels=51)
+    before = persisted_rdd_ids(spark)
+    with scope():
+        out = mm.phash_neardup_pairs(media)
+        assert out.count() == 1
+        assert persisted_rdd_ids(spark) - before  # the owned base
+    assert persisted_rdd_ids(spark) - before == set()
+    base = mm.perceptual_hash(media, bits=50, pixels=51).persist()
     # the builder records its parameters on the phash column
     assert dedup.build_params(base, "phash") == {"kind": "phash",
                                                  "bits": 50}
     with pytest.raises(ValueError, match="bits"):
         mm.phash_neardup_pairs(media, bits=60, base=base)
-    ok = mm.phash_neardup_pairs(media, bits=50, bands=3, band_bits=15,
-                                max_hamming=2, base=base)
-    assert ok.count() == 1
-    ok.rm_release_cache()  # caller-owned base: a no-op
+    with scope():
+        ok = mm.phash_neardup_pairs(media, bits=50, bands=3, band_bits=15,
+                                    max_hamming=2, base=base)
+        assert ok.count() == 1
+    assert base.is_cached  # caller-owned: the operator's scope kept it
+    base.unpersist()
 
 
 def test_image_dedup_groups_composition(spark):
@@ -134,7 +142,6 @@ def test_image_dedup_groups_composition(spark):
     comp = dedup.dedup_groups(
         media.select(F.col("media_id").alias("doc_id")), pairs,
         id_col="doc_id").collect()
-    pairs.rm_release_cache()
     got = {r.doc_id: r.component for r in comp}
     assert got[1] == got[2] == got[3] == 1
     assert got[9] == 9  # singleton keeps itself
@@ -143,29 +150,28 @@ def test_image_dedup_groups_composition(spark):
 def test_image_dedup_groups_entry_releases_its_base(spark, monkeypatch):
     """The entrypoint consumes the pairs eagerly (connected components
     checkpoints its edge frame and makes the gate's bounded collect at
-    construction) and releases its own persisted phash
-    base before returning — no handle to forward, nothing for bench to
-    leak (r11 second review: the forwarded handle was dead weight a
-    caller had to know to release). The base is captured through the
-    release handle's bound self (a global persistent-RDD count is NOT
-    usable here: connected_components' internal localCheckpoint
-    legitimately registers a GC-bounded persisted RDD)."""
+    construction) and frees its persisted phash base before returning,
+    so the phash pass's blocks are gone while the result is still being
+    read. The base is captured where the operator persists it; the
+    result carries the registry's release handle for the rest."""
     import radmapper_spark.entrypoints as E
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, persisted_rdd_ids
 
-    captured = {}
-    orig = E.multimodal.phash_neardup_pairs
+    captured = []
+    orig = mm.persist
 
-    def wrapper(*a, **k):
-        out = orig(*a, **k)
-        captured["base"] = out.rm_release_cache.__self__
+    def spy(df, *a, **k):
+        out = orig(df, *a, **k)
+        captured.append(out)
         return out
 
-    monkeypatch.setattr(E.multimodal, "phash_neardup_pairs", wrapper)
+    monkeypatch.setattr(mm, "persist", spy)
+    before = persisted_rdd_ids(spark)
     out = E.ENTRIES["image_dedup_groups"][0](spark, SF_SMOKE)
-    assert captured["base"].is_cached is False  # released by the entry
-    assert getattr(out, "rm_release_cache", None) is None
+    assert len(captured) == 1 and captured[0].is_cached is False
     assert out.count() > 0
+    out.rm_release_cache()
+    assert persisted_rdd_ids(spark) - before == set()
 
 
 def test_stream_media_dedup_state_across_batches(spark, tmp_path):

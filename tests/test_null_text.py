@@ -55,9 +55,6 @@ def test_neardup_ignores_blank_docs(docs_with_blanks, pairs_fn):
     real duplicates still found."""
     out = pairs_fn(docs_with_blanks)
     rows = out.collect()
-    rel = getattr(out, "rm_release_cache", None)
-    if rel:
-        rel()
     got = {(r["id_a"], r["id_b"]) for r in rows}
     assert got == {(1, 5)}
 

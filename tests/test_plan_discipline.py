@@ -347,3 +347,39 @@ def test_engine_conf_keys_are_the_known_set():
                     and key.fullmatch(node.value)):
                 found.add(node.value)
     assert found == {"rm.broadcastMaxBytes"}
+
+
+def test_one_owner_for_persisted_frames():
+    """Every persist and local checkpoint in the package goes through
+    session.persist, which registers the frame with the active scope:
+    no other module calls ``.persist(``, ``.localCheckpoint(`` or
+    ``.unpersist(``. And ``rm_release_cache`` (the handle a harness
+    calls after its collect) is set in one place, the registry wrapper
+    entrypoints._entry."""
+    import ast
+    import pathlib
+
+    import radmapper_spark
+
+    root = pathlib.Path(radmapper_spark.__file__).parent
+    calls, handles = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        tree = ast.parse(src)
+        wrapper = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and rel == "entrypoints.py" \
+                    and node.name == "_entry":
+                wrapper = set(range(node.lineno, node.end_lineno + 1))
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("persist", "localCheckpoint",
+                                           "unpersist")
+                    and rel != "session.py"):
+                calls.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+        for n, line in enumerate(src.splitlines(), 1):
+            if "rm_release_cache" in line and n not in wrapper:
+                handles.append(f"{rel}:{n}")
+    assert not calls, f"persist outside session.persist: {calls}"
+    assert not handles, f"rm_release_cache outside the registry: {handles}"

@@ -34,7 +34,6 @@ def test_global_ntile_matches_window_ntile(spark, n, k):
     g = {(r.id, r.tile) for r in got.collect()}
     w = {(r.id, r.tile) for r in want.collect()}
     assert g == w
-    got.rm_release_cache()
 
 
 def test_global_rank_matches_window_rank(spark):
@@ -48,7 +47,6 @@ def test_global_rank_matches_window_rank(spark):
     want = df.withColumn("r", F.row_number().over(Window.orderBy(*order)))
     assert ({(r.id, r.r) for r in got.collect()}
             == {(r.id, r.r) for r in want.collect()})
-    got.rm_release_cache()
 
 
 def test_bounded_global_rank_matches(spark):
@@ -80,16 +78,9 @@ def test_global_ntile_preserves_caller_rm_columns(spark):
     assert [r["_rm_pid"] for r in rows] == [i * 2 for i in range(100)]
     assert [r["_rm_tot"] for r in rows] == [i + 7 for i in range(100)]
     assert [r["tile"] for r in rows] == [i // 25 + 1 for i in range(100)]
-    out.rm_release_cache()
 
 
 # ======================== from test_round13.py (r14 consolidation) ========
-def _release(df):
-    rel = getattr(df, "rm_release_cache", None)
-    if rel is not None:
-        rel()
-
-
 def test_global_cumsum_exact_vs_python(spark):
     """global_cumsum must equal the Python prefix-sum in the same total
     order, with every Window node keyed on the range-partition id
@@ -110,7 +101,6 @@ def test_global_cumsum_exact_vs_python(spark):
                                   start=1):
         acc += w
         assert got[i] == (rank, acc), (i, got[i], (rank, acc))
-    _release(out)
 
 
 def test_global_cumsum_rejects_float_weights(spark):

@@ -86,8 +86,6 @@ def test_customer_deciles_window_is_partitioned(spark):
     assert all("_rm_pid" in ln for ln in win_lines), win_lines
     rows = {r.decile: r.n_customers for r in df.collect()}
     assert set(rows) == set(range(1, 11))
-    rel = getattr(df, "rm_release_cache", None)
-    rel and rel()
 
 
 # ======================== from test_round13.py (r14 consolidation) ========

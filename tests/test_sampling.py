@@ -270,7 +270,6 @@ def test_mixture_interleave_prefix_proportionality(spark):
     out = sampling.mixture_interleave(df, "source", "doc_id",
                                       shard_size=16)
     got = sorted(out.collect(), key=lambda r: r["interleave_rank"])
-    out.rm_release_cache()
     assert [r["interleave_rank"] for r in got] == list(range(1, 101))
     share = {"a": 0.6, "b": 0.3, "c": 0.1}
     seen = Counter()
@@ -284,7 +283,6 @@ def test_mixture_interleave_prefix_proportionality(spark):
     out2 = sampling.mixture_interleave(df.repartition(7), "source",
                                        "doc_id", shard_size=16)
     perm2 = {r["doc_id"]: r["interleave_rank"] for r in out2.collect()}
-    out2.rm_release_cache()
     assert perm2 == {r["doc_id"]: r["interleave_rank"] for r in got}
 
 
@@ -293,12 +291,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 import __spark_entry__ as entrymod
-
-def _release(df):
-    rel = getattr(df, "rm_release_cache", None)
-    if rel is not None:
-        rel()
-
 
 def test_token_budget_select_prefix_property(spark):
     """Kept set = the maximal quality-ordered prefix within budget:
@@ -311,7 +303,6 @@ def test_token_budget_select_prefix_property(spark):
     order = [F.col("score").desc(), F.col("id").asc()]
     out = sampling.token_budget_select(df, 900, order, "w")
     kept = [(r["id"], r["cum_tokens"]) for r in out.collect()]
-    _release(out)
     ordered = sorted(rows, key=lambda t: (-t[1], t[0]))
     acc, want = 0, []
     for i, s, w in ordered:
@@ -323,11 +314,9 @@ def test_token_budget_select_prefix_property(spark):
     assert want and want[-1][1] <= 900
     empty = sampling.token_budget_select(df, 0, order, "w")
     assert empty.count() == 0
-    _release(empty)
     total = sum(w for _, _, w in rows)
     full = sampling.token_budget_select(df, total, order, "w")
     assert full.count() == len(rows)
-    _release(full)
     with pytest.raises(ValueError, match="budget"):
         sampling.token_budget_select(df, -1, order, "w")
 
@@ -385,7 +374,6 @@ def test_curriculum_order_stage_contiguity(spark):
         shard_size=50)
     got = out.select("doc_id", "stage", "curriculum_rank", "shard",
                      "shard_pos").collect()
-    _release(out)
     assert len(got) == 503
     by_stage = {}
     for r in got:
@@ -589,7 +577,6 @@ def test_token_budget_matches_model_hypothesis(spark):
             df, budget, [F.col("s").desc(), F.col("id").asc()], "w")
         got = sorted((r["id"], r["select_rank"], r["cum_tokens"])
                      for r in out.collect())
-        _release(out)
         acc, want = 0, []
         for rank, (i, s, w) in enumerate(
                 sorted(data, key=lambda t: (-t[1], t[0])), start=1):

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from radmapper_spark.operators import temporal
+from radmapper_spark.session import scope
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("RM_SCALE_STRESS") != "1",
@@ -160,7 +161,6 @@ def test_dedup_stack_50k_docs(spark, tmp_path_factory):
     groups = dedup.dedup_groups(docs, pairs)
     n_groups = groups.select("component").distinct().count()
     t_groups = time.monotonic() - t0
-    pairs.rm_release_cache()
     print(f"  dedup_groups: {n_groups} components in {t_groups:.1f}s")
     assert recall >= 0.97
     assert t_pairs < 300 and t_groups < 300
@@ -215,9 +215,6 @@ def test_pagerank_200k_edges(spark):
     n = pr.count()
     s = pr.agg(F.min("rank")).first()[0]
     dt = time.time() - t0
-    rel = getattr(pr, "rm_release_cache", None)
-    if rel:
-        rel()
     print(f"\npagerank 200k edges: {n} nodes, min rank {s}, {dt:.1f}s")
     assert n > 0 and s > 0
     assert dt < 120
@@ -428,9 +425,6 @@ def test_pagerank_copartitioned_equals_broadcast_4m_edges(spark, big_graph):
             .filter(F.col("a.rank") != F.col("b.rank")))
     assert diff.isEmpty(), "scaled-integer ranks must be bit-identical"
     for pr in (pr_b, pr_s):
-        rel = getattr(pr, "rm_release_cache", None)
-        if rel:
-            rel()
         pr.unpersist()
     assert dt_s < 300
 
@@ -611,8 +605,6 @@ def test_rate_source_neardup_admission_soak(spark):
     want_df = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5)
     want = {(r.id_a, r.id_b, round(r.est_jaccard, 6))
             for r in want_df.collect()}
-    rel = getattr(want_df, "rm_release_cache", None)
-    rel and rel()
     print(f"\nneardup soak: {len(prog)} batches, {k} docs, "
           f"{len(want)} pairs, state_max={max(state_rows)}, "
           f"buckets={n_buckets}")
@@ -673,10 +665,9 @@ def test_admission_loop_20_batch_fold_differential(spark, tmp_path_factory):
         bdf = spark.createDataFrame(batch_rows(b), schema)
         hits = dedup.neardup_vs_index(bdf, idx_f)
         hrows = hits.collect()
-        intra = dedup.minhash_lsh_pairs(bdf, jaccard_threshold=0.5)
-        irows = intra.collect()
-        rel = getattr(intra, "rm_release_cache", None)
-        rel and rel()
+        with scope():  # frees the batch's signatures
+            irows = dedup.minhash_lsh_pairs(
+                bdf, jaccard_threshold=0.5).collect()
         idx_min = {}
         for r in hrows:
             idx_min[r.new_id] = min(idx_min.get(r.new_id, r.index_id),
@@ -805,10 +796,7 @@ def test_embedding_admission_20_batch_fold_differential(
         bdf = spark.createDataFrame(batch_rows(b), schema)
         hrows = dedup.neardup_embedding_vs_index(
             bdf, idx_f, threshold=thr).collect()
-        intra = dedup.embedding_cosine_pairs(bdf, threshold=thr)
-        irows = intra.collect()
-        rel = getattr(intra, "rm_release_cache", None)
-        rel and rel()
+        irows = dedup.embedding_cosine_pairs(bdf, threshold=thr).collect()
         idx_min = {}
         for r in hrows:
             idx_min[r.new_id] = min(idx_min.get(r.new_id, r.index_id),
@@ -909,7 +897,6 @@ def test_global_ntile_2m_rows(spark):
     assert [r.n for r in stats] == [base + 1] * rem + [base] * (k - rem)
     for prev, cur in zip(stats, stats[1:]):
         assert prev.lo >= cur.hi, "bucket order violates the sort key"
-    tiled.rm_release_cache()
     assert dt < 120
 
 
@@ -1090,7 +1077,6 @@ def test_phash_neardup_500k_media(spark, big_docs):
     pairs = mm.phash_neardup_pairs(media, max_hamming=2)
     n = pairs.count()
     dt = time.monotonic() - t0
-    pairs.rm_release_cache()
     print(f"  phash_neardup 500k media: {n} pairs {dt:.1f}s")
     assert dt < 300
     # exact-duplicate payloads must appear (hamming 0 recall is exact)
@@ -1256,7 +1242,6 @@ def test_corpus_shuffle_2m_rows(spark):
             .filter((F.col("count") != shard)
                     & (F.col("shard") != (n - 1) // shard)).count())
     dt = time.monotonic() - t0
-    out.rm_release_cache()
     print(f"  corpus_shuffle 2M rows: {dt:.1f}s")
     assert (agg.rows, agg.ranks, agg.lo, agg.hi, agg.bad_pos) \
         == (n, n, 1, n, 0)
@@ -1288,7 +1273,6 @@ def test_training_shard_write_1m_rows(spark, tmp_path_factory):
     t0 = time.monotonic()
     out = sampling.corpus_shuffle(df, "chunk_id", shard, salt="stress")
     writers.write_training_shards(out, path)
-    out.rm_release_cache()
     dt_w = time.monotonic() - t0
     back = spark.read.parquet(path)
     t0 = time.monotonic()
@@ -1309,7 +1293,6 @@ def test_training_shard_write_1m_rows(spark, tmp_path_factory):
                             F.col("shuffle_rank").alias("r_disk"))
                 .join(out2.select("chunk_id", "shuffle_rank"), "chunk_id")
                 .filter(F.col("r_disk") != F.col("shuffle_rank")).count())
-    out2.rm_release_cache()
     assert mismatch == 0
     dt_v = time.monotonic() - t0
     # (c) physical order inside a sampled shard file
@@ -1362,7 +1345,6 @@ def test_global_cumsum_2m_rows(spark):
            .filter(F.col("a.cum") - F.col("b.cum") != F.col("a.w"))
            .count())
     dt = time.monotonic() - t0
-    out.rm_release_cache()
     print(f"  global_cumsum 2M rows: {dt:.1f}s")
     assert bad == 0
     assert dt < 120
@@ -1391,7 +1373,6 @@ def test_token_budget_select_1m_rows(spark):
         F.max("cum_tokens").alias("spent"),
         F.sum("w").alias("wsum")).collect()[0]
     dt = time.monotonic() - t0
-    out.rm_release_cache()
     print(f"  token_budget_select 1M rows: kept={agg.kept} "
           f"spent={agg.spent} {dt:.1f}s")
     assert agg.kept >= 1
@@ -1464,7 +1445,6 @@ def test_curriculum_order_1m_rows(spark):
                     F.min("curriculum_rank").alias("lo"),
                     F.max("curriculum_rank").alias("hi")).collect()[0]
     dt = time.monotonic() - t0
-    out.rm_release_cache()
     print(f"  curriculum_order 1M x {stages}: {dt:.1f}s")
     base, rem = divmod(n, stages)
     assert [r.n for r in stats] == [base + 1] * rem + [base] * (stages - rem)

@@ -14,13 +14,18 @@ import __spark_entry__ as entrymod
 def test_corpus_shuffle_permutation_and_shards(spark):
     """corpus_shuffle assigns a 1..n bijection, exact shard sizes
     (every shard but the last holds exactly shard_size rows), is
-    invariant to input partitioning, and releases its internal cache."""
+    invariant to input partitioning, and its scope releases its
+    internal cache."""
     from radmapper_spark.operators import sampling
+    from radmapper_spark.session import scope
+    from tests.conftest import persisted_rdd_ids
 
     df = spark.createDataFrame([(i,) for i in range(257)], "doc_id: long")
-    out = sampling.corpus_shuffle(df, "doc_id", shard_size=100)
-    rows = out.collect()
-    out.rm_release_cache()
+    before = persisted_rdd_ids(spark)
+    with scope():
+        out = sampling.corpus_shuffle(df, "doc_id", shard_size=100)
+        rows = out.collect()
+    assert persisted_rdd_ids(spark) - before == set()
     ranks = sorted(r["shuffle_rank"] for r in rows)
     assert ranks == list(range(1, 258))  # bijection
     from collections import Counter
@@ -32,7 +37,6 @@ def test_corpus_shuffle_permutation_and_shards(spark):
     out2 = sampling.corpus_shuffle(df.repartition(7), "doc_id",
                                    shard_size=100)
     perm2 = {r["doc_id"]: r["shuffle_rank"] for r in out2.collect()}
-    out2.rm_release_cache()
     assert perm2 == {r["doc_id"]: r["shuffle_rank"] for r in rows}
     # it actually shuffles: the permutation is not the identity
     assert any(perm2[i] != i + 1 for i in range(257))
@@ -49,7 +53,6 @@ def test_corpus_shuffle_no_single_partition_window(spark):
     df = spark.range(1000).withColumnRenamed("id", "doc_id")
     out = sampling.corpus_shuffle(df, "doc_id", shard_size=64)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    out.rm_release_cache()
     # range partitioning present; every Window is partitioned (Spark
     # prints 'Window [...], [part spec]' — an empty spec would surface
     # as the WindowExec warning shape global_rank exists to avoid)
@@ -73,7 +76,6 @@ def test_corpus_shuffle_sharded_write_roundtrip(spark, tmp_path):
     out = sampling.corpus_shuffle(df, "doc_id", shard_size=64)
     dest = str(tmp_path / "shards")
     out.write.partitionBy("shard").mode("overwrite").parquet(dest)
-    out.rm_release_cache()
     back = spark.read.parquet(dest)
     assert back.count() == 230
     assert sorted(r["shuffle_rank"] for r in back.collect()) \
@@ -90,20 +92,12 @@ def test_corpus_shuffle_sharded_write_roundtrip(spark, tmp_path):
 SF = "/root/testdata/sf0.001"
 
 
-def _release(df):
-    rel = getattr(df, "rm_release_cache", None)
-    if rel is not None:
-        rel()
-
-
 def _epoch_ranks(spark, n, epoch, ids=None):
     from radmapper_spark.operators import sampling
     df = (spark.range(n).selectExpr("id * 7 AS doc_id") if ids is None
           else spark.createDataFrame([(i,) for i in ids], "doc_id long"))
     out = sampling.corpus_shuffle(df, "doc_id", shard_size=10, epoch=epoch)
-    rows = {r["doc_id"]: r["shuffle_rank"] for r in out.collect()}
-    _release(out)
-    return rows
+    return {r["doc_id"]: r["shuffle_rank"] for r in out.collect()}
 
 
 def test_epoch_shuffles_are_distinct_permutations(spark):
@@ -131,7 +125,6 @@ def test_epoch_none_matches_pre_epoch_layout(spark):
     b = sampling.corpus_shuffle(df, "doc_id", 10, epoch=None)
     ra = {r["doc_id"]: r["shuffle_rank"] for r in a.collect()}
     rb = {r["doc_id"]: r["shuffle_rank"] for r in b.collect()}
-    _release(a), _release(b)
     assert ra == rb
 
 
@@ -184,9 +177,7 @@ def test_training_shards_layout_and_roundtrip(spark):
     assert (sizes.drop(sizes.index.max()) == size).all(), \
         "a non-final shard is not exactly shard_size rows"
     # read-back equals recompute (the files hold the exact values)
-    rec = ep._training_chunks(spark, SF)
-    q = rec.select(*ep._TRAIN_COLS).toPandas()
-    rec.rm_release_cache()
+    q = ep._training_chunks(spark, SF).select(*ep._TRAIN_COLS).toPandas()
     key = ["shuffle_rank"]
     pd.testing.assert_frame_equal(
         p.sort_values(key).reset_index(drop=True)[list(ep._TRAIN_COLS)],

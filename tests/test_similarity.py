@@ -74,8 +74,6 @@ def test_kmeans_lloyd_matches_python(spark):
         "vec_id long, embedding array<float>")
     out = similarity.kmeans_lloyd(df, k=6, iters=2)
     got = {r.vec_id: (r.cluster, r.dist_scaled) for r in out.collect()}
-    rel = getattr(out, "rm_release_cache", None)
-    rel and rel()
     want = _lloyd_python(vecs, k=6, iters=2)
     assert got == want
 
@@ -91,8 +89,6 @@ def test_kmeans_lloyd_improves_distortion(spark):
     def distortion(iters):
         out = similarity.kmeans_lloyd(df, k=4, iters=iters)
         tot = sum(r.dist_scaled for r in out.collect())
-        rel = getattr(out, "rm_release_cache", None)
-        rel and rel()
         return tot
 
     d1, d2 = distortion(1), distortion(2)
@@ -121,11 +117,8 @@ def test_semantic_dedup_within_cluster_only(spark):
     pairs = similarity.semantic_dedup_pairs(emb, k=4, iters=1,
                                             threshold=0.4)
     rows = pairs.collect()
-    pairs.rm_release_cache()
     asg = similarity.kmeans_lloyd(emb, k=4, iters=1)
     cl = {r.vec_id: r.cluster for r in asg.collect()}
-    rel = getattr(asg, "rm_release_cache", None)
-    rel and rel()
     assert rows, "vacuous"
     for r in rows:
         assert cl[r.id_a] == cl[r.id_b] == r.cluster
@@ -161,7 +154,6 @@ def test_semantic_dedup_dirty_embeddings_dropped(spark):
     asg = dirty.selectExpr("vec_id", "CAST(0 AS BIGINT) AS cluster")
     df = similarity.semantic_dedup_pairs(dirty, threshold=0.0, asg=asg)
     got = {(r.id_a, r.id_b): r.cosine for r in df.collect()}
-    df.rm_release_cache()
     vecs = {r.vec_id: np.array(r.embedding, dtype=float)
             for r in clean.collect()}
     want = {}
@@ -186,8 +178,6 @@ def test_semantic_dedup_builtin(spark, tables):
                      bindings={"$e": tables["embeddings"]})
     assert {"cluster", "id_a", "id_b", "cosine"} <= set(out.df.columns)
     n = out.df.count()
-    rel = getattr(out.df, "rm_release_cache", None)
-    rel and rel()
     assert n > 0
 
 

@@ -265,9 +265,6 @@ def test_composed_crawl_to_shards_chain(spark, tmp_path):
             .select(*cols).collect()))
         twin = ep.stream_crawl_to_shards(spark, SF)
         want = sorted(map(tuple, twin.select(*cols).collect()))
-        rel = getattr(twin, "rm_release_cache", None)
-        if rel is not None:
-            rel()
         assert got == want
         # the CRAWL stage itself flowed nonzero rows into the chain
         assert spark.read.parquet(crawl_out).count() > 0

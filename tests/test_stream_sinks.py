@@ -491,3 +491,41 @@ def test_embedding_admission_chain_end_to_end(spark, tmp_path):
     indexed = {r.id for r in spark.read.parquet(f"{idx}/vectors")
                .select("id").distinct().collect()}
     assert indexed == {0, 1}
+
+
+def test_admission_batches_leave_nothing_persisted(spark, tmp_path):
+    """Three micro-batches through the minhash admission loop (each with
+    an intra-batch near-dup pair, so the components resolve runs) leave
+    no persisted RDD behind: the micro-batch scope releases the batch
+    frame, the probe hits, the intra pairs and both checkpoints of
+    _resolve_admission when the batch body ends."""
+    from radmapper_spark.operators import dedup
+    from radmapper_spark.streaming import sinks
+    from tests.conftest import persisted_rdd_ids
+
+    def txt(tag):
+        return " ".join(f"{tag}w{j}" for j in range(12))
+
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame([(i, txt(f"t{i}")) for i in range(10)],
+                                   schema)
+    idx = str(tmp_path / "idx")
+    dedup.build_minhash_index(corpus, idx)
+    src = str(tmp_path / "in")
+    for b in range(3):
+        rows = [(100 * b + 1, txt("t0")),          # index dup
+                (100 * b + 2, txt(f"n{b}")),       # intra pair ...
+                (100 * b + 3, txt(f"n{b}")),       # ... smaller id wins
+                (100 * b + 4, txt(f"fresh{b}"))]   # new
+        _write_chunk(spark, schema, rows, src, b == 0)
+    before = persisted_rdd_ids(spark)
+    q = sinks.start_neardup_admission(
+        spark.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", 1).parquet(src),
+        idx, str(tmp_path / "hits"), str(tmp_path / "ck"))
+    q.awaitTermination(180)
+    assert len(q.recentProgress) >= 3
+    assert persisted_rdd_ids(spark) - before == set()
+    audit = {(r.new_id, r.index_id)
+             for r in spark.read.parquet(str(tmp_path / "hits")).collect()}
+    assert {(3, 2), (103, 102), (203, 202)} <= audit

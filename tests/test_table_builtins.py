@@ -241,9 +241,7 @@ def test_kmeans_and_chunk_cdc_builtins(spark, tables):
                **{"$emb": tables["embeddings"]})
     assert isinstance(out, SparkDB)
     assert set(out.df.columns) == {"vec_id", "cluster", "dist_scaled"}
-    rel = getattr(out.df, "rm_release_cache", None)
     n = out.df.select("cluster").distinct().count()
-    rel and rel()
     assert n <= 4
 
     out = _run(spark, "$chunkCDC($db($docs), 8)",
@@ -290,8 +288,6 @@ def test_index_build_probe_builtins(spark, tables, tmp_path):
     assert isinstance(out, SparkDB)
     assert {"new_id", "index_id", "cosine"} <= set(out.df.columns)
     n = out.df.count()
-    rel = getattr(out.df, "rm_release_cache", None)
-    rel and rel()
     assert n > 0
 
 

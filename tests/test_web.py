@@ -218,7 +218,7 @@ def test_crawl_entry_gate_above_barrier(spark, entry):
     import re
 
     from radmapper_spark import entrypoints as ep
-    df = getattr(ep, entry)(spark, "/root/testdata/sf0.001")
+    df = ep.ENTRIES[entry][0](spark, "/root/testdata/sf0.001")
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Scan ExistingRDD" in plan, plan[:500]
@@ -236,8 +236,7 @@ def test_crawl_entry_gate_above_barrier(spark, entry):
         assert "gopher_pass" in plan
         assert len(plan) < 20_000, f"entry plan blew up: {len(plan)}"
     finally:
-        rel = getattr(df, "rm_release_cache", None)
-        rel and rel()
+        df.rm_release_cache()
 
 
 def test_pipeline_web_crawl_cap_and_floor_bite(spark):
@@ -431,7 +430,8 @@ def test_pipeline_crawl_to_shards_plan_shape(spark):
 
     from radmapper_spark import entrypoints as ep
 
-    df = ep.pipeline_crawl_to_shards(spark, "/root/testdata/sf0.001")
+    df = ep.ENTRIES["pipeline_crawl_to_shards"][0](
+        spark, "/root/testdata/sf0.001")
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         # exchange cap: the tail above the checkpoint leaf holds only
@@ -456,5 +456,4 @@ def test_pipeline_crawl_to_shards_plan_shape(spark):
         assert ({r["shard"] for r in rows} != {rows[0]["shard"]}
                 or len(rows) < 4)
     finally:
-        rel = getattr(df, "rm_release_cache", None)
-        rel and rel()
+        df.rm_release_cache()
